@@ -109,18 +109,17 @@ object StreamAbProbe {
       } finally q.stop()
     }
 
-    def med(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.length / 2) }
+    import StreamBench.median
     val rows = (1 to pairs).map { p =>
       val a = runOnce(s"A${p}·", valA)
       val b = runOnce(s"B${p}·", valB)
-      val r = med(b) / med(a)
-      println(f"pair $p: A med=${med(a)}%.3f B med=${med(b)}%.3f ratio=$r%.3f " +
+      val r = median(b) / median(a)
+      println(f"pair $p: A med=${median(a)}%.3f B med=${median(b)}%.3f ratio=$r%.3f " +
         f"(A=${a.map(x => f"$x%.2f").mkString(",")} B=${b.map(x => f"$x%.2f").mkString(",")})")
-      (med(a), med(b), r)
+      (median(a), median(b), r)
     }
-    val ratios = rows.map(_._3).sorted
     println(f"d16 batch=$batchSize $key $valA->$valB: median pair ratio " +
-      f"${ratios(ratios.size / 2)}%.3f, A meds=${rows.map(r => f"${r._1}%.2f").mkString(",")}, " +
+      f"${median(rows.map(_._3))}%.3f, A meds=${rows.map(r => f"${r._1}%.2f").mkString(",")}, " +
       f"B meds=${rows.map(r => f"${r._2}%.2f").mkString(",")}")
     spark.stop()
   }

@@ -41,6 +41,16 @@ case class StreamDoc(doc_id: Long, lang: String, text: String)
   * rows/s.
   */
 object StreamBench {
+  /** Median of a non-empty sample: the middle value, or the mean of
+    * the two middle values for an even count (the default 6 batches
+    * and the first-10/last-10 windows are even). */
+  def median(xs: Seq[Double]): Double = {
+    require(xs.nonEmpty, "median of an empty sample")
+    val s = xs.sorted
+    val m = s.length / 2
+    if (s.length % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAMBENCH_OUT", "streambench_out.json")
@@ -286,9 +296,6 @@ object StreamBench {
         streaming.EventStream.ingestPipelineSink(in, "doc_id", col("text"),
           pipelineCfg, dir + "/store", dir + "/corpus", "lang", dir + "/ckpt")))
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted; s(s.length / 2)
-    }
     // JSON numbers must be locale-independent: the f"" interpolator
     // renders %.3f with the JVM default locale, so a comma-decimal
     // default (de_DE, fr_FR, …) would emit 4,123 and invalidate the

@@ -59,7 +59,15 @@ object Tables {
     * total over the text/vector family but LOSES 1.45x over the
     * cheap-scan relational family (lineitem/orders/events TPC-H
     * aggregations, where the extra exchange outweighs the map
-    * parallelism it buys). */
+    * parallelism it buys).
+    *
+    * This list only governs the DEFAULT (`fanoutParts = -1`)
+    * consumers. A consumer that forces its own width (`fanoutParts`
+    * = n > 0, the `tFan` loaders in SparkEntry) fans out whether or
+    * not its table is listed — even with this key set to "" — so the
+    * kill switch for every forced fan-out is `FanoutOverrideKey`
+    * (`fanoutConsumerOverride=off`), which makes `load` ignore
+    * `fanoutParts` and fall back to this list. */
   val FanoutTablesKey = "spark.graft.scan.fanoutTables"
   private val FanoutTablesDefault = "documents,embeddings"
 

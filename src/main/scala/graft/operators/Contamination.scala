@@ -54,15 +54,12 @@ object Contamination {
     * Returns (id, benchmark, shared_grams), contaminated pairs only. */
   def sharedGramsByBenchmark(train: DataFrame, eval: DataFrame, id: Column,
                              text: Column, benchmark: Column, n: Int): DataFrame = {
-    // per-doc gram stream via the same kernel/declarative split as
-    // `grams`; the cross-doc distinct on (benchmark, h) stays — a
-    // benchmark has MANY eval docs — but the kernel pre-dedups per
-    // doc, shrinking the distinct's input
-    val evalGrams = (if (Shingles.mapSideOn(eval))
-        eval.select(benchmark.as("benchmark"),
-          explode(graft.plans.TextExpressions.md5GramSet(lower(text), n)).as("h"))
-      else Shingles.exploded(eval, benchmark, text, n)
-        .select(col("id").as("benchmark"), md5(col("sh")).as("h")))
+    // per-doc gram stream via the same kernel as `grams`; the
+    // cross-doc distinct on (benchmark, h) stays — a benchmark has
+    // MANY eval docs — but the kernel pre-dedups per doc, shrinking
+    // the distinct's input
+    val evalGrams = eval.select(benchmark.as("benchmark"),
+        explode(graft.plans.TextExpressions.md5GramSet(lower(text), n)).as("h"))
       .distinct()
     grams(train, id, text, n)
       .join(evalGrams, "h")
@@ -74,16 +71,11 @@ object Contamination {
     // round 18: the per-doc distinct md5'd gram set is row-local —
     // one fused kernel pass + explode (no (id, h) exchange, one md5
     // per DISTINCT gram instead of per occurrence) instead of
-    // explode → md5 → dropDuplicates. Conf-gated; the declarative
-    // chain is the off-arm and parity oracle. Null/short docs drop
-    // at the explode exactly as before.
-    if (Shingles.mapSideOn(df))
-      df.select(id.as("id"),
-        explode(graft.plans.TextExpressions.md5GramSet(lower(text), n)).as("h"))
-    else
-      Shingles.exploded(df, id, text, n)
-        .select(col("id"), md5(col("sh")).as("h"))
-        .dropDuplicates("id", "h")
+    // explode → md5 → dropDuplicates; that chain is
+    // `DeclarativeRef.md5Grams` (test scope), the parity reference.
+    // Null/short docs drop at the explode.
+    df.select(id.as("id"),
+      explode(graft.plans.TextExpressions.md5GramSet(lower(text), n)).as("h"))
 
   /** `sharedGrams` with a Bloom prefilter (E10) on the train side:
     * train grams that are definitely not in the eval set never reach

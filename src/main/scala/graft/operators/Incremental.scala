@@ -94,29 +94,19 @@ object Incremental {
     * and always survive the gate. */
   def signatures(docs: DataFrame, id: Column, text: Column,
                  n: Int = 3, k: Int = 8, bandRows: Int = 2): (DataFrame, DataFrame) = {
-    if (Shingles.mapSideOn(docs)) {
-      // round 18: both tables built MAP-SIDE by the fused kernels —
-      // no explode, no aggregation exchange, and the former
-      // keep-every-doc LEFT JOIN for `sets` collapses to a coalesce
-      // on the kernel output (empty array for short/null docs, the
-      // same convention). Streaming-safe: stateless projections.
-      val sig = MinHash.signaturesMapSide(docs, id, text, n, k)
-      val bands = sig.select(col("id"),
-        posexplode(MinHash.bandArray(k, bandRows)).as(Seq("bi", "bk")))
-      val sets = docs.select(id.as("id"),
-        coalesce(graft.plans.TextExpressions.hashedShingleSet(lower(text), n),
-          array().cast("array<bigint>")).as("s"))
-      (bands, sets)
-    } else {
-      val ex = Shingles.exploded(docs.select(id.as("id"), text.as("txt")),
-        col("id"), col("txt"), n)
-      val sig = MinHash.signatureAgg(ex, "id", "sh", k)
-      val bands = sig.select(col("id"),
-        posexplode(MinHash.bandArray(k, bandRows)).as(Seq("bi", "bk")))
-      val sets = docs.select(id.as("id")).join(Shingles.hashSets(ex), Seq("id"), "left")
-        .select(col("id"), coalesce(col("s"), array().cast("array<bigint>")).as("s"))
-      (bands, sets)
-    }
+    // round 18: both tables built MAP-SIDE by the fused kernels — no
+    // explode, no aggregation exchange, and the former keep-every-doc
+    // LEFT JOIN for `sets` collapses to a coalesce on the kernel
+    // output (empty array for short/null docs, the same convention;
+    // `DeclarativeRef.incrementalSignatures`, test scope, is the
+    // join form). Streaming-safe: stateless projections.
+    val sig = MinHash.signaturesMapSide(docs, id, text, n, k)
+    val bands = sig.select(col("id"),
+      posexplode(MinHash.bandArray(k, bandRows)).as(Seq("bi", "bk")))
+    val sets = docs.select(id.as("id"),
+      coalesce(graft.plans.TextExpressions.hashedShingleSet(lower(text), n),
+        array().cast("array<bigint>")).as("s"))
+    (bands, sets)
   }
 
   /** Survivor ids of `batch` gated against the store at `threshold`:

@@ -79,27 +79,20 @@ object Jaccard {
   val BarrierMinInputBytes: Long = Skew.CorpusScaleMinInputBytes
 
   /** Step 1: per-doc ASC-sorted distinct xxhash64 shingle-set table
-    * (id, hs, sz) — one aggregation exchange (map-side partial
-    * collect_set collapses duplicate shingles). xxhash64 longs, not
+    * (id, hs, sz) — one projection, no exchange. xxhash64 longs, not
     * md5 hex strings: the verify joins ship one array per candidate
     * pair, so element width IS the operator's shuffle volume (see
     * Shingles.hashSets). Reusable across thresholds — persist it with
     * `Sink.writeBucketed` on `id` for exchange-free verify joins. */
-  def sortedSets(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
+  def sortedSets(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame =
     // round 18: built MAP-SIDE by the fused HashedShingleSet kernel
     // (one pass per document, no aggregation exchange — a doc's
-    // shingles never leave its own row); conf-gated, "off" = the
-    // explode → collect_set chain. Callers that consume the table
-    // several times need a materialization point above it — exactly
-    // the story the declarative form had (its merge aggregate
-    // re-executed per consumer too); `nearDupPairs` handles both
-    // scales below, and the two-step/bucketed-write callers
-    // materialize the table themselves.
-    val base =
-      if (Shingles.mapSideOn(docs)) Shingles.hashSetsMapSide(docs, id, text, n)
-      else Shingles.hashSets(Shingles.exploded(docs, id, text, n))
-    base.select(col("id"), col("s").as("hs"), size(col("s")).as("sz"))
-  }
+    // shingles never leave its own row). Callers that consume the
+    // table several times need a materialization point above it;
+    // `nearDupPairs` handles both scales below, and the two-step/
+    // bucketed-write callers materialize the table themselves.
+    Shingles.hashSetsMapSide(docs, id, text, n)
+      .select(col("id"), col("s").as("hs"), size(col("s")).as("sz"))
 
   /** The declarative (explode → collect_set) set build — kept as the
     * sub-barrier-scale form for `nearDupPairs`: with four consumers
@@ -108,10 +101,9 @@ object Jaccard {
     * whereas the map-side kernel would re-hash every document per
     * consumer (interleaved A/B at sf0.1: kernel-no-barrier 1.18×
     * WORSE). At corpus scale the barrier exists and the kernel wins;
-    * below it this form wins. Also the parity oracle for the
-    * kernel. */
-  private def sortedSetsDeclarative(docs: DataFrame, id: Column, text: Column,
-                                    n: Int): DataFrame =
+    * below it this form wins. */
+  private[graft] def sortedSetsDeclarative(docs: DataFrame, id: Column, text: Column,
+                                           n: Int): DataFrame =
     Shingles.hashSets(Shingles.exploded(docs, id, text, n))
       .select(col("id"), col("s").as("hs"), size(col("s")).as("sz"))
 
@@ -222,7 +214,7 @@ object Jaccard {
     // AQE-flexible alternative (66.4/27.4/17.7 s vs 42.9/22.7/16.1 at
     // sf10 8/16/32 threads — the set-table re-exchanges it added cost
     // more at every width than AQE's runtime freedom bought).
-    // PlanSpec pins the shape: one partial + one merge collect_set,
+    // PlanSpec pins the shape: one set-kernel scan,
     // REPARTITION_BY_NUM above it, auto-switch in both directions.
     // `salts` ≥ 2 is the boilerplate-corpus opt-in (hot prefix keys —
     // see nearDupPairsFromSets; detection costs a window pass that a
@@ -237,11 +229,8 @@ object Jaccard {
     // partial-agg exchange beats re-running the kernel per consumer
     // (see sortedSetsDeclarative).
     val sets =
-      if (corpusScale && Shingles.mapSideOn(docs)) barriered(sortedSets(docs, id, text, n))
-      else {
-        val d = sortedSetsDeclarative(docs, id, text, n)
-        if (corpusScale) barriered(d) else d
-      }
+      if (corpusScale) barriered(sortedSets(docs, id, text, n))
+      else sortedSetsDeclarative(docs, id, text, n)
     nearDupPairsFromSets(sets, threshold, salts, hotMin)
   }
 }

@@ -2,46 +2,25 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
 
-/** Join-based language identification (SURVEY C8) — the distributed
-  * twin of the map-side `TextFunctions.langId` column function.
+/** Stopword-hit language identification (SURVEY C8) — the
+  * per-document twin of the `TextFunctions.langId` column function.
   *
-  * Tokens explode map-side and broadcast-join the (word → lang)
-  * stopword table (token EQUALITY — exactly the reference heuristic's
-  * semantics); per-(doc, lang) hit counts aggregate with map-side
-  * partials, then a struct-min argmax with language-code tie-break
-  * picks the winner; docs with zero hits anywhere come back "und" via
-  * the left join. Two small shuffles, everything codegen — preferable
-  * to N regex passes over the full text when the corpus is large or
-  * the stopword table grows beyond a handful of languages.
+  * Tokens are looked up in the (word → lang) stopword table (token
+  * EQUALITY — exactly the reference heuristic's semantics); per-lang
+  * hit counts pick the winner with a language-code tie-break, and
+  * docs with zero hits come back "und". All of it is per-document
+  * work, so it runs as one fused kernel pass per row
+  * (plans.LangIdScore, round 18) — no explode, join or shuffle.
+  * `DeclarativeRef.langId` (test scope) keeps the former token
+  * explode → broadcast join → two-aggregate form as the parity
+  * reference.
   */
 object LangId {
 
   /** (id, lang_id) for every input row. */
-  def detect(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // round 18: the per-(doc, lang) hit counts are per-document work —
-    // one fused kernel pass (same stopword table, same argmax and
-    // tie-break, "und" fallback; parity spec-pinned) instead of a
-    // token explode + broadcast join + two aggregation exchanges.
-    // Conf-gated with the join form as the off-arm.
-    if (Shingles.mapSideOn(df))
-      return df.select(id.as("id"),
-        coalesce(graft.plans.TextExpressions.langIdScore(lower(text)),
-          lit("und")).as("lang_id"))
-    val sw = TextFunctions.LangStopwords
-      .flatMap { case (lang, words) => words.map(w => (w, lang)) }
-      .toDF("tok", "lang")
-    val toks = Shingles.exploded(df, id, text, 1)
-    val hits = toks.join(broadcast(sw), toks("sh") === sw("tok"))
-      .groupBy(col("id"), col("lang"))
-      .agg(count(lit(1)).as("hits"))
-    val best = hits.groupBy(col("id"))
-      .agg(min(struct((-col("hits")).as("neg"), col("lang").as("l"))).as("b"))
-      .select(col("id"), col("b.l").as("lang_id"))
-    df.select(id.as("id")).join(best, Seq("id"), "left")
-      .select(col("id"), coalesce(col("lang_id"), lit("und")).as("lang_id"))
-  }
+  def detect(df: DataFrame, id: Column, text: Column): DataFrame =
+    df.select(id.as("id"),
+      coalesce(graft.plans.TextExpressions.langIdScore(lower(text)),
+        lit("und")).as("lang_id"))
 }

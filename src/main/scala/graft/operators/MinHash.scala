@@ -16,14 +16,12 @@ import graft.plans.ArrayExpressions
   * `md5(seed ':' shingle)` hex strings — identical in any engine with
   * md5, no engine-native hash(), no platform-dependent ints.
   *
-  * Scale & execution shape: signatures are computed by EXPLODING
-  * shingles and hash-aggregating `min(md5(seed:shingle))` per seed —
-  * one shuffle on doc id, fully inside whole-stage codegen (no
-  * interpreted higher-order functions in the hot path), with map-side
-  * partial mins collapsing the explode before the exchange. The
-  * band-bucket self-join then reuses that exchange (ReusedExchange)
-  * instead of recomputing signatures. Candidates — never O(n²) — are
-  * verified with exact Jaccard. Band width tunes candidate volume.
+  * Scale & execution shape: signatures and verify sets are computed
+  * MAP-SIDE, one fused kernel pass per document (`signaturesMapSide`,
+  * `Shingles.hashSetsMapSide`) — no shuffle before the band
+  * self-join, whose two sides share one band exchange
+  * (ReusedExchange). Candidates — never O(n²) — are verified with
+  * exact Jaccard. Band width tunes candidate volume.
   */
 object MinHash {
 
@@ -31,22 +29,16 @@ object MinHash {
   def shingles(text: Column, n: Int = 3): Column =
     array_distinct(TextFunctions.wordShingles(lower(text), n))
 
-  /** k-minhash signature per id from exploded (id, shingle) rows:
-    * one row per id with columns m0..m{k-1}, mi = min md5("i:"+sh). */
-  def signatureAgg(exploded: DataFrame, id: String, shingle: String, k: Int): DataFrame = {
-    val aggs = (0 until k).map(i =>
-      min(md5(concat(lit(s"$i:"), col(shingle)))).as(s"m$i"))
-    exploded.groupBy(col(id)).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** MAP-SIDE `signatureAgg` (optimization round 18, guide §2.4):
-    * (id, m0..m{k-1}) computed in one fused pass per document — the
-    * k min-md5s are row-local (a doc's shingles never leave its own
-    * row), so the explode → k-min aggregation paid a corpus exchange
-    * and k md5s per shingle OCCURRENCE where the kernel dedups first
-    * and hashes each DISTINCT shingle k times. Output-identical
-    * (spec-pinned), same absent-row convention for shingle-less
-    * docs. */
+  /** k-minhash signature per document: one row per id with columns
+    * m0..m{k-1}, mi = min over its shingles of md5("i:"+sh) —
+    * computed in one fused pass per document (optimization round 18,
+    * guide §2.4). The k min-md5s are row-local (a doc's shingles
+    * never leave its own row), so the former explode → k-min
+    * aggregation paid a corpus exchange and k md5s per shingle
+    * OCCURRENCE where the kernel dedups first and hashes each
+    * DISTINCT shingle k times. Output-identical to that aggregation
+    * (`DeclarativeRef.signatureAgg`, test scope — NearDupSpec pins
+    * parity); docs with no shingles are absent, as they were. */
   def signaturesMapSide(docs: DataFrame, id: Column, text: Column,
                         n: Int, k: Int): DataFrame = {
     val t = graft.plans.TextExpressions
@@ -100,24 +92,17 @@ object MinHash {
     // the verify arrays are internal, so they take the 8-byte
     // representation that keeps the candidate-pair shuffle lean).
     // Both tables are built MAP-SIDE by the fused kernels (round 18 —
-    // see signaturesMapSide / Shingles.hashSetsMapSide; conf-gated,
-    // "off" = the explode→aggregate chains). The set table feeds TWO
-    // verify joins: at corpus scale it goes behind Jaccard's
-    // build-once repartition barrier so the kernel runs once and both
-    // joins read the barrier exchange (below the size floor the
-    // rebuild is milliseconds and the barrier's fixed stage latency
-    // would be the larger cost — Jaccard.BarrierMinInputBytes).
-    val (sh, sig) =
-      if (Shingles.mapSideOn(docs)) {
-        val sh0 = Shingles.hashSetsMapSide(docs, id, text, n)
-        val corpusScale =
-          docs.queryExecution.optimizedPlan.stats.sizeInBytes >= Jaccard.BarrierMinInputBytes
-        (if (corpusScale) Jaccard.barriered(sh0) else sh0,
-          signaturesMapSide(docs, id, text, n, k))
-      } else {
-        val ex = Shingles.exploded(docs, id, text, n)
-        (Shingles.hashSets(ex), signatureAgg(ex, "id", "sh", k))
-      }
+    // see signaturesMapSide / Shingles.hashSetsMapSide). The set
+    // table feeds TWO verify joins: at corpus scale it goes behind
+    // Jaccard's build-once repartition barrier so the kernel runs
+    // once and both joins read the barrier exchange (below the size
+    // floor the rebuild is milliseconds and the barrier's fixed stage
+    // latency would be the larger cost — Jaccard.BarrierMinInputBytes).
+    val sh0 = Shingles.hashSetsMapSide(docs, id, text, n)
+    val corpusScale =
+      docs.queryExecution.optimizedPlan.stats.sizeInBytes >= Jaccard.BarrierMinInputBytes
+    val sh = if (corpusScale) Jaccard.barriered(sh0) else sh0
+    val sig = signaturesMapSide(docs, id, text, n, k)
     val banded0 = sig.select(col("id"), posexplode(bandArray(k, bandRows)).as(Seq("bi", "bk")))
     // salting adds a third consumer of the band table (the hot-key
     // count aggregate) — materialize it behind a reuse barrier so

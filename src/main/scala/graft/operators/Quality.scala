@@ -101,41 +101,28 @@ object Quality {
     * by reason) in one pass.
     *
     * Shape: C9's components are one native map-side `TextStats`
-    * pass; C14's fractions add their two per-(id, gram) hash
-    * aggregations (map-side partialed, AQE-splittable — see
-    * `Shingles.repetitionStats`); the rule evaluation itself is pure
-    * projection. One equi-join on id ties them together — at 100 TB
-    * this is a co-partitioned hash join on the dedup key the rest of
-    * the pipeline already shuffles on, and nothing here is
-    * corpus-pairwise. */
+    * pass and C14's fractions one more fused column of the SAME pass
+    * (`plans.RepetitionStats`); the rule evaluation is pure
+    * projection. No join, no shuffle, nothing corpus-pairwise. */
   def gopherFilter(df: DataFrame, id: Column, text: Column,
                    p: GopherParams = GopherParams()): DataFrame = {
     // round 18: with the fused RepetitionStats kernel the C14
     // fractions are one more map-side column of the SAME pass as
     // C9's stats — the per-doc aggregate chains and the id join that
-    // tied them back together disappear (guide §2.4; conf-gated with
-    // the join form as the off-arm/parity oracle). Token-less and
-    // null-text docs take 0.0 via the same coalesce the left join
-    // used (the kernel reports 0.0 / null respectively).
+    // tied them back together disappear (guide §2.4; that join form
+    // is `DeclarativeRef.gopherStats`, test scope, the parity
+    // reference). Token-less and null-text docs take 0.0 via the same
+    // coalesce the left join used (the kernel reports 0.0 / null
+    // respectively).
     val joined =
-      if (Shingles.mapSideOn(df)) {
-        scored(df.select(id.as("id"), text.as("text")), col("text"))
-          .select(col("id"), col("word_count"), col("mean_word_len"),
-            col("stopword_ratio"),
-            graft.plans.TextExpressions.repetitionStats(lower(col("text"))).as("__r"))
-          .select(col("id"), col("word_count"), col("mean_word_len"),
-            col("stopword_ratio"),
-            coalesce(col("__r.top_token_frac"), lit(0.0)).as("top_token_frac"),
-            coalesce(col("__r.top_bigram_frac"), lit(0.0)).as("top_bigram_frac"))
-      } else {
-        val stats = scored(df.select(id.as("id"), text.as("text")), col("text"))
-          .select(col("id"), col("word_count"), col("mean_word_len"), col("stopword_ratio"))
-        val rep = Shingles.repetitionStats(df, id, text)
-        stats.join(rep, Seq("id"), "left")
-          .select(col("id"), col("word_count"), col("mean_word_len"), col("stopword_ratio"),
-            coalesce(col("top_token_frac"), lit(0.0)).as("top_token_frac"),
-            coalesce(col("top_bigram_frac"), lit(0.0)).as("top_bigram_frac"))
-      }
+      scored(df.select(id.as("id"), text.as("text")), col("text"))
+        .select(col("id"), col("word_count"), col("mean_word_len"),
+          col("stopword_ratio"),
+          graft.plans.TextExpressions.repetitionStats(lower(col("text"))).as("__r"))
+        .select(col("id"), col("word_count"), col("mean_word_len"),
+          col("stopword_ratio"),
+          coalesce(col("__r.top_token_frac"), lit(0.0)).as("top_token_frac"),
+          coalesce(col("__r.top_bigram_frac"), lit(0.0)).as("top_bigram_frac"))
     // each rule: (name, passes) — reasons sort alphabetically so the
     // output string is deterministic regardless of evaluation order
     val rules: Seq[(String, Column)] = Seq(

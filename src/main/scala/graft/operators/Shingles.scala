@@ -52,11 +52,9 @@ object Shingles {
     * distinct's arbitrary order (consumers are aggregations/joins —
     * order-free). */
   def explodedDistinct(df: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame =
-    if (mapSideOn(df))
-      df.select(id.as("id"),
-        explode(array_distinct(
-          graft.plans.TextExpressions.wordNgrams(lower(text), n))).as("sh"))
-    else exploded(df, id, text, n).distinct()
+    df.select(id.as("id"),
+      explode(array_distinct(
+        graft.plans.TextExpressions.wordNgrams(lower(text), n))).as("sh"))
 
   /** HASHED distinct-shingle set per id: ascending-sorted array of
     * xxhash64(shingle) longs. This is the SCALE representation for
@@ -76,27 +74,13 @@ object Shingles {
     exploded.groupBy(col("id"))
       .agg(sort_array(collect_set(xxhash64(col("sh")))).as("s"))
 
-  /** Conf key (optimization round 18): "on" (default) routes every
-    * PER-DOCUMENT aggregate of the text family through its fused
-    * MAP-SIDE kernel — near-dup set/signature builds, the per-doc
-    * span dedup, repetition stats (C14/C44), language-id hits (C8),
-    * tf maps (C18); "off" restores the explode → aggregate chains
-    * everywhere (the interleaved-A/B arm, the parity oracles, and
-    * the escape hatch). One key for the family: these stand or fall
-    * by the same argument (a document's tokens never leave its own
-    * row). */
-  val MapSideKey = "spark.graft.neardup.mapSideSignatures"
-
-  private[operators] def mapSideOn(df: DataFrame): Boolean =
-    df.sparkSession.conf.get(MapSideKey, "on") == "on"
-
   /** MAP-SIDE `hashSets` (optimization round 18, guide §2.4): the
     * per-doc sorted distinct xxhash64 set computed in one fused pass
     * per document — a document's shingles never leave its own row,
     * so the explode → collect_set aggregation paid a corpus exchange
     * (plus the merge-side set build and sort) for row-local work.
-    * Output-identical to `hashSets(exploded(docs, …))` (kernel parity
-    * spec-pinned, incl. the collision-on-hash-values dedup rule and
+    * Output-identical to `hashSets(exploded(docs, …))` (NearDupSpec
+    * pins parity, incl. the collision-on-hash-values dedup rule and
     * the absent-row convention for docs with no shingles). */
   def hashSetsMapSide(docs: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame = {
     val t = graft.plans.TextExpressions
@@ -113,33 +97,23 @@ object Shingles {
   /** Repetition statistics per document (SURVEY C14, Gopher-style
     * quality rules): fraction of tokens taken by the most frequent
     * token, and of word 2-grams by the most frequent 2-gram. High
-    * values flag degenerate/boilerplate text. Two hash aggregates
-    * riding one id-shuffle each; docs too short for a 2-gram get 0.0. */
-  def repetitionStats(df: DataFrame, id: Column, text: Column): DataFrame =
-    if (mapSideOn(df)) {
-      // round 18: both fractions are per-document functions of the
-      // row — one fused kernel pass instead of two explode → count →
-      // max/sum chains and their tie-back join (see
-      // plans.RepetitionStats; parity spec-pinned, absent-row
-      // convention for token-less docs reproduced by the kernel-free
-      // token filter)
-      val t = graft.plans.TextExpressions
-      df.filter(size(t.wordNgrams(lower(text), 1)) > 0)
-        .select(id.as("id"),
-          t.knownNotNull(t.repetitionStats(lower(text))).as("__r"))
-        .select(col("id"), col("__r.top_token_frac").as("top_token_frac"),
-          col("__r.top_bigram_frac").as("top_bigram_frac"))
-    } else {
-      def topFrac(grams: DataFrame): DataFrame =
-        grams.groupBy(col("id"), col("sh")).agg(count(lit(1)).as("c"))
-          .groupBy(col("id"))
-          .agg(round(max(col("c")).cast("double") / sum(col("c")), 6).as("frac"))
-      val tok = topFrac(exploded(df, id, text, 1)).withColumnRenamed("frac", "top_token_frac")
-      val big = topFrac(exploded(df, id, text, 2)).withColumnRenamed("frac", "top_bigram_frac")
-      tok.join(big, Seq("id"), "left")
-        .select(col("id"), col("top_token_frac"),
-          coalesce(col("top_bigram_frac"), lit(0.0)).as("top_bigram_frac"))
-    }
+    * values flag degenerate/boilerplate text; docs too short for a
+    * 2-gram get 0.0, token-less docs are absent.
+    *
+    * Both fractions are per-document functions of the row, so they
+    * come from one fused kernel pass (plans.RepetitionStats, round
+    * 18) instead of two explode → count → max/sum chains and their
+    * tie-back join. `DeclarativeRef.repetitionStats` (test scope) is
+    * that chain, kept as the parity reference; the kernel-free token
+    * filter reproduces its absent-row convention. */
+  def repetitionStats(df: DataFrame, id: Column, text: Column): DataFrame = {
+    val t = graft.plans.TextExpressions
+    df.filter(size(t.wordNgrams(lower(text), 1)) > 0)
+      .select(id.as("id"),
+        t.knownNotNull(t.repetitionStats(lower(text))).as("__r"))
+      .select(col("id"), col("__r.top_token_frac").as("top_token_frac"),
+        col("__r.top_bigram_frac").as("top_bigram_frac"))
+  }
 
   /** Bottom-k sketch fingerprint per document (SURVEY C11): the k
     * lexicographically smallest md5 hashes of the distinct shingles,

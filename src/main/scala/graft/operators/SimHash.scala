@@ -17,167 +17,48 @@ import org.apache.spark.sql.functions._
   * a long whose bit pattern equals the 64-char '0'/'1' string an
   * engine-portable SQL would build (`bitString` renders it).
   *
-  * Scale & execution shape: shingles are EXPLODED, hashed once per row
-  * (a plain projection, so codegen computes md5 exactly once), then 64
-  * per-bit ±1 sums hash-aggregate per doc — one shuffle on doc id,
-  * whole-stage codegen throughout, map-side partials collapsing the
-  * explode. Pair-finding is banded by the pigeonhole principle: split
+  * Scale & execution shape: fingerprints are computed MAP-SIDE, one
+  * fused kernel pass per document (`fingerprintsMapSide`) — no
+  * shuffle. Pair-finding is banded by the pigeonhole principle: split
   * 64 bits into `chunks` bytes — any pair with hamming < chunks must
-  * agree exactly on ≥1 chunk — so the only further shuffle is the
-  * self-join on (chunk_idx, chunk_value), which reuses the aggregate's
-  * exchange. Candidates are verified with `bit_count(a XOR b)` — one
+  * agree exactly on ≥1 chunk — so the only shuffle is the self-join
+  * on (chunk_idx, chunk_value), whose two sides share one exchange.
+  * Candidates are verified with `bit_count(a XOR b)` — one
   * codegen'd popcount per pair, never O(n²) pairs and never
   * interpreted per-bit loops.
   */
 object SimHash {
 
-  /** 0-15 value of the 1-based `idx`-th hex char of md5 hex string
-    * `h`: '0'-'9' → ascii-48, 'a'-'f' → ascii-87. */
-  private def hexVal(h: Column, idx: Int): Column = {
-    val a = ascii(substring(h, idx, 1))
-    when(a >= 97, a - 87).otherwise(a - 48)
-  }
-
-  /** Bit-packed 64-bit fingerprint per id from exploded (id, shingle)
-    * rows.
-    *
-    * The 64 per-bit ONES COUNTS are carried in just 16 aggregate
-    * accumulators: each md5 hex char (4 bits) is spread into a long
-    * with four 15-bit COUNTER LANES (the classic multiply-and-mask
-    * bit spread: v·(1+2¹⁴+2²⁸+2⁴²) & (1+2¹⁵+2³⁰+2⁴⁵) lands bit l
-    * of v in lane l·15), so one `sum` per hex char accumulates four
-    * counters at once with no inter-lane carries. This quarters both
-    * the aggregation state and the generated code size vs one sum per
-    * bit — the original one-sum-per-bit form's 65-accumulator
-    * HashAggregate was the dominant (codegen-compile) cost of the
-    * whole operator.
-    *
-    * Bit i of the fingerprint is set iff ones·2 > shingles (the
-    * classic sum-of-±1 > 0 criterion), extracted branch-free via the
-    * sign bit of (n − 2·ones).
-    *
-    * Lane bound (ENFORCED r16, layout revised r17): 15-bit lanes at
-    * bit positions 0/15/30/45 count up to `MaxNarrowLaneShingles` =
-    * 32 767 distinct shingles per document (a ~35k-word document).
-    * Past the bound a lane would silently carry into its neighbor —
-    * the only silent-wrong-answer path in the tree — so the packed
-    * fingerprint is guarded per doc: an over-bound doc RAISES with
-    * the doc id and count, pointing at `wideLanes = true` (32-bit
-    * lanes, two per long, 32 accumulators — same construction,
-    * measured ≤9% on the fingerprint stage under load, ~0 on a quiet
-    * window, and parity on c3b end to end
-    * (laneprobe_fp_3arm_final_r17.json, laneprobe_c3b_sf01_r17.json),
-    * exact to `MaxWideLaneShingles`
-    * ≈ 2.1e9 distinct shingles ≈ a 100+ GB document).
-    *
-    * Why 15-bit lanes (round 17): the r16 layout put 16-bit lanes at
-    * 0/16/32/48, whose top term ones₃·2^48 crosses 2^63 once the
-    * top-lane count reaches 32 768 — so under ANSI (the Spark 4
-    * default) a VALID doc past ~32k shingles died with Spark's
-    * generic ARITHMETIC_OVERFLOW mid-aggregation instead of this
-    * guard's actionable message, i.e. the documented 65 535 capacity
-    * was only ANSI-safe to 32 767 anyway. Biasing the top lane by
-    * −2^47 per row restores the full range but costs a measured
-    * +16% on the fingerprint stage (16 ANSI-checked subtracts per
-    * exploded row — laneprobe three-arm A/B, §6 r17). Compressing
-    * the lanes to 15 bits instead keeps the exact same per-row work
-    * (one multiply-and-mask) and extraction (shift-and-mask), sets
-    * the bound AT the ANSI-safe capacity, and makes the guard the
-    * only refusal with wide margin: the lane sum is at most
-    * n·(2^45+2^30+2^15+1) < 2^63 for every n < 262 130, so any doc
-    * up to 8× past the bound PROVABLY reaches the guard (and a
-    * typical over-bound doc far beyond — random md5 bits put ~n/2
-    * in the top lane, overflow only near n ≈ 2^19). NearDupSpec
-    * pins the exact 32 767 boundary and the 32 768 refusal in BOTH
-    * ANSI modes; the wide layout covers everything bigger. */
-  def fingerprints(exploded: DataFrame, id: String, shingle: String,
-                   wideLanes: Boolean = false): DataFrame = {
-    val hashed0 = exploded.select(col(id), md5(col(shingle)).as("__h"))
-    val (hashed, aggs, cntOf, bound) =
-      if (!wideLanes) {
-        // 15-bit lanes at 0/15/30/45: bit l of the hex char lands at
-        // position 15·l via v·(1+2^14+2^28+2^42) & (1+2^15+2^30+2^45)
-        // — the terms of v·K are 4 bits wide and 14 apart, so they
-        // never carry into each other before the mask picks one bit
-        val spreadM = (1L << 0) + (1L << 14) + (1L << 28) + (1L << 42)
-        val laneMask = (1L << 0) + (1L << 15) + (1L << 30) + (1L << 45)
-        val h = hashed0.select(col(id) +: (1 to 16).map(c =>
-          (hexVal(col("__h"), c) * lit(spreadM)).bitwiseAND(lit(laneMask)).as(s"p$c")): _*)
-        val a = (1 to 16).map(c => sum(col(s"p$c")).as(s"s$c"))
-        val cnt = (i: Int) => shiftrightunsigned(col(s"s${i / 4 + 1}"), (i % 4) * 15)
-          .bitwiseAND(lit(0x7FFFL))
-        (h, a, cnt, MaxNarrowLaneShingles)
-      } else {
-        // 32-bit lanes, two per long: bits 0-1 of hex char c in s${c}a
-        // (positions 0 and 32), bits 2-3 in s${c}b — the same
-        // multiply-and-mask spread with v·(1+2³¹) & 0x0000000100000001.
-        // Max lane sum n·(2³²+1) stays under 2^63 for n ≤ 2³¹−1, so
-        // ANSI summation never overflows inside the bound.
-        val spreadW = 1L + (1L << 31)
-        val laneMaskW = 0x0000000100000001L
-        val h = hashed0.select(col(id) +: (1 to 16).flatMap { c =>
-          val v = hexVal(col("__h"), c)
-          Seq((v.bitwiseAND(lit(3)) * lit(spreadW)).bitwiseAND(lit(laneMaskW)).as(s"p${c}a"),
-            (shiftright(v, 2) * lit(spreadW)).bitwiseAND(lit(laneMaskW)).as(s"p${c}b"))
-        }: _*)
-        val a = (1 to 16).flatMap(c =>
-          Seq(sum(col(s"p${c}a")).as(s"s${c}a"), sum(col(s"p${c}b")).as(s"s${c}b")))
-        val cnt = (i: Int) => {
-          val c = i / 4 + 1; val j = i % 4
-          shiftrightunsigned(col(if (j < 2) s"s${c}a" else s"s${c}b"), (j % 2) * 32)
-            .bitwiseAND(lit(0xFFFFFFFFL))
-        }
-        (h, a, cnt, MaxWideLaneShingles)
-      }
-    val packed = (0 until 64).map { i =>
-      shiftleft(shiftright(col("__n") - cntOf(i) * 2, 63).bitwiseAND(lit(1L)), i)
-    }.reduce(_ + _)
-    // per-doc guard: refuse loudly instead of silently corrupting the
-    // fingerprint past the lane capacity (the else branch only
-    // evaluates on over-bound docs; NullType coerces into the long)
-    val guarded = when(col("__n") <= lit(bound), packed)
-      .otherwise(raise_error(concat(
-        lit("SimHash.fingerprints: doc "), col(id).cast("string"),
-        lit(" has "), col("__n").cast("string"),
-        lit(s" distinct shingles > $bound — " + (if (wideLanes)
-          "32-bit counter lanes would overflow (that is not a document, it is a corpus)"
-        else "15-bit counter lanes would overflow; pass wideLanes = true")))).cast("long"))
-    val allAggs = aggs :+ count(lit(1)).as("__n")
-    hashed.groupBy(col(id)).agg(allAggs.head, allAggs.tail: _*)
-      .select(col(id), guarded.as("sig"))
-  }
-
-  /** Per-document distinct-shingle capacity of the default 15-bit
-    * counter lanes (2^15 − 1; also exactly the largest n whose worst
-    * -case lane sum n·(2^48+2^32+2^16+1) stayed ANSI-safe under the
-    * old 16-bit layout — the r16 "65 535" capacity was never really
-    * reachable under ANSI) — see `fingerprints`. */
+  /** Per-document distinct-shingle capacity of the narrow
+    * (default) fingerprint: 2^15 − 1, the count a 15-bit counter lane
+    * of the declarative lane-sum layout holds (the ANSI-safe capacity
+    * — SURVEY §6 r17; the layout itself is `DeclarativeRef.fingerprints`,
+    * test scope). */
   val MaxNarrowLaneShingles: Long = 32767L
 
-  /** Per-document capacity of the `wideLanes = true` 32-bit lanes:
-    * the largest n with n·(2³²+1) < 2^63, so the ANSI lane sums are
-    * provably overflow-free inside the bound. */
+  /** Per-document capacity of the `wideLanes = true` fingerprint: the
+    * largest n with n·(2³²+1) < 2^63, so the declarative layout's
+    * 32-bit ANSI lane sums are provably overflow-free inside it. */
   val MaxWideLaneShingles: Long = (1L << 31) - 1
 
-  /** MAP-SIDE fingerprints (optimization round 18, guide §2.4):
-    * (id, sig) computed in ONE projection per document via the fused
-    * `SimHashSig` kernel — output-identical to
-    * `fingerprints(Shingles.exploded(docs,…).dropDuplicates("id","sh"))`
-    * (NearDupSpec pins row-level parity on generated corpora and the
-    * capacity boundary below), at ZERO exchanges where the
-    * declarative chain paid two hash aggregates and two exchanges
-    * per corpus (dedup on (id, sh), then the per-id lane sums) —
-    * shuffles that existed only because the aggregate form couldn't
-    * see that a document's shingles never leave its own row.
-    * `fingerprints` above stays as the spec-pinned parity oracle and
-    * the path for callers with genuinely pre-exploded rows.
+  /** Bit-packed 64-bit fingerprint per document, (id, sig), computed
+    * MAP-SIDE in ONE projection per document via the fused
+    * `SimHashSig` kernel (optimization round 18, guide §2.4) — at
+    * ZERO exchanges, where the former explode → dropDuplicates(id,
+    * sh) → lane-sum aggregate chain paid two hash aggregates and two
+    * exchanges per corpus, shuffles that existed only because the
+    * aggregate form couldn't see that a document's shingles never
+    * leave its own row. That chain is `DeclarativeRef.fingerprints`
+    * (test scope); NearDupSpec pins row-level parity with it on
+    * generated corpora and at the capacity boundary below.
     *
-    * The per-doc capacity refusal is re-imposed at the SAME bounds
-    * with the same loud raise (the kernel's JVM int counters are
-    * exact far past either bound, but silently accepting a document
-    * the declarative layout refuses would make the two paths
-    * behaviorally different): narrow refuses past
-    * `MaxNarrowLaneShingles`, wide past `MaxWideLaneShingles`. */
+    * The per-doc capacity refusal keeps the declarative layout's
+    * bounds with the same loud raise (the kernel's JVM int counters
+    * are exact far past either bound, but silently accepting a
+    * document the lane layout refuses would change behavior): narrow
+    * refuses past `MaxNarrowLaneShingles`, wide past
+    * `MaxWideLaneShingles`. Docs with no shingles (null text, < n
+    * tokens) are absent. */
   def fingerprintsMapSide(docs: DataFrame, id: Column, text: Column,
                           n: Int, wideLanes: Boolean = false): DataFrame = {
     val t = graft.plans.TextExpressions
@@ -211,6 +92,18 @@ object SimHash {
   /** Codegen'd Hamming distance between two packed fingerprints. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
+  /** Corpus-size ceiling for the `agree = 1` single-chunk band: the
+    * candidate volume is ~n²·chunks/2^width (n²/32 at the 8×8
+    * default — measured 4·10⁹ candidates / 89 s at 500k docs), so at
+    * 1M docs it is already ~3·10¹⁰ pairs and growing quadratically.
+    * Above this bound `nearDupPairs` REFUSES the quadratic
+    * configuration unless `allowQuadraticBand = true`, pointing at
+    * the scale-safe combination banding (smaller radius, wider key —
+    * e.g. maxHamming = 3, agree = 5) that lives in the same
+    * operator. A guard, not an auto-switch: silently shrinking the
+    * Hamming radius would change which pairs the caller gets. */
+  val QuadraticBandMaxDocs: Long = 1000000L
+
   /** Near-dup pairs within `maxHamming`. Returns (doc_a, doc_b,
     * hamming).
     *
@@ -233,18 +126,6 @@ object SimHash {
     * keys on 40 bits — n²·56/2⁴⁰, ~6·10⁸× more selective — which is
     * exactly the regime Manku et al. ran at 8·10⁹ documents.
     */
-  /** Corpus-size ceiling for the `agree = 1` single-chunk band: the
-    * candidate volume is ~n²·chunks/2^width (n²/32 at the 8×8
-    * default — measured 4·10⁹ candidates / 89 s at 500k docs), so at
-    * 1M docs it is already ~3·10¹⁰ pairs and growing quadratically.
-    * Above this bound `nearDupPairs` REFUSES the quadratic
-    * configuration unless `allowQuadraticBand = true`, pointing at
-    * the scale-safe combination banding (smaller radius, wider key —
-    * e.g. maxHamming = 3, agree = 5) that lives in the same
-    * operator. A guard, not an auto-switch: silently shrinking the
-    * Hamming radius would change which pairs the caller gets. */
-  val QuadraticBandMaxDocs: Long = 1000000L
-
   def nearDupPairs(docs: DataFrame, id: Column, text: Column,
                    n: Int = 3, maxHamming: Int = 7, chunks: Int = 8,
                    agree: Int = 1, allowQuadraticBand: Boolean = false,
@@ -297,18 +178,7 @@ object SimHash {
           "for corpus-scale runs, or pass allowQuadraticBand = true to override")
     }
     val width = 64 / chunks
-    // fingerprints computed MAP-SIDE in one fused pass per document
-    // (round 18): the former explode → dropDuplicates(id, sh) →
-    // lane-sum aggregate chain paid two exchanges for per-row-local
-    // work — see fingerprintsMapSide (parity + refusal spec-pinned).
-    // Conf-gated ("on" default) so the declarative chain stays one
-    // interleaved-A/B toggle away.
-    val sigs =
-      if (docs.sparkSession.conf.get("spark.graft.simhash.mapSideFingerprints", "on") == "on")
-        fingerprintsMapSide(docs, id, text, n, wideLanes)
-      else fingerprints(
-        Shingles.exploded(docs, id, text, n).dropDuplicates("id", "sh"),
-        "id", "sh", wideLanes)
+    val sigs = fingerprintsMapSide(docs, id, text, n, wideLanes)
     def chunkVal(c: Int): Column =
       shiftrightunsigned(col("sig"), c * width).bitwiseAND(lit((1L << width) - 1))
     // SHUFFLE_HASH on the band join: forces both sides through an

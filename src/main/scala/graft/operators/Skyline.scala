@@ -45,8 +45,7 @@ object Skyline {
       someStrict
     }
     def toD(r: Row, i: Int): Double = r.get(i) match {
-      case n: java.lang.Number => n.doubleValue()
-      case d: java.math.BigDecimal => d.doubleValue()
+      case n: java.lang.Number => n.doubleValue() // incl. java.math.BigDecimal
       case other => throw new IllegalArgumentException(s"non-numeric dim: $other")
     }
     def localSkyline(rows: Iterator[Row]): Iterator[Row] = {

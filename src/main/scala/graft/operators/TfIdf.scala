@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * would poison hash comparison), same ordering as log-idf for
   * ranking within a document.
   *
-  * Execution shape: one explode of tokens feeds BOTH aggregations —
-  * tf per (doc, term) and df per term ride the same exploded stream
-  * with map-side partials; the per-term df table joins back on the
-  * term (AQE broadcasts it while the vocabulary fits); ranking is
-  * one window shuffle on doc_id.
+  * Execution shape: the per-doc tf map (one fused kernel pass,
+  * exploded to (doc, term, tf) rows) feeds the df-per-term
+  * aggregation; the df table joins back on the term (AQE broadcasts
+  * it while the vocabulary fits); ranking is one window shuffle on
+  * doc_id.
   */
 object TfIdf {
 
@@ -29,17 +29,11 @@ object TfIdf {
     // round 18: the per-(doc, term) tf table is per-document work —
     // the fused TokenTf kernel emits each doc's term-frequency map in
     // one pass and `explode(map)` reproduces the tf rows exactly,
-    // where the declarative form shuffled every token occurrence
-    // through an (id, term) aggregation exchange. Conf-gated; the
-    // df-per-term aggregation and the ranking window are unchanged
-    // (df counts one row per (doc, term) either way).
-    val tf =
-      if (Shingles.mapSideOn(docs))
-        docs.select(id.as("id"),
-            explode(graft.plans.TextExpressions.tokenTf(lower(text)))
-              .as(Seq("sh", "tf")))
-      else Shingles.exploded(docs, id, text, 1)
-        .groupBy(col("id"), col("sh")).agg(count(lit(1)).as("tf"))
+    // where the declarative form (`DeclarativeRef.tf`, test scope)
+    // shuffled every token occurrence through an (id, term)
+    // aggregation exchange. df counts one row per (doc, term).
+    val tf = docs.select(id.as("id"),
+      explode(graft.plans.TextExpressions.tokenTf(lower(text))).as(Seq("sh", "tf")))
     val df = tf.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     // corpus size as a broadcast 1-row aggregate — stays in the plan,
     // no driver-side action

@@ -919,28 +919,6 @@ case class TrigramLmScore(child: Expression, model: CompiledLm)
     copy(child = newChild)
 }
 
-/** `struct<n_sh:bigint, sig:bigint>`: one document's 64-bit SimHash
-  * fingerprint and its distinct-shingle count, computed in a SINGLE
-  * MAP-SIDE pass (optimization round 18) — the fused form of C3/C3b's
-  * explode → dropDuplicates(id, sh) → 16-lane-sum aggregate chain.
-  * A document's shingles all originate from its own input row, so
-  * neither the per-doc distinct set nor the 64 ones-counts ever
-  * needed a shuffle; the declarative chain paid TWO hash aggregates
-  * and TWO exchanges per corpus for what this computes in place
-  * (guide §2.4: remove shuffles outright).
-  *
-  * Semantics replicated exactly: grams come from the same
-  * `WordNgrams.slice` byte-walk the exploded form used; distinctness
-  * is binary string equality (dropDuplicates' rule); each distinct
-  * gram is md5-hashed once; bit i of the signature is set iff
-  * 2·ones(i) > n with ones(i) counting bit (i mod 4) of hex char
-  * (i div 4 + 1) — the identical construction, pinned against the
-  * aggregate form AND NearDupSpec's pure-Scala reference. Counters
-  * are plain JVM ints, so the kernel is exact for ANY feasible
-  * document — the 32 767 / 2³¹−1 capacity bounds of the declarative
-  * lane layouts are artifacts of packing counters into aggregation
-  * longs; the CALLER re-imposes them for behavioral compatibility
-  * (SimHash.fingerprintsMapSide keeps the same loud refusal). */
 /** `struct<top_token_frac:double, top_bigram_frac:double>`: one
   * document's repetition statistics (C14/C44 — fraction of token
   * occurrences taken by the most frequent token, same for word
@@ -953,8 +931,9 @@ case class TrigramLmScore(child: Expression, model: CompiledLm)
   * with multiplicity, frac = round(max/total, 6) with Spark's
   * BigDecimal HALF_UP double rounding; a doc with tokens but no
   * 2-gram reports 0.0 for the bigram frac (the left-join coalesce
-  * convention). Parity spec-pinned. Callers reproduce the absent-row
-  * convention for token-less docs. */
+  * convention). Parity with the test-scope
+  * `DeclarativeRef.repetitionStats` is spec-pinned. Callers reproduce
+  * the absent-row convention for token-less docs. */
 case class RepetitionStats(child: Expression) extends UnaryExpression {
   override def dataType: DataType = RepetitionStats.schema
   override def prettyName: String = "graft_repetition_stats"
@@ -1009,7 +988,8 @@ object RepetitionStats {
   * input — callers pass `lower(text)`), computed map-side
   * (optimization round 18): C18's tf table is per-document work, but
   * the declarative form exploded every token occurrence through an
-  * (id, term) aggregation exchange. `explode(map)` over this column
+  * (id, term) aggregation exchange (the test-scope
+  * `DeclarativeRef.tf`). `explode(map)` over this column
   * reproduces the tf rows exactly (order-free consumers). Null
   * input → null; token-less docs → empty map (callers drop or keep
   * per their old convention). */
@@ -1063,7 +1043,8 @@ object TokenTf {
   * OCCURRENCE where this hashes each distinct gram once.
   * Distinctness is on the HASH VALUES (dropDuplicates' rule over h);
   * order is irrelevant to the consumers (joins/aggregations).
-  * Parity spec-pinned. */
+  * Parity with the test-scope `DeclarativeRef.md5Grams` is
+  * spec-pinned. */
 case class Md5GramSet(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_md5_gram_set"
@@ -1125,7 +1106,8 @@ object Md5GramSet {
   * argmax), no hits → "und". The per-(doc, lang) hit counts are
   * per-document work; the declarative form paid a token explode, a
   * broadcast join and TWO aggregation exchanges per corpus for them.
-  * Parity with `LangId.detect` is spec-pinned. */
+  * Parity with that join form (the test-scope `DeclarativeRef.langId`)
+  * is spec-pinned. */
 case class LangIdScore(child: Expression) extends UnaryExpression {
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_lang_id"
@@ -1184,6 +1166,28 @@ object LangIdScore {
   }
 }
 
+/** `struct<n_sh:bigint, sig:bigint>`: one document's 64-bit SimHash
+  * fingerprint and its distinct-shingle count, computed in a SINGLE
+  * MAP-SIDE pass (optimization round 18) — the fused form of C3/C3b's
+  * explode → dropDuplicates(id, sh) → 16-lane-sum aggregate chain.
+  * A document's shingles all originate from its own input row, so
+  * neither the per-doc distinct set nor the 64 ones-counts ever
+  * needed a shuffle; the declarative chain paid TWO hash aggregates
+  * and TWO exchanges per corpus for what this computes in place
+  * (guide §2.4: remove shuffles outright).
+  *
+  * Semantics replicated exactly: grams come from the same
+  * `WordNgrams.slice` byte-walk the exploded form used; distinctness
+  * is binary string equality (dropDuplicates' rule); each distinct
+  * gram is md5-hashed once; bit i of the signature is set iff
+  * 2·ones(i) > n with ones(i) counting bit (i mod 4) of hex char
+  * (i div 4 + 1) — the identical construction, pinned against the
+  * test-scope `DeclarativeRef.fingerprints` AND NearDupSpec's
+  * pure-Scala reference. Counters are plain JVM ints, so the kernel
+  * is exact for ANY feasible document — the 32 767 / 2³¹−1 capacity
+  * bounds of the declarative lane layouts are artifacts of packing
+  * counters into aggregation longs; the CALLER re-imposes them
+  * (SimHash.fingerprintsMapSide keeps the same loud refusal). */
 case class SimHashSig(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = SimHashSig.schema
   override def prettyName: String = "graft_simhash_sig"
@@ -1263,7 +1267,9 @@ object SimHashSig {
   * bits dedup to one element, identical to the aggregate form),
   * signed-ascending order (sort_array's). Empty/short/null docs
   * return an empty/null array; the callers reproduce the aggregate
-  * form's absent-row/empty-set conventions. Parity is spec-pinned. */
+  * form's absent-row/empty-set conventions. Parity with the aggregate
+  * form (which still builds Jaccard's sub-barrier-scale sets) is
+  * spec-pinned. */
 case class HashedShingleSet(child: Expression, n: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType,
     containsNull = false)
@@ -1307,7 +1313,8 @@ object HashedShingleSet {
   * md5-hex strings, element i = min over the doc's shingles of
   * md5("i:" + shingle) — computed in a single map-side pass
   * (optimization round 18): the fused form of
-  * `MinHash.signatureAgg(Shingles.exploded(…))`, which paid a corpus
+  * `DeclarativeRef.signatureAgg(Shingles.exploded(…))` (test scope),
+  * which paid a corpus
   * exchange and k md5 evaluations per exploded OCCURRENCE for
   * row-local work. This dedups the shingles first (the min over a
   * multiset equals the min over its set), hashes each DISTINCT

@@ -19,30 +19,23 @@ class LinesQualitySpec extends SparkSpec {
     } ++ Seq((50L, null.asInstanceOf[String]), (51L, "$$$ %%%"), (52L, "solo"),
       (53L, "rep rep rep rep"))
     val df = gen.toDF("doc_id", "text")
-    val on = Shingles.repetitionStats(df, col("doc_id"), col("text"))
-      .as[(Long, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    spark.conf.set(Shingles.MapSideKey, "off")
-    try {
-      val off = Shingles.repetitionStats(df, col("doc_id"), col("text"))
-        .as[(Long, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-      assert(on == off)
-    } finally spark.conf.unset(Shingles.MapSideKey)
-    // gopherFilter: full-row equality across the arms (covers the
-    // fused no-join shape vs the left-join shape, incl. null text)
-    val pOn = Quality.gopherFilter(df, col("doc_id"), col("text"),
+    def byId(r: org.apache.spark.sql.DataFrame) =
+      r.as[(Long, Double, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(byId(Shingles.repetitionStats(df, col("doc_id"), col("text"))) ==
+      byId(DeclarativeRef.repetitionStats(df, col("doc_id"), col("text"))))
+    // gopherFilter: its statistics equal the left-join form's (covers
+    // the fused no-join shape, incl. null text); the verdict columns
+    // are a projection of them
+    val p = Quality.gopherFilter(df, col("doc_id"), col("text"),
       Quality.GopherParams(minWords = 3, minStop = 0.0, maxTopToken = 0.5))
-      .collect().map(_.toSeq).toSet
-    spark.conf.set(Shingles.MapSideKey, "off")
-    try {
-      val pOff = Quality.gopherFilter(df, col("doc_id"), col("text"),
-        Quality.GopherParams(minWords = 3, minStop = 0.0, maxTopToken = 0.5))
-        .collect().map(_.toSeq).toSet
-      assert(pOn == pOff)
-    } finally spark.conf.unset(Shingles.MapSideKey)
+    assert(p.drop("keep", "fail_reasons").collect().map(_.toSeq).toSet ==
+      DeclarativeRef.gopherStats(df, col("doc_id"), col("text"))
+        .collect().map(_.toSeq).toSet)
+    assert(p.count() == df.count())
   }
 
   test("map-side lang-id and tf kernels equal the join/aggregate forms (r18)") {
-    import graft.operators.{LangId, Shingles, TfIdf}
+    import graft.operators.{LangId, TfIdf}
     // mixed-language corpus incl. the es/fr SHARED stopwords ("la",
     // "de", "que" — the join form counts them for BOTH languages),
     // ties, null text, and token-less docs
@@ -57,18 +50,13 @@ class LinesQualitySpec extends SparkSpec {
       (8L, "le les et est pour")).toDF("doc_id", "text")
     val langOn = LangId.detect(docs, col("doc_id"), col("text"))
       .as[(Long, String)].collect().toMap
-    val tfOn = TfIdf.topTerms(docs, col("doc_id"), lower(col("text")), 3)
-      .collect().map(_.toSeq).toSet
-    spark.conf.set(Shingles.MapSideKey, "off")
-    try {
-      val langOff = LangId.detect(docs, col("doc_id"), col("text"))
-        .as[(Long, String)].collect().toMap
-      assert(langOn == langOff)
-      assert(langOn(3L) == "es" && langOn(6L) == "und" && langOn(7L) == "und")
-      val tfOff = TfIdf.topTerms(docs, col("doc_id"), lower(col("text")), 3)
-        .collect().map(_.toSeq).toSet
-      assert(tfOn == tfOff)
-    } finally spark.conf.unset(Shingles.MapSideKey)
+    assert(langOn == DeclarativeRef.langId(docs, col("doc_id"), col("text"))
+      .as[(Long, String)].collect().toMap)
+    assert(langOn(3L) == "es" && langOn(6L) == "und" && langOn(7L) == "und")
+    assert(TfIdf.topTerms(docs, col("doc_id"), lower(col("text")), 3)
+      .collect().map(_.toSeq).toSet ==
+      DeclarativeRef.topTerms(docs, col("doc_id"), lower(col("text")), 3)
+        .collect().map(_.toSeq).toSet)
   }
 
   private val good =

@@ -13,7 +13,7 @@ class ModelsSpec extends SparkSpec {
 
   private def vecs = {
     val rows = (0L until 40L).map(i =>
-      (i, Array.tabulate(8)(j => math.cos(i * 31 + j * 7).toFloat)))
+      (i, Array.tabulate(8)(j => math.cos((i * 31 + j * 7).toDouble).toFloat)))
     rows.toDF("vec_id", "embedding")
   }
 

@@ -129,9 +129,9 @@ class NearDupPropertySpec extends SparkSpec {
       val ex = graft.operators.Shingles.exploded(
           docs.toDF("doc_id", "text"), col("doc_id"), col("text"), 3)
         .dropDuplicates("id", "sh")
-      val narrow = graft.operators.SimHash.fingerprints(ex, "id", "sh")
+      val narrow = DeclarativeRef.fingerprints(ex, "id", "sh")
         .as[(Long, Long)].collect().toMap
-      val wide = graft.operators.SimHash.fingerprints(ex, "id", "sh", wideLanes = true)
+      val wide = DeclarativeRef.fingerprints(ex, "id", "sh", wideLanes = true)
         .as[(Long, Long)].collect().toMap
       assert(narrow == wide, s"lane layouts disagree at seed $seed")
       val want = docs.map { case (id, s) => id -> shingleSet(s) }

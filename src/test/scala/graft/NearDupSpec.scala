@@ -79,9 +79,7 @@ class NearDupSpec extends SparkSpec {
   }
 
   test("SimHash bitString renders 64 bits matching the packed long") {
-    val sigs = SimHash.fingerprints(
-      Shingles.exploded(corpus, col("doc_id"), col("text"), 3).dropDuplicates("id", "sh"),
-      "id", "sh")
+    val sigs = SimHash.fingerprintsMapSide(corpus, col("doc_id"), col("text"), 3)
     val rendered = sigs.select(col("id"), SimHash.bitString(col("sig")).as("bs"), col("sig"))
       .as[(Long, String, Long)].collect()
     rendered.foreach { case (_, bs, sig) =>
@@ -104,7 +102,7 @@ class NearDupSpec extends SparkSpec {
     // ARITHMETIC_OVERFLOW on the r16 16-bit layout (top-lane ones
     // ≈ 35k ≥ 32 768) — must get the guard's ACTIONABLE message
     val eAnsi = intercept[Throwable] {
-      SimHash.fingerprints(big, "id", "sh").collect()
+      DeclarativeRef.fingerprints(big, "id", "sh").collect()
     }
     assert(msgChain(eAnsi).contains("distinct shingles") &&
       msgChain(eAnsi).contains("wideLanes"), msgChain(eAnsi))
@@ -112,16 +110,16 @@ class NearDupSpec extends SparkSpec {
     // parity with the wide lanes, whose sums provably never overflow
     val atBound = spark.range(SimHash.MaxNarrowLaneShingles)
       .selectExpr("1L AS id", "concat('sh', id) AS sh")
-    val narrowAt = SimHash.fingerprints(atBound, "id", "sh")
+    val narrowAt = DeclarativeRef.fingerprints(atBound, "id", "sh")
       .as[(Long, Long)].head()._2
-    val wideAt = SimHash.fingerprints(atBound, "id", "sh", wideLanes = true)
+    val wideAt = DeclarativeRef.fingerprints(atBound, "id", "sh", wideLanes = true)
       .as[(Long, Long)].head()._2
     assert(narrowAt == wideAt)
     // one past the bound refuses with the same actionable message
     val onePast = spark.range(SimHash.MaxNarrowLaneShingles + 1)
       .selectExpr("1L AS id", "concat('sh', id) AS sh")
     val ePast = intercept[Throwable] {
-      SimHash.fingerprints(onePast, "id", "sh").collect()
+      DeclarativeRef.fingerprints(onePast, "id", "sh").collect()
     }
     assert(msgChain(ePast).contains("distinct shingles") &&
       msgChain(ePast).contains("wideLanes"), msgChain(ePast))
@@ -131,18 +129,18 @@ class NearDupSpec extends SparkSpec {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try {
       val e = intercept[Throwable] {
-        SimHash.fingerprints(big, "id", "sh").collect()
+        DeclarativeRef.fingerprints(big, "id", "sh").collect()
       }
       assert(msgChain(e).contains("distinct shingles") &&
         msgChain(e).contains("wideLanes"), msgChain(e))
-      val narrowAtOff = SimHash.fingerprints(atBound, "id", "sh")
+      val narrowAtOff = DeclarativeRef.fingerprints(atBound, "id", "sh")
         .as[(Long, Long)].head()._2
       assert(narrowAtOff == wideAt)
     } finally spark.conf.set("spark.sql.ansi.enabled", "true")
     // the widened path accepts the over-bound doc and must match a
     // pure-Scala reference computation of the same ones-count/majority
     // fingerprint (md5 hex char i/4, bit i%4, set iff 2·ones > n)
-    val wide = SimHash.fingerprints(big, "id", "sh", wideLanes = true)
+    val wide = DeclarativeRef.fingerprints(big, "id", "sh", wideLanes = true)
       .as[(Long, Long)].collect()
     assert(wide.length == 1 && wide.head._1 == 1L)
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -163,8 +161,8 @@ class NearDupSpec extends SparkSpec {
     // plumbing: wideLanes returns the identical pair set
     val ex = Shingles.exploded(corpus, col("doc_id"), col("text"), 3)
       .dropDuplicates("id", "sh")
-    val narrow = SimHash.fingerprints(ex, "id", "sh").as[(Long, Long)].collect().toMap
-    val wideAll = SimHash.fingerprints(ex, "id", "sh", wideLanes = true)
+    val narrow = DeclarativeRef.fingerprints(ex, "id", "sh").as[(Long, Long)].collect().toMap
+    val wideAll = DeclarativeRef.fingerprints(ex, "id", "sh", wideLanes = true)
       .as[(Long, Long)].collect().toMap
     assert(narrow == wideAll && narrow.size == 5)
     val gotWide = SimHash.nearDupPairs(corpus, col("doc_id"), col("text"), wideLanes = true)
@@ -178,7 +176,7 @@ class NearDupSpec extends SparkSpec {
     // row-level parity on the fixture corpus (exact dups, near-dups)
     val ex = Shingles.exploded(corpus, col("doc_id"), col("text"), 3)
       .dropDuplicates("id", "sh")
-    val agg = SimHash.fingerprints(ex, "id", "sh").as[(Long, Long)].collect().toMap
+    val agg = DeclarativeRef.fingerprints(ex, "id", "sh").as[(Long, Long)].collect().toMap
     val mapSide = SimHash.fingerprintsMapSide(corpus, col("doc_id"), col("text"), 3)
       .as[(Long, Long)].collect().toMap
     assert(mapSide == agg && mapSide.size == 5)
@@ -191,7 +189,7 @@ class NearDupSpec extends SparkSpec {
     }
     val genDf = gen.toDF("doc_id", "text")
     for (n <- Seq(1, 2, 3)) {
-      val a = SimHash.fingerprints(
+      val a = DeclarativeRef.fingerprints(
         Shingles.exploded(genDf, col("doc_id"), col("text"), n)
           .dropDuplicates("id", "sh"), "id", "sh")
         .as[(Long, Long)].collect().toMap
@@ -217,7 +215,7 @@ class NearDupSpec extends SparkSpec {
       .map(i => s"w$i").mkString(" "))).toDF("doc_id", "text")
     val atMap = SimHash.fingerprintsMapSide(at, col("doc_id"), col("text"), 1)
       .as[(Long, Long)].head()._2
-    val atAgg = SimHash.fingerprints(
+    val atAgg = DeclarativeRef.fingerprints(
       Shingles.exploded(at, col("doc_id"), col("text"), 1)
         .dropDuplicates("id", "sh"), "id", "sh")
       .as[(Long, Long)].head()._2
@@ -242,37 +240,49 @@ class NearDupSpec extends SparkSpec {
       val mapSets = Shingles.hashSetsMapSide(genDf, col("doc_id"), col("text"), n)
         .as[(Long, Seq[Long])].collect().toMap
       assert(mapSets == aggSets, s"n=$n")
-      val aggSig = MinHash.signatureAgg(ex, "id", "sh", 8)
+      val aggSig = DeclarativeRef.signatureAgg(ex, "id", "sh", 8)
         .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
       val mapSig = MinHash.signaturesMapSide(genDf, col("doc_id"), col("text"), n, 8)
         .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
       assert(mapSig == aggSig, s"n=$n")
     }
-    // end-to-end: the conf-gated declarative arms return identical
-    // pair sets and scores
+    // the Jaccard set table (kernel vs its sub-barrier aggregate
+    // form), and the per-doc distinct shingle rows
+    for (n <- Seq(1, 3)) {
+      assert(Jaccard.sortedSets(genDf, col("doc_id"), col("text"), n)
+        .as[(Long, Seq[Long], Int)].collect().toSet ==
+        Jaccard.sortedSetsDeclarative(genDf, col("doc_id"), col("text"), n)
+          .as[(Long, Seq[Long], Int)].collect().toSet, s"n=$n")
+      assert(Shingles.explodedDistinct(genDf, col("doc_id"), col("text"), n)
+        .as[(Long, String)].collect().sorted.toSeq ==
+        DeclarativeRef.explodedDistinct(genDf, col("doc_id"), col("text"), n)
+          .as[(Long, String)].collect().sorted.toSeq, s"n=$n")
+    }
+    // end-to-end: the kernel operators return the pair sets and
+    // scores of the declarative references — on the generated corpus
+    // plus planted near-dups (one word appended to ten of its docs)
+    // and the fixture corpus, so the pair sets are not empty
+    val planted = gen.take(10).map { case (i, t) => (i + 200, t + " extra") }
+    val pairDf = genDf.union((planted ++ corpus.as[(Long, String)].collect()
+      .map { case (i, t) => (i + 100, t) }).toDF("doc_id", "text"))
     def pairsM(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
-    val mOn = pairsM(MinHash.nearDupPairs(genDf, col("doc_id"), col("text")))
-    val jOn = pairsM(Jaccard.nearDupPairs(genDf, col("doc_id"), col("text"), 3, 0.5))
-    spark.conf.set(graft.operators.Shingles.MapSideKey, "off")
-    try {
-      assert(pairsM(MinHash.nearDupPairs(genDf, col("doc_id"), col("text"))) == mOn)
-      assert(pairsM(Jaccard.nearDupPairs(genDf, col("doc_id"), col("text"), 3, 0.5)) == jOn)
-    } finally spark.conf.unset(graft.operators.Shingles.MapSideKey)
-    // Incremental.signatures: bands and sets identical across arms
-    // (including the empty-set rows for short/null docs)
+    val mOn = pairsM(MinHash.nearDupPairs(pairDf, col("doc_id"), col("text")))
+    val jOn = pairsM(Jaccard.nearDupPairs(pairDf, col("doc_id"), col("text"), 3, 0.5))
+    assert(mOn == pairsM(DeclarativeRef.minHashPairs(pairDf, col("doc_id"), col("text"))))
+    assert(jOn == pairsM(DeclarativeRef.jaccardPairs(pairDf, col("doc_id"), col("text"), 3, 0.5)))
+    assert(mOn.nonEmpty && mOn.subsetOf(jOn))
+    // Incremental.signatures: bands and sets identical to the
+    // aggregate forms (including the empty-set rows for short/null docs)
     val (bOn, sOn) = graft.operators.Incremental.signatures(
       genDf, col("doc_id"), col("text"))
-    val bandsOn = bOn.as[(Long, Int, String)].collect().toSet
     val setsOn = sOn.as[(Long, Seq[Long])].collect().toMap
-    spark.conf.set(graft.operators.Shingles.MapSideKey, "off")
-    try {
-      val (bOff, sOff) = graft.operators.Incremental.signatures(
-        genDf, col("doc_id"), col("text"))
-      assert(bOff.as[(Long, Int, String)].collect().toSet == bandsOn)
-      assert(sOff.as[(Long, Seq[Long])].collect().toMap == setsOn)
-      assert(setsOn.contains(60L) && setsOn(60L).isEmpty) // null text kept, empty set
-    } finally spark.conf.unset(graft.operators.Shingles.MapSideKey)
+    val (bRef, sRef) = DeclarativeRef.incrementalSignatures(
+      genDf, col("doc_id"), col("text"))
+    assert(bOn.as[(Long, Int, String)].collect().toSet ==
+      bRef.as[(Long, Int, String)].collect().toSet)
+    assert(setsOn == sRef.as[(Long, Seq[Long])].collect().toMap)
+    assert(setsOn.contains(60L) && setsOn(60L).isEmpty) // null text kept, empty set
   }
 
   test("map-side md5 gram sets: contamination operators equal across the arms") {
@@ -285,20 +295,21 @@ class NearDupSpec extends SparkSpec {
     val train = docs.filter(col("doc_id") % 5 =!= 0)
     val eval = docs.filter(col("doc_id") % 5 === 0)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val bench = (col("doc_id") % 10).cast("string")
     val sgOn = rows(Contamination.sharedGrams(train, eval, col("doc_id"), col("text"), 3))
-    val pfOn = rows(Contamination.sharedGramsPrefiltered(train, eval,
-      col("doc_id"), col("text"), 3, expectedEvalGrams = 10000L))
-    val bbOn = rows(Contamination.sharedGramsByBenchmark(train, eval,
-      col("doc_id"), col("text"), (col("doc_id") % 10).cast("string"), 3))
-    spark.conf.set(graft.operators.Shingles.MapSideKey, "off")
-    try {
-      assert(rows(Contamination.sharedGrams(train, eval,
-        col("doc_id"), col("text"), 3)) == sgOn)
-      assert(rows(Contamination.sharedGramsPrefiltered(train, eval,
-        col("doc_id"), col("text"), 3, expectedEvalGrams = 10000L)) == pfOn)
-      assert(rows(Contamination.sharedGramsByBenchmark(train, eval,
-        col("doc_id"), col("text"), (col("doc_id") % 10).cast("string"), 3)) == bbOn)
-    } finally spark.conf.unset(graft.operators.Shingles.MapSideKey)
+    assert(sgOn == rows(DeclarativeRef.sharedGrams(train, eval, col("doc_id"), col("text"), 3)))
+    assert(rows(Contamination.sharedGramsPrefiltered(train, eval,
+      col("doc_id"), col("text"), 3, expectedEvalGrams = 10000L)) == sgOn)
+    assert(rows(Contamination.sharedGramsByBenchmark(train, eval,
+      col("doc_id"), col("text"), bench, 3)) ==
+      rows(DeclarativeRef.sharedGramsByBenchmark(train, eval,
+        col("doc_id"), col("text"), bench, 3)))
+    // the per-doc gram sets themselves
+    assert(docs.select(col("doc_id"),
+        explode(graft.plans.TextExpressions.md5GramSet(lower(col("text")), 3)))
+      .as[(Long, String)].collect().sorted.toSeq ==
+      DeclarativeRef.md5Grams(docs, col("doc_id"), col("text"), 3)
+        .as[(Long, String)].collect().sorted.toSeq)
     assert(sgOn.nonEmpty) // the generated corpus genuinely collides
   }
 

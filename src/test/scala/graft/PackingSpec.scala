@@ -55,7 +55,7 @@ class PackingSpec extends SparkSpec {
       .agg(sum(col("end_tok") - col("begin_tok")).as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val lastSeq = sums.keys.max
-    val total = seqDocs.agg(sum(col("tok"))).head.getLong(0)
+    val total = seqDocs.agg(sum(col("tok"))).head().getLong(0)
     assert(sums.keys.toSeq.sorted == (0L to lastSeq), "windows are contiguous")
     assert((0L until lastSeq).forall(sums(_) == 256L), "full windows exact")
     assert(sums(lastSeq) == total - 256L * lastSeq, "tail window holds the rest")
@@ -105,7 +105,7 @@ class PackingSpec extends SparkSpec {
     assert(e1.collect().map(r => (r.getLong(0), r.getLong(1))).toSet !=
       e2.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     def total(df: org.apache.spark.sql.DataFrame): Long =
-      df.agg(sum(col("end_tok") - col("begin_tok"))).head.getLong(0)
+      df.agg(sum(col("end_tok") - col("begin_tok"))).head().getLong(0)
     assert(total(e1) == total(e2), "every epoch carries the full corpus")
   }
 }

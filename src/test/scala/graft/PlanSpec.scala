@@ -223,6 +223,22 @@ class PlanSpec extends SparkSpec {
       s"window no longer reads the strata aggregate:\n${wins.head}")
   }
 
+  test("c40's window is the only unpartitioned Window across all declared queries") {
+    // The driver mains silence WindowExec's "No Partition Defined"
+    // WARN for every window (EngineLog), so a new unbounded
+    // single-partition window would run silently there. This sweep is
+    // that signal instead: every declared plan (subqueries included)
+    // is searched, and c40's proven-bounded Σw window (pinned above)
+    // must be the one and only Window with an empty partition spec.
+    import org.apache.spark.sql.catalyst.plans.logical
+    val unpartitioned = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (q, build) =>
+      build(spark, dir).queryExecution.optimizedPlan.collectWithSubqueries {
+        case w: logical.Window if w.partitionSpec.isEmpty => q
+      }
+    }
+    assert(unpartitioned == Seq("c40_mixture_plan"), unpartitioned)
+  }
+
   test("c35/c36/c37 round-6 dedup ops: equi-joins only, no nested loop or cartesian") {
     for (q <- Seq("c35_span_rewrite", "c36_semdedup", "c37_fuzzy_decontaminate",
         "c38_cluster_keep_best")) {
@@ -336,12 +352,11 @@ class PlanSpec extends SparkSpec {
     // sf10, flat 16→32-thread scaling. The fix pins this shape: one
     // repartition exchange (id-keyed at 2× the session count, so the
     // elision rule can never fold it into the aggregation's own
-    // partitioning — Jaccard.barriered) above the merged aggregation
-    // is the reuse point, so exactly one partial and one merge
-    // collect_set execute, and every other consumer is a
-    // ReusedExchange. Forced here via the two-step composition
-    // because the sf0.001 fixture sits (correctly) below the
-    // BarrierMinInputBytes auto-switch.
+    // partitioning — Jaccard.barriered) above the set build is the
+    // reuse point, so the build executes once and every other
+    // consumer is a ReusedExchange. Forced here via the two-step
+    // composition because the sf0.001 fixture sits (correctly) below
+    // the BarrierMinInputBytes auto-switch.
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def shape() = {
@@ -351,25 +366,15 @@ class PlanSpec extends SparkSpec {
       df.collect()
       df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     }
-    // round-18 default: the set table is built by the MAP-SIDE kernel
-    // (no collect_set anywhere); the barrier is still the single
-    // build point — the kernel scan appears once, every other
-    // consumer is a ReusedExchange
+    // the set table is built by the MAP-SIDE kernel (round 18 — no
+    // collect_set anywhere); the barrier is the single build point:
+    // the kernel scan appears once, every other consumer is a
+    // ReusedExchange
     val p = shape()
     assert(!p.contains("collect_set"), p)
     assert("graft_hashed_shingle_set".r.findAllIn(p).size == 1, p)
     assert(p.contains("REPARTITION_BY_NUM"), p)
     assert("ReusedExchange".r.findAllIn(p).size >= 3, p)
-    // declarative arm (conf off): the original round-11 pin — exactly
-    // one partial + one merge collect_set, same barrier reuse
-    spark.conf.set(operators.Shingles.MapSideKey, "off")
-    try {
-      val pOff = shape()
-      assert("functions=\\[partial_collect_set".r.findAllIn(pOff).size == 1, pOff)
-      assert("functions=\\[collect_set".r.findAllIn(pOff).size == 1, pOff)
-      assert(pOff.contains("REPARTITION_BY_NUM"), pOff)
-      assert("ReusedExchange".r.findAllIn(pOff).size >= 3, pOff)
-    } finally spark.conf.unset(operators.Shingles.MapSideKey)
   }
 
   test("c4 jaccard: the barrier auto-switch follows plan-time input size") {

@@ -14,7 +14,7 @@ class SimilaritySpec extends SparkSpec {
     val base = Array.tabulate(8)(j => math.sin(j * 2.0 + 1).toFloat)
     val near = base.clone(); near(0) = near(0) + 0.01f
     val rows = Seq((0L, base), (1L, near)) ++
-      (2L until 12L).map(i => (i, Array.tabulate(8)(j => math.cos(i * 31 + j * 7).toFloat)))
+      (2L until 12L).map(i => (i, Array.tabulate(8)(j => math.cos((i * 31 + j * 7).toDouble).toFloat)))
     rows.toDF("vec_id", "embedding")
   }
 

@@ -14,6 +14,14 @@ class StreamingSpec extends SparkSpec {
 
   case class Raw(ts: Timestamp, event_type: String, value: Double)
 
+  test("StreamBench.median: middle value for odd counts, mean of the two middles for even") {
+    assert(StreamBench.median(Seq(3.0, 1.0, 2.0)) == 2.0)
+    assert(StreamBench.median(Seq(4.0, 1.0, 3.0, 2.0)) == 2.5)
+    assert(StreamBench.median(Seq(7.0)) == 7.0)
+    assert(StreamBench.median(Seq(5.0, 1.0)) == 3.0)
+    intercept[IllegalArgumentException](StreamBench.median(Seq.empty))
+  }
+
   test("D1 hourlyCounts: watermark closes windows, append emits once") {
     val input = MemoryStream[Raw](spark)(Encoders.product[Raw])
     val q = EventStream.hourlyCounts(input.toDF(), watermark = "1 hour")
