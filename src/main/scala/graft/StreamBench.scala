@@ -195,7 +195,7 @@ object StreamBench {
       * of the stderr attribution lines). */
     def run(gate: String, size: Int,
             start: (DataFrame, String) => StreamingQuery)
-      : (Seq[Double], Seq[Double], Seq[(String, Double)]) =
+      : (Seq[Double], Seq[Double], Seq[streaming.SinkProfile.Sample]) =
       if (sourceMode == "file") {
         val dir = java.nio.file.Files.createTempDirectory(s"graft-sb-$gate-$size").toString
         val spool = dir + "/spool"
@@ -529,13 +529,15 @@ object StreamBench {
       val per = rs.sortBy(_._2).map { case (_, size, secs, med, feedSecs, stages) =>
         // per-stage aggregation (GRAFT_SINK_PROFILE=1 only): one
         // sample per measured batch per stage → median + the raw
-        // samples, so a cited per-stage table traces to this record
+        // samples (seconds and Spark jobs), so a cited per-stage
+        // table traces to this record
         val stageJson =
           if (stages.isEmpty) ""
-          else stages.groupBy(_._1).toSeq.sortBy(_._1).map { case (st, ss) =>
-            val vals = ss.map(_._2)
+          else stages.groupBy(_.stage).toSeq.sortBy(_._1).map { case (st, ss) =>
+            val vals = ss.map(_.sec)
             s""""$st":{"median_sec":${j(median(vals))},""" +
-              s""""secs":[${vals.map(j(_)).mkString(",")}]}"""
+              s""""secs":[${vals.map(j(_)).mkString(",")}],""" +
+              s""""jobs":[${ss.map(_.jobs).mkString(",")}]}"""
           }.mkString(""","stages":{""", ",", "}")
         s""""batch_$size":{"secs":[${secs.map(j(_)).mkString(",")}],""" +
           s""""feed_secs":[${feedSecs.map(j(_)).mkString(",")}],""" +

@@ -84,6 +84,11 @@ object Incremental {
     * fallback, identical results. 512k keys ≈ ~30 MB collected. */
   val MaxPrunerBandRows: Long = 1L << 19
 
+  /** Upper bound on the band rows `signatures` emits for `nDocs`
+    * docs: every doc emits at most k/bandRows band rows (short docs
+    * emit none). */
+  def bandRowBound(nDocs: Long, k: Int, bandRows: Int): Long = nDocs * (k / bandRows)
+
   /** Signature tables for a doc set: bands (id, bi, bk) — one row per
     * band for the bucketed store layout — and sets (id, s) with the
     * sorted distinct xxhash64-shingle LONG array for exact
@@ -157,14 +162,16 @@ object Incremental {
     val (bBands0, bSets0) = signatures(batch, id, text, n, k, bandRows)
     // the contract is ENFORCED, not documentary — and the guard runs
     // BEFORE anything materializes: every doc emits at most
-    // k/bandRows band rows (short docs emit none), so one cheap
-    // count of the incoming batch upper-bounds the band table
-    // without running the shingle→minhash pipeline, and an oversized
+    // k/bandRows band rows (short docs emit none), so the incoming
+    // batch's row count upper-bounds the band table without running
+    // the shingle→minhash pipeline — free when the caller passes a
+    // `Pins.checkpoint`ed batch (its count is already known), one
+    // cheap count otherwise — and an oversized
     // "micro-batch" demotes to the declarative shape WITHOUT first
     // paying an eager corpus-sized checkpoint it would immediately
     // abandon (the bound can only demote EARLY — on batches padded
     // with short docs — which errs toward the scale-safe shape)
-    val nBandBound = if (microBatch) batch.count() * (k / bandRows) else 0L
+    val nBandBound = if (microBatch) bandRowBound(Pins.count(batch), k, bandRows) else 0L
     val micro = microBatch && {
       if (nBandBound > maxBandRows) {
         demotions.increment() // surfaced in StreamBench's JSON, not just stderr
@@ -187,8 +194,8 @@ object Incremental {
       if (micro) (Pins.checkpoint(bBands0), Pins.checkpoint(bSets0))
       else (bBands0, bSets0)
     // the pruner cap below compares the ACTUAL band-row count —
-    // counting the already-checkpointed table is one trivial job
-    val nBand = if (micro) bBands.count() else nBandBound
+    // the checkpoint above already counted it (no job)
+    val nBand = if (micro) Pins.count(bBands) else nBandBound
     // the pruner point-read path pays driver-side key collects — cap
     // them at a depth where prunedRead can still plausibly win (its
     // own alive-key cap is far smaller); past it the broadcast
@@ -292,10 +299,12 @@ object Incremental {
                  prunedRight: Option[Seq[Any] => Option[DataFrame]]) = {
       // candidate ids are batch-bounded → broadcast them to prune the
       // (possibly store-sized) right side down to candidate rows with
-      // a scan, never a shuffle of the store
+      // a scan, never a shuffle of the store. The pruner's key list is
+      // deduped on the driver: the collected array is bounded by the
+      // pruner cap, and a distinct() would add a shuffle stage
       val pruned =
         if (usePruners) prunedRight.flatMap(f =>
-          f(cand.select(col("oid")).distinct().collect().map(_.get(0)).toSeq))
+          f(cand.select(col("oid")).collect().map(_.get(0)).distinct.toSeq))
         else None
       val reduced = pruned.map(_.select(col("id"), col("s"))).getOrElse {
         if (micro) rightSets.join(
@@ -311,11 +320,12 @@ object Incremental {
 
     // store band probe: with an indexed store layout the batch's band
     // keys (batch-bounded — collected off the checkpointed batch
-    // table) select a point-read of the store instead of a scan
+    // table, deduped on the driver like the candidate ids above)
+    // select a point-read of the store instead of a scan
     val effStoreBands =
       if (usePruners)
         prunedBands.flatMap(f =>
-            f(pBands.select(col("bk")).distinct().collect().map(_.get(0)).toSeq))
+            f(pBands.select(col("bk")).collect().map(_.get(0)).distinct.toSeq))
           .map(_.select(col("id"), col("bi"), col("bk")))
           .getOrElse(storeBands)
       else storeBands

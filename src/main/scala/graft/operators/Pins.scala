@@ -57,18 +57,48 @@ object Pins {
 
   private val collector = new ThreadLocal[java.util.ArrayList[Pin]]
 
-  /** Eager localCheckpoint; the pinned RDD is registered with this
-    * thread's active collector (no-op without one, e.g. when the
-    * operator runs as a plain batch query). */
+  /** Row counts of the RDDs `checkpoint` materialized, keyed weakly
+    * by the pinned RDD: an entry lives exactly as long as some frame
+    * still plans over that RDD, so nothing here outlives its pin. */
+  private val counts = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], java.lang.Long])
+
+  private def pinnedRdd(df: DataFrame): Option[RDD[_]] =
+    df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
+    }
+
+  /** Eager localCheckpoint that keeps its row count: the frame is
+    * marked with a lazy `localCheckpoint(false)` and then materialized
+    * by ONE `count()` of the pinned RDD — the same single job an
+    * eager checkpoint runs (which counts the RDD and discards the
+    * answer), so `count` below can answer for the frame without
+    * another job. The pinned RDD is registered with this thread's
+    * active collector (no-op without one, e.g. when the operator runs
+    * as a plain batch query). */
   def checkpoint(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(true)
-    val c = collector.get()
-    if (c != null) out.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => c.add(Ckpt(lr.rdd))
-      case _ => () // unexpected plan shape: leave the pin to gc60
+    val out = df.localCheckpoint(false)
+    pinnedRdd(out) match {
+      case Some(rdd) =>
+        counts.put(rdd, rdd.count())
+        val c = collector.get()
+        if (c != null) c.add(Ckpt(rdd))
+      case None =>
+        // unexpected plan shape: materialize the plain way and leave
+        // the pin to gc60
+        out.count()
     }
     out
   }
+
+  /** Row count of `df`: the count `checkpoint` stored when `df` is a
+    * frame it returned (no job), otherwise `df.count()`. Only the
+    * pinned frame itself has a stored count — a frame DERIVED from
+    * it (a filter, a join) counts its own rows with a job. */
+  def count(df: DataFrame): Long =
+    pinnedRdd(df).flatMap(r => Option(counts.get(r))).map(_.longValue)
+      .getOrElse(df.count())
 
   /** Lazy MEMORY_AND_DISK persist registered with this thread's
     * active collector for the end-of-batch reap; WITHOUT a collector

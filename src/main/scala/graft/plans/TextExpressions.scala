@@ -1364,12 +1364,22 @@ object MinHashSig {
     false
   }
 
+  /** The k seed prefixes "0:" … "(k-1):" as bytes, built once per
+    * `k` and shared read-only by every row and task thread (the
+    * kernel runs per document, so rebuilding them per row was k
+    * string formats and k array allocations per doc). */
+  private val seedPrefixes =
+    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Array[Byte]]]
+
+  private def prefixesFor(k: Int): Array[Array[Byte]] =
+    seedPrefixes.computeIfAbsent(k, _ => Array.tabulate(k)(i => s"$i:".getBytes("US-ASCII")))
+
   /** Called from generated code. */
   def compute(s: UTF8String, n: Int, k: Int): ArrayData = {
     val grams = WordNgrams.slice(s, n)
     val m = grams.numElements()
     if (m == 0) return new GenericArrayData(Array.empty[Any])
-    val prefixes = Array.tabulate(k)(i => s"$i:".getBytes("US-ASCII"))
+    val prefixes = prefixesFor(k)
     val seen = new java.util.HashSet[UTF8String](math.max(16, m * 2))
     val digest = md5.get()
     val mins = new Array[Array[Byte]](k)

@@ -5,7 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Key-indexed parquet layout (SURVEY E17): file-level min/max
@@ -120,9 +120,12 @@ object Indexed {
     * +3 s/arrival of pure job-scheduling at 500-doc batches). The
     * caller asserts batch-boundedness by choosing this entry point.
     *
-    * Layout is ADAPTIVE on `nRows` (caller-known — e.g. a cheap
-    * `count()` of an already-checkpointed micro-batch table; -1 =
-    * unknown): up to `fileRows` rows write as ONE sorted file; bigger
+    * Layout is ADAPTIVE on `nRows` (caller-known row count, or an
+    * UPPER BOUND on it — e.g. the stored `Pins.count` of the
+    * checkpointed batch the table derives from; -1 = unknown): the
+    * row count only picks the file count, so a bound costs at most
+    * an extra file, never a wrong row. Up to `fileRows` rows write
+    * as ONE sorted file; bigger
     * batches range-partition into ceil(nRows/fileRows) sorted files
     * (capped at 32) so a 50k-doc arrival doesn't serialize its whole
     * write through a single task (measured: the `coalesce(1)` write
@@ -163,10 +166,12 @@ object Indexed {
     // read back (file, key) from what was actually written — one job
     // over batch-sized files, and the only evaluation the sidecar
     // trusts (null keys go in no manifest/bloom: they match no
-    // probe). The path trims to its basename EXECUTOR-side: a full
-    // ~130-char URI per collected row would 5× the driver transfer
-    // for no information the manifest keeps.
-    val fk = spark.read.parquet(dir)
+    // probe). The key column's schema is the written frame's, so the
+    // read skips parquet's schema-inference job. The path trims to
+    // its basename EXECUTOR-side: a full ~130-char URI per collected
+    // row would 5× the driver transfer for no information the
+    // manifest keeps.
+    val fk = spark.read.schema(StructType(Seq(df.schema(keyCol)))).parquet(dir)
       .select(substring_index(input_file_name(), "/", -1).as("__f"),
         col(keyCol).as("__k"))
       .collect()
@@ -425,15 +430,23 @@ object Indexed {
     * Leaves session conf untouched: the surviving-key filter chunks
     * to the session's current In-pushdown threshold (per-value
     * granule pruning either way); call `configureSession` once at
-    * setup for the preferred wider chunks. */
+    * setup for the preferred wider chunks.
+    *
+    * `schema`: the store files' schema when the caller knows it.
+    * Every `spark.read.parquet` without one runs a one-task
+    * schema-inference job over a file footer, which a per-arrival
+    * probe pays on every call; None keeps that inference. */
   def prunedRead(spark: SparkSession, root: String, keyName: String,
-                 keys: Seq[Any], keyCap: Int = DefaultKeyCap): Option[DataFrame] = {
+                 keys: Seq[Any], keyCap: Int = DefaultKeyCap,
+                 schema: Option[StructType] = None): Option[DataFrame] = {
     val dirs = load(spark, root)
     if (dirs.isEmpty || dirs.forall(!_.indexed)) return None
     if (dirs.exists(d => !d.indexed && d.files == null)) return None // opaque dir
+    def read(files: String*): DataFrame =
+      schema.fold(spark.read)(spark.read.schema(_)).parquet(files: _*)
     def emptyOf: Option[DataFrame] =
       dirs.collectFirst { case d if d.files.nonEmpty => d.files.head._1 }
-        .map(f => spark.read.parquet(f).limit(0))
+        .map(f => read(f).limit(0))
     // nulls never satisfy an In predicate — drop them up front
     val distinctKeys = keys.filter(_ != null).distinct
     // a key is alive if ANY dir might hold it: an unindexed dir keeps
@@ -507,7 +520,7 @@ object Indexed {
         .map(g => if (g.size == 2) g(0) || g(1) else g(0)).toIndexedSeq)
     val pred = orTree(sortedKeys.grouped(chunk)
       .map(ch => col(keyName).isInCollection(ch)).toIndexedSeq)
-    Some(spark.read.parquet(files: _*).filter(pred))
+    Some(read(files: _*).filter(pred))
   }
 
   /** Session-level setup (explicit and documented — `prunedRead`

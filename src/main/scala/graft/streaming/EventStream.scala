@@ -644,23 +644,14 @@ object EventStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) unpersistBatchPins(batch.sparkSession) {
-          // GRAFT_SINK_PROFILE=1: per-section stderr timers (dev only)
-          val prof = SinkProfile.enabled
-          def st[T](name: String)(body: => T): T = {
-            val t0 = System.nanoTime()
-            val r = body
-            if (prof) {
-              val sec = (System.nanoTime() - t0) / 1e9
-              SinkProfile.record(name, sec)
-              System.err.println(f"[d10 sink b=$batchId] $name%-16s $sec%6.2f s")
-            }
-            r
-          }
           val spark = batch.sparkSession
+          // GRAFT_SINK_PROFILE=1: per-section timers and job counts (dev only)
+          val prof = SinkProfile.enabled
+          def st[T](name: String)(body: => T): T =
+            SinkProfile.section(spark.sparkContext, s"d10 sink b=$batchId", name)(body)
           val b = spread(batch)
-          val (storeBands, storeSets) =
-            nearDupStore(spark, storePath, b, idName, text, n, k, bandRows)
-          val (pb, ps) = storePruners(spark, storePath)
+          val (storeBands, storeSets, pb, ps) =
+            gateStore(spark, storePath, b, idName, text, n, k, bandRows)
           val dem0 = graft.operators.Incremental.demotions.sum()
           val (surv, bBands, bSets) = st("gate construct") {
             graft.operators.Incremental.gate(
@@ -673,36 +664,47 @@ object EventStream {
           if (prof && graft.operators.Incremental.demotions.sum() > dem0)
             SinkProfile.record("gate demoted", 1.0)
           // materialize the survivor ID list once (batch-sized longs):
-          // without this pin the gate's verify joins re-run for BOTH
+          // without this pin the gate's verify joins re-ran for BOTH
           // the emptiness probe and the corpus write — measured ~2 s
-          // of duplicated work per 50k-doc arrival
+          // of duplicated work per 50k-doc arrival. The pin's stored
+          // count is the emptiness test (no job)
           val survIds = st("surv ids") { graft.operators.Pins.checkpoint(surv) }
           val survDocs = b.join(
             survIds.withColumnRenamed("id", idName), Seq(idName), "left_semi")
-          val nonEmpty = st("isEmpty") { !survIds.isEmpty }
-          if (nonEmpty)
+          if (graft.operators.Pins.count(survIds) > 0)
             st("corpus write") { appendBatchWrite(survDocs, batchId, outPath, partCol) }
           // AFTER the survivor merge: see the replay analysis above
-          st("sig writes") { writeSignatures(bBands, bSets, storePath, batchId) }
+          st("sig writes") {
+            writeSignatures(bBands, bSets, storePath, batchId,
+              graft.operators.Pins.count(b), k, bandRows) }
         }
       }
       .start()
   }
 
-  /** The D10 store's point-lookup pruners (Indexed sidecars): given
-    * the arriving batch's band keys / candidate ids, a pruned read of
-    * the store — or None (fall back to the scan plan) when the store
-    * predates the indexed layout or too many keys survive the bloom.
-    * Bit-identical either way; see `graft.sources.Indexed`. */
-  private def storePruners(spark: SparkSession, storePath: String)
-    : (Option[Seq[Any] => Option[DataFrame]], Option[Seq[Any] => Option[DataFrame]]) =
-    (Some(keys => graft.sources.Indexed.prunedRead(spark, s"$storePath/bands", "bk", keys)),
-     Some(keys => graft.sources.Indexed.prunedRead(spark, s"$storePath/sets", "id", keys)))
+  private type Pruner = Option[Seq[Any] => Option[DataFrame]]
 
-  /** Append one batch's signature tables to the store in the indexed
-    * layout: one sorted file per table (the batch is small) plus the
-    * `_graft_idx` sidecar, under the deterministic `batch=<id>` dirs
-    * (replays overwrite their own files — the D10 contract). */
+  /** The D10 store as `Incremental.gate` consumes it: (bands, sets)
+    * as `nearDupStore` reads them, plus the point-lookup pruners
+    * (Indexed sidecars): given the arriving batch's band keys /
+    * candidate ids, a pruned read of the store — or None (fall back
+    * to the scan plan) when the store predates the indexed layout or
+    * too many keys survive the bloom. Bit-identical either way; see
+    * `graft.sources.Indexed`. Every read carries the store's known
+    * schema, so none of them runs a schema-inference job. */
+  private def gateStore(spark: SparkSession, storePath: String, proto: DataFrame,
+                        idName: String, text: Column, n: Int, k: Int, bandRows: Int)
+    : (DataFrame, DataFrame, Pruner, Pruner) = {
+    val (eb, es) = graft.operators.Incremental.signatures(
+      proto.limit(0), col(idName), text, n, k, bandRows)
+    val (storeBands, storeSets) = storeTables(spark, storePath, eb, es)
+    (storeBands, storeSets,
+      Some(keys => graft.sources.Indexed.prunedRead(spark, s"$storePath/bands", "bk", keys,
+        schema = Some(eb.schema))),
+      Some(keys => graft.sources.Indexed.prunedRead(spark, s"$storePath/sets", "id", keys,
+        schema = Some(es.schema))))
+  }
+
   /** Read-granule sizing: band rows are ~tens of bytes (2000-row
     * pages ≈ 90 KB), set rows carry whole shingle arrays (128-row
     * pages ≈ 64 KB) — both about one point-read I/O unit, and the
@@ -710,30 +712,51 @@ object EventStream {
   private val BandPageRows = 2000
   private val SetPageRows = 128
 
+  /** Append one batch's signature tables to the store in the indexed
+    * layout: sorted file(s) per table plus the `_graft_idx` sidecar,
+    * under the deterministic `batch=<id>` dirs (replays overwrite
+    * their own files — the D10 contract). `nDocs` is the gated
+    * batch's doc count and `k`/`bandRows` the gate's: together they
+    * upper-bound both tables' row counts. */
   private def writeSignatures(bBands: DataFrame, bSets: DataFrame,
-                              storePath: String, batchId: Long): Unit = {
+                              storePath: String, batchId: Long,
+                              nDocs: Long, k: Int, bandRows: Int): Unit = {
     // writeSmall: sorted file(s) + one read-back per table (the
-    // batch tables are localCheckpointed and micro-batch-sized) —
-    // the distributed sidecar jobs cost ~3 s/arrival of scheduling
-    // at small batches, which would dominate the gate's floor. The
-    // counts (trivial jobs on checkpointed frames) let writeSmall go
-    // parallel for LARGE arrivals instead of serializing the write
-    // through one task; set rows carry whole shingle arrays, so
-    // their per-file row budget is much smaller than the bands'.
+    // batch tables are micro-batch-sized) — the distributed sidecar
+    // jobs cost ~3 s/arrival of scheduling at small batches, which
+    // would dominate the gate's floor. The row bounds (a doc has one
+    // set row and at most k/bandRows band rows — no job: the caller's
+    // batch count is already known) let writeSmall go parallel for
+    // LARGE arrivals instead of serializing the write through one
+    // task; set rows carry whole shingle arrays, so their per-file
+    // row budget is much smaller than the bands'.
     graft.sources.Indexed.writeSmall(bBands,
       s"$storePath/bands/batch=$batchId", "bk", pageRows = BandPageRows,
-      nRows = bBands.count(), fileRows = 65536)
+      nRows = graft.operators.Incremental.bandRowBound(nDocs, k, bandRows),
+      fileRows = 65536)
     graft.sources.Indexed.writeSmall(bSets,
       s"$storePath/sets/batch=$batchId", "id", pageRows = SetPageRows,
-      nRows = bSets.count(), fileRows = 8192)
+      nRows = nDocs, fileRows = 8192)
   }
 
   /** The D10 signature store as (bands, sets) — empty frames with the
     * right schema when nothing has been ingested yet (`proto` only
-    * shapes the empty schema; it is never scanned for that). */
+    * shapes the schema; it is never scanned for that). */
   def nearDupStore(spark: SparkSession, storePath: String, proto: DataFrame,
                    idName: String, text: Column, n: Int = 3, k: Int = 8,
                    bandRows: Int = 2): (DataFrame, DataFrame) = {
+    val (eb, es) = graft.operators.Incremental.signatures(
+      proto.limit(0), col(idName), text, n, k, bandRows)
+    storeTables(spark, storePath, eb, es)
+  }
+
+  /** `nearDupStore` given the store's empty signature frames `eb`/`es`
+    * (`Incremental.signatures` of an empty doc set): both roots read
+    * with those frames' schemas — a schema-less `spark.read.parquet`
+    * runs a one-task inference job per read, every arrival — or
+    * `eb`/`es` themselves for a cold store. */
+  private def storeTables(spark: SparkSession, storePath: String,
+                          eb: DataFrame, es: DataFrame): (DataFrame, DataFrame) = {
     val bandsRoot = new org.apache.hadoop.fs.Path(storePath, "bands")
     val setsRoot = new org.apache.hadoop.fs.Path(storePath, "sets")
     val fs = bandsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -743,12 +766,9 @@ object EventStream {
     // a half-written batch is treated as not written at all, and the
     // replay re-creates both dirs at the same deterministic path
     if (fs.exists(bandsRoot) && fs.exists(setsRoot))
-      (spark.read.parquet(s"$storePath/bands"), spark.read.parquet(s"$storePath/sets"))
-    else {
-      val (eb, es) = graft.operators.Incremental.signatures(
-        proto.limit(0), col(idName), text, n, k, bandRows)
-      (eb, es)
-    }
+      (spark.read.schema(eb.schema).parquet(s"$storePath/bands"),
+        spark.read.schema(es.schema).parquet(s"$storePath/sets"))
+    else (eb, es)
   }
 
   /** Configuration for the D16 composed ingest pipeline: each stage
@@ -837,20 +857,12 @@ object EventStream {
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) unpersistBatchPins(batch.sparkSession) {
-          // GRAFT_SINK_PROFILE=1: per-section stderr timers (dev only)
-          val prof = SinkProfile.enabled
-          def st[T](name: String)(body: => T): T = {
-            val t0 = System.nanoTime()
-            val r = body
-            if (prof) {
-              val sec = (System.nanoTime() - t0) / 1e9
-              SinkProfile.record(name, sec)
-              System.err.println(f"[d16 sink b=$batchId] $name%-16s $sec%6.2f s")
-            }
-            r
-          }
+        unpersistBatchPins(batch.sparkSession) {
           val spark = batch.sparkSession
+          // GRAFT_SINK_PROFILE=1: per-section timers and job counts (dev only)
+          val prof = SinkProfile.enabled
+          def st[T](name: String)(body: => T): T =
+            SinkProfile.section(spark.sparkContext, s"d16 sink b=$batchId", name)(body)
           // quality+scrub applies INSIDE the body, downstream of the
           // spread — the whole per-row ladder parallelizes even when
           // the source delivers the batch as one partition. The PIN
@@ -892,67 +904,77 @@ object EventStream {
                 "them upstream) if they carry PII")
             val noRaw = raws.foldLeft(gated)(_ drop _)
             graft.operators.Pins.checkpoint(noRaw) }
-          // the three model verdicts are map-side kernel columns, so
-          // the whole score ladder is ONE conjunctive filter over one
-          // pass of the batch — no per-stage score/semi-join shuffles.
-          // && short-circuits left-to-right, preserving the cheap-to-
-          // expensive ladder order per row
-          cfg.lm.foreach { case (m, maxScore) =>
-            surv = surv.filter(graft.operators.LangModel
-              .scoreCol(cfg.lmText(scrubbedText), m)
-              .getField("lm_score") <= maxScore) }
-          cfg.clf.foreach { case (m, cutoff) =>
-            surv = surv.filter(graft.operators.Classifier
-              .scoreCol(cfg.clfText(scrubbedText), m)
-              .getField("logodds") > cutoff) }
-          cfg.dsir.foreach { case (m, minLogw) =>
-            surv = surv.filter(graft.operators.Dsir
-              .scoreCol(cfg.dsirText(scrubbedText), m)
-              .getField("logw") >= minLogw) }
-          cfg.decon.foreach { case (evalGrams, n, maxShared) =>
-            // both sides of the anti-join read `surv` — fine: its
-            // upstream past the quality pin is only the three cheap
-            // kernel filters (measured 0.17 s at 50k docs)
-            surv = surv.join(
-              graft.operators.Contamination
-                .sharedGramsVs(surv, evalGrams, col(idName),
-                  cfg.deconText(scrubbedText), n)
-                .filter(col("shared_grams") > maxShared)
-                .select(col("id").as(idName)),
-              Seq(idName), "left_anti") }
-          // pin the survivor set once: the near-dup gate and the
-          // two writes below each run actions over it
-          val pinned = st("score ladder") { graft.operators.Pins.checkpoint(surv) }
-          if (cfg.nearDup) {
-            val (storeBands, storeSets) =
-              nearDupStore(spark, storePath, pinned, idName, scrubbedText)
-            val (pb, ps) = storePruners(spark, storePath)
-            val dem0 = graft.operators.Incremental.demotions.sum()
-            val (ids0, bBands, bSets) = st("gate construct") {
-              graft.operators.Incremental.gate(
-                storeBands, storeSets, pinned, col(idName), scrubbedText,
-                prunedBands = pb, prunedSets = ps) }
-            // demotion = silent plan-shape change → metrics row (the
-            // collapse survives demotion — the store stays clean)
-            if (prof && graft.operators.Incremental.demotions.sum() > dem0)
-              SinkProfile.record("gate demoted", 1.0)
-            // pin the survivor ids (batch-sized longs) so the gate's
-            // verify joins run once, not once per downstream action
-            val ids = st("surv ids") { graft.operators.Pins.checkpoint(ids0) }
-            val survDocs = pinned.join(
-              ids.withColumnRenamed("id", idName), Seq(idName), "left_semi")
-            if (st("isEmpty") { !ids.isEmpty })
-              st("corpus write") { appendBatchWrite(survDocs, batchId, outPath, partCol) }
-            // signatures covering ALL score-gated docs (not just
-            // near-dup survivors; collapsed to one representative
-            // per distinct signature, plus the empty-set rows — the
-            // gate holds that invariant on BOTH the micro path and a
-            // demoted oversized arrival, so the store never
-            // accumulates duplicate signatures), AFTER the corpus
-            // write — D10's replay ordering
-            st("sig writes") { writeSignatures(bBands, bSets, storePath, batchId) }
-          } else if (!pinned.isEmpty)
-            appendBatchWrite(pinned, batchId, outPath, partCol)
+          // the batch-emptiness test is the quality pin's stored count
+          // (no job): an empty batch, or one the quality rules drop
+          // whole, has nothing to gate, land or sign
+          if (graft.operators.Pins.count(surv) > 0) {
+            // the three model verdicts are map-side kernel columns, so
+            // the whole score ladder is ONE conjunctive filter over one
+            // pass of the batch — no per-stage score/semi-join shuffles.
+            // && short-circuits left-to-right, preserving the cheap-to-
+            // expensive ladder order per row
+            cfg.lm.foreach { case (m, maxScore) =>
+              surv = surv.filter(graft.operators.LangModel
+                .scoreCol(cfg.lmText(scrubbedText), m)
+                .getField("lm_score") <= maxScore) }
+            cfg.clf.foreach { case (m, cutoff) =>
+              surv = surv.filter(graft.operators.Classifier
+                .scoreCol(cfg.clfText(scrubbedText), m)
+                .getField("logodds") > cutoff) }
+            cfg.dsir.foreach { case (m, minLogw) =>
+              surv = surv.filter(graft.operators.Dsir
+                .scoreCol(cfg.dsirText(scrubbedText), m)
+                .getField("logw") >= minLogw) }
+            cfg.decon.foreach { case (evalGrams, n, maxShared) =>
+              // both sides of the anti-join read `surv` — fine: its
+              // upstream past the quality pin is only the three cheap
+              // kernel filters (measured 0.17 s at 50k docs)
+              surv = surv.join(
+                graft.operators.Contamination
+                  .sharedGramsVs(surv, evalGrams, col(idName),
+                    cfg.deconText(scrubbedText), n)
+                  .filter(col("shared_grams") > maxShared)
+                  .select(col("id").as(idName)),
+                Seq(idName), "left_anti") }
+            // pin the survivor set once: the near-dup gate and the
+            // two writes below each run actions over it
+            val pinned = st("score ladder") { graft.operators.Pins.checkpoint(surv) }
+            if (cfg.nearDup) {
+              // the D10 gate's shingle and band parameters, named once so
+              // the store schema, the gate and the write bound agree
+              val (n, k, bandRows) = (3, 8, 2)
+              val (storeBands, storeSets, pb, ps) =
+                gateStore(spark, storePath, pinned, idName, scrubbedText, n, k, bandRows)
+              val dem0 = graft.operators.Incremental.demotions.sum()
+              val (ids0, bBands, bSets) = st("gate construct") {
+                graft.operators.Incremental.gate(
+                  storeBands, storeSets, pinned, col(idName), scrubbedText, n, k, bandRows,
+                  prunedBands = pb, prunedSets = ps) }
+              // demotion = silent plan-shape change → metrics row (the
+              // collapse survives demotion — the store stays clean)
+              if (prof && graft.operators.Incremental.demotions.sum() > dem0)
+                SinkProfile.record("gate demoted", 1.0)
+              // pin the survivor ids (batch-sized longs) so the gate's
+              // verify joins run once, not once per downstream action;
+              // the pin's stored count is the emptiness test (no job)
+              val ids = st("surv ids") { graft.operators.Pins.checkpoint(ids0) }
+              val survDocs = pinned.join(
+                ids.withColumnRenamed("id", idName), Seq(idName), "left_semi")
+              if (graft.operators.Pins.count(ids) > 0)
+                st("corpus write") { appendBatchWrite(survDocs, batchId, outPath, partCol) }
+              // signatures covering ALL score-gated docs (not just
+              // near-dup survivors; collapsed to one representative
+              // per distinct signature, plus the empty-set rows — the
+              // gate holds that invariant on BOTH the micro path and a
+              // demoted oversized arrival, so the store never
+              // accumulates duplicate signatures), AFTER the corpus
+              // write — D10's replay ordering
+              st("sig writes") {
+                writeSignatures(bBands, bSets, storePath, batchId,
+                  graft.operators.Pins.count(pinned), k, bandRows) }
+            } else if (graft.operators.Pins.count(pinned) > 0)
+              appendBatchWrite(pinned, batchId, outPath, partCol)
+          }
         }
       }
       .start()

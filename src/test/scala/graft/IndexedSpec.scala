@@ -248,4 +248,34 @@ class IndexedSpec extends SparkSpec {
     val k2: Seq[Any] = keysOf(mkDF(50000, 20000), 2)
     assert(Indexed.prunedRead(spark, root, "bk", k2).get.count() == 2)
   }
+
+  test("prunedRead with a known schema: same rows, no schema-inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = java.nio.file.Files.createTempDirectory("graft-idx-schema").toString
+    Indexed.writeSmall(mkDF(0, 20000), s"$root/batch=0", "bk", pageRows = 500)
+    Indexed.writeSmall(mkDF(20000, 20000), s"$root/batch=1", "bk", pageRows = 500)
+    val keys: Seq[Any] = keysOf(mkDF(0, 40000), 8) :+ "not-a-key"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsToBuild(schema: Option[org.apache.spark.sql.types.StructType]) = {
+      org.apache.spark.graft.Listeners.settle(sc)
+      jobs.set(0)
+      val df = Indexed.prunedRead(spark, root, "bk", keys, schema = schema).get
+      org.apache.spark.graft.Listeners.settle(sc)
+      (df, jobs.get)
+    }
+    sc.addSparkListener(counter)
+    try {
+      val (inferred, inferJobs) = jobsToBuild(None)
+      val (known, knownJobs) = jobsToBuild(Some(mkDF(0, 1).schema))
+      assert(inferJobs >= 1, "a schema-less read infers the schema with a job")
+      assert(knownJobs == 0, s"a known-schema read ran $knownJobs jobs before any action")
+      val want = inferred.as[(String, Long)].collect().toSet
+      assert(want.size == 8)
+      assert(known.as[(String, Long)].collect().toSet == want)
+    } finally sc.removeSparkListener(counter)
+  }
 }

@@ -655,6 +655,49 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("D16 warm micro-batch job count stays at its pinned ceiling") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // every fresh doc's tokens carry its id, so no two fresh docs share
+    // a shingle; the measured batch re-sends 10 stored docs (dropped by
+    // the near-dup gate) next to 40 fresh ones (landed)
+    def doc(i: Long) = IngestDoc(i, if (i % 2 == 0) "en" else "de",
+      (1 to 12).map(t => s"d${i}w$t").mkString(" "))
+    val dir = java.nio.file.Files.createTempDirectory("graft-d16-jobs").toString
+    val input = MemoryStream[IngestDoc](spark)(Encoders.product[IngestDoc])
+    val q = EventStream.ingestPipelineSink(input.toDF(), "doc_id", col("text"),
+      EventStream.IngestPipeline(), dir + "/store", dir + "/corpus", "lang", dir + "/ckpt")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("sql.streaming.queryId") == q.id.toString))
+          jobs.incrementAndGet()
+    }
+    try {
+      // two warm-up batches: the store exists and carries sidecars
+      for (b <- 0 until 2) {
+        input.addData((b * 50L until b * 50L + 50L).map(doc): _*)
+        q.processAllAvailable()
+      }
+      sc.addSparkListener(counter)
+      input.addData(((100L until 140L) ++ (0L until 100L by 10L)).map(doc): _*)
+      q.processAllAvailable()
+      org.apache.spark.graft.Listeners.settle(sc)
+      val landed = spark.read.parquet(dir + "/corpus").select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(landed == (0L until 140L).toSet)
+      // the ceiling (55 jobs before the sink reused its checkpoint
+      // counts and known store schemas): a new action or a schema-less
+      // read in the sink (each spark.read.parquet without a schema runs
+      // an inference job) fails here by name
+      val ceiling = 37
+      info(s"jobs in the warm batch: ${jobs.get}")
+      assert(jobs.get <= ceiling,
+        s"warm D16 micro-batch ran ${jobs.get} Spark jobs, ceiling $ceiling")
+    } finally { sc.removeSparkListener(counter); q.stop() }
+  }
+
   test("D11 splitSink: in-flight split equals the batch rule; partitioned layout") {
     import org.apache.spark.sql.functions.col
     val docs = (1L to 200L).map(i => IngestDoc(i, "en", s"doc number $i"))
@@ -721,6 +764,46 @@ class StreamingSpec extends SparkSpec {
         .collect().head.getLong(0)
       assert(total == 3L) // distinct keys 1, 2, 3 across both groups
     } finally q.stop()
+  }
+
+  test("Pins.count: a checkpoint's stored count costs no job; other frames count") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.operators.Pins
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      org.apache.spark.graft.Listeners.settle(sc)
+      jobs.set(0)
+      val r = body
+      org.apache.spark.graft.Listeners.settle(sc)
+      (r, jobs.get)
+    }
+    sc.addSparkListener(counter)
+    try {
+      var pinnedRdd = -1
+      EventStream.unpersistBatchPins(spark) {
+        val src = spark.range(0, 1000, 1, 4).toDF("id").filter("id % 7 <> 0")
+        // the checkpoint itself is ONE job, as an eager checkpoint is
+        val (p, ckptJobs) = jobsOf(Pins.checkpoint(src))
+        assert(ckptJobs == 1, s"checkpoint ran $ckptJobs jobs")
+        val (n, countJobs) = jobsOf(Pins.count(p))
+        assert(n == 857L && countJobs == 0, s"count $n in $countJobs jobs")
+        // a lazy frame, and a frame DERIVED from a pin, pay a real count
+        val (lazyN, lazyJobs) = jobsOf(Pins.count(src))
+        assert(lazyN == 857L && lazyJobs >= 1)
+        val (derivedN, derivedJobs) = jobsOf(Pins.count(p.filter("id < 100")))
+        assert(derivedN == 85L && derivedJobs >= 1)
+        pinnedRdd = p.queryExecution.logical
+          .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+        assert(sc.getPersistentRDDs.contains(pinnedRdd))
+      }
+      // a counted pin is reaped at end of batch like any other
+      assert(!sc.getPersistentRDDs.contains(pinnedRdd),
+        "the counted pin must be reaped by unpersistBatchPins")
+    } finally sc.removeSparkListener(counter)
   }
 
   test("unpersistBatchPins: own pins reaped, pre-existing and sibling pins survive") {
