@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table registry/loader for the graft engine (SURVEY §E1).
   *
@@ -9,6 +11,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partitioned data lake: `load` is a plain parquet scan, so Catalyst
   * column pruning and predicate pushdown apply to everything built on
   * top of it.
+  *
+  * Repeat loads are cheap: parquet schema inference is a Spark job
+  * per read, so `readParquet` remembers each table's inferred schema
+  * and hands it to later reads. The memo is keyed on the table path,
+  * the length and modification time of its files and the session
+  * confs that shape inference; a rewritten table or a flipped conf
+  * infers afresh. It holds schemas, not DataFrames, so every load
+  * still gets its own attribute ids and two loads of one table
+  * self-join like two independent reads.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -82,8 +93,9 @@ object Tables {
     * consumers (`load(.., fanoutParts = narrowFanoutParts(s))`).
     * Default 2, NOT cores/4: those consumers pay a per-task fixed
     * cost — UnsafeProjection SOURCE generation for wide aggregate
-    * buffers (Dsir/Classifier kernels, rsd-1% HLL ≈ 1.5-2.7k buffer
-    * attributes, PQ/embedding result projections), measured at
+    * buffers (Dsir/Classifier kernels, PQ/embedding result
+    * projections; HLL++ at rsd 1 %, ≈ 1.5-2.7k buffer attributes,
+    * until a13b moved to a one-column sketch), measured at
     * ~300-600 ms per task and SERIALIZED across tasks by the codegen
     * cache lock (OPTIMIZATION_r17.md "Per-task fixed costs") — so
     * with work T and per-task constant K the useful width is
@@ -157,7 +169,9 @@ object Tables {
     * behavior, 0 = no fan-out for this consumer, n > 0 = fan out to
     * exactly n partitions (even for a table outside the default
     * list). See scanFanout — the ≤-one-split size gate applies to
-    * every setting, so all of this is inert at corpus scale. */
+    * every setting, so all of this is inert at corpus scale. The read
+    * itself goes through `readParquet`, so a repeat load of an
+    * unchanged table runs no schema-inference job. */
   def load(spark: SparkSession, dir: String, name: String,
            fanoutParts: Int = -1): DataFrame = {
     // events.ts has shipped in TWO physical forms across testdata
@@ -168,7 +182,7 @@ object Tables {
     // TimestampType — E16's schema-drift tolerance applied to the
     // registry's own tables.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = scanFanout(spark, spark.read.parquet(s"$dir/$name.parquet"), name, fanoutParts)
+    val df = scanFanout(spark, readParquet(spark, s"$dir/$name.parquet"), name, fanoutParts)
     if (name == "events") eventsFromRaw(df) else df
   }
 
@@ -182,7 +196,70 @@ object Tables {
   def loadEventsRaw(spark: SparkSession, dir: String,
                     fanoutParts: Int = -1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    scanFanout(spark, spark.read.parquet(s"$dir/events.parquet"), "events", fanoutParts)
+    scanFanout(spark, readParquet(spark, s"$dir/events.parquet"), "events", fanoutParts)
+  }
+
+  /** The session confs that shape parquet schema inference in Spark
+    * 4.1: the five flags `ParquetToSparkSchemaConverter` is built from
+    * (binary-as-string, INT96-as-timestamp, NTZ inference, nanos-as-
+    * long, unknown-type annotations), plus the two that choose which
+    * footers are read (merge across files, summary files). */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  /** What an inferred parquet schema depends on: the qualified path,
+    * every file under it as (path, length, modification time), and
+    * the values of `InferenceConfs`. */
+  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+                                     confs: Seq[Option[String]])
+
+  /** Bound on remembered schemas (least recently used go first); the
+    * registry has ten tables per scale-factor directory. */
+  private val SchemaMemoCap = 64
+
+  private val schemaMemo =
+    new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size() > SchemaMemoCap
+    }
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    try {
+      // a file lists as itself, a directory as every file under it
+      val it = fs.listFiles(p, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSeq.sortBy(_._1)
+      Some(SchemaKey(fs.makeQualified(p).toString, files,
+        InferenceConfs.map(spark.conf.getOption)))
+    } catch {
+      // missing path (or a glob): no memo — the plain read below
+      // raises Spark's own error, or expands the glob itself
+      case _: java.io.FileNotFoundException => None
+    }
+  }
+
+  /** `spark.read.parquet(path)` that infers the schema once per table
+    * state (see the object doc): a memo hit passes the schema to the
+    * read, which then starts no job until an action. Files are listed
+    * through Hadoop `FileSystem`, so directories and non-local paths
+    * work. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = schemaKey(spark, path)
+    key.flatMap(k => schemaMemo.synchronized(Option(schemaMemo.get(k)))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(k => schemaMemo.synchronized(schemaMemo.put(k, df.schema)))
+        df
+    }
   }
 
   /** Nanos-since-epoch of a UTC 'yyyy-MM-dd HH:mm:ss' literal —

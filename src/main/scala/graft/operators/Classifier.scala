@@ -76,7 +76,7 @@ object Classifier {
     // seed-vocabulary-bounded count map — the same budget
     // Model.compiled already spends — and the count tables come back
     // bit-identical to the explode→groupBy plan (exact longs;
-    // countsDeclarative is the spec-pinned parity oracle)
+    // DeclarativeRef.classifierCounts is the spec-pinned parity oracle)
     val pc = tokenCountTable(pos, text, "cp").localCheckpoint(true)
     val nc = tokenCountTable(neg, text, "cn").localCheckpoint(true)
     val joint = pc.join(nc, Seq("tok"), "full_outer").localCheckpoint(true)
@@ -122,13 +122,6 @@ object Classifier {
                                      cname: String): DataFrame =
     df.agg(graft.plans.CountAggregates.tokenCounts(lower(text)).as("m"))
       .select(explode(col("m")).as(Seq("tok", cname)))
-
-  /** The pre-kernel declarative count plan — the parity oracle for
-    * `train`'s fused kernel (same (tok, count) rows exactly). */
-  private[graft] def countsDeclarative(df: DataFrame, id: Column, text: Column,
-                                       cname: String): DataFrame =
-    toks(df, id, text).filter(col("tok").isNotNull)
-      .groupBy(col("tok")).agg(count(lit(1)).as(cname))
 
   /** The pre-kernel declarative scoring plan — retained as the parity
     * oracle for `score`'s kernel: same rows, bit-identical scores, at

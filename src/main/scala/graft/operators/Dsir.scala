@@ -132,9 +132,12 @@ object Dsir {
       .filter(col(cname) > 0)
       .select(format_string(s"%0${prefixLen}x", col("i")).as("b"), col(cname))
 
-  /** The pre-kernel declarative count plan — the parity oracle for
-    * `train`'s fused kernel (same (b, count) rows exactly) and the
-    * executed path for bucket spaces too large to buffer. */
+  /** The declarative count plan (explode → md5 bucket → groupBy).
+    * It stays in main, unlike the text family's other declarative
+    * twins, because `train` still executes it for `prefixLen > 5`,
+    * where the fused kernel's 16^p-long buffer is too large; for
+    * `prefixLen <= 5` it is the parity oracle for `countsFused`
+    * (same (b, count) rows exactly, spec-pinned). */
   private[graft] def countsDeclarative(df: DataFrame, id: Column, text: Column,
                                        prefixLen: Int, cname: String): DataFrame =
     feats(df, id, text, prefixLen).filter(col("b").isNotNull)

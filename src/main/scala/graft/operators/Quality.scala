@@ -54,7 +54,8 @@ object Quality {
     * Runs the fused `PiiScrub` kernel — three byte walks per doc
     * where the regex form pays nine regex traversals (three chained
     * replaces + each count's rebuild of its partial chain).
-    * Byte-identical to `scrubbedDeclarative` (parity spec-pinned);
+    * Byte-identical to the regex form `DeclarativeRef.scrubbed`
+    * (parity spec-pinned in test scope);
     * the c13 oracle seals it cross-engine. */
   def scrubbed(df: DataFrame, text: Column): DataFrame =
     df.withColumn("__pii", graft.plans.TextExpressions.piiScrub(text))
@@ -63,17 +64,6 @@ object Quality {
       .withColumn("n_urls", col("__pii.n_urls"))
       .withColumn("n_phones", col("__pii.n_phones"))
       .drop("__pii")
-
-  /** The regex formulation — retained as the parity oracle for
-    * `scrubbed`'s kernel: same columns, identical values, at
-    * nine-regex-traversals-per-doc cost. */
-  private[graft] def scrubbedDeclarative(df: DataFrame, text: Column): DataFrame = {
-    val (emails, urls, phones) = TextFunctions.piiCounts(text)
-    df.withColumn("scrubbed", TextFunctions.scrub(text))
-      .withColumn("n_emails", emails.cast("long"))
-      .withColumn("n_urls", urls.cast("long"))
-      .withColumn("n_phones", phones.cast("long"))
-  }
 
   /** Thresholds for `gopherFilter` — defaults are the published
     * Gopher rule values (Rae et al. 2021, appendix A1.1) where the

@@ -78,7 +78,7 @@ class ClassifierSpec extends SparkSpec {
       .toDF("id", "t")
     val fused = Classifier.tokenCountTable(docs, col("t"), "c")
       .as[(String, Long)].collect().toSet
-    val decl = Classifier.countsDeclarative(docs, col("id"), col("t"), "c")
+    val decl = DeclarativeRef.classifierCounts(docs, col("t"), "c")
       .as[(String, Long)].collect().toSet
     assert(fused == decl && fused.nonEmpty, s"fused $fused != declarative $decl")
   }

@@ -173,7 +173,7 @@ object DeclarativeRef {
       .select(col(id), guarded.as("sig"))
   }
 
-  // --- Quality / LangId / TfIdf ---------------------------------------
+  // --- Quality / Classifier / LangId / TfIdf ---------------------------
 
   /** `Shingles.repetitionStats` as two explode → (id, gram) count →
     * per-id max/sum chains tied back by a left join (docs too short
@@ -201,6 +201,26 @@ object DeclarativeRef {
         coalesce(col("top_token_frac"), lit(0.0)).as("top_token_frac"),
         coalesce(col("top_bigram_frac"), lit(0.0)).as("top_bigram_frac"))
   }
+
+  /** `Quality.scrubbed` as the regex formulation: the same four
+    * columns (scrubbed, n_emails, n_urls, n_phones) from three
+    * chained replaces plus a partial-chain rebuild per count — the
+    * twin of `plans.PiiScrub`. */
+  def scrubbed(df: DataFrame, text: Column): DataFrame = {
+    val (emails, urls, phones) = TextFunctions.piiCounts(text)
+    df.withColumn("scrubbed", TextFunctions.scrub(text))
+      .withColumn("n_emails", emails.cast("long"))
+      .withColumn("n_urls", urls.cast("long"))
+      .withColumn("n_phones", phones.cast("long"))
+  }
+
+  /** `Classifier`'s training count table (tok, cname) as explode →
+    * groupBy over lower(text)'s word unigrams — the twin of
+    * `plans.CountAggregates.tokenCounts`. */
+  def classifierCounts(df: DataFrame, text: Column, cname: String): DataFrame =
+    df.select(explode(graft.plans.TextExpressions.wordNgrams(lower(text), 1)).as("tok"))
+      .filter(col("tok").isNotNull)
+      .groupBy(col("tok")).agg(count(lit(1)).as(cname))
 
   /** `LangId.detect` as the join form: tokens explode and
     * broadcast-join the (word → lang) stopword table, per-(doc, lang)

@@ -71,7 +71,7 @@ class PropertySpec extends SparkSpec {
       df.select("id", "scrubbed", "n_emails", "n_urls", "n_phones")
         .as[(Long, String, Long, Long, Long)].collect().sortBy(_._1).toSeq
     val kernel = rows(Quality.scrubbed(docs, col("t")))
-    val decl = rows(Quality.scrubbedDeclarative(docs, col("t")))
+    val decl = rows(DeclarativeRef.scrubbed(docs, col("t")))
     assert(kernel == decl,
       kernel.zip(decl).filter { case (a, b) => a != b }.take(5).mkString("\n"))
   }
@@ -90,7 +90,7 @@ class PropertySpec extends SparkSpec {
       df.select("id", "scrubbed", "n_emails", "n_urls", "n_phones")
         .as[(Long, String, Long, Long, Long)].collect().sortBy(_._1).toSeq
     val kernel = rows(Quality.scrubbed(docs, col("t")))
-    val decl = rows(Quality.scrubbedDeclarative(docs, col("t")))
+    val decl = rows(DeclarativeRef.scrubbed(docs, col("t")))
     assert(kernel == decl,
       kernel.zip(decl).filter { case (a, b) => a != b }.take(5).mkString("\n"))
   }

@@ -7,8 +7,12 @@ Usage: python3 tools/check.py [sf_dir] [out_dir]
                    entry, run the SQL in DuckDB over views named after
                    the tables in <sf_dir>, sort columns by name, sort
                    rows, compare values exactly.
+  When Verify wrote <out_dir>/verify_manifest.json, every query it
+  marks "failed" (oracle-less ones included) is reported as FAIL too.
+Exits 1 if any query fails.
 """
 import json
+import os
 import sys
 
 import duckdb
@@ -33,7 +37,15 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
     oracle = json.load(open(f"{OUT_DIR}/oracle_sql.json"))
     failed = []
+    manifest_path = f"{OUT_DIR}/verify_manifest.json"
+    manifest = json.load(open(manifest_path)) if os.path.exists(manifest_path) else {}
+    threw = {n: e for n, e in manifest.items() if e["status"] == "failed"}
+    for name in sorted(threw):
+        print(f"FAIL {name}: Verify: {threw[name]['error']}")
     for name, sql in sorted(oracle.items()):
+        if name in threw:
+            failed.append(name)
+            continue
         try:
             spark_df = canon(con.execute(
                 f"SELECT * FROM read_parquet('{OUT_DIR}/{name}/*.parquet')").df())
@@ -76,7 +88,11 @@ def main() -> int:
         else:
             print(f"PASS {name} ({len(spark_df)} rows)")
     print(f"\n{len(oracle) - len(failed)}/{len(oracle)} queries pass")
-    return 1 if failed else 0
+    unchecked = sorted(set(threw) - set(oracle))
+    if unchecked:
+        print(f"{len(unchecked)} query(ies) without an oracle failed in Verify: "
+              + ", ".join(unchecked))
+    return 1 if failed or unchecked else 0
 
 
 if __name__ == "__main__":
