@@ -2,7 +2,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every `SparkEntry.queries`
   * entry against SPARK_GRAFT_SF_DIR, min-of-REPS after a full warmup
@@ -28,48 +27,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle-partition count scales with DATA, not cores: 32 is right
-    // for sf0.1 (partitions fit executor memory) but at sf10 (100×) the
-    // big self-join shuffles spill tens of GB when squeezed into 32
-    // partitions. On a real cluster AQE splits from a high initial
-    // partition number; locally the knob lets scale runs set e.g. 256
-    // (AQE, on by default in Spark 4, coalesces the small stages back
-    // down, so only the genuinely big shuffles keep the fan-out).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Shuffle WRITER choice (optimization round 17, guide §2.2 "many
-      // small blocks"): the bypass-merge writer opens one temp file per
-      // REDUCE partition per map task (M×R file creates/deletes per
-      // exchange), and on this sandbox's filesystem each open/delete
-      // costs ~10 ms — thread dumps of a 32-map × 32-reduce exchange
-      // showed task CPU dominated by FileOutputStream.open0/delete0
-      // (~300 ms/task against ~5 ms of real row work; taskSum 12 s →
-      // 0.5 s with the sort writer, OPTIMIZATION_r17.md). Threshold 1
-      // routes every multi-partition exchange through the sort-based
-      // writer: ONE spill file + index per map task, M files total.
-      // Production-faithful, not a local trick: at cluster reducer
-      // counts (R > 200) bypass never fires anyway — this makes the
-      // local plan shape match the at-scale one.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // Disk-leak guard, shipped as a harness default (round 15):
-      // localCheckpoint blocks are MEMORY_AND_DISK and are freed only
-      // when a DRIVER GC lets the ContextCleaner reap the dead RDD
-      // handles; a long suite run accumulated 73 GB of dead block
-      // files in ~50 min and hit ENOSPC (SURVEY §6 r14). The periodic
-      // driver GC bounds that to one interval's worth (73 → 7 GB
-      // measured) at no wall-time cost (gc60 vs hyg0 chain pair,
-      // §6 r14 — the deltas were box noise).
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // c40's proven-bounded unpartitioned window: see EngineLog
-    EngineLog.silenceProvenBoundedWindowWarn()
+    val cpus = GraftSession.cpus
+    val shufflePartitions = GraftSession.shufflePartitions
+    val spark = GraftSession.build()
     // Warm the JVM so no measured query is charged JIT/startup cost:
     // one full UNMEASURED pass of the same query set at the same sf
     // dir (same plans + same AQE decisions → same generated classes),

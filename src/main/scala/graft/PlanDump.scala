@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool (round 17 optimization): dump each query's
@@ -15,9 +14,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *   sf dir: optional absolute path (default /root/testdata/sf0.1)
   *   names: optional query-name filter (default: all)
   *
-  * Runs at the bench's own configuration (local[$SPARK_GRAFT_CPUS],
-  * shuffle partitions likewise) so the captured plans are the plans
-  * the bench actually executes.
+  * Runs on the bench's own session (`GraftSession`) so the captured
+  * plans are the plans the bench actually executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -26,22 +24,7 @@ object PlanDump {
     val rest = args.tail
     val dir = rest.find(_.startsWith("/")).getOrElse("/root/testdata/sf0.1")
     val names0 = rest.filterNot(_.startsWith("/")).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // optional session-conf overrides, "k=v;k=v" (round 18: lets the
-    // "before" arm dump plans under the prior round's behavior, e.g.
-    // spark.graft.scan.fanoutConsumerOverride=off)
-    sys.env.get("SPARK_GRAFT_PLANDUMP_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
+    val spark = GraftSession.build()
     val names = if (names0.nonEmpty) names0 else SparkEntry.queries.keys.toSeq.sorted
     val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r18"))
     Files.createDirectories(out)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: synthesize a larger scale factor from an existing one
@@ -34,14 +34,11 @@ object ScaleGen {
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      // events.ts is parquet TIMESTAMP(NANOS): read it as a raw long
-      // and write that long back — Tables.load applies the same
-      // nanos→micros conversion to both forms
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
+    // events.ts is parquet TIMESTAMP(NANOS): read it as a raw long
+    // and write that long back — Tables.load applies the same
+    // nanos→micros conversion to both forms
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def in(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -80,34 +80,20 @@ object StreamBench {
     val growthGate = sys.env.getOrElse("SPARK_GRAFT_STREAM_GROWTH_GATE", "d10")
     require(Set("d10", "d16")(growthGate),
       s"SPARK_GRAFT_STREAM_GROWTH_GATE must be d10 or d16, got '$growthGate'")
-    // ERROR-PAGE STORM plant (round 14, the streaming twin of
-    // SkewGen's replace mode): this fraction of every growth batch is
-    // ONE identical template text (vocab disjoint from the pool's
-    // prefixed tokens), the crawl regime where a frontier keeps
-    // emitting the same error page / cookie wall. Identical text ⟹
+    // ERROR-PAGE STORM plant (round 14, the streaming twin of the
+    // batch skew corpus's replace mode, SURVEY §6 round 13): this
+    // fraction of every growth batch is ONE identical template text
+    // (vocab disjoint from the pool's prefixed tokens), the crawl
+    // regime where a frontier keeps emitting the same error page /
+    // cookie wall. Identical text ⟹
     // identical signature ⟹ every storm doc collides on every band
     // key with every stored storm doc — the exact-dup-cluster regime
     // the batch skew program measured on C3 (SURVEY §6 r13), now
     // aimed at the D10 gate's per-arrival cost at a grown store.
     val stormFrac = sys.env.getOrElse("SPARK_GRAFT_STREAM_STORM_FRAC", "0").toDouble
     val stormTokens = sys.env.getOrElse("SPARK_GRAFT_STREAM_STORM_TOKENS", "60").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      // sort-based shuffle writer (see Bench's builder: M files, not M×R)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      // dead-localCheckpoint-block disk guard (see Bench's builder;
-      // the sinks also unpersist their own batch pins — this bounds
-      // whatever broadcast/shuffle state the cleaner still owns)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // c40's proven-bounded unpartitioned window: see EngineLog
-    EngineLog.silenceProvenBoundedWindowWarn()
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.build()
 
     // source material: (lang, text) pool, driver-side (bench tool —
     // bounded by the sf documents table, reused cyclically)
@@ -331,8 +317,9 @@ object StreamBench {
     // "distributed candidate volume grows" (dedup-the-store territory).
     val growth: Option[(Seq[Double], Seq[Double])] = if (growthBatches > 0) Some {
       val dir = java.nio.file.Files.createTempDirectory("graft-sb-growth").toString
-      // per-batch straggler attribution (the SkewBench anatomy,
-      // trimmed): duration + shuffle read/records of the longest task
+      // per-batch straggler attribution (the max-task anatomy of
+      // `skewbench_*_r13.json`, trimmed): duration + shuffle
+      // read/records of the longest task
       case class MaxTask(ms: Long, stage: Int, shufRMb: Double, recordsR: Long)
       val mtLock = new Object
       @volatile var maxTask = MaxTask(0, -1, 0, 0)

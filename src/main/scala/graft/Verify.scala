@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare, and
@@ -11,21 +10,7 @@ object Verify {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir>")
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // sort-based shuffle writer (see Bench's builder: M files, not M×R)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // dead-localCheckpoint-block disk guard (see Bench's builder)
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // c40's proven-bounded unpartitioned window: see EngineLog
-    EngineLog.silenceProvenBoundedWindowWarn()
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     // optional args(2..): restrict to named queries (dev loop only —
     // the driver always passes exactly two args and gets the full set)

@@ -50,13 +50,6 @@ object Classifier {
     def priorFixed: Long = graft.plans.CompiledLm.toFixed(prior)
   }
 
-  /** Word-unigram occurrences (with multiplicity) of lower(text);
-    * explode_outer keeps token-less docs as one null row so scoring
-    * can emit every doc. */
-  private def toks(df: DataFrame, id: Column, text: Column): DataFrame =
-    df.select(id.as("id"),
-      explode_outer(graft.plans.TextExpressions.wordNgrams(lower(text), 1)).as("tok"))
-
   /** Train on labeled seeds: per joint-vocabulary token,
     * w(tok) = round(ln((c_pos+1)/(N_pos+V)) − ln((c_neg+1)/(N_neg+V)), 8)
     * (add-one smoothing over the joint vocab, so every vocab token is
@@ -99,8 +92,9 @@ object Classifier {
     * Runs as ONE map-side pass via the fused `NbScore` kernel — no
     * per-token explode, no join, no shuffle (the same cure as C28's
     * TrigramLmScore). Fixed-point sums make it bit-identical to the
-    * decimal pipeline of `scoreDeclarative` (parity spec-pinned);
-    * oracle c52 unchanged. */
+    * decimal pipeline of the test-scope
+    * `DeclarativeRef.classifierScore` (parity spec-pinned); oracle
+    * c52 unchanged. */
   def score(docs: DataFrame, id: Column, text: Column, model: Model,
             cutoff: Double = 0.0): DataFrame =
     docs.select(id.as("id"), scoreCol(text, model).as("r"))
@@ -122,26 +116,4 @@ object Classifier {
                                      cname: String): DataFrame =
     df.agg(graft.plans.CountAggregates.tokenCounts(lower(text)).as("m"))
       .select(explode(col("m")).as(Seq("tok", cname)))
-
-  /** The pre-kernel declarative scoring plan — retained as the parity
-    * oracle for `score`'s kernel: same rows, bit-identical scores, at
-    * one-row-per-TOKEN cost. */
-  private[graft] def scoreDeclarative(docs: DataFrame, id: Column, text: Column,
-                                      model: Model, cutoff: Double = 0.0): DataFrame =
-    toks(docs, id, text)
-      .join(broadcast(model.table), Seq("tok"), "left")
-      .select(col("id"), col("w").cast("decimal(20,8)").as("w"))
-      .groupBy(col("id"))
-      .agg(count(col("w")).as("n_hits"),
-        coalesce(sum(col("w")), lit(BigDecimal(0))).as("s"))
-      .select(col("id"), col("n_hits"),
-        // prior joins the sum IN DECIMAL (it is an exact 8-decimal
-        // value — Double.toString recovers it losslessly) and the
-        // 6-digit round happens in decimal too: rounding after a
-        // cast to double let a ....50 tie resolve differently per
-        // engine (found at sf0.1, exactly 1e-6 off on one doc)
-        round(col("s") + lit(new java.math.BigDecimal(
-            java.lang.Double.toString(model.prior))), 6)
-          .cast("double").as("logodds"))
-      .withColumn("keep", col("logodds") > cutoff)
 }

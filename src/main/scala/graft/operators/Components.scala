@@ -70,24 +70,14 @@ object Components {
       case ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    // GRAFT_CC_FORCE_DISTRIBUTED=1: dev knob for measuring the
-    // distributed iteration on graphs the driver path would absorb
-    // (checked BEFORE the count so forcing skips that job entirely)
-    val forced = sys.env.contains("GRAFT_CC_FORCE_DISTRIBUTED")
-    if (!forced && integralId && sym.count() <= driverLimit)
+    if (integralId && sym.count() <= driverLimit)
       return smallGraph(nodes, id, sym, idType)
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    val tStart = System.nanoTime()
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
       .localCheckpoint(true)
-    if (dbg) System.err.println(
-      f"[cc] edges(sym)=${sym.count()} endpoints=${labels.count()} " +
-        f"setup ${(System.nanoTime() - tStart) / 1e9}%.2f s")
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
-      val tIter = System.nanoTime()
       val nbrMin = sym.join(labels, col("src") === col("id"))
         .groupBy(col("dst")).agg(min(col("comp")).as("nc"))
       val hop = labels.select(col("id").as("pid"), col("comp").as("pc"))
@@ -101,8 +91,6 @@ object Components {
       converged = step.filter(col("chg")).isEmpty
       labels = step.select(col("id"), col("comp"))
       iter += 1
-      if (dbg) System.err.println(
-        f"[cc] round $iter ${(System.nanoTime() - tIter) / 1e9}%.2f s converged=$converged")
     }
     // partially-propagated labels are silently WRONG (one component
     // reported as several) — refuse rather than return them

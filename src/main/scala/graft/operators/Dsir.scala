@@ -52,8 +52,8 @@ object Dsir {
     * unigrams AND bigrams of lower(text). explode_outer keeps
     * feature-less docs (null/short text) as a single null row so
     * scorers can emit them with n_feats = 0. */
-  private def feats(df: DataFrame, id: Column, text: Column,
-                    prefixLen: Int): DataFrame = {
+  private[graft] def feats(df: DataFrame, id: Column, text: Column,
+                           prefixLen: Int): DataFrame = {
     val t = graft.plans.TextExpressions
     df.select(id.as("id"),
       explode_outer(concat(t.wordNgrams(lower(text), 1),
@@ -109,8 +109,9 @@ object Dsir {
     * Runs as ONE map-side pass via the fused `DsirScore` kernel — no
     * per-feature explode, no md5 column, no join, no shuffle (the
     * same cure as C28/C52). Fixed-point sums make it bit-identical
-    * to `scoreDeclarative`'s decimal pipeline (parity spec-pinned);
-    * oracle c46 unchanged. */
+    * to the decimal pipeline of the test-scope
+    * `DeclarativeRef.dsirScore` (parity spec-pinned); oracle c46
+    * unchanged. */
   def score(docs: DataFrame, id: Column, text: Column, model: Model): DataFrame =
     docs.select(id.as("id"), scoreCol(text, model).as("r"))
       .select(col("id"), col("r.n_feats").as("n_feats"),
@@ -142,29 +143,4 @@ object Dsir {
                                        prefixLen: Int, cname: String): DataFrame =
     feats(df, id, text, prefixLen).filter(col("b").isNotNull)
       .groupBy(col("b")).agg(count(lit(1)).as(cname))
-
-  /** The pre-kernel declarative scoring plan — retained as the parity
-    * oracle for `score`'s kernel: same rows, bit-identical scores, at
-    * one-row-per-FEATURE cost. */
-  private[graft] def scoreDeclarative(docs: DataFrame, id: Column, text: Column,
-                                      model: Model): DataFrame = {
-    val perFeat = feats(docs, id, text, model.prefixLen)
-      .join(broadcast(model.table), Seq("b"), "left")
-      .select(col("b").isNotNull.as("has"),
-        when(col("b").isNull, null)
-          .otherwise(coalesce(col("lam"), lit(model.unkLam)))
-          .cast("decimal(20,8)").as("lp"),
-        col("id"))
-    perFeat.groupBy(col("id"))
-      .agg(count(col("lp")).as("n_feats"),
-        coalesce(sum(col("lp")), lit(BigDecimal(0))).as("s"))
-      .select(col("id"), col("n_feats"),
-        // round IN DECIMAL, cast after: the sum is an EXACT 8-decimal
-        // value, so casting first hands round() a double whose
-        // shortest decimal representation can land exactly on a
-        // ....50 tie that engines resolve differently (found at
-        // sf0.1: one doc off by exactly 1e-6). Decimal HALF_UP is
-        // identical in Spark and DuckDB.
-        round(col("s"), 6).cast("double").as("logw"))
-  }
 }

@@ -136,7 +136,8 @@ object Incremental {
     * flips the verify join to SortMergeJoin once the batch outgrows
     * the broadcast threshold, and every arrival then re-sorts and
     * re-shuffles the ENTIRE store's sets — measured 250 MB shuffled
-    * per 50k-doc arrival against a 500k-doc store (graft.GateProfile),
+    * per 50k-doc arrival against a 500k-doc store (SURVEY §6 round 9;
+    * the GateProfile probe's source is at commit 814e342),
     * growing linearly with the store forever. With the pins the
     * store is only ever scanned: per-arrival network is O(batch),
     * matching the store's O(batch) append writes. The broadcasts are

@@ -28,7 +28,7 @@ object LangModel {
     * the caller wants case folding) — the native linear-pass
     * expression (per-position substr is quadratic on UTF-8; see
     * plans.CharNgrams). */
-  private[operators] def charTrigrams(text: Column): Column =
+  private[graft] def charTrigrams(text: Column): Column =
     graft.plans.TextExpressions.charNgrams(text, 3)
 
   /** Trained model: (tri, logp) with add-half smoothing
@@ -78,8 +78,9 @@ object LangModel {
     * Runs as ONE map-side pass via the fused `TrigramLmScore` kernel
     * — no per-trigram explode, no join, no shuffle. The fixed-point
     * sum inside the kernel is bit-identical to the decimal(20,8)
-    * pipeline of `scoreDeclarative` (parity is spec-pinned), so the
-    * C28 oracle and the D12 gate semantics are unchanged. */
+    * pipeline of the test-scope `DeclarativeRef.langModelScore`
+    * (parity is spec-pinned), so the C28 oracle and the D12 gate
+    * semantics are unchanged. */
   def score(docs: DataFrame, id: Column, text: Column, model: Model): DataFrame =
     docs.select(id.as("id"), scoreCol(text, model).as("r"))
       .select(col("id"), col("r.n_tris").as("n_tris"),
@@ -92,24 +93,4 @@ object LangModel {
   def scoreCol(text: Column, model: Model): Column =
     graft.plans.TextExpressions
       .trigramLmScore(coalesce(text.cast("string"), lit("")), model.compiled)
-
-  /** The pre-kernel declarative scoring plan (explode → broadcast
-    * join → per-doc decimal aggregation) — retained as the parity
-    * oracle for `score`'s kernel: same rows, bit-identical scores,
-    * at one-row-per-TRIGRAM cost. */
-  private[graft] def scoreDeclarative(docs: DataFrame, id: Column, text: Column,
-                                      model: Model): DataFrame = {
-    val perTri = docs
-      .select(id.as("id"), explode_outer(charTrigrams(text)).as("tri"))
-      .join(broadcast(model.table), Seq("tri"), "left")
-      .select(col("id"),
-        when(col("tri").isNull, null) // short doc: no trigram rows
-          .otherwise(coalesce(col("logp"), lit(model.unkLogp)))
-          .cast("decimal(20,8)").as("lp"))
-    perTri.groupBy(col("id"))
-      .agg(count(col("lp")).as("n_tris"),
-        coalesce(sum(col("lp")).cast("double"), lit(model.unkLogp)).as("s"))
-      .select(col("id"), col("n_tris"),
-        round(-col("s") / greatest(col("n_tris"), lit(1L)), 6).as("lm_score"))
-  }
 }

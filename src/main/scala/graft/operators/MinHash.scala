@@ -77,12 +77,12 @@ object MinHash {
     * tasks. EXPLICIT OPT-IN for boilerplate-heavy corpora (real web
     * ingest): detection costs a window pass over the band table —
     * measured ~9% on a uniform corpus where it buys nothing, vs a
-    * 1.4× wall / 1.9× straggler win on the skewed twin (SkewBench,
-    * §6 round-12) — and a pipeline that runs exact/line dedup first
-    * (C1/C45, the c21 order) strips the worst boilerplate before
-    * this operator sees it. The candidate SET is identical at any
-    * setting (each pair meets exactly once — NearDupSpec pins
-    * parity). */
+    * 1.4× wall / 1.9× straggler win on the skewed twin (SURVEY §6
+    * round 12, `skewbench_sf1_*_r12.json`) — and a pipeline that
+    * runs exact/line dedup first (C1/C45, the c21 order) strips the
+    * worst boilerplate before this operator sees it. The candidate
+    * SET is identical at any setting (each pair meets exactly once —
+    * NearDupSpec pins parity). */
   def nearDupPairs(docs: DataFrame, id: Column, text: Column,
                    n: Int = 3, k: Int = 8, bandRows: Int = 2,
                    threshold: Double = 0.5,

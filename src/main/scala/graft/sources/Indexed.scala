@@ -25,10 +25,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * Per-VALUE granule checks only happen when Spark pushes the set as
   * an OR-of-Eq chain, which it does only BELOW
   * `spark.sql.parquet.pushdown.inFilterThreshold` (and a chain deeper
-  * than ~4000 overflows the visitor stack). Measured (SkipProbe,
-  * 10M-row store, 32-file clustered layout, 2000-row pages): 200-key
-  * probe = 392k rows scanned with OR-of-Eq vs 9.93M with native
-  * `In`; an unsorted layout never skips under either form.
+  * than ~4000 overflows the visitor stack). Measured (SURVEY §6
+  * round 10; SkipProbe's source is at commit 814e342), on a 10M-row
+  * store, 32-file clustered layout, 2000-row pages: 200-key probe =
+  * 392k rows scanned with OR-of-Eq vs 9.93M with native `In`; an
+  * unsorted layout never skips under either form.
   *
   * The layout therefore makes the key set SMALL first, then lets
   * parquet's own per-value machinery work:
@@ -470,11 +471,7 @@ object Indexed {
       if (anyUnindexed) distinctKeys
       else distinctKeys.filter(k =>
         !bloomable(k) || blooms.exists(b => mightContain(b, k)))
-    if (alive.isEmpty) {
-      if (sys.env.contains("GRAFT_IDX_DEBUG"))
-        println(s"prunedRead($root): keys=${distinctKeys.size} alive=0 -> empty")
-      return emptyOf
-    }
+    if (alive.isEmpty) return emptyOf
     // cost gate: a point probe reads ~one page per alive key per dir
     // that might hold it, so when the estimate reaches half the store
     // a plain scan is at least as cheap (and pays no per-row
@@ -486,9 +483,6 @@ object Indexed {
       case d if d.indexed => math.min(alive.size.toLong * d.pageRows, d.rows)
     }.sum
     val total = dirs.filter(_.indexed).map(_.rows).sum
-    if (sys.env.contains("GRAFT_IDX_DEBUG"))
-      println(s"prunedRead($root): keys=${distinctKeys.size} alive=${alive.size} " +
-        s"est=$est total=$total")
     if (alive.size > keyCap || est * 2 >= total) return None
     // file selection: keep a file iff some alive key ∈ [lo, hi]
     // (merge over the lo-sorted manifest); unindexed dirs keep all

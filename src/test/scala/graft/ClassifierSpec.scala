@@ -61,7 +61,7 @@ class ClassifierSpec extends SparkSpec {
       .toDF("id", "t")
     val kernel = Classifier.score(docs, col("id"), col("t"), model)
       .as[(Long, Long, Double, Boolean)].collect().sortBy(_._1).toSeq
-    val decl = Classifier.scoreDeclarative(
+    val decl = DeclarativeRef.classifierScore(
         docs.na.fill("", Seq("t")), col("id"), col("t"), model)
       .as[(Long, Long, Double, Boolean)].collect().sortBy(_._1).toSeq
     assert(kernel == decl, s"kernel $kernel != declarative $decl")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.operators.{MinHash, Quality, Shingles}
+import graft.operators.{Classifier, Dsir, LangModel, MinHash, Quality, Shingles}
 
 /** Declarative (explode → aggregate) twins of the text family's fused
   * per-document kernels (`plans.TextExpressions`): each is the chain
@@ -221,6 +221,75 @@ object DeclarativeRef {
     df.select(explode(graft.plans.TextExpressions.wordNgrams(lower(text), 1)).as("tok"))
       .filter(col("tok").isNotNull)
       .groupBy(col("tok")).agg(count(lit(1)).as(cname))
+
+  // --- Frozen-model scorers (C28 / C46 / C52) -------------------------
+
+  /** `LangModel.score` as explode → broadcast join → per-doc decimal
+    * aggregation, one row per TRIGRAM — the twin of
+    * `plans.TrigramLmScore`. Short docs carry the unseen floor. */
+  def langModelScore(docs: DataFrame, id: Column, text: Column,
+                     model: LangModel.Model): DataFrame = {
+    val perTri = docs
+      .select(id.as("id"), explode_outer(LangModel.charTrigrams(text)).as("tri"))
+      .join(broadcast(model.table), Seq("tri"), "left")
+      .select(col("id"),
+        when(col("tri").isNull, null) // short doc: no trigram rows
+          .otherwise(coalesce(col("logp"), lit(model.unkLogp)))
+          .cast("decimal(20,8)").as("lp"))
+    perTri.groupBy(col("id"))
+      .agg(count(col("lp")).as("n_tris"),
+        coalesce(sum(col("lp")).cast("double"), lit(model.unkLogp)).as("s"))
+      .select(col("id"), col("n_tris"),
+        round(-col("s") / greatest(col("n_tris"), lit(1L)), 6).as("lm_score"))
+  }
+
+  /** `Dsir.score` as feature explode → broadcast join → per-doc
+    * decimal sum, one row per FEATURE — the twin of
+    * `plans.DsirScore`. */
+  def dsirScore(docs: DataFrame, id: Column, text: Column,
+                model: Dsir.Model): DataFrame = {
+    val perFeat = Dsir.feats(docs, id, text, model.prefixLen)
+      .join(broadcast(model.table), Seq("b"), "left")
+      .select(
+        when(col("b").isNull, null)
+          .otherwise(coalesce(col("lam"), lit(model.unkLam)))
+          .cast("decimal(20,8)").as("lp"),
+        col("id"))
+    perFeat.groupBy(col("id"))
+      .agg(count(col("lp")).as("n_feats"),
+        coalesce(sum(col("lp")), lit(BigDecimal(0))).as("s"))
+      .select(col("id"), col("n_feats"),
+        // round IN DECIMAL, cast after: the sum is an EXACT 8-decimal
+        // value, so casting first hands round() a double whose
+        // shortest decimal representation can land exactly on a
+        // ....50 tie that engines resolve differently (found at
+        // sf0.1: one doc off by exactly 1e-6). Decimal HALF_UP is
+        // identical in Spark and DuckDB.
+        round(col("s"), 6).cast("double").as("logw"))
+  }
+
+  /** `Classifier.score` as token explode → broadcast join → per-doc
+    * decimal sum plus the prior, one row per TOKEN — the twin of
+    * `plans.NbScore`. */
+  def classifierScore(docs: DataFrame, id: Column, text: Column,
+                      model: Classifier.Model, cutoff: Double = 0.0): DataFrame =
+    docs.select(id.as("id"),
+        explode_outer(graft.plans.TextExpressions.wordNgrams(lower(text), 1)).as("tok"))
+      .join(broadcast(model.table), Seq("tok"), "left")
+      .select(col("id"), col("w").cast("decimal(20,8)").as("w"))
+      .groupBy(col("id"))
+      .agg(count(col("w")).as("n_hits"),
+        coalesce(sum(col("w")), lit(BigDecimal(0))).as("s"))
+      .select(col("id"), col("n_hits"),
+        // prior joins the sum IN DECIMAL (it is an exact 8-decimal
+        // value — Double.toString recovers it losslessly) and the
+        // 6-digit round happens in decimal too: rounding after a
+        // cast to double let a ....50 tie resolve differently per
+        // engine (found at sf0.1, exactly 1e-6 off on one doc)
+        round(col("s") + lit(new java.math.BigDecimal(
+            java.lang.Double.toString(model.prior))), 6)
+          .cast("double").as("logodds"))
+      .withColumn("keep", col("logodds") > cutoff)
 
   /** `LangId.detect` as the join form: tokens explode and
     * broadcast-join the (word → lang) stopword table, per-(doc, lang)

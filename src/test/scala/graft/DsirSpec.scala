@@ -75,7 +75,7 @@ class DsirSpec extends SparkSpec {
       val m = Dsir.train(target, raw, col("doc_id"), col("text"), prefixLen = pl)
       val kernel = Dsir.score(docs, col("doc_id"), col("text"), m)
         .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-      val decl = Dsir.scoreDeclarative(docs, col("doc_id"), col("text"), m)
+      val decl = DeclarativeRef.dsirScore(docs, col("doc_id"), col("text"), m)
         .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
       assert(kernel == decl, s"prefixLen=$pl: kernel $kernel != declarative $decl")
     }
@@ -104,7 +104,7 @@ class DsirSpec extends SparkSpec {
     val m = Dsir.train(target, raw, col("doc_id"), col("text"))
     val a = Dsir.score(raw, col("doc_id"), col("text"), m)
       .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val b = Dsir.scoreDeclarative(raw, col("doc_id"), col("text"), m)
+    val b = DeclarativeRef.dsirScore(raw, col("doc_id"), col("text"), m)
       .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(a == b)
   }

@@ -44,7 +44,7 @@ class LangModelSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val kernel = LangModel.score(probe, col("doc_id"), col("text"), model)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
-    val decl = LangModel.scoreDeclarative(
+    val decl = DeclarativeRef.langModelScore(
         probe.na.fill("", Seq("text")), col("doc_id"), col("text"), model)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sortBy(_._1)
     assert(kernel.toSeq == decl.toSeq,

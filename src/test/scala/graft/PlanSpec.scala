@@ -225,7 +225,7 @@ class PlanSpec extends SparkSpec {
 
   test("c40's window is the only unpartitioned Window across all declared queries") {
     // The driver mains silence WindowExec's "No Partition Defined"
-    // WARN for every window (EngineLog), so a new unbounded
+    // WARN for every window (GraftSession), so a new unbounded
     // single-partition window would run silently there. This sweep is
     // that signal instead: every declared plan (subqueries included)
     // is searched, and c40's proven-bounded Σw window (pinned above)

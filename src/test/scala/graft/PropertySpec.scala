@@ -115,7 +115,7 @@ class PropertySpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
     val kernel = collectScores(LangModel.score(docs, col("doc_id"), col("text"), model))
     val decl = collectScores(
-      LangModel.scoreDeclarative(docs, col("doc_id"), col("text"), model))
+      DeclarativeRef.langModelScore(docs, col("doc_id"), col("text"), model))
     assert(kernel == decl,
       kernel.toSeq.sorted.zip(decl.toSeq.sorted)
         .filter { case (a, b) => a != b }.take(5).mkString("; "))
@@ -138,7 +138,7 @@ class PropertySpec extends SparkSpec {
         (r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
     val kernel = scores(Classifier.score(docs, col("doc_id"), col("text"), model))
     val decl = scores(
-      Classifier.scoreDeclarative(docs, col("doc_id"), col("text"), model))
+      DeclarativeRef.classifierScore(docs, col("doc_id"), col("text"), model))
     assert(kernel == decl,
       kernel.toSeq.sorted.zip(decl.toSeq.sorted)
         .filter { case (a, b) => a != b }.take(5).mkString("; "))
@@ -158,7 +158,7 @@ class PropertySpec extends SparkSpec {
     def scores(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
     val kernel = scores(Dsir.score(docs, col("doc_id"), col("text"), model))
-    val decl = scores(Dsir.scoreDeclarative(docs, col("doc_id"), col("text"), model))
+    val decl = scores(DeclarativeRef.dsirScore(docs, col("doc_id"), col("text"), model))
     assert(kernel == decl,
       kernel.toSeq.sorted.zip(decl.toSeq.sorted)
         .filter { case (a, b) => a != b }.take(5).mkString("; "))
