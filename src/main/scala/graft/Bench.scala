@@ -11,9 +11,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *    headline fields LAST so a tail-truncated capture still carries
   *    them;
   *  - the COMPLETE full-precision record to SPARK_GRAFT_BENCH_OUT
-  *    (default `bench_out.json` in the cwd = the repo), so the round
-  *    artifact is self-contained even when the stdout scrape
+  *    (default `bench_out.json` in the cwd = the repo), so the run's
+  *    record is self-contained even when the stdout scrape
   *    truncates — BENCH_r05 and r06 both lost their tails that way.
+  *    Its per-query `diag` carries each rep's seconds, JIT seconds,
+  *    host steal/iowait/idle and mini-calibration stamp
+  *    (`tools/stamp_filter.py` reads these), plus the min rep's GC
+  *    and spill and the storage left behind.
   *
   * Both carry a LOAD CALIBRATION: a fixed, sf-independent reference
   * computation (sum(xxhash64(id)) over 2^28 ids — pure CPU across all
@@ -161,69 +165,16 @@ object Bench {
         }
       }
     })
-    // ---- continuous slowdown sampler (round 16: the c38/c22 scatter) --
-    // The ~90 ms post-rep stamp provably undersamples the suspected
-    // sub-minute host slowdown windows (it observes <1% of a 30 s rep).
-    // SPARK_GRAFT_BENCH_SAMPLER=1 starts a daemon thread running a
-    // fixed ~0.5 ms pure-JVM work unit every 100 ms for the whole
-    // sweep; each rep then reports the tick-duration distribution and
-    // slow-tick occupancy INSIDE its own window. The unit competes
-    // with Spark's task threads, so its absolute duration inflates
-    // during any busy query — the diagnostic is the CONTRAST between
-    // fast and slow reps of the SAME query, where the engine's work is
-    // constant and only host interference differs. Off by default: a
-    // permanent 0.5%-duty spinner has no place under a record run.
-    val samplerOn = sys.env.get("SPARK_GRAFT_BENCH_SAMPLER").contains("1")
-    final case class Tick(at: Long, workNanos: Long)
-    val ticks = new java.util.concurrent.ConcurrentLinkedQueue[Tick]()
-    val tickSink = new LongAdder // observable sink: the loop can't be elided
-    def tickOnce(): Tick = {
-      val t0 = System.nanoTime()
-      var x = t0 | 1L
-      var i = 0
-      while (i < 300000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      tickSink.add(x)
-      val t1 = System.nanoTime()
-      Tick(t1, t1 - t0)
-    }
-    if (samplerOn) {
-      val t = new Thread(() => {
-        while (true) { ticks.add(tickOnce()); Thread.sleep(100) }
-      }, "graft-bench-sampler")
-      t.setDaemon(true)
-      t.start()
-    }
-    def tickWindow(from: Long, to: Long): Seq[Double] = {
-      import scala.jdk.CollectionConverters._
-      ticks.iterator().asScala.filter(t => t.at >= from && t.at <= to)
-        .map(_.workNanos / 1e6).toSeq.sorted
-    }
     // disk size matters as much as memory: localCheckpoint blocks are
     // MEMORY_AND_DISK, so under execution-memory pressure they land on
     // disk and STAY there until a driver GC lets the ContextCleaner
-    // reap them — a hygiene-off sf10 suite accumulated 73 GB of
-    // block-manager files in ~50 min on this box (r14, hit ENOSPC)
+    // reap them — an sf10 suite accumulated 73 GB of block-manager
+    // files in ~50 min before the periodic driver GC (r14, hit ENOSPC)
     def storageSnapshot(): (Long, Long, Int) = {
       val infos = spark.sparkContext.getRDDStorageInfo
       (infos.map(_.memSize).sum, infos.map(_.diskSize).sum,
         spark.sparkContext.getPersistentRDDs.size)
     }
-    // SPARK_GRAFT_BENCH_HYGIENE=1: between queries, drop every
-    // persistent RDD (nothing references a prior query's checkpoint
-    // blocks once its action returned), clear the SQL cache, and ask
-    // for a driver GC so the ContextCleaner can reap broadcast/shuffle
-    // state. OFF by default — the protocol the cross-round records
-    // were measured under stays the default; this knob is the A/B for
-    // the inflation experiment.
-    val hygiene = sys.env.get("SPARK_GRAFT_BENCH_HYGIENE").contains("1")
-    def hygienePass(): Unit = if (hygiene) {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      System.gc()
-      org.apache.spark.graft.Listeners.settle(spark.sparkContext)
-      Thread.sleep(200) // let async unpersist/cleaner messages land
-    }
-
     // local profiling with a name filter warms only the filtered set
     // (the driver passes no args → full warmup, unchanged)
     miniCalib() // warm the per-rep stamp's codegen before anything is measured
@@ -251,7 +202,6 @@ object Bench {
       .map { case (name, fn) =>
       // noop sink: computes every output column (count() would let
       // Catalyst prune the projections) without any write cost.
-      hygienePass()
       val times = (1 to reps).map { _ =>
         // drain the listener bus so a prior rep's straggling task-end
         // events don't leak into this rep's spill total (outside the
@@ -265,8 +215,7 @@ object Bench {
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val tEnd = System.nanoTime()
-          val sec = (tEnd - t0) / 1e9
+          val sec = (System.nanoTime() - t0) / 1e9
           org.apache.spark.graft.Listeners.settle(spark.sparkContext)
           val s1 = procStat()
           val ds = s1.zip(s0).map { case (a, b) => (a - b).toDouble }
@@ -275,24 +224,24 @@ object Bench {
           (sec, (gcMillis() - g0) / 1e3, spillBytes.sum() / 1e6,
             (jitMillis() - j0) / 1e3,
             100 * ds(4) / tot, 100 * ds(3) / tot, 100 * ds(2) / tot,
-            miniCalib(), fetchWaitMs.sum() / 1e3, (t0, tEnd))
+            miniCalib(), fetchWaitMs.sum() / 1e3)
         } catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: $e")
-            (-1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, (0L, 0L))
+            (-1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
         }
       }
       val ok = times.filter(_._1 >= 0)
       // diagnostics ride the rep that produced the reported (min) time
       val best =
-        if (ok.isEmpty) (-1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, (0L, 0L))
+        if (ok.isEmpty) (-1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
         else ok.minBy(_._1)
       val (storageBytes, storageDiskBytes, nRdds) = storageSnapshot()
       (name, best._1, best._2, best._3, storageBytes / 1e6,
         storageDiskBytes / 1e6, nRdds,
         times.map(_._1), times.map(_._4), poolUsedMb("CodeHeap"), poolUsedMb("Metaspace"),
         times.map(_._5), times.map(_._6), times.map(_._7), times.map(_._8),
-        times.map(_._9), times.map(_._10))
+        times.map(_._9))
     }
     val results = resultsFull.map(r => r._1 -> r._2)
     // post-sweep calibration: load arriving MID-run shows up as
@@ -330,52 +279,11 @@ object Bench {
     // per-query diagnostics (gc seconds + spill MB of the min rep;
     // resident RDD storage MB + block count right AFTER the query) —
     // the attribution record for any in-suite-vs-standalone gap
-    // sampler baseline: the fastest tick of the whole run is the
-    // quiet-box work-unit cost; a rep's "slow occupancy" is the
-    // fraction of its ticks over 3× that floor
-    val tickMinMs = {
-      import scala.jdk.CollectionConverters._
-      val all = ticks.iterator().asScala.map(_.workNanos / 1e6)
-      if (all.isEmpty) 0.0 else all.min
-    }
-    // second floor (round 17, ADVICE): on a box that is NEVER quiet —
-    // exactly the condition being diagnosed — the all-ticks min
-    // inflates and slow-occupancy understates host interference. Ticks
-    // taken OUTSIDE every rep window (settle gaps, per-rep stamps,
-    // warmup/teardown) are immune to the engine's own busy queries, so
-    // their min is the in-run quiet estimate to calibrate against the
-    // cross-run quiet baseline. Emitted beside tick_min_ms (which
-    // stays the slow_pct denominator for comparability with the r16
-    // probe records).
-    val tickIdleMinMs = {
-      import scala.jdk.CollectionConverters._
-      val windows = resultsFull.flatMap(_._17).filter(w => w._2 > w._1)
-      val idle = ticks.iterator().asScala
-        .filter(t => !windows.exists(w => t.at >= w._1 && t.at <= w._2))
-        .map(_.workNanos / 1e6)
-      if (idle.isEmpty) 0.0 else idle.min
-    }
     val diag = resultsFull.map {
       case (name, _, gcSec, spillMb, storMb, storDiskMb, nRdds,
             repSecs, repJitSecs, codeHeapMb, metaspaceMb,
             repStealPct, repIowaitPct, repIdlePct, repCalib,
-            repFetchWait, repWindows) =>
-        val tickJson = if (!samplerOn) "" else {
-          val stats = repWindows.map { case (from, to) => tickWindow(from, to) }
-          def arr(f: Seq[Double] => Double): String =
-            stats.map(w => ms(if (w.isEmpty) -1.0 else f(w))).mkString(",")
-          s""""rep_tick_n":[${stats.map(_.size).mkString(",")}],""" +
-            s""""rep_tick_p50_ms":[${arr(w => w(w.size / 2))}],""" +
-            s""""rep_tick_p90_ms":[${arr(w => w(w.size * 9 / 10))}],""" +
-            s""""rep_tick_slow_pct":[${arr(w =>
-              100.0 * w.count(_ > 3 * tickMinMs) / w.size)}],""" +
-            // mean tick vs the run floor (round 17): classifies
-            // 1.5×-amplitude windows the 3× slow-pct threshold misses
-            // (the two mid-slow c38 reps of the r16 probe sat at 5-7%
-            // occupancy; their mean ratio separates them cleanly)
-            s""""rep_tick_mean_x":[${arr(w =>
-              w.sum / w.size / math.max(tickMinMs, 1e-9))}],"""
-        }
+            repFetchWait) =>
         "\"" + name + s"""":{"gc_sec":${ms(gcSec)},"spill_mb":${ms(spillMb)},""" +
           s""""storage_mb_after":${ms(storMb)},""" +
           s""""storage_disk_mb_after":${ms(storDiskMb)},"rdds_after":$nRdds,""" +
@@ -386,19 +294,16 @@ object Bench {
           s""""rep_idle_pct":[${repIdlePct.map(ms).mkString(",")}],""" +
           s""""rep_calib_secs":[${repCalib.map(ms).mkString(",")}],""" +
           s""""rep_fetch_wait_secs":[${repFetchWait.map(ms).mkString(",")}],""" +
-          tickJson +
           s""""codeheap_mb_after":${ms(codeHeapMb)},""" +
           s""""metaspace_mb_after":${ms(metaspaceMb)}}"""
     }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
       s""""reps":$reps,"cpus":"$cpus","shuffle_partitions":"$shufflePartitions",""" +
-      s""""n_queries":${results.size},"hygiene":$hygiene,""" +
+      s""""n_queries":${results.size},""" +
       s""""calib":$calib,"calib_pre":$calibPre,"calib_post":$calibPost,""" +
       s""""calib_ref":"min-of-3 bit_xor(xxhash64(id)) over range(2^28), warmed",""" +
       s""""loadavg_pre":"$loadPre","loadavg_post":"$loadPost",""" +
-      s""""sampler":$samplerOn,"tick_min_ms":${ms(tickMinMs)},""" +
-      s""""tick_idle_min_ms":${ms(tickIdleMinMs)},""" +
       s""""diag":$diag,""" +
       s""""queries":$qsFull}"""
     // best-effort: the bench must still report via stdout if cwd
@@ -407,26 +312,6 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (full + "\n").getBytes("UTF-8"))
     } catch { case e: Exception => System.err.println(s"[bench] $outPath not written: $e") }
-    // Per-round ARCHIVE copy: bench_out.json is overwritten by every
-    // run, so round N+1's first run would destroy round N's per-query
-    // record. The round number is inferred from the newest BENCH_r<N>
-    // stdout scrape the driver committed (absent in round 1 → r01);
-    // SPARK_GRAFT_ROUND overrides. Full driver runs only — a filtered
-    // local profiling run must not overwrite the round's archive.
-    if (args.isEmpty) try {
-      import scala.jdk.CollectionConverters._
-      val round = sys.env.get("SPARK_GRAFT_ROUND").map(_.toInt).getOrElse {
-        val rx = "BENCH_r(\\d+)\\.json".r
-        val seen = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-          .iterator().asScala
-          .flatMap(p => rx.findFirstMatchIn(p.getFileName.toString).map(_.group(1).toInt))
-          .toSeq
-        if (seen.isEmpty) 1 else seen.max + 1
-      }
-      val arch = f"bench_out_r$round%02d.json"
-      java.nio.file.Files.write(java.nio.file.Paths.get(arch),
-        (full + "\n").getBytes("UTF-8"))
-    } catch { case e: Exception => System.err.println(s"[bench] archive not written: $e") }
     spark.stop()
     println(line)
   }

@@ -34,6 +34,11 @@ import org.apache.spark.sql.SparkSession
   *    in ~50 min and hit ENOSPC (SURVEY §6 r14). The periodic driver
   *    GC bounds that to one interval's worth (73 → 7 GB measured) at
   *    no wall-time cost (gc60 vs hyg0 chain pair, §6 r14).
+  *  - `spark.sql.legacy.parquet.nanosAsLong=true`: legacy `events`
+  *    files store `ts` as parquet TIMESTAMP(NANOS), which Spark's
+  *    reader rejects unless it reads them as long nanos;
+  *    `Tables.load` converts that long to a session timestamp. Set
+  *    here once, so loading a table never rewrites session conf.
   *  - UI off, UTC session time zone, log level WARN, and WindowExec's
   *    "No Partition Defined" WARN silenced (see `build`).
   */
@@ -63,6 +68,7 @@ object GraftSession {
       .config("spark.cleaner.periodicGC.interval", "60s")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try org.apache.logging.log4j.core.config.Configurator.setLevel(

@@ -34,11 +34,10 @@ object ScaleGen {
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor must be >= 1, got $factor")
+    // events.ts in the TIMESTAMP(NANOS) form reads as a raw long (the
+    // session's nanosAsLong) and is written back as that long —
+    // Tables.load applies the same nanos→micros conversion to both forms
     val spark = GraftSession.build()
-    // events.ts is parquet TIMESTAMP(NANOS): read it as a raw long
-    // and write that long back — Tables.load applies the same
-    // nanos→micros conversion to both forms
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def in(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit = {

@@ -26,12 +26,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Conf key: scan fan-out floor in bytes (tables smaller than this
-    * skip the fan-out — for a few-KB dimension table the extra
-    * exchange costs more than the parallelism buys). Set it huge to
-    * disable the fan-out entirely. */
-  val FanoutMinBytesKey = "spark.graft.scan.fanoutMinBytes"
-
   /** Adaptive SCAN FAN-OUT (optimization round 17, guide §2.5 "input
     * skew: one huge unsplittable file"): the testdata tables are
     * single-file, SINGLE-ROW-GROUP parquet, so every scan is exactly
@@ -39,10 +33,9 @@ object Tables {
     * whole map pass (tokenize/shingle/md5/regex) serialized on one
     * core while the other 31 idled (measured: c53's fingerprint
     * aggregation spent 0.66 s of its 1.45 s wall in a 1-task stage,
-    * OPTIMIZATION_r17.md). A round-robin repartition to the session's
-    * default parallelism immediately after the read moves the few
-    * (< one split's worth of) megabytes once and unlocks the full
-    * core count for every downstream map stage.
+    * OPTIMIZATION_r17.md). A round-robin repartition right after the
+    * read moves the few (< one split's worth of) megabytes once and
+    * unlocks the cores for every downstream map stage.
     *
     * Scale-adaptive by construction, not a local[32] constant: the
     * fan-out fires only when the WHOLE table is at most one scan
@@ -57,88 +50,64 @@ object Tables {
     * is partitioning-independent for every declared query by the §4
     * portability discipline (decimal-exact sums, md5-ranked orders —
     * anything order-sensitive could never have hash-matched a
-    * different engine in the first place). */
-  /** Conf key: fan-out partition count override (default: the
-    * session's default parallelism / 4 — see scanFanout). */
-  val FanoutPartitionsKey = "spark.graft.scan.fanoutPartitions"
-
-  /** Conf key: comma-separated table names eligible for the scan
-    * fan-out ("*" = all). Default: the two corpus tables whose EVERY
-    * consumer runs the engine's heavy per-byte map kernels
-    * (tokenize/shingle/md5 over `documents`, vector math over
-    * `embeddings`) — measured interleaved A/B: fan-out wins 0.85x
-    * total over the text/vector family but LOSES 1.45x over the
-    * cheap-scan relational family (lineitem/orders/events TPC-H
-    * aggregations, where the extra exchange outweighs the map
-    * parallelism it buys).
+    * different engine in the first place).
     *
-    * This list only governs the DEFAULT (`fanoutParts = -1`)
-    * consumers. A consumer that forces its own width (`fanoutParts`
-    * = n > 0, the `tFan` loaders in SparkEntry) fans out whether or
-    * not its table is listed — even with this key set to "" — so the
-    * kill switch for every forced fan-out is `FanoutOverrideKey`
-    * (`fanoutConsumerOverride=off`), which makes `load` ignore
-    * `fanoutParts` and fall back to this list. */
-  val FanoutTablesKey = "spark.graft.scan.fanoutTables"
-  private val FanoutTablesDefault = "documents,embeddings"
+    * Tables smaller than this floor never fan out: for a few-KB
+    * dimension table the extra exchange costs more than the
+    * parallelism buys. */
+  private val FanoutMinBytes = 128L << 10
 
-  /** Conf key (optimization round 18): master switch for the
-    * PER-CONSUMER fan-out overrides below ("on"/"off", default on).
-    * "off" makes `load` ignore its `fanoutParts` argument — i.e. the
-    * exact round-17 per-table behavior — which is what makes the
-    * whole per-consumer change one interleaved A/B arm. */
-  val FanoutOverrideKey = "spark.graft.scan.fanoutConsumerOverride"
+  /** The tables a DEFAULT (`fanoutParts = -1`) consumer fans out: the
+    * two corpus tables whose EVERY consumer runs the engine's heavy
+    * per-byte map kernels (tokenize/shingle/md5 over `documents`,
+    * vector math over `embeddings`) — measured interleaved A/B:
+    * fan-out wins 0.85x total over the text/vector family but LOSES
+    * 1.45x over the cheap-scan relational family (lineitem/orders/
+    * events TPC-H aggregations, where the extra exchange outweighs
+    * the map parallelism it buys). A consumer that forces its own
+    * width (`fanoutParts` = n > 0, the `tFan`/`tNarrow` loaders in
+    * SparkEntry) fans out whether or not its table is listed. */
+  private val FanoutTables = Set("documents", "embeddings")
 
-  /** Conf key: fan-out width for WIDE-AGGREGATION/MULTI-ACTION
-    * consumers (`load(.., fanoutParts = narrowFanoutParts(s))`).
-    * Default 2, NOT cores/4: those consumers pay a per-task fixed
-    * cost — UnsafeProjection SOURCE generation for wide aggregate
-    * buffers (Dsir/Classifier kernels, PQ/embedding result
-    * projections; HLL++ at rsd 1 %, ≈ 1.5-2.7k buffer attributes,
-    * until a13b moved to a one-column sketch), measured at
-    * ~300-600 ms per task and SERIALIZED across tasks by the codegen
-    * cache lock (OPTIMIZATION_r17.md "Per-task fixed costs") — so
-    * with work T and per-task constant K the useful width is
-    * ~sqrt(T/K) ≈ 2 at sub-second T, independent of the core count.
-    * Round-17's per-table cores/4 width multiplied that constant 8×
-    * at 32 cores and regressed the whole train+score family on the
-    * driver's box (VERDICT r17: c46 3.0×, c33 2.0×, c52, c51, c31,
-    * c53 — all FASTER at 8 cores than 32). */
-  val FanoutNarrowKey = "spark.graft.scan.fanoutNarrowParts"
+  /** Fan-out width for WIDE-AGGREGATION/MULTI-ACTION consumers
+    * (`load(.., fanoutParts = narrowFanoutParts(s))`). 2, NOT
+    * cores/4: those consumers pay a per-task fixed cost —
+    * UnsafeProjection SOURCE generation for wide aggregate buffers
+    * (Dsir/Classifier kernels, PQ/embedding result projections),
+    * measured at ~300-600 ms per task and SERIALIZED across tasks by
+    * the codegen cache lock (OPTIMIZATION_r17.md "Per-task fixed
+    * costs") — so with work T and per-task constant K the useful
+    * width is ~sqrt(T/K) ≈ 2 at sub-second T, independent of the
+    * core count. Round-17's per-table cores/4 width multiplied that
+    * constant 8× at 32 cores and regressed the whole train+score
+    * family on the driver's box (VERDICT r17: c46 3.0×, c33 2.0×,
+    * c52, c51, c31, c53 — all FASTER at 8 cores than 32). */
+  private val NarrowFanoutParts = 2
 
   /** Width for wide-aggregation/multi-action consumers — see
-    * `FanoutNarrowKey`. */
-  def narrowFanoutParts(spark: SparkSession): Int =
-    spark.conf.get(FanoutNarrowKey,
-      sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT_NARROW", "2")).toInt
+    * `NarrowFanoutParts`. */
+  def narrowFanoutParts(spark: SparkSession): Int = NarrowFanoutParts
 
-  /** Default fan-out width (cores/4 — see scanFanout) for FORCED
-    * per-consumer fan-out of a table outside the default list (the
-    * events JSON-parse family: round-17 A/B measured a17/a15 at
-    * 0.58× and a13 at 0.81× under an events fan-out that lost on
-    * every cheap events query — per-consumer is the shape that keeps
-    * the win without the blanket loss). */
+  /** Default fan-out width: the session's default parallelism / 4,
+    * at least 2 (see `scanFanout` for why not the full core count).
+    * Also the width of a FORCED per-consumer fan-out of a table
+    * outside `FanoutTables` (the events JSON-parse family: round-17
+    * A/B measured a17/a15 at 0.58× and a13 at 0.81× under an events
+    * fan-out that lost on every cheap events query — per-consumer is
+    * the shape that keeps the win without the blanket loss). */
   def defaultFanoutParts(spark: SparkSession): Int =
-    spark.conf.get(FanoutPartitionsKey,
-      sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT_PARTS",
-        math.max(2, spark.sparkContext.defaultParallelism / 4).toString)).toInt
+    math.max(2, spark.sparkContext.defaultParallelism / 4)
 
   private def scanFanout(spark: SparkSession, df: DataFrame, name: String,
                          fanoutParts: Int): DataFrame = {
-    // per-consumer override (round 18): -1 = per-table conf default;
+    // per-consumer width (round 18): -1 = the per-table default;
     // 0 = this consumer opts OUT (its plan pays more per task than the
     // parallelism buys); n > 0 = this consumer fans out to exactly n,
     // whether or not the table is in the default list. The size gates
     // below apply to every arm, so the fan-out stays scale-inert: a
     // table past one scan split never fans out for anyone.
-    val overrideOn = spark.conf.get(FanoutOverrideKey, "on") == "on"
-    val parts = if (overrideOn) fanoutParts else -1
-    if (parts == 0) return df
-    if (parts < 0) {
-      val tables = spark.conf.get(FanoutTablesKey,
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT_TABLES", FanoutTablesDefault))
-      if (tables != "*" && !tables.split(",").map(_.trim).contains(name)) return df
-    }
+    if (fanoutParts == 0) return df
+    if (fanoutParts < 0 && !FanoutTables(name)) return df
     // cores/4, not cores: each fanned-out task pays a fixed setup cost
     // (per-task UnsafeProjection source generation, object-agg buffer
     // init — ~10-600 ms depending on plan width, measured via thread
@@ -147,13 +116,11 @@ object Tables {
     // an interleaved A/B over 22 queries measured 8 partitions beating
     // 32 at ratio 0.889 (sf0.1, local[32]), with only the two
     // biggest-input tables (lineitem, events) marginally preferring 32
-    val n = if (parts > 0) parts else defaultFanoutParts(spark)
+    val n = if (fanoutParts > 0) fanoutParts else defaultFanoutParts(spark)
     if (n <= 1) return df
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val maxSplit = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-    val floor = BigInt(spark.conf.get(FanoutMinBytesKey,
-      sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT_MIN", (128L << 10).toString)))
-    if (bytes < floor || bytes > maxSplit) return df
+    if (bytes < BigInt(FanoutMinBytes) || bytes > maxSplit) return df
     // size said "at most one split's worth" — but a MULTI-FILE table
     // of the same bytes already scans in parallel (Spark packs small
     // files into openCostInBytes-weighted splits, so >= n files means
@@ -165,23 +132,24 @@ object Tables {
   }
 
   /** Load a registry table. `fanoutParts` is the PER-CONSUMER scan
-    * fan-out override (round 18): -1 (default) = the per-table conf
-    * behavior, 0 = no fan-out for this consumer, n > 0 = fan out to
-    * exactly n partitions (even for a table outside the default
-    * list). See scanFanout — the ≤-one-split size gate applies to
-    * every setting, so all of this is inert at corpus scale. The read
-    * itself goes through `readParquet`, so a repeat load of an
-    * unchanged table runs no schema-inference job. */
+    * fan-out width (round 18): -1 (default) = the per-table default
+    * (`FanoutTables`), 0 = no fan-out for this consumer, n > 0 = fan
+    * out to exactly n partitions (even for a table outside the
+    * default list). See scanFanout — the ≤-one-split size gate
+    * applies to every setting, so all of this is inert at corpus
+    * scale. The read itself goes through `readParquet`, so a repeat
+    * load of an unchanged table runs no schema-inference job.
+    *
+    * events.ts has shipped in TWO physical forms across testdata
+    * generations: parquet TIMESTAMP(NANOS), which Spark reads only as
+    * long nanos under `spark.sql.legacy.parquet.nanosAsLong` (set by
+    * `GraftSession`; without it such a file is rejected), and plain
+    * TIMESTAMP(MICROS)/_NTZ. The loader adapts to whatever the file
+    * stores, so the engine's `ts` is always a session TimestampType —
+    * E16's schema-drift tolerance applied to the registry's own
+    * tables. Loading writes no session conf. */
   def load(spark: SparkSession, dir: String, name: String,
            fanoutParts: Int = -1): DataFrame = {
-    // events.ts has shipped in TWO physical forms across testdata
-    // generations: parquet TIMESTAMP(NANOS) (which Spark's reader
-    // rejects natively — read as long nanos via the legacy knob) and
-    // plain TIMESTAMP(MICROS)/_NTZ. The loader adapts to whatever the
-    // file stores, so the engine's `ts` is always a session
-    // TimestampType — E16's schema-drift tolerance applied to the
-    // registry's own tables.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = scanFanout(spark, readParquet(spark, s"$dir/$name.parquet"), name, fanoutParts)
     if (name == "events") eventsFromRaw(df) else df
   }
@@ -194,10 +162,8 @@ object Tables {
     * (it's a computed column to Catalyst). The scan fan-out sits
     * ABOVE the scan, so stored-domain pushdown is unaffected. */
   def loadEventsRaw(spark: SparkSession, dir: String,
-                    fanoutParts: Int = -1): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+                    fanoutParts: Int = -1): DataFrame =
     scanFanout(spark, readParquet(spark, s"$dir/events.parquet"), "events", fanoutParts)
-  }
 
   /** The session confs that shape parquet schema inference in Spark
     * 4.1: the five flags `ParquetToSparkSchemaConverter` is built from

@@ -69,24 +69,19 @@ object Dsir {
     * bucket count B, so the model is defined for any bucket. */
   def train(target: DataFrame, raw: DataFrame, id: Column, text: Column,
             prefixLen: Int = 3): Model = {
-    require(prefixLen >= 1 && prefixLen <= 8,
-      s"prefixLen must be in [1,8], got $prefixLen")
+    // 16^5 ≈ 1M buckets: past that a per-partition 16^p-long count
+    // buffer stops being "model-bounded" in any useful sense
+    require(prefixLen >= 1 && prefixLen <= 5,
+      s"prefixLen must be in [1,5], got $prefixLen")
     val b = math.pow(16.0, prefixLen)
     // ONE byte-walk pass per corpus via the fused BucketCountAgg
     // kernel (the training twin of DsirScore): per-partition state is
     // one B-long array, the shuffle carries one partial per
     // partition, and the count tables come back bit-identical to the
-    // explode→md5→groupBy plan (exact longs; countsDeclarative is
-    // the spec-pinned parity oracle, and remains the executed path
-    // for prefixLen > 5, where a 16^p-long per-partition buffer
-    // stops being "model-bounded" in any useful sense).
-    // format_string's %x is lowercase — exactly
-    // substring(md5(g), 1, prefixLen)'s alphabet.
-    def bucketCountTable(df: DataFrame, cname: String): DataFrame =
-      if (prefixLen <= 5) countsFused(df, text, prefixLen, cname)
-      else countsDeclarative(df, id, text, prefixLen, cname)
-    val tc = bucketCountTable(target, "ct").localCheckpoint(true)
-    val rc = bucketCountTable(raw, "cr").localCheckpoint(true)
+    // explode→md5→groupBy plan (exact longs; the test-scope
+    // `DeclarativeRef.dsirCounts` is the spec-pinned parity oracle).
+    val tc = countsFused(target, text, prefixLen, "ct").localCheckpoint(true)
+    val rc = countsFused(raw, text, prefixLen, "cr").localCheckpoint(true)
     // totals: scalars of the bucket-count tables, never a corpus rescan
     val nt = tc.agg(coalesce(sum(col("ct")), lit(0L))).head().getLong(0).toDouble
     val nr = rc.agg(coalesce(sum(col("cr")), lit(0L))).head().getLong(0).toDouble
@@ -124,7 +119,9 @@ object Dsir {
     graft.plans.TextExpressions.dsirScore(
       coalesce(lower(text).cast("string"), lit("")), model.compiled)
 
-  /** The fused count table: (b, count) over nonzero buckets. */
+  /** The fused count table: (b, count) over nonzero buckets.
+    * format_string's %x is lowercase — exactly
+    * substring(md5(g), 1, prefixLen)'s alphabet. */
   private[graft] def countsFused(df: DataFrame, text: Column,
                                  prefixLen: Int, cname: String): DataFrame =
     df.agg(graft.plans.CountAggregates
@@ -132,15 +129,4 @@ object Dsir {
       .select(posexplode(col("a")).as(Seq("i", cname)))
       .filter(col(cname) > 0)
       .select(format_string(s"%0${prefixLen}x", col("i")).as("b"), col(cname))
-
-  /** The declarative count plan (explode → md5 bucket → groupBy).
-    * It stays in main, unlike the text family's other declarative
-    * twins, because `train` still executes it for `prefixLen > 5`,
-    * where the fused kernel's 16^p-long buffer is too large; for
-    * `prefixLen <= 5` it is the parity oracle for `countsFused`
-    * (same (b, count) rows exactly, spec-pinned). */
-  private[graft] def countsDeclarative(df: DataFrame, id: Column, text: Column,
-                                       prefixLen: Int, cname: String): DataFrame =
-    feats(df, id, text, prefixLen).filter(col("b").isNotNull)
-      .groupBy(col("b")).agg(count(lit(1)).as(cname))
 }

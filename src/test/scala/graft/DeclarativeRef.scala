@@ -243,6 +243,14 @@ object DeclarativeRef {
         round(-col("s") / greatest(col("n_tris"), lit(1L)), 6).as("lm_score"))
   }
 
+  /** `Dsir.countsFused` as feature explode → md5 bucket → groupBy:
+    * (b, count) over the buckets that occur — the twin of
+    * `plans.CountAggregates.BucketCountAgg`. */
+  def dsirCounts(df: DataFrame, id: Column, text: Column,
+                 prefixLen: Int, cname: String): DataFrame =
+    Dsir.feats(df, id, text, prefixLen).filter(col("b").isNotNull)
+      .groupBy(col("b")).agg(count(lit(1)).as(cname))
+
   /** `Dsir.score` as feature explode → broadcast join → per-doc
     * decimal sum, one row per FEATURE — the twin of
     * `plans.DsirScore`. */

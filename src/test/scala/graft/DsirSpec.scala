@@ -64,14 +64,15 @@ class DsirSpec extends SparkSpec {
     // seen buckets, unseen buckets (unkLam path), repeated features
     // (multiplicity), every whitespace byte the split recognizes,
     // unicode tokens (multi-byte md5 input), empty and null text,
-    // and a second prefixLen to cover the bucket-width logic
+    // and prefix lengths 1, 3 (the default) and 5 (the largest train
+    // accepts) to cover the bucket-width logic
     val docs = Seq(
       (200L, "alpha beta gamma alpha beta zzzz"),
       (201L, "naïve\tcafé\n日本語\falpha\romega"),
       (202L, "  \t \n  "), (203L, ""), (204L, null.asInstanceOf[String]),
       (205L, "ALPHA Beta alpha"), (206L, "solo"))
       .toDF("doc_id", "text")
-    for (pl <- Seq(1, 3, 6)) {
+    for (pl <- Seq(1, 3, 5)) {
       val m = Dsir.train(target, raw, col("doc_id"), col("text"), prefixLen = pl)
       val kernel = Dsir.score(docs, col("doc_id"), col("text"), m)
         .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
@@ -91,10 +92,10 @@ class DsirSpec extends SparkSpec {
       (202L, "  \t \n  "), (203L, ""), (204L, null.asInstanceOf[String]),
       (205L, "ALPHA Beta alpha"), (206L, "solo"))
       .toDF("doc_id", "text")
-    for (pl <- Seq(1, 3)) {
+    for (pl <- Seq(1, 3, 5)) {
       val fused = Dsir.countsFused(docs, col("text"), pl, "c")
         .as[(String, Long)].collect().toSet
-      val decl = Dsir.countsDeclarative(docs, col("doc_id"), col("text"), pl, "c")
+      val decl = DeclarativeRef.dsirCounts(docs, col("doc_id"), col("text"), pl, "c")
         .as[(String, Long)].collect().toSet
       assert(fused == decl, s"prefixLen=$pl: fused counts diverge")
       assert(fused.nonEmpty)
@@ -114,7 +115,7 @@ class DsirSpec extends SparkSpec {
       Dsir.train(target, raw, col("doc_id"), col("text"), prefixLen = 0)
     }
     intercept[IllegalArgumentException] {
-      Dsir.train(target, raw, col("doc_id"), col("text"), prefixLen = 9)
+      Dsir.train(target, raw, col("doc_id"), col("text"), prefixLen = 6)
     }
   }
 }

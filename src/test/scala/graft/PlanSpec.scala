@@ -101,27 +101,27 @@ class PlanSpec extends SparkSpec {
   }
 
   test("scan fan-out: pushdown and pruning reach the scan UNDER the repartition (r17)") {
-    // sf0.001 tables sit below the fan-out floor, so force it on for
-    // every table to pin what the bench SF actually runs: the
+    // sf0.01's events.parquet (221 KB) is past the 128 KiB fan-out
+    // floor, so a forced-width consumer of it fans out with the
+    // shipped constants: pin what the bench SF actually runs — the
     // round-robin fan-out above the scan with filters and column
     // pruning still pushed THROUGH it (guide §6 — losing either would
     // be a silent 100 TB regression the fan-out must never cause)
-    spark.conf.set(Tables.FanoutMinBytesKey, "1")
-    spark.conf.set(Tables.FanoutTablesKey, "*")
-    try {
-      val p12 = plan("a12_retention")
-      assert(p12.contains("RoundRobinPartitioning"), p12)
-      assert(p12.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"), p12)
-      val p1 = plan("b1_pricing_summary")
-      assert(p1.contains("RoundRobinPartitioning"), p1)
-      assert(p1.contains("PushedFilters:") && p1.contains("l_shipdate"), p1)
-      assert(!p1.contains("l_partkey") && !p1.contains("l_comment"), p1)
-    } finally {
-      spark.conf.unset(Tables.FanoutMinBytesKey)
-      spark.conf.unset(Tables.FanoutTablesKey)
-    }
-    // and at the spec SF with defaults, the fan-out must NOT fire
-    // (sub-floor tables / non-corpus tables keep their bare scans)
+    import org.apache.spark.sql.functions.col
+    val sf01 = "/root/testdata/sf0.01"
+    val a17 = SparkEntry.queries("a17_reactions_agg")(spark, sf01)
+      .queryExecution.executedPlan.toString
+    assert(a17.contains("RoundRobinPartitioning"), a17) // a17 loads events through tFan
+    assert(a17.contains("ReadSchema: struct<props:string>"), a17)
+    // a12's stored-domain cutoff on a consumer forcing the default width
+    val raw = Tables.loadEventsRaw(spark, sf01, Tables.defaultFanoutParts(spark))
+    val p12 = raw.filter(col("ts") >= Tables.storedTsLit(raw, "ts", "2024-01-05 00:00:00"))
+      .select(col("event_id")).queryExecution.executedPlan.toString
+    assert(p12.contains("RoundRobinPartitioning"), p12)
+    assert(p12.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"), p12)
+    assert(p12.contains("ReadSchema: struct<event_id:bigint,ts:timestamp_ntz>"), p12)
+    // and at the spec SF, the fan-out must NOT fire (sub-floor tables /
+    // non-corpus tables keep their bare scans)
     assert(!plan("a12_retention").contains("RoundRobinPartitioning"))
   }
 

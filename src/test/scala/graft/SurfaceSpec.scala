@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins graft's runtime surface from the main sources' text: five
-  * mains, one session builder, and no environment reads inside the
-  * engine packages — so a one-off probe main, a second builder or a
-  * per-operator env knob cannot come back unnoticed. */
+  * mains, one session builder, no environment reads inside the
+  * engine packages, a fixed list of environment variables and no
+  * `spark.graft.*` conf key — so a one-off probe main, a second
+  * builder or an experiment knob cannot come back unnoticed. */
 class SurfaceSpec extends AnyFunSuite {
 
   /** Path under src/main/scala (with '/') → source text. */
@@ -52,5 +53,37 @@ class SurfaceSpec extends AnyFunSuite {
         line.contains("""sys.env.get("GRAFT_SINK_PROFILE")"""))
     } yield s"$f: ${line.trim}"
     assert(reads.isEmpty, reads.mkString("\n"))
+  }
+
+  /** Every environment variable `src/main` may read, each with a
+    * caller that sets it: the session's cores and shuffle partitions,
+    * the sink profiler switch, and the mains' input and output paths,
+    * Bench's rep count and StreamBench's batch sizes. */
+  private val EnvAllowList = Set(
+    "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS", "GRAFT_SINK_PROFILE",
+    "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_REPS", "SPARK_GRAFT_BENCH_OUT",
+    "SPARK_GRAFT_STREAMBENCH_OUT", "SPARK_GRAFT_STREAM_BATCH_SIZES",
+    "SPARK_GRAFT_PLANS_DIR")
+
+  test("src/main reads only the allow-listed environment variables, by literal name") {
+    val named = """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"([A-Za-z0-9_]+)"""".r
+    val reads = for {
+      (f, t) <- sources.toSeq
+      line <- t.linesIterator
+      if occurrences(line, """sys\.env|System\.getenv""") > 0
+    } yield f -> line.trim
+    val unnamed = reads.filter { case (_, l) => named.findFirstIn(l).isEmpty }
+    assert(unnamed.isEmpty, unnamed.mkString("\n"))
+    val names = reads.flatMap { case (_, l) => named.findAllMatchIn(l).map(_.group(1)) }.toSet
+    assert(names.subsetOf(EnvAllowList), (names -- EnvAllowList).mkString(", "))
+    assert(EnvAllowList.size <= 10)
+  }
+
+  test("src/main names no spark.graft.* conf key") {
+    val keys = for {
+      (f, t) <- sources.toSeq
+      line <- t.linesIterator if line.contains("\"spark.graft.")
+    } yield s"$f: ${line.trim}"
+    assert(keys.isEmpty, keys.mkString("\n"))
   }
 }

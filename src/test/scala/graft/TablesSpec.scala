@@ -15,6 +15,8 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
+  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
   /** Result of `body` and the Spark jobs it started. */
   private def jobsOf[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
@@ -89,22 +91,41 @@ class TablesSpec extends SparkSpec {
       .append("event_id", 1L).append("ts", nanos))
     finally w.close()
 
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val before = spark.conf.getOption(key)
+    val before = spark.conf.getOption(NanosKey)
     try {
-      // loadEventsRaw sets the conf and memoizes the long form
+      // the session conf GraftSession sets: the long form, memoized
+      spark.conf.set(NanosKey, "true")
       assert(Tables.loadEventsRaw(spark, dir).schema("ts").dataType == LongType)
       assert(Tables.readParquet(spark, path).schema("ts").dataType == LongType)
       // flipped off, the same file infers afresh — and Spark rejects
-      // the nanos column instead of getting the remembered long
-      spark.conf.set(key, "false")
+      // the nanos column instead of getting the remembered long, in a
+      // load too (which leaves the conf alone)
+      spark.conf.set(NanosKey, "false")
       val e = intercept[AnalysisException](Tables.readParquet(spark, path))
       assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
-      // load turns it back on, and the session-timestamp shape follows
+      intercept[AnalysisException](Tables.load(spark, dir, "events"))
+      // back on, the session-timestamp shape follows
+      spark.conf.set(NanosKey, "true")
       val ev = Tables.load(spark, dir, "events")
       assert(ev.schema("ts").dataType == TimestampType)
       assert(ev.select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")).as[String]
         .head() == "2024-01-10 12:30:00.123456")
-    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    } finally before.fold(spark.conf.unset(NanosKey))(spark.conf.set(NanosKey, _))
+  }
+
+  test("Tables.load and loadEventsRaw leave nanosAsLong as they found it") {
+    // a TIMESTAMP(MICROS) events table, the form every shipped
+    // scale-factor directory stores: it reads the same either way
+    val dir = Files.createTempDirectory("graft-tables-conf").toString
+    Seq((1L, java.sql.Timestamp.valueOf("2024-01-10 12:30:00"))).toDF("event_id", "ts")
+      .write.parquet(s"$dir/events.parquet")
+    val before = spark.conf.getOption(NanosKey)
+    try for (state <- Seq(None, Some("false"), Some("true"))) {
+      state.fold(spark.conf.unset(NanosKey))(spark.conf.set(NanosKey, _))
+      val found = spark.conf.getOption(NanosKey) // an unset key reads its default
+      assert(Tables.load(spark, dir, "events").count() == 1L)
+      assert(Tables.loadEventsRaw(spark, dir).count() == 1L)
+      assert(spark.conf.getOption(NanosKey) == found, s"a load changed $NanosKey from $found")
+    } finally before.fold(spark.conf.unset(NanosKey))(spark.conf.set(NanosKey, _))
   }
 }
