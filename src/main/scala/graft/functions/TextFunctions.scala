@@ -82,14 +82,6 @@ object TextFunctions {
   def stopwordHits(text: Column, words: Seq[String]): Column =
     regexp_count(text, lit(words.mkString("(?:^|\\s)(?:", "|", ")(?=\\s|$)")))
 
-  /** Ratio of stopword tokens to total tokens, rounded. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val total = wordCount(text)
-    when(total === 0, lit(0.0))
-      .otherwise(round(stopwordHits(lower(text), stopwords).cast("double")
-        / total.cast("double"), 6))
-  }
-
   /** Mean token length, rounded: total non-whitespace chars over the
     * token count — pure codegen string ops, no per-token lambda. */
   def meanWordLength(text: Column): Column = {

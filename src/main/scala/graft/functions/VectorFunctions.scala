@@ -29,9 +29,4 @@ object VectorFunctions {
   /** Cosine similarity in double; NOT rounded — callers round per
     * SURVEY §4.3 before thresholds/output. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Cosine from a precomputed dot and norms (lets pair joins reuse
-    * per-vector norms instead of recomputing O(d) per pair). */
-  def cosineFrom(dotCol: Column, normA: Column, normB: Column): Column =
-    dotCol / (normA * normB)
 }

@@ -128,13 +128,16 @@ object Pins {
 
   /** Unpersists every pin the batch body registered — called by the
     * sink AFTER `stop()`, outside the collector. Non-blocking: the
-    * blocks disappear asynchronously, the handles are dead now. */
+    * blocks disappear asynchronously, the handles are dead now. A
+    * checkpoint pin is dropped through the SparkContext, not
+    * `rdd.unpersist`, which logs a lineage-truncation WARN for every
+    * locally checkpointed RDD — seven lines per D16 arrival. */
   private[graft] def reap(pins: java.util.ArrayList[Pin],
                           log: String => Unit = _ => ()): Unit =
     pins.forEach {
       case Ckpt(rdd) =>
         log(s"end-of-batch reap: rdd ${rdd.id} (${rdd.name})")
-        rdd.unpersist(blocking = false)
+        org.apache.spark.graft.Listeners.unpersistRDD(rdd.sparkContext, rdd.id)
       case Cached(df) =>
         log("end-of-batch reap: cached demoted tables")
         df.unpersist(blocking = false)

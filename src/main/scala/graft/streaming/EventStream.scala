@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming twins of the batch operators (SURVEY D1-D2).
   *
@@ -446,15 +447,11 @@ object EventStream {
     * after.
     *
     * One code path with batch: the gate calls the same
-    * `Contamination.sharedGramsVs` the C19/C29 queries run, inside
-    * foreachBatch (the D6 pattern) — the per-doc shared-gram count
+    * `Contamination.sharedGramsVs` the C19/C29 queries run, once per
+    * micro-batch (the D6 pattern) — the per-doc shared-gram count
     * is a batch aggregation, which Append-mode streaming can't
-    * express row-locally, and foreachBatch is the documented
-    * Structured Streaming escape hatch for exactly this. Replays
-    * after recovery are absorbed because survivors land via
-    * `appendBatchWrite` — a replayed batch overwrites its own
-    * deterministic `batch=<id>` dir, O(batch) per arrival regardless
-    * of corpus size.
+    * express row-locally. Survivors land through `landFiltered`
+    * (the replay argument is there).
     *
     * Scale: the eval side is benchmark-sized → its (cached) gram set
     * broadcasts under AQE; each micro-batch's cost is O(batch grams),
@@ -462,24 +459,15 @@ object EventStream {
   def decontaminationSink(docs: DataFrame, evalGrams: DataFrame, idName: String,
                           text: Column, n: Int, maxShared: Long,
                           path: String, partCol: String, checkpoint: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val b = spread(batch)
-          val shared = graft.operators.Contamination
-            .sharedGramsVs(b, evalGrams, col(idName), text, n)
-          val survivors = b.join(
-            shared.filter(col("shared_grams") > maxShared)
-              .select(col("id").as(idName)),
-            Seq(idName), "left_anti")
-          if (!survivors.isEmpty)
-            appendBatchWrite(survivors, batchId, path, partCol)
-        }
-      }
-      .start()
+    : StreamingQuery =
+    landFiltered(docs, checkpoint, path, partCol) { b =>
+      val shared = graft.operators.Contamination
+        .sharedGramsVs(b, evalGrams, col(idName), text, n)
+      b.join(
+        shared.filter(col("shared_grams") > maxShared)
+          .select(col("id").as(idName)),
+        Seq(idName), "left_anti")
+    }
 
   /** D11: streaming train/val split router — C17's deterministic
     * md5-threshold split applied in-flight, writing a PARTITIONED
@@ -494,7 +482,7 @@ object EventStream {
     * Stateless: no watermark, no state store, nothing buffered. */
   def splitSink(docs: DataFrame, keyName: String, valFraction: Double,
                 path: String, checkpoint: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
+    : StreamingQuery =
     graft.operators.Sampling.trainValSplit(docs, col(keyName), valFraction)
       .writeStream
       .outputMode(OutputMode.Append)
@@ -514,29 +502,15 @@ object EventStream {
     * catches junk C9's structural heuristics cannot: encoding
     * garbage and wrong-language text LOOK structurally fine. The
     * verdict is a map-side kernel column, so the gate itself is a
-    * stateless filter; foreachBatch remains only for the
-    * exactly-once corpus landing — replays are absorbed by
-    * `appendBatchWrite`'s deterministic batch-dir overwrite (D9's
-    * argument). */
+    * stateless filter — no per-batch score/semi-join shuffle — and
+    * the per-batch step remains only for the exactly-once corpus
+    * landing (`landFiltered`, which holds the replay argument). */
   def perplexityGateSink(docs: DataFrame, idName: String, text: Column,
                          model: graft.operators.LangModel.Model, maxScore: Double,
                          path: String, partCol: String, checkpoint: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // the verdict is a map-side kernel column, so the gate is a
-          // plain filter — no per-batch score/semi-join shuffle
-          val survivors = spread(batch).filter(
-            graft.operators.LangModel.scoreCol(text, model)
-              .getField("lm_score") <= maxScore)
-          if (!survivors.isEmpty)
-            appendBatchWrite(survivors, batchId, path, partCol)
-        }
-      }
-      .start()
+    : StreamingQuery =
+    landFiltered(docs, checkpoint, path, partCol)(_.filter(
+      graft.operators.LangModel.scoreCol(text, model).getField("lm_score") <= maxScore))
 
   /** D13: in-flight DSIR relevance gate — the streaming twin of
     * C46's importance weighting. Each micro-batch is scored with the
@@ -548,27 +522,14 @@ object EventStream {
     * land — the ingest-time form of "only keep crawl that looks like
     * the target domain". Where D12 rejects junk ANY corpus would
     * refuse, D13 STEERS the mixture toward a chosen target
-    * distribution. Same map-side-filter + foreachBatch-for-the-write
-    * reasoning as D12; replays are absorbed by `appendBatchWrite`'s
-    * deterministic batch-dir overwrite (D9's argument). */
+    * distribution. Same map-side filter as D12, landed through
+    * `landFiltered`. */
   def dsirGateSink(docs: DataFrame, idName: String, text: Column,
                    model: graft.operators.Dsir.Model, minLogw: Double,
                    path: String, partCol: String, checkpoint: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // map-side verdict ⇒ plain filter (see perplexityGateSink)
-          val survivors = spread(batch).filter(
-            graft.operators.Dsir.scoreCol(text, model)
-              .getField("logw") >= minLogw)
-          if (!survivors.isEmpty)
-            appendBatchWrite(survivors, batchId, path, partCol)
-        }
-      }
-      .start()
+    : StreamingQuery =
+    landFiltered(docs, checkpoint, path, partCol)(_.filter(
+      graft.operators.Dsir.scoreCol(text, model).getField("logw") >= minLogw))
 
   /** D15: in-flight TRAINED-classifier gate (twin of C52) — the last
     * rung of the streaming quality ladder: D7 applies rule gates,
@@ -576,54 +537,35 @@ object EventStream {
     * one the supervised keep/drop verdict of a frozen
     * `Classifier.Model` (train offline on labeled seeds; the
     * vocab-sized log-odds table broadcasts identically at any corpus
-    * size). Docs with `logodds <= cutoff` never land. Same
-    * map-side-filter + foreachBatch-for-the-write reasoning as
-    * D12/D13: replays overwrite their own `batch=<id>` dir. */
+    * size). Docs with `logodds <= cutoff` never land. Same map-side
+    * filter as D12/D13, landed through `landFiltered`. */
   def classifierGateSink(docs: DataFrame, idName: String, text: Column,
                          model: graft.operators.Classifier.Model, cutoff: Double,
                          path: String, partCol: String, checkpoint: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // map-side verdict ⇒ plain filter (see perplexityGateSink)
-          val survivors = spread(batch).filter(
-            graft.operators.Classifier.scoreCol(text, model)
-              .getField("logodds") > cutoff)
-          if (!survivors.isEmpty)
-            appendBatchWrite(survivors, batchId, path, partCol)
-        }
-      }
-      .start()
+    : StreamingQuery =
+    landFiltered(docs, checkpoint, path, partCol)(_.filter(
+      graft.operators.Classifier.scoreCol(text, model).getField("logodds") > cutoff))
 
   /** D10: continuous near-dup ingest gate — the streaming form of
     * C34. Each micro-batch is gated through the SAME
     * `Incremental.gate` the batch operator runs (banded minhash
     * candidates + exact Jaccard, drop iff any seen doc or smaller-id
     * batch-mate matches); survivors land in the corpus as one
-    * `batch=<id>` dir (`appendBatchWrite`) and the batch's signatures
-    * are appended to a persistent store so the next arrival gates
-    * against everything ever seen.
+    * `batch=<id>` dir and the batch's signatures are appended to a
+    * persistent store so the next arrival gates against everything
+    * ever seen. The whole step is `nearDupLanding` (shared with D16;
+    * the replay argument is there): replays converge, and
+    * re-ingesting an already-seen doc id is a no-op forever —
+    * idempotent ingest.
     *
     * Store layout: `storePath/{bands,sets}/batch=<batchId>/` — one
     * immutable directory per micro-batch, written with Overwrite into
-    * the DETERMINISTIC batchId path, so a foreachBatch REPLAY
-    * overwrites its own files instead of duplicating them. Growth is
-    * append-only (no O(store) rewrite per arrival — the C34 scaling
-    * contract); reading is one parquet scan of the root.
-    *
-    * Replay is absorbed end-to-end, not just at the sink: if a batch
-    * replays AFTER its signatures were stored, every batch doc
-    * self-matches (Jaccard 1.0 with its own stored signature — the
-    * gate has no self-exclusion, deliberately), survivors are empty,
-    * and the corpus write is a no-op; if it replays BEFORE, the gate
-    * recomputes the same survivors and `appendBatchWrite` overwrites
-    * the batch's own corpus dir with identical rows.
-    * Either interleaving converges to the same corpus + store. The
-    * same self-match rule makes re-ingesting an already-seen doc id
-    * a no-op forever — idempotent ingest.
+    * the DETERMINISTIC batchId path, so a replay overwrites its own
+    * files instead of duplicating them. Growth is append-only (no
+    * O(store) rewrite per arrival — the C34 scaling contract);
+    * reading is one parquet scan of the root. The signature shape is
+    * fixed (`SigN`/`SigK`/`SigBandRows`): `nearDupStore` and D16 read
+    * the same store.
     *
     * Scale: per arrival the gate joins batch-sized signatures against
     * the store's band table (equi-join on the band key; the batch
@@ -632,54 +574,115 @@ object EventStream {
     * rescanned whole per doc — O(batch) work per arrival. */
   def nearDupGateSink(docs: DataFrame, idName: String, text: Column,
                       storePath: String, outPath: String, partCol: String,
-                      checkpoint: String, n: Int = 3, k: Int = 8,
-                      bandRows: Int = 2, threshold: Double = 0.5)
-    : org.apache.spark.sql.streaming.StreamingQuery = {
+                      checkpoint: String, threshold: Double = 0.5): StreamingQuery = {
     // session-level setup for the store probes (documented conf
     // raise, made once and visibly at sink construction — see
     // Indexed.configureSession)
     graft.sources.Indexed.configureSession(docs.sparkSession)
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) unpersistBatchPins(batch.sparkSession) {
+        nearDupLanding(spread(batch), idName, text, threshold,
+          storePath, outPath, partCol, batchId, s"d10 sink b=$batchId")
+      }
+    }
+  }
+
+  /** The signature store's shape: shingles of `SigN`, `SigK` minhashes
+    * in bands of `SigBandRows` rows. Every reader and writer of the
+    * store uses it — a store written with another shape has band keys
+    * and set hashes no gate of this shape can match. */
+  private val SigN = 3
+  private val SigK = 8
+  private val SigBandRows = 2
+
+  /** The one sink prelude: Update mode, the query's checkpoint, and
+    * `body` once per micro-batch. */
+  private def batchSink(docs: DataFrame, checkpoint: String)
+                       (body: (DataFrame, Long) => Unit): StreamingQuery =
     docs.writeStream
       .outputMode(OutputMode.Update)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) unpersistBatchPins(batch.sparkSession) {
-          val spark = batch.sparkSession
-          // GRAFT_SINK_PROFILE=1: per-section timers and job counts (dev only)
-          val prof = SinkProfile.enabled
-          def st[T](name: String)(body: => T): T =
-            SinkProfile.section(spark.sparkContext, s"d10 sink b=$batchId", name)(body)
-          val b = spread(batch)
-          val (storeBands, storeSets, pb, ps) =
-            gateStore(spark, storePath, b, idName, text, n, k, bandRows)
-          val dem0 = graft.operators.Incremental.demotions.sum()
-          val (surv, bBands, bSets) = st("gate construct") {
-            graft.operators.Incremental.gate(
-              storeBands, storeSets, b, col(idName), text, n, k, bandRows, threshold,
-              prunedBands = pb, prunedSets = ps)
-          }
-          // an oversized arrival demoting to the declarative shape is
-          // a plan change worth a metrics row, not just stderr (the
-          // collapse itself survives demotion — the store stays clean)
-          if (prof && graft.operators.Incremental.demotions.sum() > dem0)
-            SinkProfile.record("gate demoted", 1.0)
-          // materialize the survivor ID list once (batch-sized longs):
-          // without this pin the gate's verify joins re-ran for BOTH
-          // the emptiness probe and the corpus write — measured ~2 s
-          // of duplicated work per 50k-doc arrival. The pin's stored
-          // count is the emptiness test (no job)
-          val survIds = st("surv ids") { graft.operators.Pins.checkpoint(surv) }
-          val survDocs = b.join(
-            survIds.withColumnRenamed("id", idName), Seq(idName), "left_semi")
-          if (graft.operators.Pins.count(survIds) > 0)
-            st("corpus write") { appendBatchWrite(survDocs, batchId, outPath, partCol) }
-          // AFTER the survivor merge: see the replay analysis above
-          st("sig writes") {
-            writeSignatures(bBands, bSets, storePath, batchId,
-              graft.operators.Pins.count(b), k, bandRows) }
-        }
-      }
+      .foreachBatch(body)
       .start()
+
+  /** The filter-gate landing of D9, D12, D13 and D15: `survivors` maps
+    * the spread micro-batch to the docs that pass the gate, and they
+    * land via `appendBatchWrite`.
+    *
+    * The landing contract, for every corpus-writing gate here (D10
+    * and D16 land through `nearDupLanding` under the same rules):
+    *  - a batch that is empty, or whose gate keeps nothing, writes
+    *    nothing — no `batch=<id>` dir;
+    *  - survivors land in the batch's OWN `batch=<id>` dir with
+    *    Overwrite, so a micro-batch REPLAYED after recovery
+    *    overwrites its own files instead of duplicating them. Every
+    *    gate is a pure function of the batch and its frozen inputs,
+    *    so the replay lands the same rows: exactly-once EFFECTIVE,
+    *    O(batch) per arrival regardless of corpus size;
+    *  - a gate that also records state (the near-dup signature store)
+    *    writes it only AFTER the corpus (see `nearDupLanding`). */
+  private def landFiltered(docs: DataFrame, checkpoint: String, path: String,
+                           partCol: String)
+                          (survivors: DataFrame => DataFrame): StreamingQuery =
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      if (!batch.isEmpty) {
+        val kept = survivors(spread(batch))
+        if (!kept.isEmpty) appendBatchWrite(kept, batchId, path, partCol)
+      }
+    }
+
+  /** The near-dup landing step of D10 and D16: gates `gated` against
+    * the signature store at `storePath`, lands the survivors in
+    * `outPath` via `appendBatchWrite`, then appends the signatures of
+    * ALL of `gated` (not just the survivors) to the store. `label`
+    * tags the step's GRAFT_SINK_PROFILE sections.
+    *
+    * Replay — `landFiltered`'s landing contract, extended to the
+    * store. If a batch replays AFTER its signatures were stored,
+    * every batch doc self-matches (Jaccard 1.0 with its own stored
+    * signature — the gate has no self-exclusion, deliberately), the
+    * survivors are empty and nothing lands. If it replays BEFORE,
+    * the gate recomputes the same survivors and overwrites the
+    * batch's own corpus dir with identical rows. Either interleaving
+    * converges to the same corpus and store.
+    *
+    * The stored signatures are collapsed to one representative per
+    * distinct signature, plus the empty-set rows; the gate holds that
+    * on both the micro path and a demoted oversized arrival, so the
+    * store never accumulates duplicate signatures. */
+  private def nearDupLanding(gated: DataFrame, idName: String, text: Column,
+                             threshold: Double, storePath: String, outPath: String,
+                             partCol: String, batchId: Long, label: String): Unit = {
+    val spark = gated.sparkSession
+    def st[T](name: String)(body: => T): T =
+      SinkProfile.section(spark.sparkContext, label, name)(body)
+    val (storeBands, storeSets, pb, ps) = gateStore(spark, storePath, gated, idName, text)
+    val dem0 = graft.operators.Incremental.demotions.sum()
+    val (ids0, bBands, bSets) = st("gate construct") {
+      graft.operators.Incremental.gate(
+        storeBands, storeSets, gated, col(idName), text, SigN, SigK, SigBandRows, threshold,
+        prunedBands = pb, prunedSets = ps)
+    }
+    // an oversized arrival demoting to the declarative shape is a
+    // plan change worth a metrics row, not just stderr (the collapse
+    // itself survives demotion — the store stays clean)
+    if (SinkProfile.enabled && graft.operators.Incremental.demotions.sum() > dem0)
+      SinkProfile.record("gate demoted", 1.0)
+    // materialize the survivor ID list once (batch-sized longs):
+    // without this pin the gate's verify joins re-ran for BOTH the
+    // emptiness probe and the corpus write — measured ~2 s of
+    // duplicated work per 50k-doc arrival. The pin's stored count is
+    // the emptiness test (no job)
+    val ids = st("surv ids") { graft.operators.Pins.checkpoint(ids0) }
+    if (graft.operators.Pins.count(ids) > 0)
+      st("corpus write") {
+        appendBatchWrite(
+          gated.join(ids.withColumnRenamed("id", idName), Seq(idName), "left_semi"),
+          batchId, outPath, partCol)
+      }
+    st("sig writes") {
+      writeSignatures(bBands, bSets, storePath, batchId, graft.operators.Pins.count(gated))
+    }
   }
 
   private type Pruner = Option[Seq[Any] => Option[DataFrame]]
@@ -693,10 +696,9 @@ object EventStream {
     * `graft.sources.Indexed`. Every read carries the store's known
     * schema, so none of them runs a schema-inference job. */
   private def gateStore(spark: SparkSession, storePath: String, proto: DataFrame,
-                        idName: String, text: Column, n: Int, k: Int, bandRows: Int)
+                        idName: String, text: Column)
     : (DataFrame, DataFrame, Pruner, Pruner) = {
-    val (eb, es) = graft.operators.Incremental.signatures(
-      proto.limit(0), col(idName), text, n, k, bandRows)
+    val (eb, es) = emptySignatures(proto, idName, text)
     val (storeBands, storeSets) = storeTables(spark, storePath, eb, es)
     (storeBands, storeSets,
       Some(keys => graft.sources.Indexed.prunedRead(spark, s"$storePath/bands", "bk", keys,
@@ -716,23 +718,22 @@ object EventStream {
     * layout: sorted file(s) per table plus the `_graft_idx` sidecar,
     * under the deterministic `batch=<id>` dirs (replays overwrite
     * their own files — the D10 contract). `nDocs` is the gated
-    * batch's doc count and `k`/`bandRows` the gate's: together they
-    * upper-bound both tables' row counts. */
+    * batch's doc count: with the store's shape it upper-bounds both
+    * tables' row counts. */
   private def writeSignatures(bBands: DataFrame, bSets: DataFrame,
-                              storePath: String, batchId: Long,
-                              nDocs: Long, k: Int, bandRows: Int): Unit = {
+                              storePath: String, batchId: Long, nDocs: Long): Unit = {
     // writeSmall: sorted file(s) + one read-back per table (the
     // batch tables are micro-batch-sized) — the distributed sidecar
     // jobs cost ~3 s/arrival of scheduling at small batches, which
     // would dominate the gate's floor. The row bounds (a doc has one
-    // set row and at most k/bandRows band rows — no job: the caller's
-    // batch count is already known) let writeSmall go parallel for
-    // LARGE arrivals instead of serializing the write through one
-    // task; set rows carry whole shingle arrays, so their per-file
-    // row budget is much smaller than the bands'.
+    // set row and at most SigK/SigBandRows band rows — no job: the
+    // caller's batch count is already known) let writeSmall go
+    // parallel for LARGE arrivals instead of serializing the write
+    // through one task; set rows carry whole shingle arrays, so their
+    // per-file row budget is much smaller than the bands'.
     graft.sources.Indexed.writeSmall(bBands,
       s"$storePath/bands/batch=$batchId", "bk", pageRows = BandPageRows,
-      nRows = graft.operators.Incremental.bandRowBound(nDocs, k, bandRows),
+      nRows = graft.operators.Incremental.bandRowBound(nDocs, SigK, SigBandRows),
       fileRows = 65536)
     graft.sources.Indexed.writeSmall(bSets,
       s"$storePath/sets/batch=$batchId", "id", pageRows = SetPageRows,
@@ -743,28 +744,31 @@ object EventStream {
     * right schema when nothing has been ingested yet (`proto` only
     * shapes the schema; it is never scanned for that). */
   def nearDupStore(spark: SparkSession, storePath: String, proto: DataFrame,
-                   idName: String, text: Column, n: Int = 3, k: Int = 8,
-                   bandRows: Int = 2): (DataFrame, DataFrame) = {
-    val (eb, es) = graft.operators.Incremental.signatures(
-      proto.limit(0), col(idName), text, n, k, bandRows)
+                   idName: String, text: Column): (DataFrame, DataFrame) = {
+    val (eb, es) = emptySignatures(proto, idName, text)
     storeTables(spark, storePath, eb, es)
   }
 
-  /** `nearDupStore` given the store's empty signature frames `eb`/`es`
-    * (`Incremental.signatures` of an empty doc set): both roots read
-    * with those frames' schemas — a schema-less `spark.read.parquet`
-    * runs a one-task inference job per read, every arrival — or
-    * `eb`/`es` themselves for a cold store. */
+  /** The store's signature tables of no docs: they carry its schemas. */
+  private def emptySignatures(proto: DataFrame, idName: String, text: Column)
+    : (DataFrame, DataFrame) =
+    graft.operators.Incremental.signatures(
+      proto.limit(0), col(idName), text, SigN, SigK, SigBandRows)
+
+  /** `nearDupStore` given the store's empty signature frames `eb`/`es`:
+    * both roots read with those frames' schemas — a schema-less
+    * `spark.read.parquet` runs a one-task inference job per read,
+    * every arrival — or `eb`/`es` themselves for a cold store. */
   private def storeTables(spark: SparkSession, storePath: String,
                           eb: DataFrame, es: DataFrame): (DataFrame, DataFrame) = {
-    val bandsRoot = new org.apache.hadoop.fs.Path(storePath, "bands")
-    val setsRoot = new org.apache.hadoop.fs.Path(storePath, "sets")
+    val bandsRoot = new Path(storePath, "bands")
+    val setsRoot = new Path(storePath, "sets")
     val fs = bandsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // BOTH roots must exist: a crash between the bands write and the
-    // sets write in nearDupGateSink would otherwise leave a store the
-    // stream can never read again (bands present, sets missing) —
-    // a half-written batch is treated as not written at all, and the
-    // replay re-creates both dirs at the same deterministic path
+    // sets write would otherwise leave a store the stream can never
+    // read again (bands present, sets missing) — a half-written batch
+    // is treated as not written at all, and the replay re-creates
+    // both dirs at the same deterministic path
     if (fs.exists(bandsRoot) && fs.exists(setsRoot))
       (spark.read.schema(eb.schema).parquet(s"$storePath/bands"),
         spark.read.schema(es.schema).parquet(s"$storePath/sets"))
@@ -804,7 +808,7 @@ object EventStream {
   /** D16: the COMPOSED streaming ingest pipeline — the streaming twin
     * of C21's batch pipeline and the form a production crawl ingest
     * actually runs: ONE stream, ONE checkpoint, ONE corpus, with the
-    * whole gate ladder applied inside a single foreachBatch. Running
+    * whole gate ladder applied in one micro-batch step. Running
     * the five standalone gate sinks instead would read the source
     * five times, keep five checkpoints, and land five corpora that
     * then need re-joining.
@@ -818,15 +822,11 @@ object EventStream {
     * LM, classifier, and DSIR verdicts (map-side kernel columns —
     * the three gates fold into ONE filter pass), the D9 anti-join
     * against the eval grams, and the D10 near-dup gate against the
-    * persistent signature store. Survivors land via
-    * `appendBatchWrite`; signatures of ALL gated batch docs are
-    * stored AFTER the corpus write (D10's replay analysis). A
-    * replayed batch re-derives the same survivors (every stage is a
-    * pure function of batch + frozen models + store) and overwrites
-    * its own batch=<id> dir; after signatures landed, replays
-    * self-match to zero survivors — the same end-to-end
-    * exactly-once-effective argument as D10, inherited by the whole
-    * ladder.
+    * persistent signature store — D10's own step, `nearDupLanding`,
+    * whose replay argument the whole ladder inherits (every stage is
+    * a pure function of batch + frozen models + store). With
+    * `nearDup = false` the score-gated docs land directly via
+    * `appendBatchWrite`.
     *
     * Scale: every stage is O(batch) — the models broadcast, the eval
     * side is benchmark-sized, the store join is banded — and the one
@@ -846,146 +846,112 @@ object EventStream {
                          cfg: IngestPipeline, storePath: String, outPath: String,
                          partCol: String, checkpoint: String,
                          rawTextCol: Seq[String] = Nil)
-    : org.apache.spark.sql.streaming.StreamingQuery = {
+    : StreamingQuery = {
     // downstream stages score the SCRUBBED text — the pipeline
     // contract: PII never reaches a model or the corpus
     val scrubbedText = col("scrubbed")
     // session-level setup for the D10 store probes (see
     // Indexed.configureSession — visible, once, at construction)
     if (cfg.nearDup) graft.sources.Indexed.configureSession(docs.sparkSession)
-    docs.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        unpersistBatchPins(batch.sparkSession) {
-          val spark = batch.sparkSession
-          // GRAFT_SINK_PROFILE=1: per-section timers and job counts (dev only)
-          val prof = SinkProfile.enabled
-          def st[T](name: String)(body: => T): T =
-            SinkProfile.section(spark.sparkContext, s"d16 sink b=$batchId", name)(body)
-          // quality+scrub applies INSIDE the body, downstream of the
-          // spread — the whole per-row ladder parallelizes even when
-          // the source delivers the batch as one partition. The PIN
-          // after it is load-bearing: predicate pushdown would
-          // otherwise substitute the scrub-regex alias into EVERY
-          // kernel filter, re-running the scrub once per stage
-          // (measured 8.98 → 3.87 s for the 50k-doc map ladder)
-          var surv = st("quality+scrub") {
-            val gated = qualityGate(spread(batch), text, cfg.minQuality)
-            // the pipeline contract: PII never reaches a model OR the
-            // corpus — once `scrubbed` exists, the RAW text column(s)
-            // are dropped. `rawTextCol` names them explicitly (the
-            // sturdy contract, the only droppable form for a computed
-            // text expression); otherwise the plain-column inference
-            // applies. Also roughly halves the bytes this checkpoint
-            // and the landed corpus carry.
-            val raws: Seq[String] =
-              if (rawTextCol.nonEmpty) {
-                val resolved = rawTextCol.filter(_ != "scrubbed")
-                  .map(n => n -> resolveColName(n, batch))
-                resolved.collect { case (n, None) => n } match {
-                  case Seq() => ()
-                  case bad =>
-                    // `drop` on a missing name silently no-ops; a
-                    // misspelled PII column must not land quietly
-                    System.err.println("ingestPipelineSink: rawTextCol " +
-                      s"${bad.mkString(", ")} did not resolve against the " +
-                      "batch — NOT dropped; fix the name(s)")
-                }
-                resolved.collect { case (_, Some(c)) => c }
-              } else plainColName(text, batch).filter(_ != "scrubbed").toSeq
-            if (raws.isEmpty && rawTextCol.isEmpty)
-              // the contract can't be honored automatically for a
-              // computed text expression — say so instead of
-              // silently landing whatever raw columns feed it
-              System.err.println("ingestPipelineSink: text is not a plain " +
-                s"column of the input (${text.toString}) — the raw column(s) " +
-                "behind it will LAND in the corpus; pass rawTextCol (or drop " +
-                "them upstream) if they carry PII")
-            val noRaw = raws.foldLeft(gated)(_ drop _)
-            graft.operators.Pins.checkpoint(noRaw) }
-          // the batch-emptiness test is the quality pin's stored count
-          // (no job): an empty batch, or one the quality rules drop
-          // whole, has nothing to gate, land or sign
-          if (graft.operators.Pins.count(surv) > 0) {
-            // the three model verdicts are map-side kernel columns, so
-            // the whole score ladder is ONE conjunctive filter over one
-            // pass of the batch — no per-stage score/semi-join shuffles.
-            // && short-circuits left-to-right, preserving the cheap-to-
-            // expensive ladder order per row
-            cfg.lm.foreach { case (m, maxScore) =>
-              surv = surv.filter(graft.operators.LangModel
-                .scoreCol(cfg.lmText(scrubbedText), m)
-                .getField("lm_score") <= maxScore) }
-            cfg.clf.foreach { case (m, cutoff) =>
-              surv = surv.filter(graft.operators.Classifier
-                .scoreCol(cfg.clfText(scrubbedText), m)
-                .getField("logodds") > cutoff) }
-            cfg.dsir.foreach { case (m, minLogw) =>
-              surv = surv.filter(graft.operators.Dsir
-                .scoreCol(cfg.dsirText(scrubbedText), m)
-                .getField("logw") >= minLogw) }
-            cfg.decon.foreach { case (evalGrams, n, maxShared) =>
-              // both sides of the anti-join read `surv` — fine: its
-              // upstream past the quality pin is only the three cheap
-              // kernel filters (measured 0.17 s at 50k docs)
-              surv = surv.join(
-                graft.operators.Contamination
-                  .sharedGramsVs(surv, evalGrams, col(idName),
-                    cfg.deconText(scrubbedText), n)
-                  .filter(col("shared_grams") > maxShared)
-                  .select(col("id").as(idName)),
-                Seq(idName), "left_anti") }
-            // pin the survivor set once: the near-dup gate and the
-            // two writes below each run actions over it
-            val pinned = st("score ladder") { graft.operators.Pins.checkpoint(surv) }
-            if (cfg.nearDup) {
-              // the D10 gate's shingle and band parameters, named once so
-              // the store schema, the gate and the write bound agree
-              val (n, k, bandRows) = (3, 8, 2)
-              val (storeBands, storeSets, pb, ps) =
-                gateStore(spark, storePath, pinned, idName, scrubbedText, n, k, bandRows)
-              val dem0 = graft.operators.Incremental.demotions.sum()
-              val (ids0, bBands, bSets) = st("gate construct") {
-                graft.operators.Incremental.gate(
-                  storeBands, storeSets, pinned, col(idName), scrubbedText, n, k, bandRows,
-                  prunedBands = pb, prunedSets = ps) }
-              // demotion = silent plan-shape change → metrics row (the
-              // collapse survives demotion — the store stays clean)
-              if (prof && graft.operators.Incremental.demotions.sum() > dem0)
-                SinkProfile.record("gate demoted", 1.0)
-              // pin the survivor ids (batch-sized longs) so the gate's
-              // verify joins run once, not once per downstream action;
-              // the pin's stored count is the emptiness test (no job)
-              val ids = st("surv ids") { graft.operators.Pins.checkpoint(ids0) }
-              val survDocs = pinned.join(
-                ids.withColumnRenamed("id", idName), Seq(idName), "left_semi")
-              if (graft.operators.Pins.count(ids) > 0)
-                st("corpus write") { appendBatchWrite(survDocs, batchId, outPath, partCol) }
-              // signatures covering ALL score-gated docs (not just
-              // near-dup survivors; collapsed to one representative
-              // per distinct signature, plus the empty-set rows — the
-              // gate holds that invariant on BOTH the micro path and a
-              // demoted oversized arrival, so the store never
-              // accumulates duplicate signatures), AFTER the corpus
-              // write — D10's replay ordering
-              st("sig writes") {
-                writeSignatures(bBands, bSets, storePath, batchId,
-                  graft.operators.Pins.count(pinned), k, bandRows) }
-            } else if (graft.operators.Pins.count(pinned) > 0)
-              appendBatchWrite(pinned, batchId, outPath, partCol)
-          }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      unpersistBatchPins(batch.sparkSession) {
+        // GRAFT_SINK_PROFILE=1: per-section timers and job counts (dev only)
+        val label = s"d16 sink b=$batchId"
+        def st[T](name: String)(body: => T): T =
+          SinkProfile.section(batch.sparkSession.sparkContext, label, name)(body)
+        // quality+scrub applies INSIDE the body, downstream of the
+        // spread — the whole per-row ladder parallelizes even when
+        // the source delivers the batch as one partition. The PIN
+        // after it is load-bearing: predicate pushdown would
+        // otherwise substitute the scrub-regex alias into EVERY
+        // kernel filter, re-running the scrub once per stage
+        // (measured 8.98 → 3.87 s for the 50k-doc map ladder)
+        var surv = st("quality+scrub") {
+          val gated = qualityGate(spread(batch), text, cfg.minQuality)
+          // the pipeline contract: PII never reaches a model OR the
+          // corpus — once `scrubbed` exists, the RAW text column(s)
+          // are dropped. `rawTextCol` names them explicitly (the
+          // sturdy contract, the only droppable form for a computed
+          // text expression); otherwise the plain-column inference
+          // applies. Also roughly halves the bytes this checkpoint
+          // and the landed corpus carry.
+          val raws: Seq[String] =
+            if (rawTextCol.nonEmpty) {
+              val resolved = rawTextCol.filter(_ != "scrubbed")
+                .map(n => n -> resolveColName(n, batch))
+              resolved.collect { case (n, None) => n } match {
+                case Seq() => ()
+                case bad =>
+                  // `drop` on a missing name silently no-ops; a
+                  // misspelled PII column must not land quietly
+                  System.err.println("ingestPipelineSink: rawTextCol " +
+                    s"${bad.mkString(", ")} did not resolve against the " +
+                    "batch — NOT dropped; fix the name(s)")
+              }
+              resolved.collect { case (_, Some(c)) => c }
+            } else plainColName(text, batch).filter(_ != "scrubbed").toSeq
+          if (raws.isEmpty && rawTextCol.isEmpty)
+            // the contract can't be honored automatically for a
+            // computed text expression — say so instead of
+            // silently landing whatever raw columns feed it
+            System.err.println("ingestPipelineSink: text is not a plain " +
+              s"column of the input (${text.toString}) — the raw column(s) " +
+              "behind it will LAND in the corpus; pass rawTextCol (or drop " +
+              "them upstream) if they carry PII")
+          val noRaw = raws.foldLeft(gated)(_ drop _)
+          graft.operators.Pins.checkpoint(noRaw) }
+        // the batch-emptiness test is the quality pin's stored count
+        // (no job): an empty batch, or one the quality rules drop
+        // whole, has nothing to gate, land or sign
+        if (graft.operators.Pins.count(surv) > 0) {
+          // the three model verdicts are map-side kernel columns, so
+          // the whole score ladder is ONE conjunctive filter over one
+          // pass of the batch — no per-stage score/semi-join shuffles.
+          // && short-circuits left-to-right, preserving the cheap-to-
+          // expensive ladder order per row
+          cfg.lm.foreach { case (m, maxScore) =>
+            surv = surv.filter(graft.operators.LangModel
+              .scoreCol(cfg.lmText(scrubbedText), m)
+              .getField("lm_score") <= maxScore) }
+          cfg.clf.foreach { case (m, cutoff) =>
+            surv = surv.filter(graft.operators.Classifier
+              .scoreCol(cfg.clfText(scrubbedText), m)
+              .getField("logodds") > cutoff) }
+          cfg.dsir.foreach { case (m, minLogw) =>
+            surv = surv.filter(graft.operators.Dsir
+              .scoreCol(cfg.dsirText(scrubbedText), m)
+              .getField("logw") >= minLogw) }
+          cfg.decon.foreach { case (evalGrams, n, maxShared) =>
+            // both sides of the anti-join read `surv` — fine: its
+            // upstream past the quality pin is only the three cheap
+            // kernel filters (measured 0.17 s at 50k docs)
+            surv = surv.join(
+              graft.operators.Contamination
+                .sharedGramsVs(surv, evalGrams, col(idName),
+                  cfg.deconText(scrubbedText), n)
+                .filter(col("shared_grams") > maxShared)
+                .select(col("id").as(idName)),
+              Seq(idName), "left_anti") }
+          // pin the survivor set once: the near-dup gate and the
+          // two writes below each run actions over it
+          val pinned = st("score ladder") { graft.operators.Pins.checkpoint(surv) }
+          if (cfg.nearDup)
+            nearDupLanding(pinned, idName, scrubbedText, threshold = 0.5,
+              storePath, outPath, partCol, batchId, label)
+          else if (graft.operators.Pins.count(pinned) > 0)
+            appendBatchWrite(pinned, batchId, outPath, partCol)
         }
       }
-      .start()
+    }
   }
 
   /** Exactly-once APPEND write for streaming ingest corpora: each
     * micro-batch lands in its own immutable `batch=<batchId>`
     * directory (partitioned by `partCol` inside), written with
-    * Overwrite into the DETERMINISTIC batchId path, so a foreachBatch
+    * Overwrite into the DETERMINISTIC batchId path, so a micro-batch
     * REPLAY overwrites its own files instead of duplicating them —
-    * the D10 signature-store contract applied to the corpus itself.
+    * the D10 signature-store contract applied to the corpus itself
+    * (the gates' full replay argument is on `landFiltered`).
     *
     * Why not the keyed merge the gates used before: per micro-batch,
     * `Upsert.mergeWritePartitioned` re-reads and re-writes every
@@ -1033,35 +999,28 @@ object EventStream {
   def ingestCorpusCompact(spark: SparkSession, path: String, partCol: String,
                           watermark: Long, targetBytes: Long = 128L << 20): (Int, Int) = {
     require(targetBytes > 0, s"ingestCorpusCompact: targetBytes must be > 0, got $targetBytes")
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return (0, 0)
-    def listParts() = fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("batch="))
-          scala.util.Try(n.stripPrefix("batch=").toLong).toOption.map((_, st.getPath))
-        else None
-      }
     // crash convergence: a prior run that wrote its consolidated dir
     // and marker but died mid-delete leaves sources the marker names
     // — finish those deletions FIRST, so the duplicates converge
     // instead of being re-consolidated (idempotent: already-deleted
     // names no-op)
-    listParts().filter(_._1 < 0).foreach { case (_, p) =>
-      val m = new org.apache.hadoop.fs.Path(p, CompactSourcesMarker)
+    batchDirs(fs, root).filter(_._1 < 0).foreach { case (_, p) =>
+      val m = new Path(p, CompactSourcesMarker)
       if (fs.exists(m)) {
         val in = fs.open(m)
         val names =
           try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
           finally in.close()
         names.foreach { nm =>
-          val sp = new org.apache.hadoop.fs.Path(root, nm)
+          val sp = new Path(root, nm)
           if (fs.exists(sp)) fs.delete(sp, true)
         }
       }
     }
-    val parts = listParts()
+    val parts = batchDirs(fs, root)
     val closed = parts.filter(_._1 < watermark)
     if (closed.size <= 1) return (parts.size, parts.size)
     val bytes = closed.map { case (_, p) => fs.getContentSummary(p).getLength }.sum
@@ -1075,13 +1034,12 @@ object EventStream {
         .drop("batch")
         .coalesce(nFiles)
     } finally spark.conf.set(inferKey, inferPrev)
-    val outDir = new org.apache.hadoop.fs.Path(root, s"batch=$nextId")
+    val outDir = new Path(root, s"batch=$nextId")
     consolidated.write.mode(SaveMode.Overwrite).partitionBy(partCol)
       .parquet(outDir.toString)
     // completion marker BEFORE any delete: names the covered sources
     // so a crash mid-delete is finished by the next run (above)
-    val marker = fs.create(
-      new org.apache.hadoop.fs.Path(outDir, CompactSourcesMarker), true)
+    val marker = fs.create(new Path(outDir, CompactSourcesMarker), true)
     try marker.write(
       closed.map(_._2.getName).mkString("\n").getBytes("UTF-8"))
     finally marker.close()
@@ -1092,6 +1050,17 @@ object EventStream {
   /** See `ingestCorpusCompact`: the consolidated-dir completion
     * marker naming the source dirs it covers. */
   private val CompactSourcesMarker = "_SOURCES"
+
+  /** The `batch=<id>` dirs directly under `root`, with their ids —
+    * the layout both compactions consolidate (other names are
+    * skipped). */
+  private def batchDirs(fs: FileSystem, root: Path): Seq[(Long, Path)] =
+    fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith("batch="))
+        scala.util.Try(n.stripPrefix("batch=").toLong).toOption.map((_, st.getPath))
+      else None
+    }
 
   /** Signature-store compaction — the lifecycle pass the append-only
     * D10 store needs (reference parity: the weekly cleanup DAG,
@@ -1127,16 +1096,10 @@ object EventStream {
                           targetBytes: Long = 128L << 20): (Int, Int) = {
     require(targetBytes > 0, s"nearDupStoreCompact: targetBytes must be > 0, got $targetBytes")
     def one(rootStr: String, keyCol: String): (Int, Int) = {
-      val root = new org.apache.hadoop.fs.Path(rootStr)
+      val root = new Path(rootStr)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(root)) return (0, 0)
-      val parts = fs.listStatus(root).toSeq.filter(_.isDirectory)
-        .flatMap { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("batch="))
-            scala.util.Try(n.stripPrefix("batch=").toLong).toOption.map((_, st.getPath))
-          else None
-        }
+      val parts = batchDirs(fs, root)
       val closed = parts.filter(_._1 < watermark)
       if (closed.size <= 1) return (parts.size, parts.size)
       val bytes = closed.map { case (_, p) => fs.getContentSummary(p).getLength }.sum
@@ -1152,7 +1115,7 @@ object EventStream {
       // granules holding the batch's keys (graft.sources.Indexed).
       graft.sources.Indexed.write(
         spark.read.parquet(closed.map(_._2.toString): _*),
-        new org.apache.hadoop.fs.Path(root, s"batch=$nextId").toString,
+        new Path(root, s"batch=$nextId").toString,
         keyCol, nFiles,
         pageRows = if (keyCol == "id") SetPageRows else BandPageRows)
       closed.foreach { case (_, p) => fs.delete(p, true) }
@@ -1177,14 +1140,10 @@ object EventStream {
     * non-transactional stores. Returns the started query. */
   def upsertSink(stream: DataFrame, keys: Seq[String], version: Seq[String],
                  path: String, partCol: String, checkpoint: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Update)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.Upsert.mergeWritePartitioned(
-            batch, keys, version.map(col), path, partCol)
-      }
-      .start()
+    : StreamingQuery =
+    batchSink(stream, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        graft.operators.Upsert.mergeWritePartitioned(
+          batch, keys, version.map(col), path, partCol)
+    }
 }

@@ -2,35 +2,15 @@ package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
 
-/** `private[spark]` accessor (same technique as sql.graft.Bridge):
-  * the listener bus is asynchronous, so task-metric adders read
-  * immediately after an action under-report — profilers must drain
-  * the bus first to get exact totals. */
+/** `private[spark]` accessors (same technique as sql.graft.Bridge). */
 object Listeners {
+  /** The listener bus is asynchronous, so task-metric adders read
+    * immediately after an action under-report — profilers must drain
+    * the bus first to get exact totals. */
   def settle(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
-  /** Bytes on disk under the driver's BlockManager local dirs — the
-    * GROUND-TRUTH disk footprint of checkpoint/shuffle/broadcast
-    * blocks, including DEAD blocks whose RDD handles are garbage but
-    * not yet reaped by the ContextCleaner. `getRDDStorageInfo` sees
-    * only LIVE persisted RDDs, which is exactly the blind spot that
-    * let 73 GB of dead localCheckpoint files accumulate unseen
-    * (SURVEY §6 r14) — hygiene probes must measure the directory,
-    * not the registry. Files vanishing mid-walk (the cleaner racing
-    * the probe) count as zero. */
-  def blockManagerDiskBytes(sc: SparkContext): Long = {
-    val dirs = org.apache.spark.SparkEnv.get.blockManager.diskBlockManager.localDirs
-    dirs.filter(_ != null).map { d =>
-      var total = 0L
-      def walk(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach { k =>
-          if (k.isDirectory) walk(k)
-          else total += (try k.length() catch { case _: Exception => 0L })
-        }
-      }
-      walk(d)
-      total
-    }.sum
-  }
+  /** Drops RDD `id`'s blocks without blocking: `RDD.unpersist` minus
+    * its WARN for a locally checkpointed RDD, whose truncated lineage
+    * is the point of the sinks' batch pins (see `Pins.reap`). */
+  def unpersistRDD(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = false)
 }

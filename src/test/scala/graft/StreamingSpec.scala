@@ -12,6 +12,39 @@ class StreamingSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  /** The WARN-or-worse messages `org.apache.spark` loggers emit while
+    * `body` runs — captured by a log4j appender on a WARN-level
+    * logger config, so the suite's ERROR log level hides nothing. */
+  private def sparkWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    import scala.jdk.CollectionConverters._
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-spark-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val name = "org.apache.spark"
+    val prior = Option(ctx.getConfiguration.getLoggers.get(name))
+    val logger = new LoggerConfig(name, Level.WARN, false)
+    logger.addAppender(appender, Level.WARN, null)
+    ctx.getConfiguration.removeLogger(name)
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    try body
+    finally {
+      ctx.getConfiguration.removeLogger(name)
+      prior.foreach(ctx.getConfiguration.addLogger(name, _))
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.asScala.toSeq
+  }
+
   case class Raw(ts: Timestamp, event_type: String, value: Double)
 
   test("StreamBench.median: middle value for odd counts, mean of the two middles for even") {
@@ -432,6 +465,17 @@ class StreamingSpec extends SparkSpec {
       // identical to the batch rule on the same input
       val batchKeep = batchScores.filter(_._2 <= cutoff).keySet
       assert(landed == batchKeep)
+      // an arrival the gate drops whole (batch 1) writes no batch dir,
+      // and the next arrival (batch 2) still lands
+      input.addData(IngestDoc(103L, "de", "zq xv jj qq kk zz xx vv ww yy"))
+      q.processAllAvailable()
+      input.addData(IngestDoc(104L, "en", "the quick brown fox jumps over the lazy dog"))
+      q.processAllAvailable()
+      val dirs = new java.io.File(dir + "/corpus").list().filter(_.startsWith("batch=")).toSet
+      assert(dirs == Set("batch=0", "batch=2"), s"corpus batch dirs: $dirs")
+      val all = spark.read.parquet(dir + "/corpus").select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(all == Set(100L, 102L, 104L))
     } finally q.stop()
   }
 
@@ -816,16 +860,21 @@ class StreamingSpec extends SparkSpec {
       val frozen = spark.range(100).toDF("id").localCheckpoint(true)
       val beforeBody = sc.getPersistentRDDs.keySet
       var innerIds = Set.empty[Int]
-      EventStream.unpersistBatchPins(spark) {
-        val pin1 = graft.operators.Pins.checkpoint(spark.range(10).toDF("a"))
-        val pin2 = graft.operators.Pins.checkpoint(spark.range(10).toDF("b"))
-        innerIds = sc.getPersistentRDDs.keySet.diff(beforeBody).toSet
-        assert(innerIds.size >= 2, "body pins must register while the batch runs")
-        assert(pin1.count() == 10 && pin2.count() == 10)
+      val warns = sparkWarnings {
+        EventStream.unpersistBatchPins(spark) {
+          val pin1 = graft.operators.Pins.checkpoint(spark.range(10).toDF("a"))
+          val pin2 = graft.operators.Pins.checkpoint(spark.range(10).toDF("b"))
+          innerIds = sc.getPersistentRDDs.keySet.diff(beforeBody).toSet
+          assert(innerIds.size >= 2, "body pins must register while the batch runs")
+          assert(pin1.count() == 10 && pin2.count() == 10)
+        }
       }
       // batch-scoped pins are gone after the batch...
       assert(sc.getPersistentRDDs.keySet.intersect(innerIds).isEmpty,
         "batch-scoped pins must be reaped at end of batch")
+      // ...without Spark's lineage-truncation WARN per reaped pin
+      // (RDD.unpersist logs one for every localCheckpoint)
+      assert(!warns.exists(_.contains("locally checkpointed")), warns.mkString("\n"))
       // ...and the pre-existing pin is untouched and still collectable
       assert(beforeBody.subsetOf(sc.getPersistentRDDs.keySet),
         "pre-existing pins must survive the reap")

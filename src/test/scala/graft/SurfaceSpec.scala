@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins graft's runtime surface from the main sources' text: five
   * mains, one session builder, no environment reads inside the
-  * engine packages, a fixed list of environment variables and no
-  * `spark.graft.*` conf key — so a one-off probe main, a second
-  * builder or an experiment knob cannot come back unnoticed. */
+  * engine packages, a fixed list of environment variables, no
+  * `spark.graft.*` conf key and one landing path for the streaming
+  * sinks — so a one-off probe main, a second builder, an experiment
+  * knob or a copied sink body cannot come back unnoticed. */
 class SurfaceSpec extends AnyFunSuite {
 
   /** Path under src/main/scala (with '/') → source text. */
@@ -77,6 +78,16 @@ class SurfaceSpec extends AnyFunSuite {
     val names = reads.flatMap { case (_, l) => named.findAllMatchIn(l).map(_.group(1)) }.toSet
     assert(names.subsetOf(EnvAllowList), (names -- EnvAllowList).mkString(", "))
     assert(EnvAllowList.size <= 10)
+  }
+
+  test("the streaming sinks share one prelude, one gate, one store read and one signature write") {
+    val total = sources.values.map(occurrences(_, """\.foreachBatch\b""")).sum
+    assert(total == 1, s".foreachBatch occurs $total times in src/main")
+    val es = sources("graft/streaming/EventStream.scala")
+    val calls = Seq("""Incremental\.gate\(""", """(?<!def )\bgateStore\(""",
+      """(?<!def )\bwriteSignatures\(""")
+      .map(p => p -> occurrences(es, p)).toMap
+    assert(calls.values.forall(_ == 1), s"call sites in EventStream: $calls")
   }
 
   test("src/main names no spark.graft.* conf key") {
