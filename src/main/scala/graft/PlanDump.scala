@@ -6,8 +6,10 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool (round 17 optimization): dump each query's
   * `explain("formatted")` plan AND its post-execution (AQE-final)
-  * physical plan to plans/r17/<query>_<suffix>.txt — the judge-facing
-  * evidence files for plan-shape claims in OPTIMIZATION_r17.md.
+  * physical plan to <dir>/<query>_<suffix>.txt, where <dir> is
+  * SPARK_GRAFT_PLANS_DIR (default plans/r18) — the evidence files for
+  * plan-shape claims such as OPTIMIZATION_r17.md's and
+  * OPTIMIZATION_r18.md's.
   *
   * args: <suffix> [sf dir] [query names...]
   *   suffix: "before" / "after" (file name suffix)

@@ -30,7 +30,7 @@ object SparkEntry {
     * ≈ sqrt(T/K) ≈ 2 keeps the map parallelism win without
     * multiplying the constant. */
   private def tNarrow(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name, Tables.narrowFanoutParts(s))
+    Tables.load(s, dir, name, Tables.NarrowFanoutParts)
 
   /** Forced per-consumer scan fan-out at the default width (round
     * 18): the events JSON-parse family (a17/a15/a13) measured
@@ -422,14 +422,15 @@ object SparkEntry {
     * the query declares. Sketch estimates are engine-specific →
     * rows-only; WideningSpec bounds the error. */
   private def a13b(s: SparkSession, dir: String): DataFrame = {
-    // fan-out opt-out on BOTH sides: each side is one cheap scan into
+    // no fan-out on either side (`events` is not a default fan-out
+    // table; `documents` opts out): each side is one cheap scan into
     // one global aggregate, so a fanned-out scan only adds an exchange
     // and more aggregation tasks to sub-second work. Measured when the
     // aggregate was HLL++ at rsd 1 % (a ~1.4k-attribute buffer whose
     // projection was generated per task): off beat width 2 at
     // 0.82-0.87x, width 8 worse still. The one-column sketch makes
     // each extra task cheaper, but the opt-out stays as measured.
-    val m = tNoFan(s, dir, "events").agg(
+    val m = t(s, dir, "events").agg(
       count(lit(1)).as("total_messages"),
       hllDistinct(col("user_id")).as("unique_messages_approx"))
     val c = tNoFan(s, dir, "documents").agg(

@@ -55,10 +55,12 @@ case class StreamDoc(doc_id: Long, lang: String, text: String)
   * One JSON line to stdout + SPARK_GRAFT_STREAMBENCH_OUT (default
   * streambench_out.json): per gate × batch size, the per-batch
   * seconds (first measured batch can still carry residual JIT; a
-  * same-size warmup batch runs unmeasured first) and the median
-  * rows/s; with a growth argument, its per-batch seconds and max
-  * task under `d10_growth` (the key the r15 records use for both
-  * gates).
+  * same-size warmup batch runs unmeasured first), the median rows/s
+  * and `landed_rows`, the corpus rows the run landed (warmup batch
+  * included); with a growth argument, its per-batch seconds, max
+  * task and `landed_rows` under `d10_growth` (the key the r15
+  * records use for both gates). Each run's temp dir (corpus, store,
+  * checkpoint) is deleted once its rows are counted.
   */
 object StreamBench {
   /** Median of a non-empty sample: the middle value, or the mean of
@@ -182,15 +184,30 @@ object StreamBench {
       }
     }
 
+    /** Rows of the corpus a run landed under `dir` (0 when nothing
+      * landed), read after its query stopped — outside every timer. */
+    def landedRows(dir: String): Long =
+      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "corpus")))
+        spark.read.parquet(s"$dir/corpus").count()
+      else 0L
+
+    /** Deletes a run's temp dir (corpus, store, checkpoint). */
+    def deleteTree(dir: String): Unit = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+
     /** drive one (gate, batchSize) run: warmup batch 0 (unmeasured),
       * then `NBatches` measured batches. Returns (per-batch seconds,
       * per-batch addData seconds — bounding processing in
-      * [sec − add, sec], and the sinks' per-stage samples when
+      * [sec − add, sec], the sinks' per-stage samples when
       * GRAFT_SINK_PROFILE=1 — the committed-record twin of the stderr
-      * attribution lines). */
+      * attribution lines — and the landed corpus row count). */
     def run(gate: String, size: Int,
             start: (DataFrame, String) => StreamingQuery)
-      : (Seq[Double], Seq[Double], Seq[streaming.SinkProfile.Sample]) = {
+      : (Seq[Double], Seq[Double], Seq[streaming.SinkProfile.Sample], Long) = {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-sb-$gate-$size").toString
       val input = MemoryStream[StreamDoc](spark)(Encoders.product[StreamDoc])
       val q = start(input.toDF(), dir)
@@ -214,8 +231,10 @@ object StreamBench {
             f"$sec%.3f s total (addData $aSec%.3f s)")
           (sec, aSec)
         }
-        (rows.map(_._1), rows.map(_._2), streaming.SinkProfile.snapshot())
-      } finally q.stop()
+        val stages = streaming.SinkProfile.snapshot()
+        q.stop()
+        (rows.map(_._1), rows.map(_._2), stages, landedRows(dir))
+      } finally { q.stop(); deleteTree(dir) }
     }
 
     val gates: Map[String, (DataFrame, String) => StreamingQuery] = Map(
@@ -246,11 +265,11 @@ object StreamBench {
     def j(v: Double, digits: Int = 3): String =
       String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
     val results = for (gate <- selectedGates; size <- batchSizes) yield {
-      val (secs, feedSecs, stages) = run(gate, size, gates(gate))
+      val (secs, feedSecs, stages, landed) = run(gate, size, gates(gate))
       val med = median(secs)
       System.err.println(f"[streambench] $gate size=$size med=$med%.3f s " +
-        f"(${size / med}%.0f rows/s) secs=${secs.map(s => f"$s%.3f").mkString(",")}")
-      (gate, size, secs, med, feedSecs, stages)
+        f"(${size / med}%.0f rows/s) landed=$landed secs=${secs.map(s => f"$s%.3f").mkString(",")}")
+      (gate, size, secs, med, feedSecs, stages, landed)
     }
     // Store growth: per-batch seconds over a LONG run (store and
     // corpus grow by one batch dir each arrival; the claim under test
@@ -260,7 +279,7 @@ object StreamBench {
     // seconds — the evidence separating "one hot band key holds the
     // arrival" (salting territory) from "distributed candidate volume
     // grows" (dedup-the-store territory).
-    val growth: Option[(Seq[Double], Seq[Double])] = growthArg.map { _ =>
+    val growth: Option[(Seq[Double], Seq[Double], Long)] = growthArg.map { _ =>
       val dir = java.nio.file.Files.createTempDirectory("graft-sb-growth").toString
       // per-batch straggler attribution (the max-task anatomy of
       // `skewbench_*_r13.json`, trimmed): duration + shuffle
@@ -331,11 +350,12 @@ object StreamBench {
         System.err.println(f"[streambench] $growthGate growth n=$GrowthBatches size=$GrowthSize " +
           f"stormFrac=$stormFrac first10med=$head%.3f s " +
           f"last10med=$tail%.3f s ratio=${tail / head}%.2f")
-        (secs, rows.map(_._2))
-      } finally q.stop()
+        q.stop()
+        (secs, rows.map(_._2), landedRows(dir))
+      } finally { q.stop(); deleteTree(dir) }
     }
     val json = results.groupBy(_._1).toSeq.sortBy(_._1).map { case (gate, rs) =>
-      val per = rs.sortBy(_._2).map { case (_, size, secs, med, feedSecs, stages) =>
+      val per = rs.sortBy(_._2).map { case (_, size, secs, med, feedSecs, stages, landed) =>
         // per-stage aggregation (GRAFT_SINK_PROFILE=1 only): one
         // sample per measured batch per stage → median + the raw
         // samples (seconds and Spark jobs), so a cited per-stage
@@ -350,19 +370,20 @@ object StreamBench {
           }.mkString(""","stages":{""", ",", "}")
         s""""batch_$size":{"secs":[${secs.map(j(_)).mkString(",")}],""" +
           s""""feed_secs":[${feedSecs.map(j(_)).mkString(",")}],""" +
-          s""""median_sec":${j(med)},"rows_per_sec":${j(size / med, 0)}$stageJson}"""
+          s""""median_sec":${j(med)},"rows_per_sec":${j(size / med, 0)},""" +
+          s""""landed_rows":$landed$stageJson}"""
       }.mkString(",")
       s""""$gate":{$per}"""
     }.mkString(",")
     // `compact_every`, `preseed` and `source` are fixed; they stay in
     // the record so it carries every field of the r15 growth records
-    val growthJson = growth.map { case (secs, maxTaskSecs) =>
+    val growthJson = growth.map { case (secs, maxTaskSecs, landed) =>
       val head = median(secs.take(10)); val tail = median(secs.takeRight(10))
       s""","d10_growth":{"arg":"${growthArg.get}","gate":"$growthGate",""" +
         s""""n":$GrowthBatches,"size":$GrowthSize,"compact_every":0,"preseed":$GrowthPreseed,""" +
         s""""storm_frac":${j(stormFrac, 2)},"storm_tokens":$StormTokens,""" +
         s""""first10_median_sec":${j(head)},"last10_median_sec":${j(tail)},""" +
-        s""""ratio":${j(tail / head, 2)},""" +
+        s""""ratio":${j(tail / head, 2)},"landed_rows":$landed,""" +
         s""""secs":[${secs.map(j(_)).mkString(",")}],""" +
         s""""max_task_secs":[${maxTaskSecs.map(j(_)).mkString(",")}]}"""
     }.getOrElse("")

@@ -70,7 +70,7 @@ object Tables {
   private val FanoutTables = Set("documents", "embeddings")
 
   /** Fan-out width for WIDE-AGGREGATION/MULTI-ACTION consumers
-    * (`load(.., fanoutParts = narrowFanoutParts(s))`). 2, NOT
+    * (`load(.., fanoutParts = NarrowFanoutParts)`). 2, NOT
     * cores/4: those consumers pay a per-task fixed cost —
     * UnsafeProjection SOURCE generation for wide aggregate buffers
     * (Dsir/Classifier kernels, PQ/embedding result projections),
@@ -82,11 +82,7 @@ object Tables {
     * constant 8× at 32 cores and regressed the whole train+score
     * family on the driver's box (VERDICT r17: c46 3.0×, c33 2.0×,
     * c52, c51, c31, c53 — all FASTER at 8 cores than 32). */
-  private val NarrowFanoutParts = 2
-
-  /** Width for wide-aggregation/multi-action consumers — see
-    * `NarrowFanoutParts`. */
-  def narrowFanoutParts(spark: SparkSession): Int = NarrowFanoutParts
+  val NarrowFanoutParts: Int = 2
 
   /** Default fan-out width: the session's default parallelism / 4,
     * at least 2 (see `scanFanout` for why not the full core count).

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.ArrayExpressions
 
 /** Train/eval decontamination (SURVEY C19): the n-gram collision
   * check every LLM training pipeline runs before shipping a corpus —
@@ -124,9 +123,7 @@ object Contamination {
       .join(broadcast(eBands.select(col("id").as("eid"), col("bi"), col("bk"))),
         Seq("bi", "bk"))
       .select(col("tid"), col("eid")).distinct()
-    val inter = ArrayExpressions.sortedIntersectSize(col("sa"), col("sb"))
-    val jac = round(inter.cast("double") /
-      (size(col("sa")) + size(col("sb")) - inter), 6)
+    val jac = Jaccard.exactScore(col("sa"), col("sb"), size(col("sa")), size(col("sb")))
     val w = Window.partitionBy(col("id")).orderBy(col("jaccard").desc, col("eval_id"))
     cand
       .join(tSets.select(col("id").as("tid"), col("s").as("sa")), "tid")

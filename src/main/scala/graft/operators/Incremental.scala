@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.plans.ArrayExpressions
 
 /** Incremental near-dup ingest gate (SURVEY C34).
   *
@@ -287,9 +286,7 @@ object Incremental {
     // a no-op and the declarative shape is untouched.
     if (microBatch && !micro) { Pins.persist(pBands); Pins.persist(pSets) }
 
-    val inter = ArrayExpressions.sortedIntersectSize(col("sa"), col("sb"))
-    val jac = round(inter.cast("double") /
-      (size(col("sa")) + size(col("sb")) - inter), 6)
+    val jac = Jaccard.exactScore(col("sa"), col("sb"), size(col("sa")), size(col("sb")))
 
     // candidates against the store: batch id on the left, ANY store id.
     // `prunedRight`: given the candidate ids, an optional

@@ -33,9 +33,9 @@ import graft.plans.ArrayExpressions
   * 26.6 GB shuffle read against 13.3 GB written, and the 16→32-thread
   * scaling row was FLAT (§6 round-11). `nearDupPairs` therefore
   * inserts an explicit repartition ABOVE the merged aggregation once
-  * the input clears `BarrierMinInputBytes` (below it the rebuild is
-  * milliseconds and the barrier's fixed stage latency would be the
-  * larger cost): that second exchange becomes the plan's reuse
+  * the input clears `Skew.CorpusScaleMinInputBytes` (below it the
+  * rebuild is milliseconds and the barrier's fixed stage latency
+  * would be the larger cost): that second exchange becomes the plan's reuse
   * point — the merge aggregation runs ONCE to fill it, all four
   * consumers read it as ReusedExchange, and its id-partitioning
   * feeds the verify joins with no further exchange (see `barriered`
@@ -59,24 +59,16 @@ import graft.plans.ArrayExpressions
   */
 object Jaccard {
 
-  /** Plan-time input-size floor above which `nearDupPairs` inserts
-    * the build-once repartition barrier. The barrier is a pure win
-    * only once the merged set build is expensive: it costs a fixed
-    * extra stage round-trip plus set-table re-exchanges (~0.5 s of
-    * local scheduling — measured +0.55 s at sf0.1/5k docs, +0.28 s at
-    * sf1/50k docs, where the 4× rebuild it removes is milliseconds)
-    * and saves 3 of 4 merged-aggregation executions (measured −7.3 s
-    * and a restored 16→32-thread curve at sf10/500k docs, where each
-    * rebuild sorts 500k arrays). Crossover sits near ~12 MB of input
-    * on this box; 16 MB keeps every toy corpus on the inline plan
-    * while anything corpus-shaped gets the single-build barrier.
-    * Compared against `docs`' optimizedPlan stats sizeInBytes — for
-    * a file scan that is the actual file size, for derived plans a
-    * Catalyst estimate; both error directions only flip which of two
-    * CORRECT plan shapes runs. Shared with the near-dup family's
-    * other adaptive choice (hot-key salting) as
-    * Skew.CorpusScaleMinInputBytes. */
-  val BarrierMinInputBytes: Long = Skew.CorpusScaleMinInputBytes
+  /** The exact Jaccard score of two ascending distinct-element
+    * arrays `a` and `b` of sizes `sizeA` and `sizeB`, rounded to 6
+    * (SURVEY §4.3): |A ∩ B| by the native merge scan
+    * (`SortedIntersectSize`), divided in double by |A| + |B| − |A ∩ B|.
+    * The one score of the near-dup family's verify steps (MinHash,
+    * Jaccard, the incremental gate, C37's fuzzy decontamination). */
+  def exactScore(a: Column, b: Column, sizeA: Column, sizeB: Column): Column = {
+    val inter = ArrayExpressions.sortedIntersectSize(a, b)
+    round(inter.cast("double") / (sizeA + sizeB - inter), 6)
+  }
 
   /** Step 1: per-doc ASC-sorted distinct xxhash64 shingle-set table
     * (id, hs, sz) — one projection, no exchange. xxhash64 longs, not
@@ -144,29 +136,14 @@ object Jaccard {
     // prefix index: first sz − ⌈t·sz⌉ + 1 hashes of the sorted set,
     // with each hash's position for the PPJoin positional filter
     val plen = (col("sz") - ceil(lit(threshold) * col("sz")).cast("int") + 1)
-    val prefix0 = sets.select(col("id"), col("sz"),
+    val prefix = sets.select(col("id"), col("sz"),
       posexplode(slice(col("hs"), lit(1), plen)).as(Seq("pos", "h")))
-    // salting adds a third consumer of the prefix table (the hot-key
-    // count aggregate, beside the two join sides) — materialize it
-    // behind its own reuse barrier so detection doesn't re-run the
-    // explode pipeline per consumer (same xxhash64-keyed barrier
-    // trick as the set build; the (id, pos) key is just a balanced
-    // deterministic spread, downstream exchanges re-key anyway)
-    val prefix =
-      if (salts > 1) prefix0.repartition(xxhash64(col("id"), col("pos")))
-      else prefix0
-    // hot-prefix salting (salts ≥ 2): a boilerplate shingle hash that
-    // lands low in the xxhash64 order sits in EVERY template-carrying
-    // doc's prefix — one join key with f·n rows per side, (f·n)² pair
-    // emissions from one task, invisible to AQE's input-byte skew
-    // split. Skew.selfJoinSides spreads each hot key over `salts`
-    // tasks while every pair still meets exactly once (parity pinned
-    // in NearDupSpec). The positional/size filters below are
-    // per-pair-instance and commute with salting.
-    val (prefA, prefB) =
-      if (salts > 1) Skew.selfJoinSides(prefix, Seq("h"), col("id"), salts, hotMin)
-      else (prefix, prefix)
-    val saltEq = if (salts > 1) col("a.__salt") === col("b.__salt") else lit(true)
+    // hot-prefix salting (Skew.saltedSelfJoin): a boilerplate shingle
+    // hash that lands low in the xxhash64 order sits in EVERY
+    // template-carrying doc's prefix. The positional/size filters
+    // below are per-pair-instance and commute with salting.
+    val (prefA, prefB, saltEq) =
+      Skew.saltedSelfJoin(prefix, Seq("h"), col("id"), col("pos"), salts, hotMin)
     // positional filter (PPJoin): at the FIRST common hash, overlap
     // ≤ min of the remaining suffix lengths, which must reach the
     // J ≥ t overlap bound t·(|A|+|B|)/(1+t). Later common hashes may
@@ -182,7 +159,6 @@ object Jaccard {
           least(col("a.sz") - col("a.pos"), col("b.sz") - col("b.pos")) >= alpha)
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .distinct()
-    val inter = ArrayExpressions.sortedIntersectSize(col("ha"), col("hb"))
     // SHUFFLE_HASH, not sort-merge: SMJ would SORT the set table —
     // including the multi-KB hash arrays — on every verify join,
     // spill-bound at scale (measured 70× sf1's time for 10× its data
@@ -194,8 +170,7 @@ object Jaccard {
         .hint("shuffle_hash"), "doc_a")
       .join(sets.select(col("id").as("doc_b"), col("hs").as("hb"), col("sz").as("szb"))
         .hint("shuffle_hash"), "doc_b")
-      .withColumn("jaccard",
-        round(inter.cast("double") / (col("sza") + col("szb") - inter), 6))
+      .withColumn("jaccard", exactScore(col("ha"), col("hb"), col("sza"), col("szb")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
@@ -207,29 +182,20 @@ object Jaccard {
   def nearDupPairs(docs: DataFrame, id: Column, text: Column,
                    n: Int = 3, threshold: Double = 0.5,
                    salts: Int = 1, hotMin: Long = 4096): DataFrame = {
-    // The barrier is `barriered`: an id-keyed REPARTITION_BY_NUM at
-    // 2× the session's shuffle-partition count — see its scaladoc for
-    // why the count must differ from the aggregation's (elision) and
-    // for the measured rejection of the xxhash64(id)-keyed
-    // AQE-flexible alternative (66.4/27.4/17.7 s vs 42.9/22.7/16.1 at
-    // sf10 8/16/32 threads — the set-table re-exchanges it added cost
-    // more at every width than AQE's runtime freedom bought).
+    // The barrier is `barriered` (see its scaladoc for the key and
+    // count choice and the measured rejection of the AQE-flexible
+    // alternative).
     // PlanSpec pins the shape: one set-kernel scan,
     // REPARTITION_BY_NUM above it, auto-switch in both directions.
-    // `salts` ≥ 2 is the boilerplate-corpus opt-in (hot prefix keys —
-    // see nearDupPairsFromSets; detection costs a window pass that a
-    // uniform corpus shouldn't pay by default, measured §6 round-12);
-    // the build-once barrier stays plan-time-size gated.
-    val corpusScale =
-      docs.queryExecution.optimizedPlan.stats.sizeInBytes >= BarrierMinInputBytes
-    // scale-dependent set build (round 18): at corpus scale the
-    // barrier materializes ONE build, so the map-side kernel replaces
-    // the whole explode → collect_set chain behind it; below the
-    // floor there is no barrier and the declarative form's reused
-    // partial-agg exchange beats re-running the kernel per consumer
-    // (see sortedSetsDeclarative).
+    // Scale-dependent set build (round 18): at corpus scale
+    // (Skew.CorpusScaleMinInputBytes) the barrier materializes ONE
+    // build, so the map-side kernel replaces the whole explode →
+    // collect_set chain behind it; below the floor there is no
+    // barrier and the declarative form's reused partial-agg exchange
+    // beats re-running the kernel per consumer (see
+    // sortedSetsDeclarative).
     val sets =
-      if (corpusScale) barriered(sortedSets(docs, id, text, n))
+      if (Skew.corpusScale(docs)) barriered(sortedSets(docs, id, text, n))
       else sortedSetsDeclarative(docs, id, text, n)
     nearDupPairsFromSets(sets, threshold, salts, hotMin)
   }

@@ -49,13 +49,16 @@ object Packing {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val pids = totals.keys.toSeq.sorted
     val offsets = pids.zip(pids.scanLeft(0L)((acc, p) => acc + totals(p))).toMap
-    // ONE literal-map lookup, not a per-partition when-chain: the
-    // chain's expression tree grows one branch per partition, so at
-    // the 1024-4096 shuffle partitions a 100 TB run needs, analysis
-    // cost scales per partition and codegen splits or falls back.
-    // A map LITERAL is a single O(1)-depth node at any partition
-    // count (PackingSpec pins the output at 1024 partitions).
-    val offCol = coalesce(element_at(typedlit(offsets), col("pid")), lit(0L))
+    // a lookup function, not a literal: the offsets come from the
+    // RDD-id-seeded range sample, so a literal would make the plan
+    // text differ run to run; the function prints as
+    // partition_offset(pid) and carries the map to the tasks. One O(1)
+    // node at any partition count, never a per-partition when-chain
+    // whose expression tree (and analysis and codegen) grows with the
+    // 1024-4096 shuffle partitions a 100 TB run needs (PackingSpec
+    // pins the output at 1024 partitions).
+    val offCol = udf((pid: Int) => offsets.getOrElse(pid, 0L))
+      .asNonNullable().withName("partition_offset")(col("pid"))
     val w = Window.partitionBy(col("pid")).orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ranged.withColumn("prefix", offCol + sum(col("w")).over(w) - col("w"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared shingle machinery for the near-dup family (C2-C4, C11).
@@ -37,11 +36,6 @@ object Shingles {
   def exploded(df: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame =
     df.select(id.as("id"),
       explode(graft.plans.TextExpressions.wordNgrams(lower(text), n)).as("sh"))
-
-  /** Distinct-shingle set per id as an ASCENDING-SORTED array column
-    * (the near-dup verifiers merge-scan them natively). */
-  def sets(exploded: DataFrame): DataFrame =
-    exploded.groupBy(col("id")).agg(sort_array(collect_set(col("sh"))).as("s"))
 
   /** (id, sh) rows with per-document dedup done MAP-SIDE
     * (optimization round 18, guide §2.4): `array_distinct` over the

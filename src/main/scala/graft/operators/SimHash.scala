@@ -188,27 +188,14 @@ object SimHash {
     // the build side (2× the scan/shingle/aggregate work AND 2× the
     // codegen of the wide aggregate).
     //
-    // `salts` ≥ 2 is the boilerplate-corpus opt-in, wired exactly like
-    // MinHash/Jaccard (§6 round-12/13): a template-dominated corpus
-    // puts near-identical fingerprints under one hot (ci, cv) key and
-    // the self-join emits (f·n)² candidate pairs from ONE task —
-    // invisible to AQE's input-byte skew split. Skew.selfJoinSides
-    // spreads each hot key over `salts` tasks; every pair instance
-    // still meets exactly once (at a's salt), so both the
-    // first-agreeing-chunk filter (per-pair-instance, commutes with
-    // salting) and the dedup'd combination path return the identical
-    // pair set — NearDupSpec pins parity. The xxhash64(id, ci) reuse
-    // barrier keeps hot detection's window pass from re-running the
-    // fingerprint pipeline per consumer (the derived key can't be
-    // elided; downstream exchanges re-key on (ci, cv) anyway).
-    def sides(chunked0: DataFrame): (DataFrame, DataFrame) =
-      if (salts > 1) Skew.selfJoinSides(
-        chunked0.repartition(xxhash64(col("id"), col("ci"))),
-        Seq("ci", "cv"), col("id"), salts, hotMin)
-      else (chunked0, chunked0)
-    val saltEq = if (salts > 1) col("a.__salt") === col("b.__salt") else lit(true)
+    // `salts` ≥ 2 salts hot (ci, cv) keys (Skew.saltedSelfJoin): a
+    // template-dominated corpus puts near-identical fingerprints
+    // under one key. Both the first-agreeing-chunk filter
+    // (per-pair-instance) and the dedup'd combination path return the
+    // same pair set at any setting.
     def bandJoin(chunked: DataFrame, extraCond: Column): DataFrame = {
-      val (left, right) = sides(chunked)
+      val (left, right, saltEq) =
+        Skew.saltedSelfJoin(chunked, Seq("ci", "cv"), col("id"), col("ci"), salts, hotMin)
       left.as("a").hint("shuffle_hash").join(right.as("b"),
         col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") && saltEq &&
           col("a.id") < col("b.id") && extraCond)

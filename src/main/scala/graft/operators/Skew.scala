@@ -19,14 +19,26 @@ import org.apache.spark.sql.functions._
 object Skew {
 
   /** Corpus-scale floor for the near-dup family's adaptive plan
-    * choices (currently the Jaccard build-once barrier): inputs whose
+    * choices (the Jaccard/MinHash build-once barrier): inputs whose
     * plan-time stats sizeInBytes clear this get the scale-shaped
-    * plan; toy inputs skip the extra stages it costs. ~16 MB of
-    * compressed text ≈ 10⁵ docs — far below anything a 100 TB engine
-    * is sized for, far above every oracle/spec fixture. Calibration
-    * measurements live at Jaccard.BarrierMinInputBytes (same value,
-    * the original site). */
+    * plan; toy inputs skip the extra stages it costs. The barrier is
+    * a pure win only once the set build is expensive: it costs a
+    * fixed extra stage round-trip plus set-table re-exchanges (~0.5 s
+    * of local scheduling — measured +0.55 s at sf0.1/5k docs,
+    * +0.28 s at sf1/50k docs, where the 4× rebuild it removes is
+    * milliseconds) and saves 3 of 4 set-build executions (measured
+    * −7.3 s and a restored 16→32-thread curve at sf10/500k docs).
+    * Crossover sits near ~12 MB of input; 16 MB (≈ 10⁵ docs of
+    * compressed text) keeps every oracle/spec fixture on the inline
+    * plan while anything corpus-shaped gets the single-build barrier. */
   val CorpusScaleMinInputBytes: Long = 16L << 20
+
+  /** Whether `docs` clears `CorpusScaleMinInputBytes`, judged on its
+    * optimizedPlan stats — for a file scan the actual file size, for
+    * derived plans a Catalyst estimate; both error directions only
+    * flip which of two CORRECT plan shapes runs. */
+  def corpusScale(docs: DataFrame): Boolean =
+    docs.queryExecution.optimizedPlan.stats.sizeInBytes >= CorpusScaleMinInputBytes
 
   /** Inner equi-join of `probe` and `build` on `key`, salted to
     * `salts` sub-partitions. `probeUnique` is any column giving a
@@ -39,6 +51,41 @@ object Skew {
     p.join(b, Seq(key, "__salt")).drop("__salt")
   }
 
+  /** The two sides of a near-dup pair-generating self-join on
+    * `keyCols` (MinHash bands, Jaccard prefixes, SimHash chunks) and
+    * the predicate that ties their salts. The caller aliases the
+    * sides "a" and "b" and keeps its own join, condition and hints.
+    *
+    * `salts` ≤ 1, every caller's default: `table` twice and
+    * `lit(true)`, the plain self-join. `salts` ≥ 2 is the
+    * boilerplate-corpus opt-in: `selfJoinSides` spreads each key
+    * holding more than `hotMin` rows over `salts` tasks, and since
+    * every pair still meets exactly once the candidate set is the
+    * same at any setting (per-pair-instance filters in the join
+    * condition commute with it; NearDupSpec pins parity). Opt-in
+    * because detection is paid on every corpus — measured ~9% (c2) /
+    * ~22% (c4) at sf10 on a uniform corpus where it buys nothing, vs
+    * a 1.4× wall / 1.9× straggler win on the skewed twin (SURVEY §6
+    * round 12, `skewbench_sf1_*_r12.json`) — and a pipeline that runs
+    * exact/line dedup first (C1/C45) strips the worst boilerplate
+    * before a near-dup operator sees it.
+    *
+    * Salting adds a third consumer of the key table (the hot-key
+    * count, beside the two sides), so the table first goes behind a
+    * reuse barrier, a repartition on xxhash64(`unique`, `spread`):
+    * detection reads the barrier instead of re-running the upstream
+    * pipeline per consumer. The derived key cannot be elided, and the
+    * downstream exchanges re-key on (keys…, __salt) anyway, so
+    * `spread` only has to give a balanced deterministic spread. */
+  def saltedSelfJoin(table: DataFrame, keyCols: Seq[String], unique: Column,
+                     spread: Column, salts: Int,
+                     hotMin: Long): (DataFrame, DataFrame, Column) =
+    if (salts > 1) {
+      val (a, b) = selfJoinSides(table.repartition(xxhash64(unique, spread)),
+        keyCols, unique, salts, hotMin)
+      (a, b, col("a.__salt") === col("b.__salt"))
+    } else (table, table, lit(true))
+
   /** Hot-key salted sides for a pair-generating SELF-join (the
     * near-dup family's band/prefix joins, SURVEY §6 round-12).
     *
@@ -46,7 +93,8 @@ object Skew {
     * docs puts f·n rows under ONE band/prefix key, and the self-join
     * then emits (f·n)² candidate pairs FROM ONE TASK — input bytes
     * look balanced (AQE's skew split sees nothing), output work is
-    * quadratic and serial. Salting spreads it: scatter each LEFT row
+    * quadratic and serial (callers reach this through
+    * `saltedSelfJoin`). Salting spreads it: scatter each LEFT row
     * of a hot key into one of `salts` sub-keys by a hash of its
     * unique id, replicate RIGHT rows of hot keys across all `salts`
     * sub-keys, join on (key…, __salt). Every (a, b) pair still meets
@@ -56,8 +104,7 @@ object Skew {
     * cost on an unskewed corpus is one key-partitioned window
     * exchange (shared by both sides via ReusedExchange), a per-side
     * sort for the window, and the two (keys…, __salt) repartitions —
-    * measured ~9% (c2) / ~22% (c4) at sf10, which is why callers keep
-    * salting opt-in.
+    * the opt-in cost `saltedSelfJoin` cites.
     *
     * Hot detection is DECLARATIVE and SINGLE-LINEAGE: a count() over
     * a window partitioned by the key attaches each row's key

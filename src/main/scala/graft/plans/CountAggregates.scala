@@ -97,10 +97,10 @@ object CountAggregates {
         val len = bytes.length
         var i = 0
         while (i < len) {
-          while (i < len && WordNgrams.isWsByte(bytes(i))) i += 1
+          while (i < len && KernelBytes.isWs(bytes(i))) i += 1
           if (i < len) {
             val start = i
-            while (i < len && !WordNgrams.isWsByte(bytes(i))) i += 1
+            while (i < len && !KernelBytes.isWs(bytes(i))) i += 1
             val tok = UTF8String.fromBytes(
               java.util.Arrays.copyOfRange(bytes, start, i))
             val cell = buf.get(tok)

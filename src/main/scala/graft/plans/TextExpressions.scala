@@ -8,6 +8,8 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import KernelBytes.{isWs, md5Hex, md5PerThread, round6}
+
 /** Native character n-gram extraction (SURVEY E2).
   *
   * The LM quality scorer (C28) explodes every document into its
@@ -104,13 +106,6 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
 
 object WordNgrams {
 
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
-
-  /** The same boundary rule, for the word-keyed scoring kernels —
-    * their tokenization must match this split byte-for-byte. */
-  private[plans] def isWsByte(b: Byte): Boolean = isWs(b)
-
   /** One linear pass: token byte ranges, then one copy per gram.
     * Called from generated code — must stay static-shaped. */
   def slice(s: UTF8String, n: Int): ArrayData = {
@@ -204,9 +199,6 @@ object TextStats {
 
   private[plans] def lowered(stopwords: Seq[String]): Array[UTF8String] =
     stopwords.map(w => UTF8String.fromString(w).toLowerCase).toArray
-
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
 
   private def isAlnum(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
@@ -334,11 +326,6 @@ object CompiledLm {
     while (i < len) { l = (l << 8) | (b(from + i) & 0xffL); i += 1 }
     (l << 8) | len.toLong // len 1..12 keeps the low byte non-zero
   }
-
-  private def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else scala.math.BigDecimal(x)
-      .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** (n_tris, lm_score) of one document in one linear pass — the
     * fused form of explode(trigrams) → broadcast-join(model) →
@@ -476,10 +463,10 @@ object CompiledTokenWeights {
     var sum = 0L
     var i = 0
     while (i < len) {
-      while (i < len && WordNgrams.isWsByte(bytes(i))) i += 1
+      while (i < len && isWs(bytes(i))) i += 1
       if (i < len) {
         val start = i
-        while (i < len && !WordNgrams.isWsByte(bytes(i))) i += 1
+        while (i < len && !isWs(bytes(i))) i += 1
         val v = m.lookup(bytes, start, i)
         if (v != Missing) { hits += 1; sum += v }
       }
@@ -536,8 +523,6 @@ object PiiScrub {
     isAlpha(b) || isDigit(b) || b == '.' || b == '_' || b == '%' || b == '+' || b == '-'
   private def isDomain(b: Byte): Boolean = // [A-Za-z0-9.-]
     isAlpha(b) || isDigit(b) || b == '.' || b == '-'
-  private def isWs(b: Byte): Boolean = // Java \s (ASCII)
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
   private def isPh(b: Byte): Boolean = isDigit(b) || b == '-'
 
   /** Growable output buffer; one per pass, amortized O(len). */
@@ -717,11 +702,7 @@ final class CompiledBucketWeights(entries: Array[(String, Double)],
 }
 
 object CompiledBucketWeights {
-  // MessageDigest is stateful; one per thread, digest() resets it
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
+  private val md5 = md5PerThread()
 
   /** First `nibbles` hex digits of the digest as a value — exactly
     * `substring(md5(g), 1, nibbles)` parsed base-16. */
@@ -755,7 +736,7 @@ object CompiledBucketWeights {
     var n = 0
     var i = 0
     while (i < len) {
-      while (i < len && WordNgrams.isWsByte(bytes(i))) i += 1
+      while (i < len && isWs(bytes(i))) i += 1
       if (i < len) {
         if (n == cap) {
           cap *= 2
@@ -763,7 +744,7 @@ object CompiledBucketWeights {
           ends = java.util.Arrays.copyOf(ends, cap)
         }
         starts(n) = i
-        while (i < len && !WordNgrams.isWsByte(bytes(i))) i += 1
+        while (i < len && !isWs(bytes(i))) i += 1
         ends(n) = i
         n += 1
       }
@@ -805,7 +786,7 @@ object CompiledBucketWeights {
     var n = 0
     var i = 0
     while (i < len) {
-      while (i < len && WordNgrams.isWsByte(bytes(i))) i += 1
+      while (i < len && isWs(bytes(i))) i += 1
       if (i < len) {
         if (n == cap) {
           cap *= 2
@@ -813,7 +794,7 @@ object CompiledBucketWeights {
           ends = java.util.Arrays.copyOf(ends, cap)
         }
         starts(n) = i
-        while (i < len && !WordNgrams.isWsByte(bytes(i))) i += 1
+        while (i < len && !isWs(bytes(i))) i += 1
         ends(n) = i
         n += 1
       }
@@ -953,11 +934,6 @@ object RepetitionStats {
       org.apache.spark.sql.types.StructField("top_bigram_frac",
         org.apache.spark.sql.types.DoubleType, nullable = false)))
 
-  private def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else scala.math.BigDecimal(x)
-      .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private def topFrac(grams: ArrayData): Double = {
     val m = grams.numElements()
     if (m == 0) return 0.0
@@ -1057,11 +1033,7 @@ case class Md5GramSet(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object Md5GramSet {
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private val HexChars = "0123456789abcdef".getBytes("US-ASCII")
+  private val md5 = md5PerThread()
 
   /** Called from generated code. */
   def compute(s: UTF8String, n: Int): ArrayData = {
@@ -1076,16 +1048,7 @@ object Md5GramSet {
     while (g < m) {
       val sh = grams.getUTF8String(g)
       if (seenGrams.add(sh)) {
-        val d = digest.digest(sh.getBytes)
-        val hex = new Array[Byte](32)
-        var i = 0
-        while (i < 16) {
-          val b = d(i) & 0xff
-          hex(i * 2) = HexChars(b >>> 4)
-          hex(i * 2 + 1) = HexChars(b & 0xf)
-          i += 1
-        }
-        out.add(UTF8String.fromBytes(hex))
+        out.add(md5Hex(digest.digest(sh.getBytes)))
       }
       g += 1
     }
@@ -1207,11 +1170,7 @@ object SimHashSig {
       org.apache.spark.sql.types.StructField("sig",
         org.apache.spark.sql.types.LongType, nullable = false)))
 
-  // MessageDigest is stateful; one per thread, digest() resets it
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
+  private val md5 = md5PerThread()
 
   /** Called from generated code. */
   def compute(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.InternalRow = {
@@ -1335,23 +1294,7 @@ case class MinHashSig(child: Expression, n: Int, k: Int) extends UnaryExpression
 }
 
 object MinHashSig {
-  private val md5 = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private val HexChars = "0123456789abcdef".getBytes("US-ASCII")
-
-  private def toHex(d: Array[Byte]): UTF8String = {
-    val out = new Array[Byte](32)
-    var i = 0
-    while (i < 16) {
-      val b = d(i) & 0xff
-      out(i * 2) = HexChars(b >>> 4)
-      out(i * 2 + 1) = HexChars(b & 0xf)
-      i += 1
-    }
-    UTF8String.fromBytes(out)
-  }
+  private val md5 = md5PerThread()
 
   /** a < b as unsigned byte strings (equal length). */
   private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
@@ -1399,7 +1342,7 @@ object MinHashSig {
       }
       g += 1
     }
-    new GenericArrayData(mins.map(d => toHex(d): Any))
+    new GenericArrayData(mins.map(d => md5Hex(d): Any))
   }
 }
 

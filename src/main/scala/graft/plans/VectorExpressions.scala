@@ -89,14 +89,6 @@ object VectorNative {
     val dim: Int = if (mat.isEmpty) 0 else mat(0).length
   }
 
-  /** Spark's exact `round(x, 6)` for finite doubles: the SAME
-    * scala BigDecimal path RoundBase compiles to, so the kernel's
-    * numbers are bit-identical to the declarative form. */
-  private def round6(x: Double): Double =
-    if (x.isNaN || x.isInfinite) x
-    else scala.math.BigDecimal(x)
-      .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** struct(idx, cosine): the input vector's best eval match — max
     * ROUNDED cosine, first matrix row (= smallest eval id, rows are
     * id-ordered) on rounded ties. One tight loop: E dots + E divides
@@ -128,10 +120,10 @@ object VectorNative {
       if (raw > rmax) rmax = raw
       i += 1
     }
-    val cosine = round6(rmax)
+    val cosine = KernelBytes.round6(rmax)
     var idx = -1; i = 0
     while (idx < 0 && i < e) {
-      if (raws(i) >= rmax - 1.1e-6 && round6(raws(i)) == cosine) idx = i
+      if (raws(i) >= rmax - 1.1e-6 && KernelBytes.round6(raws(i)) == cosine) idx = i
       i += 1
     }
     new GenericInternalRow(Array[Any](idx, cosine))

@@ -424,19 +424,23 @@ object Multimodal {
 
   /** Append a `probed struct<format,width,height>` column from the
     * real header parse — map-side, batched like `decodeFeatures`. */
-  def probeMeta(media: DataFrame): DataFrame = {
-    val probedType = StructType(Seq(
+  def probeMeta(media: DataFrame): DataFrame =
+    withProbe(media, "probed", StructType(Seq(
       StructField("format", StringType, nullable = true),
       StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true)))
-    val outSchema = media.schema.add("probed", probedType, nullable = true)
-    val enc = RowEncoder.encoderFor(outSchema)
+      StructField("height", IntegerType, nullable = true)))) { b =>
+      probeImage(b).map { case (f, w, h) => Row(f, w, h) }
+    }
+
+  /** `media` plus a nullable struct column `name` of type `fields`:
+    * `probe` of each row's `content`, null where it returns None. */
+  private def withProbe(media: DataFrame, name: String, fields: StructType)
+                       (probe: Array[Byte] => Option[Row]): DataFrame = {
+    val enc = RowEncoder.encoderFor(media.schema.add(name, fields, nullable = true))
     val contentIdx = media.schema.fieldIndex("content")
     media.mapPartitions { rows =>
       rows.map { r =>
-        val p = probeImage(r.get(contentIdx).asInstanceOf[Array[Byte]])
-          .map { case (f, w, h) => Row(f, w, h) }.orNull
-        Row.fromSeq(r.toSeq :+ p)
+        Row.fromSeq(r.toSeq :+ probe(r.get(contentIdx).asInstanceOf[Array[Byte]]).orNull)
       }
     }(enc)
   }
@@ -497,23 +501,14 @@ object Multimodal {
   /** Append a `probed_audio struct<format,channels,sample_rate,
     * duration_ms>` column from the real header parse — map-side,
     * same contract as `probeMeta`. */
-  def probeAudioMeta(media: DataFrame): DataFrame = {
-    val probedType = StructType(Seq(
+  def probeAudioMeta(media: DataFrame): DataFrame =
+    withProbe(media, "probed_audio", StructType(Seq(
       StructField("format", StringType, nullable = true),
       StructField("channels", IntegerType, nullable = true),
       StructField("sample_rate", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true)))
-    val outSchema = media.schema.add("probed_audio", probedType, nullable = true)
-    val enc = RowEncoder.encoderFor(outSchema)
-    val contentIdx = media.schema.fieldIndex("content")
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val p = probeAudio(r.get(contentIdx).asInstanceOf[Array[Byte]])
-          .map { case (f, c, sr, d) => Row(f, c, sr, d) }.orNull
-        Row.fromSeq(r.toSeq :+ p)
-      }
-    }(enc)
-  }
+      StructField("duration_ms", LongType, nullable = true)))) { b =>
+      probeAudio(b).map { case (f, c, sr, d) => Row(f, c, sr, d) }
+    }
 
   /** One row per sampled frame for video media: (media_id, frame_idx,
     * frame_ms) every `everyMs` within meta.duration_ms — the explode
@@ -539,51 +534,16 @@ object Multimodal {
   private def fourcc(b: Array[Byte], i: Int): String =
     new String(b, i, 4, "US-ASCII")
 
-  /** REAL (codec-free) video container probe: walks the RIFF tree to
-    * the `avih` main header. Returns (format, width, height,
-    * total_frames) — format is "avi/<handler>" from the first video
-    * stream header (e.g. "avi/mjpg"). None for null/non-AVI/truncated
-    * payloads. */
-  def probeVideo(b: Array[Byte]): Option[(String, Int, Int, Int)] = {
+  /** Walks an AVI's RIFF tree in file order, calling
+    * `visit(id, payloadAt, size, inMovi)` for every chunk that is not
+    * a LIST (`inMovi`: inside the `movi` list). False, visiting
+    * nothing, for a null or non-AVI payload. Depth-capped at
+    * `RiffMaxDepth`: a nested-LIST bomb stops the descent instead of
+    * overflowing the stack; a chunk reaching past its parent ends
+    * that level. */
+  private def walkAvi(b: Array[Byte])(visit: (String, Int, Int, Boolean) => Unit): Boolean = {
     if (b == null || b.length < 24 || fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "AVI ")
-      return None
-    var avih = -1
-    var handler = ""
-    // depth-capped: legit AVIs nest LISTs 2-3 deep; a crafted payload
-    // of thousands of nested 12-byte LISTs must degrade to None, not
-    // StackOverflowError (an Error, uncatchable by the NonFatal guard)
-    def walk(from: Int, to: Int, depth: Int): Unit = {
-      if (depth > RiffMaxDepth) return
-      var i = from
-      while (i + 8 <= to) {
-        val id = fourcc(b, i)
-        val size = leInt(b, i + 4)
-        if (size < 0 || i + 8 + size > to) return
-        if (id == "LIST" && size >= 4) walk(i + 12, i + 8 + size, depth + 1)
-        else if (id == "avih") avih = i + 8
-        else if (id == "strh" && size >= 8 && fourcc(b, i + 8) == "vids" && handler.isEmpty)
-          handler = fourcc(b, i + 12).trim.toLowerCase(java.util.Locale.ROOT)
-        i += 8 + size + (size & 1)
-      }
-    }
-    try {
-      walk(12, math.min(b.length, 12 + leInt(b, 4) - 4), 0)
-      if (avih < 0 || avih + 40 > b.length) None
-      else Some((s"avi/$handler", leInt(b, avih + 32), leInt(b, avih + 36),
-        leInt(b, avih + 16)))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** REAL frame extraction: the payload bytes of every video frame
-    * chunk (`##dc`/`##db`) in the `movi` list, in stream order. For
-    * an MJPEG AVI each element is a decodable JPEG. Empty for
-    * null/non-AVI payloads. */
-  def videoFrames(b: Array[Byte]): Vector[Array[Byte]] = {
-    if (b == null || b.length < 24 || fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "AVI ")
-      return Vector.empty
-    val out = Vector.newBuilder[Array[Byte]]
-    // depth-capped like probeVideo's walk: nested-LIST bombs degrade
-    // to an empty result instead of a task-killing StackOverflowError
+      return false
     def walk(from: Int, to: Int, inMovi: Boolean, depth: Int): Unit = {
       if (depth > RiffMaxDepth) return
       var i = from
@@ -593,16 +553,46 @@ object Multimodal {
         if (size < 0 || i + 8 + size > to) return
         if (id == "LIST" && size >= 4)
           walk(i + 12, i + 8 + size, inMovi || fourcc(b, i + 8) == "movi", depth + 1)
-        else if (inMovi && id.length == 4 && id(2) == 'd' && (id(3) == 'c' || id(3) == 'b'))
-          out += java.util.Arrays.copyOfRange(b, i + 8, i + 8 + size)
+        else visit(id, i + 8, size, inMovi)
         i += 8 + size + (size & 1)
       }
     }
+    walk(12, math.min(b.length, 12 + leInt(b, 4) - 4), inMovi = false, depth = 0)
+    true
+  }
+
+  /** REAL (codec-free) video container probe: walks the RIFF tree to
+    * the `avih` main header. Returns (format, width, height,
+    * total_frames) — format is "avi/<handler>" from the first video
+    * stream header (e.g. "avi/mjpg"). None for null/non-AVI/truncated
+    * payloads. */
+  def probeVideo(b: Array[Byte]): Option[(String, Int, Int, Int)] =
     try {
-      walk(12, math.min(b.length, 12 + leInt(b, 4) - 4), inMovi = false, depth = 0)
+      var avih = -1
+      var handler = ""
+      val avi = walkAvi(b) { (id, at, size, _) =>
+        if (id == "avih") avih = at
+        else if (id == "strh" && size >= 8 && fourcc(b, at) == "vids" && handler.isEmpty)
+          handler = fourcc(b, at + 4).trim.toLowerCase(java.util.Locale.ROOT)
+      }
+      if (!avi || avih < 0 || avih + 40 > b.length) None
+      else Some((s"avi/$handler", leInt(b, avih + 32), leInt(b, avih + 36),
+        leInt(b, avih + 16)))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** REAL frame extraction: the payload bytes of every video frame
+    * chunk (`##dc`/`##db`) in the `movi` list, in stream order. For
+    * an MJPEG AVI each element is a decodable JPEG. Empty for
+    * null/non-AVI payloads. */
+  def videoFrames(b: Array[Byte]): Vector[Array[Byte]] =
+    try {
+      val out = Vector.newBuilder[Array[Byte]]
+      walkAvi(b) { (id, at, size, inMovi) =>
+        if (inMovi && id.length == 4 && id(2) == 'd' && (id(3) == 'c' || id(3) == 'b'))
+          out += java.util.Arrays.copyOfRange(b, at, at + size)
+      }
       out.result()
     } catch { case scala.util.control.NonFatal(_) => Vector.empty }
-  }
 
   /** One row per REAL decoded video frame: (media_id, frame_idx,
     * features) — `videoFrames` extraction + per-frame `imageFeatures`,

@@ -352,7 +352,7 @@ object EventStream {
     * demoted arrival costs one cache population instead of a
     * pipeline re-run per consuming action, and the cache dies with
     * its batch. */
-  private[graft] def unpersistBatchPins[T](spark: SparkSession)(body: => T): T = {
+  private[graft] def unpersistBatchPins[T](body: => T): T = {
     val pins = graft.operators.Pins.start()
     try body
     finally {
@@ -362,51 +362,25 @@ object EventStream {
     }
   }
 
-  /** The df column a bare reference names (`col("text")` prints as
-    * just "text"; `col("my col")` prints backtick-quoted; computed
-    * expressions print as their SQL — `lower(text)` — and match no
-    * column), None otherwise — used by the D16 sink to drop the raw
-    * text column once `scrubbed` exists. Resolution follows the
-    * session's `spark.sql.caseSensitive` (default false, like
-    * Spark's own analyzer: a `col("Text")` that every stage resolves
-    * against a `text` column must not silently skip the PII drop;
-    * under case-sensitive analysis only the exact name may match),
-    * and an AMBIGUOUS case-insensitive hit (two columns differing
-    * only by case) returns None — the caller's warning path — rather
-    * than guessing a column Spark's resolver might not pick. Read at
-    * sink-construction time: this is a driver-side plan decision,
-    * not an executed expression.
-    *
-    * Keying off `Column.toString` pins this to Spark's current
-    * rendering of bare references; a Spark release changing it
-    * would downgrade the drop to the logged warning (never a wrong
-    * drop — misrendered names match no column). StreamingSpec pins
-    * today's rendering; the sturdier contract — the raw-text
-    * column BY NAME — exists as `ingestPipelineSink`'s
-    * `rawTextCol` parameter, which bypasses this inference
-    * entirely (and is the only way to honor the PII-drop contract
-    * for a computed text expression). */
-  private[graft] def plainColName(c: Column, df: DataFrame): Option[String] = {
-    val s0 = c.toString
-    val s =
-      if (s0.length > 1 && s0.head == '`' && s0.last == '`')
-        s0.substring(1, s0.length - 1).replace("``", "`")
-      else s0
-    resolveColName(s, df)
-  }
-
-  /** `name` resolved against `df`'s columns under the session's
-    * `spark.sql.caseSensitive`; an ambiguous case-insensitive hit
-    * resolves to None (warn, don't guess — Spark's resolver might
-    * not pick the same one). */
-  private[graft] def resolveColName(name: String, df: DataFrame): Option[String] = {
-    val caseSensitive = df.sparkSession.conf
-      .get("spark.sql.caseSensitive", "false").toBoolean
-    if (caseSensitive) df.columns.find(_ == name)
-    else df.columns.filter(_.equalsIgnoreCase(name)) match {
-      case Array(one) => Some(one)
-      case _          => None // missing or ambiguous — warn, don't guess
-    }
+  /** The input columns of `docs` that `text` reads, as the analyzer
+    * resolves them — case rules, backticked names and computed
+    * expressions alike (`lower(col("body"))` reads `body`,
+    * `concat(title, body)` both) — less `scrubbed`, which D16's own
+    * scrub output replaces. D16 drops them once `scrubbed` exists.
+    * Refuses a `text` that reads `idName` or `partCol`: both land in
+    * the corpus, so dropping them is not an option and keeping them
+    * would land raw text. Read once, at sink construction. */
+  private def textSourceColumns(docs: DataFrame, text: Column, idName: String,
+                                partCol: String): Seq[String] = {
+    val Seq(reads, id, part) = docs.select(text, col(idName), col(partCol))
+      .queryExecution.analyzed.expressions.map(_.references)
+    val landing = reads.intersect(id ++ part)
+    require(landing.isEmpty, s"ingestPipelineSink: text ($text) reads " +
+      s"${landing.map(_.name).mkString(", ")}, which lands in the corpus as the id " +
+      "or partition column; the raw text it carries would land unscrubbed")
+    val resolver = docs.sparkSession.sessionState.conf.resolver
+    docs.queryExecution.analyzed.output.filter(reads.contains).map(_.name)
+      .filterNot(resolver(_, "scrubbed"))
   }
 
   def qualityGate(docs: DataFrame, text: Column, minScore: Double = 0.0): DataFrame =
@@ -580,7 +554,7 @@ object EventStream {
     // Indexed.configureSession)
     graft.sources.Indexed.configureSession(docs.sparkSession)
     batchSink(docs, checkpoint) { (batch, batchId) =>
-      if (!batch.isEmpty) unpersistBatchPins(batch.sparkSession) {
+      if (!batch.isEmpty) unpersistBatchPins {
         nearDupLanding(spread(batch), idName, text, threshold,
           storePath, outPath, partCol, batchId, s"d10 sink b=$batchId")
       }
@@ -833,28 +807,23 @@ object EventStream {
     * localCheckpoint pins the batch-sized survivor set so the later
     * stages' actions don't recompute the earlier joins.
     *
-    * `rawTextCol`: names the raw-text column(s) to drop once
-    * `scrubbed` exists, BYPASSING the `plainColName` inference —
-    * the sturdy form of the PII-drop contract (inference keys off
-    * Spark's rendering of bare column references and cannot see
-    * through a computed `text` expression; a caller who scores
-    * `lower(col("body"))` passes `rawTextCol = Seq("body")` and the
-    * contract holds anyway). Names that don't resolve against the
-    * batch are reported and skipped — `drop` would silently no-op,
-    * and a misspelled PII column must not land quietly. */
+    * The raw-text drop: every input column `text` reads (see
+    * `textSourceColumns`) is dropped once `scrubbed` exists, so a
+    * computed `lower(col("body"))` drops `body` with no extra
+    * argument; a `text` reading `idName` or `partCol` is refused at
+    * construction. */
   def ingestPipelineSink(docs: DataFrame, idName: String, text: Column,
                          cfg: IngestPipeline, storePath: String, outPath: String,
-                         partCol: String, checkpoint: String,
-                         rawTextCol: Seq[String] = Nil)
-    : StreamingQuery = {
+                         partCol: String, checkpoint: String): StreamingQuery = {
     // downstream stages score the SCRUBBED text — the pipeline
     // contract: PII never reaches a model or the corpus
     val scrubbedText = col("scrubbed")
+    val raws = textSourceColumns(docs, text, idName, partCol)
     // session-level setup for the D10 store probes (see
     // Indexed.configureSession — visible, once, at construction)
     if (cfg.nearDup) graft.sources.Indexed.configureSession(docs.sparkSession)
     batchSink(docs, checkpoint) { (batch, batchId) =>
-      unpersistBatchPins(batch.sparkSession) {
+      unpersistBatchPins {
         // GRAFT_SINK_PROFILE=1: per-section timers and job counts (dev only)
         val label = s"d16 sink b=$batchId"
         def st[T](name: String)(body: => T): T =
@@ -869,36 +838,10 @@ object EventStream {
         var surv = st("quality+scrub") {
           val gated = qualityGate(spread(batch), text, cfg.minQuality)
           // the pipeline contract: PII never reaches a model OR the
-          // corpus — once `scrubbed` exists, the RAW text column(s)
-          // are dropped. `rawTextCol` names them explicitly (the
-          // sturdy contract, the only droppable form for a computed
-          // text expression); otherwise the plain-column inference
-          // applies. Also roughly halves the bytes this checkpoint
-          // and the landed corpus carry.
-          val raws: Seq[String] =
-            if (rawTextCol.nonEmpty) {
-              val resolved = rawTextCol.filter(_ != "scrubbed")
-                .map(n => n -> resolveColName(n, batch))
-              resolved.collect { case (n, None) => n } match {
-                case Seq() => ()
-                case bad =>
-                  // `drop` on a missing name silently no-ops; a
-                  // misspelled PII column must not land quietly
-                  System.err.println("ingestPipelineSink: rawTextCol " +
-                    s"${bad.mkString(", ")} did not resolve against the " +
-                    "batch — NOT dropped; fix the name(s)")
-              }
-              resolved.collect { case (_, Some(c)) => c }
-            } else plainColName(text, batch).filter(_ != "scrubbed").toSeq
-          if (raws.isEmpty && rawTextCol.isEmpty)
-            // the contract can't be honored automatically for a
-            // computed text expression — say so instead of
-            // silently landing whatever raw columns feed it
-            System.err.println("ingestPipelineSink: text is not a plain " +
-              s"column of the input (${text.toString}) — the raw column(s) " +
-              "behind it will LAND in the corpus; pass rawTextCol (or drop " +
-              "them upstream) if they carry PII")
-          val noRaw = raws.foldLeft(gated)(_ drop _)
+          // corpus — once `scrubbed` exists, the raw text column(s)
+          // are dropped. Also roughly halves the bytes this
+          // checkpoint and the landed corpus carry.
+          val noRaw = gated.drop(raws: _*)
           graft.operators.Pins.checkpoint(noRaw) }
         // the batch-emptiness test is the quality pin's stored count
         // (no job): an empty batch, or one the quality rules drop

@@ -43,13 +43,21 @@ object DeclarativeRef {
     (bands, sets)
   }
 
+  /** Exact Jaccard of two distinct-element arrays, rounded to 6
+    * (SURVEY §4.3), by `array_intersect`: the plain-Spark twin of
+    * `Jaccard.exactScore`'s merge scan. int sizes divide in double. */
+  def jaccard(x: Column, y: Column): Column = {
+    val inter = size(array_intersect(x, y))
+    round(inter.cast("double") / (size(x) + size(y) - inter), 6)
+  }
+
   /** Candidate pairs (doc_a, doc_b) verified at exact Jaccard ≥ t over
     * `sets` (id, s): (doc_a, doc_b, jaccard), 6-rounded. */
   private def verified(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
     cand
       .join(sets.select(col("id").as("doc_a"), col("s").as("sa")), "doc_a")
       .join(sets.select(col("id").as("doc_b"), col("s").as("sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"), MinHash.jaccard(col("sa"), col("sb")).as("jaccard"))
+      .select(col("doc_a"), col("doc_b"), jaccard(col("sa"), col("sb")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
 
   /** `MinHash.nearDupPairs` without salting or barriers: aggregate

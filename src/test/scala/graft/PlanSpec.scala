@@ -356,7 +356,7 @@ class PlanSpec extends SparkSpec {
     // reuse point, so the build executes once and every other
     // consumer is a ReusedExchange. Forced here via the two-step
     // composition because the sf0.001 fixture sits (correctly) below
-    // the BarrierMinInputBytes auto-switch.
+    // the Skew.CorpusScaleMinInputBytes auto-switch.
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def shape() = {
@@ -389,8 +389,7 @@ class PlanSpec extends SparkSpec {
     // executed (Range stats are exact plan-time row/byte counts)
     val big = spark.range(10000000L).select(col("id").as("doc_id"),
       concat_ws(" ", lit("alpha"), col("id").cast("string"), lit("beta gamma")).as("text"))
-    assert(big.queryExecution.optimizedPlan.stats.sizeInBytes
-      >= operators.Jaccard.BarrierMinInputBytes)
+    assert(operators.Skew.corpusScale(big))
     val forced = operators.Jaccard.nearDupPairs(big, col("doc_id"), col("text"))
     assert(forced.queryExecution.executedPlan.toString.contains("REPARTITION_BY_NUM"))
   }

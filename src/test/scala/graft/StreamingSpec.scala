@@ -549,50 +549,61 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("D16 raw-column resolution matches Spark's: case-insensitive, backticks, expressions") {
-    import org.apache.spark.sql.functions.{col, lower}
-    val df = spark.createDataFrame(Seq(IngestDoc(1L, "en", "x"))).toDF("doc_id", "lang", "text")
-    // case-mismatched reference still resolves (Spark is
-    // case-insensitive, so every stage would run — the PII drop must
-    // not silently skip)
-    assert(EventStream.plainColName(col("Text"), df).contains("text"))
-    assert(EventStream.plainColName(col("text"), df).contains("text"))
-    // a computed expression names no droppable column
-    assert(EventStream.plainColName(lower(col("text")), df).isEmpty)
-    // backtick-printed names resolve too
-    val odd = df.withColumnRenamed("text", "my text")
-    assert(EventStream.plainColName(col("my text"), odd).contains("my text"))
-  }
-
-  test("D16 rawTextCol names the raw column explicitly: dropped behind a computed expression") {
-    // the sturdy PII-drop contract (r17): inference cannot see
-    // through a computed text expression, but a caller who scores
-    // lower(col("body")) passes rawTextCol = Seq("body") and the raw
-    // column still never lands; a misspelled name must NOT silently
-    // no-op the drop — the column lands and the mismatch is reported
-    import org.apache.spark.sql.functions.{col, lower}
+  test("D16 drops every input column text reads, as the analyzer resolves it") {
+    // the PII-drop contract: whatever raw columns the scored text is
+    // computed from never land — a case-mismatched or backticked
+    // reference, a computed lower(body), a concat of two columns
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.functions.{col, concat, lit, lower}
     val docs = (1L to 8L).map(i => IngestDoc(i, "en",
       s"doc number $i with enough plain words to pass the gate"))
     val cfg = EventStream.IngestPipeline(minQuality = -1e9, nearDup = false)
-    def run(raw: Seq[String]): Set[String] = {
+    def landed(shape: DataFrame => DataFrame, text: Column): (Set[String], Long) = {
       val dir = java.nio.file.Files.createTempDirectory("graft-d16raw").toString
       val input = MemoryStream[IngestDoc](spark)(Encoders.product[IngestDoc])
-      val q = EventStream.ingestPipelineSink(
-        input.toDF().withColumnRenamed("text", "body"), "doc_id",
-        lower(col("body")), cfg, dir + "/store", dir + "/corpus", "lang",
-        dir + "/ckpt", rawTextCol = raw)
+      val q = EventStream.ingestPipelineSink(shape(input.toDF()), "doc_id", text, cfg,
+        dir + "/store", dir + "/corpus", "lang", dir + "/ckpt")
       try {
         input.addData(docs: _*)
         q.processAllAvailable()
-        spark.read.parquet(dir + "/corpus").columns.toSet
+        val corpus = spark.read.parquet(dir + "/corpus")
+        (corpus.columns.toSet, corpus.count())
       } finally q.stop()
     }
-    val named = run(Seq("body"))
-    assert(named.contains("scrubbed") && !named.contains("body"),
-      s"explicitly named raw column must not land, got $named")
-    val misspelled = run(Seq("bodyy"))
-    assert(misspelled.contains("body"),
-      "an unresolved rawTextCol must leave the column landing (reported), not silently drop nothing")
+    val cases = Seq[(String, DataFrame => DataFrame, Column, Set[String])](
+      ("col(\"Text\")", identity, col("Text"), Set("text")),
+      ("a backticked name", _.withColumnRenamed("text", "my.text"), col("`my.text`"),
+        Set("my.text")),
+      ("lower(col(\"body\"))", _.withColumnRenamed("text", "body"), lower(col("body")),
+        Set("body")),
+      ("concat(title, body)",
+        _.withColumnRenamed("text", "body").withColumn("title", lit("a title")),
+        concat(col("title"), lit(" "), col("body")), Set("title", "body")))
+    for ((what, shape, text, sources) <- cases) {
+      val (cols, rows) = landed(shape, text)
+      assert(rows == docs.size, s"$what: every doc lands")
+      assert(cols.contains("scrubbed") && cols.contains("doc_id") && cols.contains("lang"),
+        s"$what: $cols")
+      assert(cols.intersect(sources).isEmpty, s"$what: raw source columns landed: $cols")
+    }
+  }
+
+  test("D16 refuses a text that reads the id or partition column") {
+    // those columns land in the corpus, so the raw text they would
+    // carry cannot be dropped — refused at sink construction
+    import org.apache.spark.sql.functions.{col, concat}
+    val cfg = EventStream.IngestPipeline(minQuality = -1e9, nearDup = false)
+    val input = MemoryStream[IngestDoc](spark)(Encoders.product[IngestDoc])
+    val dir = java.nio.file.Files.createTempDirectory("graft-d16refuse").toString
+    val active = spark.streams.active.length
+    for (text <- Seq(concat(col("lang"), col("text")), col("LANG"), col("doc_id").cast("string"))) {
+      val e = intercept[IllegalArgumentException] {
+        EventStream.ingestPipelineSink(input.toDF(), "doc_id", text, cfg,
+          dir + "/store", dir + "/corpus", "lang", dir + "/ckpt")
+      }
+      assert(e.getMessage.contains("lands in the corpus"), e.getMessage)
+    }
+    assert(spark.streams.active.length == active, "a refused sink must start no query")
   }
 
   test("D16 ingestPipelineSink: one stream applies the whole ladder; equals the batch rules composed") {
@@ -828,7 +839,7 @@ class StreamingSpec extends SparkSpec {
     sc.addSparkListener(counter)
     try {
       var pinnedRdd = -1
-      EventStream.unpersistBatchPins(spark) {
+      EventStream.unpersistBatchPins {
         val src = spark.range(0, 1000, 1, 4).toDF("id").filter("id % 7 <> 0")
         // the checkpoint itself is ONE job, as an eager checkpoint is
         val (p, ckptJobs) = jobsOf(Pins.checkpoint(src))
@@ -861,7 +872,7 @@ class StreamingSpec extends SparkSpec {
       val beforeBody = sc.getPersistentRDDs.keySet
       var innerIds = Set.empty[Int]
       val warns = sparkWarnings {
-        EventStream.unpersistBatchPins(spark) {
+        EventStream.unpersistBatchPins {
           val pin1 = graft.operators.Pins.checkpoint(spark.range(10).toDF("a"))
           val pin2 = graft.operators.Pins.checkpoint(spark.range(10).toDF("b"))
           innerIds = sc.getPersistentRDDs.keySet.diff(beforeBody).toSet
@@ -883,7 +894,7 @@ class StreamingSpec extends SparkSpec {
       // to the gc60 regime, never reaped by this batch (the documented
       // fallback for un-routed sink-path pins)
       var unrouted: org.apache.spark.sql.DataFrame = null
-      EventStream.unpersistBatchPins(spark) {
+      EventStream.unpersistBatchPins {
         unrouted = spark.range(7).toDF("c").localCheckpoint(true)
       }
       assert(unrouted.count() == 7, "un-routed pins must survive the reap")
@@ -897,7 +908,7 @@ class StreamingSpec extends SparkSpec {
       val bDone = new java.util.concurrent.CountDownLatch(1)
       val aFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]
       val tA = new Thread(() => {
-        try EventStream.unpersistBatchPins(spark) {
+        try EventStream.unpersistBatchPins {
           val p = graft.operators.Pins.checkpoint(spark.range(7).toDF("c"))
           aStarted.countDown()
           bDone.await()
@@ -908,7 +919,7 @@ class StreamingSpec extends SparkSpec {
         } catch { case t: Throwable => aFailure.set(t) }
       }, "pins-sibling-a")
       tA.start(); aStarted.await()
-      EventStream.unpersistBatchPins(spark) {
+      EventStream.unpersistBatchPins {
         assert(graft.operators.Pins.checkpoint(spark.range(5).toDF("d")).count() == 5)
       }
       bDone.countDown(); tA.join()

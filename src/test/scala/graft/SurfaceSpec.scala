@@ -9,9 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins graft's runtime surface from the main sources' text: five
   * mains, one session builder, no environment reads inside the
   * engine packages, a fixed list of environment variables, no
-  * `spark.graft.*` conf key and one landing path for the streaming
-  * sinks — so a one-off probe main, a second builder, an experiment
-  * knob or a copied sink body cannot come back unnoticed. */
+  * `spark.graft.*` conf key, one landing path for the streaming
+  * sinks and one definition each of the near-dup family's, the text
+  * kernels' and the media probes' shared steps — so a one-off probe
+  * main, a second builder, an experiment knob or a copied sink body
+  * or helper cannot come back unnoticed. */
 class SurfaceSpec extends AnyFunSuite {
 
   /** Path under src/main/scala (with '/') → source text. */
@@ -96,5 +98,21 @@ class SurfaceSpec extends AnyFunSuite {
       line <- t.linesIterator if line.contains("\"spark.graft.")
     } yield s"$f: ${line.trim}"
     assert(keys.isEmpty, keys.mkString("\n"))
+  }
+
+  test("shared steps have one definition each: salting, corpus scale, Jaccard score, kernel bytes, RIFF walk") {
+    def count(pattern: String, files: String => Boolean = _ => true): Map[String, Int] =
+      sources.collect { case (f, t) if files(f) && occurrences(t, pattern) > 0 =>
+        f -> occurrences(t, pattern) }
+    assert(count("""if \(salts > 1\)""") == Map("graft/operators/Skew.scala" -> 1))
+    assert(count("""stats\.sizeInBytes >=""") == Map("graft/operators/Skew.scala" -> 1))
+    assert(count("""sortedIntersectSize\(""", _.startsWith("graft/operators/")) ==
+      Map("graft/operators/Jaccard.scala" -> 1))
+    assert(count("""getInstance\("MD5"\)""", _.startsWith("graft/plans/")) ==
+      Map("graft/plans/KernelBytes.scala" -> 1))
+    for (d <- Seq("isWs", "round6"))
+      assert(count(s"""def $d\\b""") == Map("graft/plans/KernelBytes.scala" -> 1), d)
+    assert(occurrences(sources("graft/sources/Multimodal.scala"), """def walk\(""") == 1)
+    assert(count("""rawTextCol|plainColName|resolveColName""").isEmpty)
   }
 }
