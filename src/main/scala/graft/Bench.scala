@@ -11,7 +11,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   *    headline fields LAST so a tail-truncated capture still carries
   *    them;
   *  - the COMPLETE full-precision record to SPARK_GRAFT_BENCH_OUT
-  *    (default `bench_out.json` in the cwd = the repo), so the run's
+  *    (default `bench_out.json` in the cwd; kept runs are committed
+  *    under `records/`), so the run's
   *    record is self-contained even when the stdout scrape
   *    truncates — BENCH_r05 and r06 both lost their tails that way.
   *    Its per-query `diag` carries each rep's seconds, JIT seconds,
@@ -262,7 +263,7 @@ object Bench {
     //      (JSON object keys are unordered);
     //   3. the COMPLETE full-precision record also lands in
     //      SPARK_GRAFT_BENCH_OUT (default bench_out.json in the
-    //      repo) — the self-contained file twin of this line;
+    //      cwd) — the self-contained file twin of this line;
     //   4. the stdout line prints AFTER spark.stop(), so no shutdown
     //      logging can push it out of the capture window.
     def ms(v: Double): String =

@@ -17,42 +17,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Width-capped per-consumer scan fan-out (optimization round 18,
-    * guide §2.5 applied per CONSUMER): for queries whose downstream
-    * plan pays a large per-task fixed cost — UnsafeProjection source
-    * generation for wide aggregation buffers / wide result
-    * projections, serialized across tasks by the codegen cache lock —
-    * and/or whose builder runs several driver actions that each
-    * re-cross the fan-out exchange (train+score, Lloyd loops,
-    * PageRank). Round-17's per-table cores/4 width regressed exactly
-    * this family on the driver's box (VERDICT r17: c46 3.0×, c33
-    * 2.0×, c52/c51/c31/c53 — all inverse-scaling at 32 cores); width
-    * ≈ sqrt(T/K) ≈ 2 keeps the map parallelism win without
-    * multiplying the constant. */
-  private def tNarrow(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name, Tables.NarrowFanoutParts)
-
-  /** Forced per-consumer scan fan-out at the default width (round
-    * 18): the events JSON-parse family (a17/a15/a13) measured
-    * 0.58-0.81× under an events fan-out in round 17's A/B, but the
-    * blanket per-table rule lost on every cheap events query
-    * (1.1-1.6×) — per-consumer keeps the win for exactly the heavy
-    * parses. Scale-inert like every fan-out: past one scan split the
-    * gate never fires. */
-  private def tFan(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name, Tables.defaultFanoutParts(s))
-
-  /** Per-consumer scan fan-out OPT-OUT (round 18): consumers whose
-    * plans pay more per fanned task (projection source-gen constants,
-    * multi-action exchange re-crossings) than the parallelism buys at
-    * their trivial map cost — the r17 regression cluster. Width 0
-    * restores the exact round-16 plan shape for these queries;
-    * interleaved A/B (narrowParts 2 vs 0, /tmp record in
-    * OPTIMIZATION_r18.md) measured 0 beating even width 2 on
-    * c31/c31b/c50/a13b/c33/c52 locally. */
-  private def tNoFan(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name, 0)
-
   /** Exact decimal sum of a money expression, emitted as double. */
   private def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(s"decimal(18,$scale)")).cast("double")
@@ -213,8 +177,7 @@ object SparkEntry {
   private def a13(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     Cleanup.stats(
-      // forced events fan-out (a17's reasoning: per-row JSON parse)
-      tFan(s, dir, "events"), col("user_id"), col("props"),
+      t(s, dir, "events"), col("user_id"), col("props"),
       docs.withColumn("status", when(col("lang") === "en", "success").otherwise(col("lang"))),
       md5(col("text")), col("status"),
       get_json_object(col("props"), "$.k").cast("int"), col("doc_id"))
@@ -231,8 +194,7 @@ object SparkEntry {
 
   /** A15 JSON prop handling (db_loader.py:98 reactions JSONB). */
   private def a15(s: SparkSession, dir: String): DataFrame =
-    // forced events fan-out (a17's reasoning: per-row JSON parse)
-    tFan(s, dir, "events").select(
+    t(s, dir, "events").select(
       col("event_id"),
       get_json_object(col("props"), "$.k").cast("int").as("k_val"))
       .orderBy(col("event_id"))
@@ -422,18 +384,10 @@ object SparkEntry {
     * the query declares. Sketch estimates are engine-specific →
     * rows-only; WideningSpec bounds the error. */
   private def a13b(s: SparkSession, dir: String): DataFrame = {
-    // no fan-out on either side (`events` is not a default fan-out
-    // table; `documents` opts out): each side is one cheap scan into
-    // one global aggregate, so a fanned-out scan only adds an exchange
-    // and more aggregation tasks to sub-second work. Measured when the
-    // aggregate was HLL++ at rsd 1 % (a ~1.4k-attribute buffer whose
-    // projection was generated per task): off beat width 2 at
-    // 0.82-0.87x, width 8 worse still. The one-column sketch makes
-    // each extra task cheaper, but the opt-out stays as measured.
     val m = t(s, dir, "events").agg(
       count(lit(1)).as("total_messages"),
       hllDistinct(col("user_id")).as("unique_messages_approx"))
-    val c = tNoFan(s, dir, "documents").agg(
+    val c = t(s, dir, "documents").agg(
       count(lit(1)).as("total_content"),
       hllDistinct(md5(col("text"))).as("unique_content_approx"))
     m.crossJoin(c)
@@ -638,10 +592,7 @@ object SparkEntry {
     * contaminated doc. Threshold 0.3 sits inside the synthetic
     * corpus's cross-split cosine tail so the gate pins real rows. */
   private def c50(s: SparkSession, dir: String): DataFrame = {
-    // fan-out opt-out: the eval side is COLLECTED at builder time
-    // (one driver action) before the scoring pass — two exchange
-    // crossings for one cheap map kernel (A/B: off 0.73x vs width 2)
-    val e = tNoFan(s, dir, "embeddings")
+    val e = t(s, dir, "embeddings")
     operators.Contamination.semanticMatches(
         e.filter(col("vec_id") % 100 =!= 0), e.filter(col("vec_id") % 100 === 0),
         col("vec_id"), col("embedding"), threshold = 0.3)
@@ -659,10 +610,7 @@ object SparkEntry {
     * portability discipline — float PageRank isn't reproducible
     * across engines or partitionings). */
   private def c51(s: SparkSession, dir: String): DataFrame = {
-    // fan-out opt-out: multi-action builder (max-id head, edge
-    // checkpoint, per-iteration scalars) re-crossing the exchange for
-    // a two-column projection — the r16 plan shape is the fast one
-    val docs = tNoFan(s, dir, "documents").select(col("doc_id"), col("source"))
+    val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
     val n = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val edges = docs
       .select(((col("doc_id") * col("doc_id") + 3) % n).as("cid"), col("source").as("src"))
@@ -680,10 +628,7 @@ object SparkEntry {
     * verdict at cutoff 0. C46's portability discipline: 8-rounded
     * model terms, decimal per-doc sums. */
   private def c52(s: SparkSession, dir: String): DataFrame = {
-    // fan-out opt-out: train+score passes re-cross the exchange and
-    // the fused NbScore kernels pay per-task source-gen — A/B measured
-    // no-fan-out beating both width 8 (0.72-0.80x) and width 2 (0.86x)
-    val docs = tNoFan(s, dir, "documents")
+    val docs = t(s, dir, "documents")
     val model = operators.Classifier.train(
       docs.filter(col("doc_id") % 10 === 1), docs.filter(col("doc_id") % 10 === 2),
       col("doc_id"), col("text"))
@@ -699,12 +644,8 @@ object SparkEntry {
     * columns hash-compare portably; the library API returns the
     * array). Zero-norm docs → NULL embedding, n_toks preserved. */
   private def c53(s: SparkSession, dir: String): DataFrame = {
-    // width-capped fan-out: the 16-dim result projection (lane
-    // extraction + rounded norm divisions) is the widest generated
-    // code in the embedding family — driver r17 ran this query 2.6×
-    // faster at 8 cores (fan-out 2) than at 32 (fan-out 8)
     val emb = operators.Embeddings.project(
-      tNarrow(s, dir, "documents"), col("doc_id"), col("text"), dims = 16)
+      t(s, dir, "documents"), col("doc_id"), col("text"), dims = 16)
     emb.select(col("id").as("doc_id") +: col("n_toks") +:
         (0 until 16).map(j => element_at(col("emb"), j + 1).as(s"e$j")): _*)
       .orderBy(col("doc_id"))
@@ -791,9 +732,7 @@ object SparkEntry {
     val k = get_json_object(col("props"), "$.k").cast("int")
     val reactions = concat(lit("{\"heart\":"), (k % 3).cast("string"),
       lit(",\"like\":"), (k % 5).cast("string"), lit("}"))
-    // forced events fan-out: 3 get_json_object parses + from_json per
-    // row — the heavy-parse consumer the per-table rule couldn't serve
-    tFan(s, dir, "events")
+    t(s, dir, "events")
       .filter(k.isNotNull)
       .select(explode(from_json(reactions,
         org.apache.spark.sql.types.DataType.fromDDL("map<string,int>"))).as(Seq("emoji", "cnt")))
@@ -856,10 +795,7 @@ object SparkEntry {
   /** C6 ANN brute-force: top-10 cosine neighbors for the broadcast
     * query set (vec_id < 8). */
   private def c6(s: SparkSession, dir: String): DataFrame = {
-    // fan-out opt-out: the broadcast-query side re-runs the fanned
-    // scan for its build, and the map work is one dot per row (driver
-    // r17: 1.7× faster at 8 cores than 32)
-    val e = tNoFan(s, dir, "embeddings")
+    val e = t(s, dir, "embeddings")
     Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 8),
         col("vec_id"), col("embedding"), k = 10)
       .withColumn("rank", col("rank").cast("long"))
@@ -953,11 +889,7 @@ object SparkEntry {
     * scanned per query (rows-only; recall + all-cells≡full-ADC
     * equivalence pinned in PQSpec). */
   private def c31(s: SparkSession, dir: String): DataFrame = {
-    // fan-out opt-out: TWO Lloyd trainings = 5-6 driver actions, each
-    // re-crossing the embeddings fan-out exchange (the r17 regression
-    // the driver attributed to exactly this query pair; A/B: off
-    // beats width 2 at 0.82x, width 8 at ~0.8x)
-    val e = tNoFan(s, dir, "embeddings")
+    val e = t(s, dir, "embeddings")
     val model = operators.PQ.train(e, col("vec_id"), col("embedding"), iters = 1)
     val coarse = operators.PQ.trainCoarse(e, col("vec_id"), col("embedding"))
     operators.PQ.ivfAdcTopK(e, e.filter(col("vec_id") < 8),
@@ -992,8 +924,7 @@ object SparkEntry {
     * re-rank) becomes DuckDB-checkable; the restricted nprobe = 4
     * form stays c31, recall-pinned by PQSpec. */
   private def c31b(s: SparkSession, dir: String): DataFrame = {
-    // fan-out opt-out: c31's reasoning (two trainings per build)
-    val e = tNoFan(s, dir, "embeddings")
+    val e = t(s, dir, "embeddings")
     val model = operators.PQ.train(e, col("vec_id"), col("embedding"), iters = 1)
     val coarse = operators.PQ.trainCoarse(e, col("vec_id"), col("embedding"))
     operators.PQ.ivfAdcTopK(e, e.filter(col("vec_id") < 8),
@@ -1297,10 +1228,7 @@ object SparkEntry {
     * English slice, raw = the whole corpus, so positive logw marks
     * English-looking docs (see operators.Dsir; Xie et al. 2023). */
   private def c46(s: SparkSession, dir: String): DataFrame = {
-    // width-capped fan-out: two fused bucket-count training passes +
-    // one scoring pass, each re-crossing the exchange, each task
-    // paying the wide-kernel projection source-gen constant
-    val docs = tNarrow(s, dir, "documents")
+    val docs = t(s, dir, "documents")
     val model = operators.Dsir.train(docs.filter(col("lang") === "en"), docs,
       col("doc_id"), col("text"), prefixLen = 3)
     operators.Dsir.score(docs, col("doc_id"), col("text"), model)
@@ -1453,10 +1381,7 @@ object SparkEntry {
     * temperature sampling for over-represented strata (see
     * operators.Stratified). */
   private def c33(s: SparkSession, dir: String): DataFrame =
-    // fan-out opt-out: trivial map work (concat + md5 rank) — the
-    // cores/4 exchange bought only per-task constants (driver r17: 2×
-    // faster at 8 cores than 32; A/B prefers off to width 2)
-    operators.Stratified.sampleSqrt(tNoFan(s, dir, "documents"), col("doc_id"),
+    operators.Stratified.sampleSqrt(t(s, dir, "documents"), col("doc_id"),
         concat(col("lang"), lit("/"), col("source")), scale = 4)
       .select(col("id").as("doc_id"), col("stratum"), col("rk"))
       .orderBy(col("stratum"), col("rk"))

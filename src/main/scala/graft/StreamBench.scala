@@ -33,12 +33,12 @@ case class StreamDoc(doc_id: Long, lang: String, text: String)
   * storm of 20 % of each batch (one 60-token template) — and, given
   * alone, skips the sweep:
   *
-  *  - `d10_growth`: the D10 gate (`streambench_d10_growth_ctl_r15.json`);
+  *  - `d10_growth`: the D10 gate (`records/streambench_d10_growth_ctl_r15.json`);
   *  - `d10_growth_storm`: D10 under the storm
-  *    (`streambench_d10_growth_storm_r15.json`);
+  *    (`records/streambench_d10_growth_storm_r15.json`);
   *  - `d16_growth`: the composed D16 ladder (no r15 record);
   *  - `d16_growth_storm`: D16 under the storm
-  *    (`streambench_d16_growth_storm_r15.json`).
+  *    (`records/streambench_d16_growth_storm_r15.json`).
   *
   * Those records also swept `d10_neardup` at 500 docs with one
   * measured batch; the sweep measures 6.
@@ -282,7 +282,7 @@ object StreamBench {
     val growth: Option[(Seq[Double], Seq[Double], Long)] = growthArg.map { _ =>
       val dir = java.nio.file.Files.createTempDirectory("graft-sb-growth").toString
       // per-batch straggler attribution (the max-task anatomy of
-      // `skewbench_*_r13.json`, trimmed): duration + shuffle
+      // `records/skewbench_*_r13.json`, trimmed): duration + shuffle
       // read/records of the longest task
       case class MaxTask(ms: Long, stage: Int, shufRMb: Double, recordsR: Long)
       val mtLock = new Object

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.StructType
   * scale-factor directory. At cluster scale the same API fronts a
   * partitioned data lake: `load` is a plain parquet scan, so Catalyst
   * column pruning and predicate pushdown apply to everything built on
-  * top of it.
+  * top of it. Nothing is layered over the scan: a small single-file
+  * table reads as one task, and a query's first exchange is its own.
   *
   * Repeat loads are cheap: parquet schema inference is a Spark job
   * per read, so `readParquet` remembers each table's inferred schema
@@ -22,119 +23,9 @@ import org.apache.spark.sql.types.StructType
   * self-join like two independent reads.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** Adaptive SCAN FAN-OUT (optimization round 17, guide §2.5 "input
-    * skew: one huge unsplittable file"): the testdata tables are
-    * single-file, SINGLE-ROW-GROUP parquet, so every scan is exactly
-    * one task regardless of `maxPartitionBytes` — and each query's
-    * whole map pass (tokenize/shingle/md5/regex) serialized on one
-    * core while the other 31 idled (measured: c53's fingerprint
-    * aggregation spent 0.66 s of its 1.45 s wall in a 1-task stage,
-    * OPTIMIZATION_r17.md). A round-robin repartition right after the
-    * read moves the few (< one split's worth of) megabytes once and
-    * unlocks the cores for every downstream map stage.
-    *
-    * Scale-adaptive by construction, not a local[32] constant: the
-    * fan-out fires only when the WHOLE table is at most one scan
-    * split (`spark.sql.files.maxPartitionBytes`) — i.e. exactly when
-    * the scan provably cannot parallelize on its own. A corpus-sized
-    * table (any table past one split, 128 MB at the default) is left
-    * untouched: its scan already fans out and the repartition would
-    * be the classic "repartition for parallelism" anti-pattern the
-    * optimization guide warns about. Catalyst pushes filters and
-    * column pruning THROUGH the repartition, so PushedFilters /
-    * ReadSchema at the scan are unchanged (spec-pinned). Correctness
-    * is partitioning-independent for every declared query by the §4
-    * portability discipline (decimal-exact sums, md5-ranked orders —
-    * anything order-sensitive could never have hash-matched a
-    * different engine in the first place).
-    *
-    * Tables smaller than this floor never fan out: for a few-KB
-    * dimension table the extra exchange costs more than the
-    * parallelism buys. */
-  private val FanoutMinBytes = 128L << 10
-
-  /** The tables a DEFAULT (`fanoutParts = -1`) consumer fans out: the
-    * two corpus tables whose EVERY consumer runs the engine's heavy
-    * per-byte map kernels (tokenize/shingle/md5 over `documents`,
-    * vector math over `embeddings`) — measured interleaved A/B:
-    * fan-out wins 0.85x total over the text/vector family but LOSES
-    * 1.45x over the cheap-scan relational family (lineitem/orders/
-    * events TPC-H aggregations, where the extra exchange outweighs
-    * the map parallelism it buys). A consumer that forces its own
-    * width (`fanoutParts` = n > 0, the `tFan`/`tNarrow` loaders in
-    * SparkEntry) fans out whether or not its table is listed. */
-  private val FanoutTables = Set("documents", "embeddings")
-
-  /** Fan-out width for WIDE-AGGREGATION/MULTI-ACTION consumers
-    * (`load(.., fanoutParts = NarrowFanoutParts)`). 2, NOT
-    * cores/4: those consumers pay a per-task fixed cost —
-    * UnsafeProjection SOURCE generation for wide aggregate buffers
-    * (Dsir/Classifier kernels, PQ/embedding result projections),
-    * measured at ~300-600 ms per task and SERIALIZED across tasks by
-    * the codegen cache lock (OPTIMIZATION_r17.md "Per-task fixed
-    * costs") — so with work T and per-task constant K the useful
-    * width is ~sqrt(T/K) ≈ 2 at sub-second T, independent of the
-    * core count. Round-17's per-table cores/4 width multiplied that
-    * constant 8× at 32 cores and regressed the whole train+score
-    * family on the driver's box (VERDICT r17: c46 3.0×, c33 2.0×,
-    * c52, c51, c31, c53 — all FASTER at 8 cores than 32). */
-  val NarrowFanoutParts: Int = 2
-
-  /** Default fan-out width: the session's default parallelism / 4,
-    * at least 2 (see `scanFanout` for why not the full core count).
-    * Also the width of a FORCED per-consumer fan-out of a table
-    * outside `FanoutTables` (the events JSON-parse family: round-17
-    * A/B measured a17/a15 at 0.58× and a13 at 0.81× under an events
-    * fan-out that lost on every cheap events query — per-consumer is
-    * the shape that keeps the win without the blanket loss). */
-  def defaultFanoutParts(spark: SparkSession): Int =
-    math.max(2, spark.sparkContext.defaultParallelism / 4)
-
-  private def scanFanout(spark: SparkSession, df: DataFrame, name: String,
-                         fanoutParts: Int): DataFrame = {
-    // per-consumer width (round 18): -1 = the per-table default;
-    // 0 = this consumer opts OUT (its plan pays more per task than the
-    // parallelism buys); n > 0 = this consumer fans out to exactly n,
-    // whether or not the table is in the default list. The size gates
-    // below apply to every arm, so the fan-out stays scale-inert: a
-    // table past one scan split never fans out for anyone.
-    if (fanoutParts == 0) return df
-    if (fanoutParts < 0 && !FanoutTables(name)) return df
-    // cores/4, not cores: each fanned-out task pays a fixed setup cost
-    // (per-task UnsafeProjection source generation, object-agg buffer
-    // init — ~10-600 ms depending on plan width, measured via thread
-    // dumps in OPTIMIZATION_r17.md), so past the point where the map
-    // pass is spread "enough", more tasks just multiply that constant:
-    // an interleaved A/B over 22 queries measured 8 partitions beating
-    // 32 at ratio 0.889 (sf0.1, local[32]), with only the two
-    // biggest-input tables (lineitem, events) marginally preferring 32
-    val n = if (fanoutParts > 0) fanoutParts else defaultFanoutParts(spark)
-    if (n <= 1) return df
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val maxSplit = BigInt(spark.sessionState.conf.filesMaxPartitionBytes)
-    if (bytes < BigInt(FanoutMinBytes) || bytes > maxSplit) return df
-    // size said "at most one split's worth" — but a MULTI-FILE table
-    // of the same bytes already scans in parallel (Spark packs small
-    // files into openCostInBytes-weighted splits, so >= n files means
-    // >= n-ish tasks): only a low-file-count scan needs help. The
-    // file count comes off the read's own FileIndex (already listed —
-    // a df.rdd.getNumPartitions peek would be exact but re-plans the
-    // scan per load call, measured +0.15-0.3 s per query).
-    if (df.inputFiles.length < n) df.repartition(n) else df
-  }
-
-  /** Load a registry table. `fanoutParts` is the PER-CONSUMER scan
-    * fan-out width (round 18): -1 (default) = the per-table default
-    * (`FanoutTables`), 0 = no fan-out for this consumer, n > 0 = fan
-    * out to exactly n partitions (even for a table outside the
-    * default list). See scanFanout — the ≤-one-split size gate
-    * applies to every setting, so all of this is inert at corpus
-    * scale. The read itself goes through `readParquet`, so a repeat
-    * load of an unchanged table runs no schema-inference job.
+  /** Load a registry table: a plain parquet scan through
+    * `readParquet`, so a repeat load of an unchanged table runs no
+    * schema-inference job.
     *
     * events.ts has shipped in TWO physical forms across testdata
     * generations: parquet TIMESTAMP(NANOS), which Spark reads only as
@@ -144,9 +35,8 @@ object Tables {
     * stores, so the engine's `ts` is always a session TimestampType —
     * E16's schema-drift tolerance applied to the registry's own
     * tables. Loading writes no session conf. */
-  def load(spark: SparkSession, dir: String, name: String,
-           fanoutParts: Int = -1): DataFrame = {
-    val df = scanFanout(spark, readParquet(spark, s"$dir/$name.parquet"), name, fanoutParts)
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") eventsFromRaw(df) else df
   }
 
@@ -155,11 +45,9 @@ object Tables {
     * pushdown-sensitive event-time filters: a predicate built in the
     * stored type reaches the parquet scan (and prunes row groups /
     * partitions), which a predicate on a CONVERTED column never does
-    * (it's a computed column to Catalyst). The scan fan-out sits
-    * ABOVE the scan, so stored-domain pushdown is unaffected. */
-  def loadEventsRaw(spark: SparkSession, dir: String,
-                    fanoutParts: Int = -1): DataFrame =
-    scanFanout(spark, readParquet(spark, s"$dir/events.parquet"), "events", fanoutParts)
+    * (it's a computed column to Catalyst). */
+  def loadEventsRaw(spark: SparkSession, dir: String): DataFrame =
+    readParquet(spark, s"$dir/events.parquet")
 
   /** The session confs that shape parquet schema inference in Spark
     * 4.1: the five flags `ParquetToSparkSchemaConverter` is built from
@@ -271,10 +159,6 @@ object Tables {
     val withSchema = schema.fold(if (format == "csv") r.option("inferSchema", "true") else r)(r.schema)
     (if (format == "csv") withSchema.option("header", "true") else withSchema).load(path)
   }
-
-  /** Register every table as a temp view (for spark.sql users). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   /** Schema-drift-tolerant union load (SURVEY E16): one DataFrame
     * over CORPUS GENERATIONS whose schemas drifted — later crawls add

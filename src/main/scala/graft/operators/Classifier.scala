@@ -40,14 +40,14 @@ object Classifier {
     * `compiled` is the collected scoring-kernel form — vocab-sized
     * driver traffic, the same budget the broadcast join paid; lazy +
     * transient so the frozen-model streaming gate (D15) builds it
-    * once per model. `priorFixed` is the prior as an exact scale-8
+    * once per model. It carries the prior as an exact scale-8
     * fixed-point long (the kernel sums fixed-point). */
   final case class Model(table: DataFrame, prior: Double) {
     @transient lazy val compiled: graft.plans.CompiledTokenWeights =
       new graft.plans.CompiledTokenWeights(
         table.select(col("tok"), col("w")).collect()
-          .map(r => (r.getString(0), r.getDouble(1))))
-    def priorFixed: Long = graft.plans.CompiledLm.toFixed(prior)
+          .map(r => (r.getString(0), r.getDouble(1))),
+        graft.plans.CompiledLm.toFixed(prior))
   }
 
   /** Train on labeled seeds: per joint-vocabulary token,
@@ -108,8 +108,7 @@ object Classifier {
     * drop their per-batch semi-joins this way). */
   def scoreCol(text: Column, model: Model): Column =
     graft.plans.TextExpressions.nbScore(
-      coalesce(lower(text).cast("string"), lit("")),
-      model.compiled, model.priorFixed)
+      coalesce(lower(text).cast("string"), lit("")), model.compiled)
 
   /** The fused count table: (tok, count) over the corpus vocab. */
   private[graft] def tokenCountTable(df: DataFrame, text: Column,

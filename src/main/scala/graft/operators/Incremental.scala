@@ -222,7 +222,7 @@ object Incremental {
     // docs generate m × (accumulated m·t) candidate pairs — measured
     // on the D10 gate as a per-arrival cost growing linearly forever
     // (6.3 → 9.2 s over 40 arrivals at a 20% plant,
-    // streambench_d10_growth_storm_r14.json) with NO straggler (max
+    // records/streambench_d10_growth_storm_r14.json) with NO straggler (max
     // task ≤ 1.3 s — distributed volume, not a hot key, which is why
     // salting is the wrong tool here). With the collapse the store
     // gains ONE row per distinct storm text per arrival and the curve
@@ -248,7 +248,7 @@ object Incremental {
     // reap, populated by whichever consuming action runs first.
     // Without it every separate action a sink takes on the returned
     // tables re-ran the shingle→minhash pipeline — measured 1.74×
-    // the per-arrival wall, demotedprobe_r17.json: each
+    // the per-arrival wall, records/demotedprobe_r17.json: each
     // post-survivor count/write paid ~0.6-1.1 s vs cache-scan cost
     // once cached. Outside a sink collector `Pins.persist` is a
     // no-op and the shape stays fully lazy: nothing leaks, and

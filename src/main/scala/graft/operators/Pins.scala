@@ -40,7 +40,7 @@ import org.apache.spark.storage.StorageLevel
   * materialization up front), but its returned signature tables feed
   * several sink actions, each re-running the shingle→minhash
   * pipeline on the lazy plan — measured 1.74× the per-arrival wall
-  * (demotedprobe_r17.json: 6.01 s lazy vs 3.45 s cached at a
+  * (records/demotedprobe_r17.json: 6.01 s lazy vs 3.45 s cached at a
   * 20k-doc forced demotion; every post-survivor action drops from
   * ~0.6-1.1 s to cache-scan cost). The cache is populated by
   * whichever action runs first — no up-front cost — and the

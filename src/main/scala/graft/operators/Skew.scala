@@ -66,7 +66,7 @@ object Skew {
     * because detection is paid on every corpus — measured ~9% (c2) /
     * ~22% (c4) at sf10 on a uniform corpus where it buys nothing, vs
     * a 1.4× wall / 1.9× straggler win on the skewed twin (SURVEY §6
-    * round 12, `skewbench_sf1_*_r12.json`) — and a pipeline that runs
+    * round 12, `records/skewbench_sf1_*_r12.json`) — and a pipeline that runs
     * exact/line dedup first (C1/C45) strips the worst boilerplate
     * before a near-dup operator sees it.
     *

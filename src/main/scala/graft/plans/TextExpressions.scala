@@ -367,8 +367,11 @@ object CompiledLm {
   * (the models round to 8 decimals), so per-doc long sums equal the
   * decimal(20,8) pipeline exactly. `lookup` returns `Missing` for
   * out-of-vocabulary tokens — they contribute nothing and are not
-  * counted as hits, the declarative left-join semantics. */
-final class CompiledTokenWeights(entries: Array[(String, Double)])
+  * counted as hits, the declarative left-join semantics.
+  * `priorFixed` is the model's prior in the same scale-8 form: it is
+  * model data like the weights, so the generated scoring code reads
+  * it from the model object and every model shares one class. */
+final class CompiledTokenWeights(entries: Array[(String, Double)], val priorFixed: Long)
     extends Serializable {
   require(entries.length < (1 << 27),
     s"CompiledTokenWeights: ${entries.length} entries — not a vocab-bounded model")
@@ -455,7 +458,7 @@ object CompiledTokenWeights {
     * discipline: the round happens in DECIMAL, before any double).
     * Token boundaries replicate WordNgrams' python-style whitespace
     * split byte-for-byte. Called from generated code. */
-  def nbScore(s: UTF8String, m: CompiledTokenWeights, priorFixed: Long)
+  def nbScore(s: UTF8String, m: CompiledTokenWeights)
     : org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
     val len = bytes.length
@@ -472,7 +475,7 @@ object CompiledTokenWeights {
       }
     }
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](hits, round6Exact(sum + priorFixed)))
+      Array[Any](hits, round6Exact(sum + m.priorFixed)))
   }
 }
 
@@ -850,8 +853,8 @@ case class DsirScore(child: Expression, model: CompiledBucketWeights)
   * each document's bytes once against the plan-constant vocab map.
   * Bit-identical by the fixed-point argument on
   * `CompiledTokenWeights`; parity is spec-pinned. */
-case class NbScore(child: Expression, model: CompiledTokenWeights,
-                   priorFixed: Long) extends UnaryExpression {
+case class NbScore(child: Expression, model: CompiledTokenWeights)
+    extends UnaryExpression {
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n_hits",
@@ -860,12 +863,12 @@ case class NbScore(child: Expression, model: CompiledTokenWeights,
         org.apache.spark.sql.types.DoubleType, nullable = false)))
   override def prettyName: String = "graft_nb_score"
   override def nullSafeEval(input: Any): Any =
-    CompiledTokenWeights.nbScore(input.asInstanceOf[UTF8String], model, priorFixed)
+    CompiledTokenWeights.nbScore(input.asInstanceOf[UTF8String], model)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("nbModel", model,
       classOf[CompiledTokenWeights].getName)
     defineCodeGen(ctx, ev,
-      c => s"graft.plans.CompiledTokenWeights.nbScore($c, $m, ${priorFixed}L)")
+      c => s"graft.plans.CompiledTokenWeights.nbScore($c, $m)")
   }
   override protected def withNewChildInternal(newChild: Expression): NbScore =
     copy(child = newChild)
@@ -1404,8 +1407,8 @@ object TextExpressions {
     Bridge.column(TrigramLmScore(Bridge.expression(text), model))
 
   /** Codegen'd fused NB-classifier document score; see `NbScore`. */
-  def nbScore(text: Column, model: CompiledTokenWeights, priorFixed: Long): Column =
-    Bridge.column(NbScore(Bridge.expression(text), model, priorFixed))
+  def nbScore(text: Column, model: CompiledTokenWeights): Column =
+    Bridge.column(NbScore(Bridge.expression(text), model))
 
   /** Codegen'd fused DSIR document log-weight; see `DsirScore`. */
   def dsirScore(text: Column, model: CompiledBucketWeights): Column =

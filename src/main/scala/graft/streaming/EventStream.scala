@@ -348,7 +348,7 @@ object EventStream {
     * The collector also reaps `Pins.persist` entries — the lazy
     * MEMORY_AND_DISK caches a DEMOTED oversized arrival's signature
     * tables register (Incremental.gate; measured 1.74× the
-    * per-arrival wall without them, demotedprobe_r17.json) — so a
+    * per-arrival wall without them, records/demotedprobe_r17.json) — so a
     * demoted arrival costs one cache population instead of a
     * pipeline re-run per consuming action, and the cache dies with
     * its batch. */

@@ -46,6 +46,26 @@ class ClassifierSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("models with different priors generate identical scoring code") {
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    val even = Classifier.train(pos.toDF("id", "t"), neg.toDF("id", "t"), col("id"), col("t"))
+    val skewed = Classifier.train((pos :+ ((3L, "more clean text"))).toDF("id", "t"),
+      neg.toDF("id", "t"), col("id"), col("t"))
+    assert(even.prior != skewed.prior)
+    // the prior is model data, read from the model object: a literal in
+    // the source would make every model compile its own class
+    def source(m: Classifier.Model): String = {
+      val ctx = new CodegenContext
+      GenerateUnsafeProjection.createCode(ctx,
+        Seq(graft.plans.NbScore(BoundReference(0, StringType, nullable = true), m.compiled)))
+        .code.toString + ctx.declareAddedFunctions()
+    }
+    assert(source(even) == source(skewed))
+  }
+
   test("score kernel ≡ declarative decimal pipeline, bit-identical") {
     // vocab hits, OOV tokens, repeated occurrences (multiplicity),
     // every whitespace byte the split recognizes, unicode tokens

@@ -121,7 +121,7 @@ object DeclarativeRef {
     * < 2^63 for every n < 262 130, so any doc up to 8× past the bound
     * provably reaches the guard instead of Spark's generic
     * ARITHMETIC_OVERFLOW (the r16 16-bit layout did not — SURVEY §6
-    * r17, `laneprobe_fp_3arm_final_r17.json`). NearDupSpec pins the
+    * r17, `records/laneprobe_fp_3arm_final_r17.json`). NearDupSpec pins the
     * exact 32 767 boundary and the 32 768 refusal in BOTH ANSI
     * modes. */
   def fingerprints(exploded: DataFrame, id: String, shingle: String,

@@ -77,7 +77,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("exact-signature collapse: storm batches gate identically with and without it") {
     // the error-page-storm regime: every arrival carries the SAME
-    // template text under fresh ids (streambench_d10_growth_storm_r14
+    // template text under fresh ids (records/streambench_d10_growth_storm_r14
     // measured the uncollapsed cost growing linearly forever). The
     // collapse must be invisible in verdicts — per-arrival survivors
     // identical with collapseExact on and off, across arrivals whose
@@ -309,7 +309,7 @@ class IncrementalSpec extends SparkSpec {
     // r17 (ADVICE r16): without a cache, every separate action a sink
     // takes on a demoted arrival's returned tables re-runs the
     // shingle→minhash pipeline — measured 1.74× the per-arrival wall
-    // (demotedprobe_r17.json). Inside a Pins collector the gate now
+    // (records/demotedprobe_r17.json). Inside a Pins collector the gate now
     // registers a LAZY MEMORY_AND_DISK persist on the returned
     // tables; the end-of-batch reap unpersists exactly those. Outside
     // a collector nothing is cached (no leaked CacheManager entry for

@@ -100,36 +100,24 @@ class PlanSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("scan fan-out: pushdown and pruning reach the scan UNDER the repartition (r17)") {
-    // sf0.01's events.parquet (221 KB) is past the 128 KiB fan-out
-    // floor, so a forced-width consumer of it fans out with the
-    // shipped constants: pin what the bench SF actually runs — the
-    // round-robin fan-out above the scan with filters and column
-    // pruning still pushed THROUGH it (guide §6 — losing either would
-    // be a silent 100 TB regression the fan-out must never cause)
-    import org.apache.spark.sql.functions.col
-    val sf01 = "/root/testdata/sf0.01"
-    val a17 = SparkEntry.queries("a17_reactions_agg")(spark, sf01)
-      .queryExecution.executedPlan.toString
-    assert(a17.contains("RoundRobinPartitioning"), a17) // a17 loads events through tFan
-    assert(a17.contains("ReadSchema: struct<props:string>"), a17)
-    // a12's stored-domain cutoff on a consumer forcing the default width
-    val raw = Tables.loadEventsRaw(spark, sf01, Tables.defaultFanoutParts(spark))
-    val p12 = raw.filter(col("ts") >= Tables.storedTsLit(raw, "ts", "2024-01-05 00:00:00"))
-      .select(col("event_id")).queryExecution.executedPlan.toString
-    assert(p12.contains("RoundRobinPartitioning"), p12)
-    assert(p12.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"), p12)
-    assert(p12.contains("ReadSchema: struct<event_id:bigint,ts:timestamp_ntz>"), p12)
-    // and at the spec SF, the fan-out must NOT fire (sub-floor tables /
-    // non-corpus tables keep their bare scans)
-    assert(!plan("a12_retention").contains("RoundRobinPartitioning"))
-  }
-
   test("a12/a14 event-time filters are pushed to the scan (stored domain)") {
     val p12 = plan("a12_retention")
     assert(p12.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"), p12)
     val p14 = plan("a14_mode_incremental")
     assert(p14.contains("GreaterThanOrEqual(ts,"), p14)
+    // and at sf0.01, whose events.ts is TIMESTAMP_NTZ: the stored-
+    // domain cutoff is still pushed, and both scans read only the
+    // columns their queries use
+    import org.apache.spark.sql.functions.col
+    val sf01 = "/root/testdata/sf0.01"
+    val a17 = SparkEntry.queries("a17_reactions_agg")(spark, sf01)
+      .queryExecution.executedPlan.toString
+    assert(a17.contains("ReadSchema: struct<props:string>"), a17)
+    val raw = Tables.loadEventsRaw(spark, sf01)
+    val raw12 = raw.filter(col("ts") >= Tables.storedTsLit(raw, "ts", "2024-01-05 00:00:00"))
+      .select(col("event_id")).queryExecution.executedPlan.toString
+    assert(raw12.contains("PushedFilters: [IsNotNull(ts), GreaterThanOrEqual(ts,"), raw12)
+    assert(raw12.contains("ReadSchema: struct<event_id:bigint,ts:timestamp_ntz>"), raw12)
   }
 
   test("c29 decontamination keeps its bloom prefilter in the plan") {

@@ -11,9 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine packages, a fixed list of environment variables, no
   * `spark.graft.*` conf key, one landing path for the streaming
   * sinks and one definition each of the near-dup family's, the text
-  * kernels' and the media probes' shared steps — so a one-off probe
-  * main, a second builder, an experiment knob or a copied sink body
-  * or helper cannot come back unnoticed. */
+  * kernels' and the media probes' shared steps, and a registry load
+  * that is a bare parquet scan — so a one-off probe main, a second
+  * builder, an experiment knob, a copied sink body or helper, or a
+  * repartition over the registry scan cannot come back unnoticed. */
 class SurfaceSpec extends AnyFunSuite {
 
   /** Path under src/main/scala (with '/') → source text. */
@@ -114,5 +115,16 @@ class SurfaceSpec extends AnyFunSuite {
       assert(count(s"""def $d\\b""") == Map("graft/plans/KernelBytes.scala" -> 1), d)
     assert(occurrences(sources("graft/sources/Multimodal.scala"), """def walk\(""") == 1)
     assert(count("""rawTextCol|plainColName|resolveColName""").isEmpty)
+  }
+
+  test("a registry load is one plain scan: no scan fan-out and no per-call-site width") {
+    val names = Seq("fanoutParts", "scanFanout", "FanoutTables", "NarrowFanoutParts",
+      "defaultFanoutParts", "tFan", "tNarrow", "tNoFan")
+    val hits = for {
+      (f, t) <- sources.toSeq
+      n <- names if occurrences(t, s"\\b$n\\b") > 0
+    } yield s"$f: $n"
+    assert(hits.isEmpty, hits.mkString("\n"))
+    assert(occurrences(sources("graft/Tables.scala"), """def load\(""") == 1)
   }
 }
