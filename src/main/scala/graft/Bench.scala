@@ -31,6 +31,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    // fail fast on a mistyped filter name — BEFORE the session and
+    // the multi-minute warmup, with the unknown names spelled out
+    val selected = SparkEntry.select(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
     val shufflePartitions = GraftSession.shufflePartitions
@@ -44,12 +47,6 @@ object Bench {
     // below is steady-state engine cost, not "who ran first pays the
     // operator family's cold codegen compile".
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    // fail fast on a mistyped filter name — BEFORE the multi-minute
-    // warmup, with the unknown names spelled out
-    val unknown = args.filterNot(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown queries: ${unknown.mkString(", ")} — known: " +
-        SparkEntry.queries.keySet.toSeq.sorted.mkString(", "))
     // validate the rep count BEFORE the warmup too: reps <= 0 would
     // make every rep list empty, silently reporting the -1.0 sentinel
     // for every query (indistinguishable from "all reps failed"), and
@@ -179,9 +176,7 @@ object Bench {
     // local profiling with a name filter warms only the filtered set
     // (the driver passes no args → full warmup, unchanged)
     miniCalib() // warm the per-rep stamp's codegen before anything is measured
-    val warmSet = if (args.isEmpty) SparkEntry.queries
-                  else args.toSeq.map(n => n -> SparkEntry.queries(n)).toMap
-    warmSet.foreach { case (_, fn) =>
+    selected.foreach { case (_, fn) =>
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => () }
     }
@@ -198,9 +193,7 @@ object Bench {
     // record. A rep that THROWS records the -1.0 sentinel; a query
     // whose every rep fails reports -1.0 — a broken query must never
     // masquerade as a fast one.
-    val resultsFull = (if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
-                   else args.toSeq.map(n => n -> SparkEntry.queries(n)))
-      .map { case (name, fn) =>
+    val resultsFull = selected.map { case (name, fn) =>
       // noop sink: computes every output column (count() would let
       // Catalyst prune the projections) without any write cost.
       val times = (1 to reps).map { _ =>

@@ -14,7 +14,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * args: <suffix> [sf dir] [query names...]
   *   suffix: "before" / "after" (file name suffix)
   *   sf dir: optional absolute path (default /root/testdata/sf0.1)
-  *   names: optional query-name filter (default: all)
+  *   names: optional query-name filter (default: all, sorted by
+  *          name; an unknown name is refused before any dump)
   *
   * Runs on the bench's own session (`GraftSession`) so the captured
   * plans are the plans the bench actually executes.
@@ -25,9 +26,8 @@ object PlanDump {
     val suffix = args.head
     val rest = args.tail
     val dir = rest.find(_.startsWith("/")).getOrElse("/root/testdata/sf0.1")
-    val names0 = rest.filterNot(_.startsWith("/")).toSeq
+    val selected = SparkEntry.select(rest.filterNot(_.startsWith("/")).toSeq)
     val spark = GraftSession.build()
-    val names = if (names0.nonEmpty) names0 else SparkEntry.queries.keys.toSeq.sorted
     val out = Paths.get(sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r18"))
     Files.createDirectories(out)
     // the noop write runs its own QueryExecution (not the DataFrame's),
@@ -44,8 +44,8 @@ object PlanDump {
                              qe: org.apache.spark.sql.execution.QueryExecution,
                              exception: Exception): Unit = ()
     })
-    for (q <- names) {
-      val df = SparkEntry.queries(q)(spark, dir)
+    for ((q, fn) <- selected) {
+      val df = fn(spark, dir)
       val formatted = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       // execute through the bench's own sink so the AQE-final plan is
       // the one the bench times

@@ -755,8 +755,7 @@ object SparkEntry {
   /** C2 MinHash+LSH near-dup: 8 md5-minhashes over word 3-shingles,
     * 4 bands of 2 → band-bucket join → exact-Jaccard verify ≥ 0.5. */
   private def c2(s: SparkSession, dir: String): DataFrame =
-    MinHash.nearDupPairs(t(s, dir, "documents"), col("doc_id"), col("text"),
-        n = 3, k = 8, bandRows = 2, threshold = 0.5)
+    MinHash.nearDupPairs(t(s, dir, "documents"), col("doc_id"), col("text"), threshold = 0.5)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** C3 SimHash near-dup: 64-bit fingerprints over word 3-shingles,
@@ -1502,6 +1501,19 @@ object SparkEntry {
     "c53_doc_embeddings" -> (c53 _),
     "c53b_embed_semdedup" -> (c53b _),
     "c12_media_features" -> (c12 _))
+
+  /** The run list of the query mains (Bench, Verify, PlanDump): the
+    * queries `names` names, in that order, or every query sorted by
+    * name when `names` is empty. Any unknown name is refused here,
+    * before a main does any work, and the error lists them all. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val qs = queries
+    val unknown = names.filterNot(qs.contains)
+    require(unknown.isEmpty,
+      s"unknown queries: ${unknown.mkString(", ")} — known: " +
+        qs.keys.toSeq.sorted.mkString(", "))
+    if (names.isEmpty) qs.toSeq.sortBy(_._1) else names.distinct.map(n => n -> qs(n))
+  }
 
   /** DuckDB-runnable oracle SQL per query (SURVEY §4). */
   def oracleSql: Map[String, String] = Map(

@@ -298,25 +298,18 @@ object StreamBench {
           }
         }
       })
-      // preseed the signature store (indexed layout, compacted) BEFORE
-      // the run, so the flat-arrival claim is tested against a store
-      // that dwarfs the arrivals, not one the run itself built. Seed
-      // ids start at 10⁹ and the seed vocabulary is prefixed apart
-      // from the growth batches', so nothing collides with the stream.
+      // preseed the signature store (indexed layout) BEFORE the run,
+      // so the flat-arrival claim is tested against a store that
+      // dwarfs the arrivals, not one the run itself built. Seed ids
+      // start at 10⁹ and the seed vocabulary is prefixed apart from
+      // the growth batches', so nothing collides with the stream.
       import spark.implicits._
       val seed = (0 until GrowthPreseed).map { i =>
         val (lang, text) = pool(i % pool.length)
         StreamDoc(1000000000L + i, lang,
           text.split("\\s+").filter(_.nonEmpty).map("seed0·" + _).mkString(" "))
       }.toDF()
-      val (b, sets) = operators.Incremental.signatures(seed, col("doc_id"), col("text"))
-      // setup, not a per-arrival path: the distributed write+sidecar
-      // shape beats single-task writeSmall at ~400k band rows
-      sources.Indexed.write(b, s"$dir/store/bands/batch=1000000", "bk", 8)
-      sources.Indexed.write(sets, s"$dir/store/sets/batch=1000000", "id", 8, pageRows = 128)
-      // one clustered batch=-1 dir — no id can collide with the
-      // stream's 0,1,…
-      streaming.EventStream.nearDupStoreCompact(spark, s"$dir/store", 2000000L)
+      streaming.EventStream.nearDupStoreSeed(seed, "doc_id", col("text"), s"$dir/store")
       System.err.println(s"[streambench] $growthGate growth preseeded store with $GrowthPreseed docs")
       val input = MemoryStream[StreamDoc](spark)(Encoders.product[StreamDoc])
       val q =

@@ -10,17 +10,15 @@ object Verify {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir>")
     val sfDir = args(0)
     val outDir = args(1)
+    // optional args(2..): restrict to named queries (dev loop only —
+    // the driver always passes exactly two args and gets the full
+    // set); an unknown name is refused before anything is written
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
-    // optional args(2..): restrict to named queries (dev loop only —
-    // the driver always passes exactly two args and gets the full set)
-    val subset = args.drop(2).toSet
-    val selected =
-      if (subset.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (k, _) => subset(k) }
     // one (name, error, seconds) per query, in run order; error is
     // None for a query whose output was written
-    val results = selected.toSeq.map { case (name, fn) =>
+    val results = selected.map { case (name, fn) =>
       // stderr marker BEFORE each query: engine WARN lines (task-size,
       // single-partition windows) interleave with these, so a warning
       // in the log attributes to the query between markers

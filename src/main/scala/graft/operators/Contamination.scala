@@ -106,19 +106,18 @@ object Contamination {
     * jaccard) for its best match — highest exact Jaccard, smallest
     * eval id on ties (a total order, so results are deterministic).
     * Clean train docs are absent; threshold semantics and the band
-    * definition are exactly `Incremental`'s, so a doc flagged here is
-    * the same doc C34's gate would have dropped had the eval set been
-    * in its store.
+    * definition are exactly `Incremental`'s (`MinHash`'s one
+    * signature shape), so a doc flagged here is the same doc C34's
+    * gate would have dropped had the eval set been in its store.
     *
     * Scale: the band join's eval side is benchmark-sized — it
     * broadcasts; the verify join moves only banded candidates. The
     * per-doc argmax rides a window over candidate rows (bounded by
     * matches-per-doc, not corpus size). */
   def fuzzyMatches(train: DataFrame, eval: DataFrame, id: Column, text: Column,
-                   n: Int = 3, k: Int = 8, bandRows: Int = 2,
                    threshold: Double = 0.5): DataFrame = {
-    val (tBands, tSets) = Incremental.signatures(train, id, text, n, k, bandRows)
-    val (eBands, eSets) = Incremental.signatures(eval, id, text, n, k, bandRows)
+    val (tBands, tSets) = Incremental.signatures(train, id, text)
+    val (eBands, eSets) = Incremental.signatures(eval, id, text)
     val cand = tBands.select(col("id").as("tid"), col("bi"), col("bk"))
       .join(broadcast(eBands.select(col("id").as("eid"), col("bi"), col("bk"))),
         Seq("bi", "bk"))

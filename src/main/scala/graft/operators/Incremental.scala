@@ -43,7 +43,8 @@ import org.apache.spark.sql.functions._
   * map-side co-bucketed probe of one bucket subset — the store is
   * never reshuffled, never rescanned whole. One row per (id, band)
   * keeps the payload a pair of md5 hexes; the shingle sets needed for
-  * exact verification live one-row-per-doc beside it.
+  * exact verification live one-row-per-doc beside it. Every table
+  * here has `MinHash`'s one signature shape.
   *
   * Store schema note: sets are array<bigint> (xxhash64 — see
   * `signatures`). A store persisted by a pre-long-hash build
@@ -54,14 +55,14 @@ import org.apache.spark.sql.functions._
 object Incremental {
 
   /** Enforceable bound on the micro-batch contract: past this many
-    * batch BAND rows (≈ docs × k/bandRows — ~1M docs at the 8/2
-    * default) the gate's driver-side collects and broadcasts (batch
-    * band keys, candidate ids) stop being "micro" and `gate` FALLS
-    * BACK to the declarative `microBatch = false` shape for the rest
-    * of the call: no pruner collects, no broadcast pins, no eager
-    * batch checkpoint — Catalyst/AQE plan the joins and the batch
-    * tables stay lazy end to end (the guard compares a COUNT BOUND,
-    * docs × k/bandRows, taken before anything materializes). Results
+    * batch BAND rows (≈ docs × Hashes/BandRows — ~1M docs) the
+    * gate's driver-side collects and broadcasts (batch band keys,
+    * candidate ids) stop being "micro" and `gate` FALLS BACK to the
+    * declarative `microBatch = false` shape for the rest of the
+    * call: no pruner collects, no broadcast pins, no eager batch
+    * checkpoint — Catalyst/AQE plan the joins and the batch tables
+    * stay lazy end to end (the guard compares a COUNT BOUND,
+    * `bandRowBound`, taken before anything materializes). Results
     * are identical either way; only the plan shape changes. */
   val MaxMicroBatchBandRows: Long = 4L << 20
 
@@ -84,31 +85,28 @@ object Incremental {
   val MaxPrunerBandRows: Long = 1L << 19
 
   /** Upper bound on the band rows `signatures` emits for `nDocs`
-    * docs: every doc emits at most k/bandRows band rows (short docs
-    * emit none). */
-  def bandRowBound(nDocs: Long, k: Int, bandRows: Int): Long = nDocs * (k / bandRows)
+    * docs: every doc emits at most `Hashes / BandRows` band rows
+    * (short docs emit none). */
+  def bandRowBound(nDocs: Long): Long = nDocs * (MinHash.Hashes / MinHash.BandRows)
 
   /** Signature tables for a doc set: bands (id, bi, bk) — one row per
     * band for the bucketed store layout — and sets (id, s) with the
     * sorted distinct xxhash64-shingle LONG array for exact
     * verification (8 bytes/element — the persistent store and the
     * per-arrival verify shuffle are ~6× leaner than with md5 hex
-    * strings; see Shingles.hashSets). Short docs (< n tokens) get no
-    * band rows and an empty set: they can never near-match anything
-    * and always survive the gate. */
-  def signatures(docs: DataFrame, id: Column, text: Column,
-                 n: Int = 3, k: Int = 8, bandRows: Int = 2): (DataFrame, DataFrame) = {
+    * strings; see Shingles.hashSets). Short docs (fewer tokens than
+    * a shingle) get no band rows and an empty set: they can never
+    * near-match anything and always survive the gate. */
+  def signatures(docs: DataFrame, id: Column, text: Column): (DataFrame, DataFrame) = {
     // round 18: both tables built MAP-SIDE by the fused kernels — no
     // explode, no aggregation exchange, and the former keep-every-doc
     // LEFT JOIN for `sets` collapses to a coalesce on the kernel
     // output (empty array for short/null docs, the same convention;
     // `DeclarativeRef.incrementalSignatures`, test scope, is the
     // join form). Streaming-safe: stateless projections.
-    val sig = MinHash.signaturesMapSide(docs, id, text, n, k)
-    val bands = sig.select(col("id"),
-      posexplode(MinHash.bandArray(k, bandRows)).as(Seq("bi", "bk")))
+    val bands = MinHash.bandTable(docs, id, text)
     val sets = docs.select(id.as("id"),
-      coalesce(graft.plans.TextExpressions.hashedShingleSet(lower(text), n),
+      coalesce(graft.plans.TextExpressions.hashedShingleSet(lower(text), MinHash.ShingleWords),
         array().cast("array<bigint>")).as("s"))
     (bands, sets)
   }
@@ -151,18 +149,17 @@ object Incremental {
     * to the same shape automatically once the batch band table
     * exceeds `maxBandRows` (the contract is enforced, not assumed). */
   def gate(storeBands: DataFrame, storeSets: DataFrame, batch: DataFrame,
-           id: Column, text: Column, n: Int = 3, k: Int = 8, bandRows: Int = 2,
+           id: Column, text: Column,
            threshold: Double = 0.5, microBatch: Boolean = true,
            prunedBands: Option[Seq[Any] => Option[DataFrame]] = None,
            prunedSets: Option[Seq[Any] => Option[DataFrame]] = None,
            maxBandRows: Long = MaxMicroBatchBandRows,
-           maxPrunerBandRows: Long = MaxPrunerBandRows,
-           collapseExact: Boolean = true)
+           maxPrunerBandRows: Long = MaxPrunerBandRows)
     : (DataFrame, DataFrame, DataFrame) = {
-    val (bBands0, bSets0) = signatures(batch, id, text, n, k, bandRows)
+    val (bBands0, bSets0) = signatures(batch, id, text)
     // the contract is ENFORCED, not documentary — and the guard runs
     // BEFORE anything materializes: every doc emits at most
-    // k/bandRows band rows (short docs emit none), so the incoming
+    // Hashes/BandRows band rows (short docs emit none), so the incoming
     // batch's row count upper-bounds the band table without running
     // the shingle→minhash pipeline — free when the caller passes a
     // `Pins.checkpoint`ed batch (its count is already known), one
@@ -171,7 +168,7 @@ object Incremental {
     // paying an eager corpus-sized checkpoint it would immediately
     // abandon (the bound can only demote EARLY — on batches padded
     // with short docs — which errs toward the scale-safe shape)
-    val nBandBound = if (microBatch) bandRowBound(Pins.count(batch), k, bandRows) else 0L
+    val nBandBound = if (microBatch) bandRowBound(Pins.count(batch)) else 0L
     val micro = microBatch && {
       if (nBandBound > maxBandRows) {
         demotions.increment() // surfaced in StreamBench's JSON, not just stderr
@@ -264,7 +261,7 @@ object Incremental {
     // Jaccard 1.0, so keep-first drops them through the ordinary
     // within-batch path; only the RETURNED tables differ
     // (uncollapsed in declarative mode).
-    val collapse = collapseExact && microBatch && threshold <= 1.0
+    val collapse = microBatch && threshold <= 1.0
     val (pBands, pSets, exactDropped) = if (collapse) {
       val reps = bSets.filter(size(col("s")) > 0)
         .groupBy(col("s")).agg(min(col("id")).as("id")).select(col("id"))

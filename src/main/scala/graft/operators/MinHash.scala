@@ -20,8 +20,21 @@ import org.apache.spark.sql.functions._
   * self-join, whose two sides share one band exchange
   * (ReusedExchange). Candidates — never O(n²) — are verified with
   * exact Jaccard. Band width tunes candidate volume.
+  *
+  * The signature has ONE shape, `ShingleWords`/`Hashes`/`BandRows`: C2's
+  * pairs, the C34/D10/D16 ingest gate and its persistent store
+  * (`Incremental`) and C37's fuzzy decontamination all band the same
+  * signatures, so a doc flagged by one is flagged by the others and
+  * a store written by one sink is read by another.
   */
 object MinHash {
+
+  /** Words per shingle. */
+  val ShingleWords = 3
+  /** Minhashes per signature. */
+  val Hashes = 8
+  /** Minhashes per band: `Hashes / BandRows` band keys per doc. */
+  val BandRows = 2
 
   /** k-minhash signature per document: one row per id with columns
     * m0..m{k-1}, mi = min over its shingles of md5("i:"+sh) —
@@ -53,15 +66,21 @@ object MinHash {
       md5(concat_ws("|", (0 until rows).map(r => col(s"m${b * rows + r}")): _*))
     }: _*)
 
+  /** The band table (id, bi, bk) of `docs` at the signature shape:
+    * one row per band of each doc's signature; docs with no shingles
+    * emit none. */
+  private[operators] def bandTable(docs: DataFrame, id: Column, text: Column): DataFrame =
+    signaturesMapSide(docs, id, text, ShingleWords, Hashes)
+      .select(col("id"), posexplode(bandArray(Hashes, BandRows)).as(Seq("bi", "bk")))
+
   /** Full near-dup pipeline: shingle → sign → band → candidate join →
-    * exact-Jaccard verification at `threshold` (on the rounded score).
-    * Returns (doc_a, doc_b, jaccard).
+    * exact-Jaccard verification at `threshold` (on the rounded score),
+    * at the one signature shape. Returns (doc_a, doc_b, jaccard).
     *
     * `salts`/`hotMin`: hot-band-key salting, off at the default 1
     * (see `Skew.saltedSelfJoin`; the candidate set is the same at
     * any setting). */
   def nearDupPairs(docs: DataFrame, id: Column, text: Column,
-                   n: Int = 3, k: Int = 8, bandRows: Int = 2,
                    threshold: Double = 0.5,
                    salts: Int = 1, hotMin: Long = 4096): DataFrame = {
     // hashed long sets for the verify step (the SIGNATURE stays
@@ -74,10 +93,9 @@ object MinHash {
     // Jaccard's build-once repartition barrier so the kernel runs
     // once and both joins read the barrier exchange (below the floor
     // the rebuild is milliseconds — Skew.CorpusScaleMinInputBytes).
-    val sh0 = Shingles.hashSetsMapSide(docs, id, text, n)
+    val sh0 = Shingles.hashSetsMapSide(docs, id, text, ShingleWords)
     val sh = if (Skew.corpusScale(docs)) Jaccard.barriered(sh0) else sh0
-    val sig = signaturesMapSide(docs, id, text, n, k)
-    val banded = sig.select(col("id"), posexplode(bandArray(k, bandRows)).as(Seq("bi", "bk")))
+    val banded = bandTable(docs, id, text)
     val (bandA, bandB, saltEq) =
       Skew.saltedSelfJoin(banded, Seq("bi", "bk"), col("id"), col("bi"), salts, hotMin)
     val cand = bandA.as("a").join(bandB.as("b"),

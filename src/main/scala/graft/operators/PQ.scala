@@ -49,6 +49,14 @@ object PQ {
     * re-computes the norm per element when evaluated interpreted. */
   private def unit(vec: Column): Column = PQExpressions.unitVec(vec)
 
+  /** Mean of the double column `x` over an exact decimal sum: one
+    * value whatever order the rows arrive in, so a trained codebook
+    * does not depend on how the corpus is partitioned (a double `avg`
+    * rounds in arrival order). Each unit-vector component keeps 18
+    * decimals, and the sum is rounded to a double once. */
+  private def exactMean(x: Column): Column =
+    sum(x.cast("decimal(38,18)")).cast("double") / count(x)
+
   /** Train the m×k subspace codebooks with `iters` Lloyd rounds,
     * seeded deterministically from the `k` lowest-id vectors'
     * subvectors. */
@@ -100,7 +108,7 @@ object PQ {
         .select(col("sub"), col("sc.cell").as("cell"), col("sc.sv").as("sv"))
       model = assigned
         .select(col("sub"), col("cell"), posexplode(col("sv")).as(Seq("dim", "x")))
-        .groupBy(col("sub"), col("cell"), col("dim")).agg(avg(col("x")).as("mu"))
+        .groupBy(col("sub"), col("cell"), col("dim")).agg(exactMean(col("x")).as("mu"))
         .groupBy(col("sub"), col("cell"))
         .agg(array_sort(collect_list(struct(col("dim"), col("mu")))).as("dm"))
         .select(col("sub"), col("cell"), transform(col("dm"), e => e.getField("mu")).as("cv"))
@@ -145,7 +153,7 @@ object PQ {
       PQExpressions.nearestCell(col("v"), cs, normalize = false)
     for (_ <- 0 until iters) {
       val byCell = v.select(cellOf(cents).as("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-        .groupBy(col("cell"), col("dim")).agg(avg(col("x")).as("mu"))
+        .groupBy(col("cell"), col("dim")).agg(exactMean(col("x")).as("mu"))
         .groupBy(col("cell"))
         .agg(array_sort(collect_list(struct(col("dim"), col("mu")))).as("dm"))
         .select(col("cell"), transform(col("dm"), e => e.getField("mu")).as("cv"))

@@ -5,8 +5,8 @@ import java.security.MessageDigest
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-level helpers the text and vector kernels share: one token
-  * boundary, one 6-digit round, one md5 hex encoder and one per-thread
-  * digest factory. */
+  * boundary and one token scan, one 6-digit round, one md5 hex
+  * encoder and one per-thread digest factory. */
 private[plans] object KernelBytes {
 
   /** ASCII whitespace (Java `\s`: space, \t, \n, \x0B, \f, \r) — the
@@ -14,6 +14,29 @@ private[plans] object KernelBytes {
     * tokenizations match `WordNgrams` byte for byte. */
   def isWs(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
+
+  /** The tokens of `bytes` split on `isWs`, as byte ranges: returns
+    * `b` with b(0) = the token count n, and token t spanning bytes
+    * [b(2t + 1), b(2t + 2)) — python `str.split()`'s tokens. One
+    * array per call, grown by doubling. */
+  def tokenBounds(bytes: Array[Byte]): Array[Int] = {
+    val len = bytes.length
+    var b = new Array[Int](17)
+    var n = 0
+    var i = 0
+    while (i < len) {
+      while (i < len && isWs(bytes(i))) i += 1
+      if (i < len) {
+        if (2 * n + 2 >= b.length) b = java.util.Arrays.copyOf(b, 2 * b.length - 1)
+        b(2 * n + 1) = i
+        while (i < len && !isWs(bytes(i))) i += 1
+        b(2 * n + 2) = i
+        n += 1
+      }
+    }
+    b(0) = n
+    b
+  }
 
   /** Spark's exact `round(x, 6)` for finite doubles: the SAME scala
     * BigDecimal path RoundBase compiles to, so a kernel's numbers are

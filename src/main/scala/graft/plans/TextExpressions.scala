@@ -8,7 +8,7 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import KernelBytes.{isWs, md5Hex, md5PerThread, round6}
+import KernelBytes.{isWs, md5Hex, md5PerThread, round6, tokenBounds}
 
 /** Native character n-gram extraction (SURVEY E2).
   *
@@ -110,41 +110,22 @@ object WordNgrams {
     * Called from generated code — must stay static-shaped. */
   def slice(s: UTF8String, n: Int): ArrayData = {
     val bytes = s.getBytes
-    val len = bytes.length
-    // token boundaries (byte offsets): starts(i) inclusive, ends(i) exclusive
-    var cap = 8
-    var starts = new Array[Int](cap)
-    var ends = new Array[Int](cap)
-    var m = 0
-    var i = 0
-    while (i < len) {
-      while (i < len && isWs(bytes(i))) i += 1
-      if (i < len) {
-        if (m == cap) {
-          cap *= 2
-          starts = java.util.Arrays.copyOf(starts, cap)
-          ends = java.util.Arrays.copyOf(ends, cap)
-        }
-        starts(m) = i
-        while (i < len && !isWs(bytes(i))) i += 1
-        ends(m) = i
-        m += 1
-      }
-    }
-    val count = math.max(0, m - n + 1)
+    // token t spans bytes [b(2t + 1), b(2t + 2)) — KernelBytes.tokenBounds
+    val b = tokenBounds(bytes)
+    val count = math.max(0, b(0) - n + 1)
     val out = new Array[AnyRef](count)
     var g = 0
     while (g < count) {
       // gram g = tokens g..g+n-1 joined by single spaces
       var size = n - 1
       var t = g
-      while (t < g + n) { size += ends(t) - starts(t); t += 1 }
+      while (t < g + n) { size += b(2 * t + 2) - b(2 * t + 1); t += 1 }
       val buf = new Array[Byte](size)
       var pos = 0
       t = g
       while (t < g + n) {
-        val tl = ends(t) - starts(t)
-        System.arraycopy(bytes, starts(t), buf, pos, tl)
+        val tl = b(2 * t + 2) - b(2 * t + 1)
+        System.arraycopy(bytes, b(2 * t + 1), buf, pos, tl)
         pos += tl
         if (t < g + n - 1) { buf(pos) = ' '; pos += 1 }
         t += 1
@@ -723,52 +704,22 @@ object CompiledBucketWeights {
   /** (n_feats, logw) of one document in one linear pass plus one md5
     * per feature — the fused form of explode(unigrams ++ bigrams) →
     * md5-prefix bucket → broadcast-join(model) → per-doc decimal sum
-    * + 6-digit decimal round (C46's exact discipline). Tokenization
-    * replicates WordNgrams' split byte-for-byte; a bigram's digest
-    * streams token₁ + ' ' + token₂ — the same bytes WordNgrams.slice
-    * copies into its single-space-joined gram. Called from generated
-    * code. */
+    * + 6-digit decimal round (C46's exact discipline). Features are
+    * `featureBucket`'s. Called from generated code. */
   def score(s: UTF8String, m: CompiledBucketWeights)
     : org.apache.spark.sql.catalyst.InternalRow = {
     val bytes = s.getBytes
-    val len = bytes.length
-    // token boundaries, WordNgrams' rule
-    var cap = 8
-    var starts = new Array[Int](cap)
-    var ends = new Array[Int](cap)
-    var n = 0
-    var i = 0
-    while (i < len) {
-      while (i < len && isWs(bytes(i))) i += 1
-      if (i < len) {
-        if (n == cap) {
-          cap *= 2
-          starts = java.util.Arrays.copyOf(starts, cap)
-          ends = java.util.Arrays.copyOf(ends, cap)
-        }
-        starts(n) = i
-        while (i < len && !isWs(bytes(i))) i += 1
-        ends(n) = i
-        n += 1
-      }
-    }
+    val b = tokenBounds(bytes)
+    val nFeats = math.max(0, 2 * b(0) - 1) // n unigrams + (n-1) bigrams
     val digest = md5.get()
     var sum = 0L // |λ·1e8| is model-bounded per feature; exact far past any doc
-    var t = 0
-    while (t < n) {
-      digest.update(bytes, starts(t), ends(t) - starts(t))
-      sum += m.lookup(bucketOf(digest.digest(), m.prefixLen))
-      if (t + 1 < n) {
-        digest.update(bytes, starts(t), ends(t) - starts(t))
-        digest.update(' '.toByte)
-        digest.update(bytes, starts(t + 1), ends(t + 1) - starts(t + 1))
-        sum += m.lookup(bucketOf(digest.digest(), m.prefixLen))
-      }
-      t += 1
+    var f = 0
+    while (f < nFeats) {
+      sum += m.lookup(featureBucket(digest, bytes, b, f, m.prefixLen))
+      f += 1
     }
-    val nFeats = if (n == 0) 0L else (2L * n - 1L) // n unigrams + (n-1) bigrams
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](nFeats, java.math.BigDecimal.valueOf(sum, 8)
+      Array[Any](nFeats.toLong, java.math.BigDecimal.valueOf(sum, 8)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()))
   }
 
@@ -778,43 +729,33 @@ object CompiledBucketWeights {
     * explode → md5-prefix → groupBy(bucket) count, whose per-partition
     * state is this one fixed B-long array instead of a hash-agg over
     * corpus×features rows. Exact long counts ⇒ the trained model is
-    * bit-identical (spec-pinned). Same byte-walk tokenizer as
-    * `score`. */
+    * bit-identical (spec-pinned). Same features as `score`. */
   def countInto(s: UTF8String, prefixLen: Int, counts: Array[Long]): Unit = {
     val bytes = s.getBytes
-    val len = bytes.length
-    var cap = 8
-    var starts = new Array[Int](cap)
-    var ends = new Array[Int](cap)
-    var n = 0
-    var i = 0
-    while (i < len) {
-      while (i < len && isWs(bytes(i))) i += 1
-      if (i < len) {
-        if (n == cap) {
-          cap *= 2
-          starts = java.util.Arrays.copyOf(starts, cap)
-          ends = java.util.Arrays.copyOf(ends, cap)
-        }
-        starts(n) = i
-        while (i < len && !isWs(bytes(i))) i += 1
-        ends(n) = i
-        n += 1
-      }
-    }
+    val b = tokenBounds(bytes)
     val digest = md5.get()
-    var t = 0
-    while (t < n) {
-      digest.update(bytes, starts(t), ends(t) - starts(t))
-      counts(bucketOf(digest.digest(), prefixLen).toInt) += 1L
-      if (t + 1 < n) {
-        digest.update(bytes, starts(t), ends(t) - starts(t))
-        digest.update(' '.toByte)
-        digest.update(bytes, starts(t + 1), ends(t + 1) - starts(t + 1))
-        counts(bucketOf(digest.digest(), prefixLen).toInt) += 1L
-      }
-      t += 1
+    var f = 0
+    while (f < 2 * b(0) - 1) {
+      counts(featureBucket(digest, bytes, b, f, prefixLen).toInt) += 1L
+      f += 1
     }
+  }
+
+  /** The `prefixLen`-nibble md5 bucket of feature `f` of a document
+    * whose tokens are `b` (`tokenBounds` — WordNgrams' split
+    * byte-for-byte): unigram f/2 when f is even, the bigram of tokens
+    * (f-1)/2 and (f+1)/2 when f is odd. A bigram's digest streams
+    * token₁ + ' ' + token₂ — the same bytes WordNgrams.slice copies
+    * into its single-space-joined gram. */
+  private def featureBucket(digest: java.security.MessageDigest, bytes: Array[Byte],
+                            b: Array[Int], f: Int, prefixLen: Int): Long = {
+    val t = f >> 1
+    digest.update(bytes, b(2 * t + 1), b(2 * t + 2) - b(2 * t + 1))
+    if ((f & 1) == 1) {
+      digest.update(' '.toByte)
+      digest.update(bytes, b(2 * t + 3), b(2 * t + 4) - b(2 * t + 3))
+    }
+    bucketOf(digest.digest(), prefixLen)
   }
 }
 

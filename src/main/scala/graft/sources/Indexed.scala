@@ -103,15 +103,20 @@ object Indexed {
     * shape: batch dirs are small, a range shuffle buys nothing). */
   def write(df: DataFrame, dir: String, keyCol: String, nFiles: Int,
             pageRows: Int = DefaultPageRows, fpp: Double = 0.01): Unit = {
-    val clustered =
-      if (nFiles > 0) df.repartitionByRange(nFiles, col(keyCol))
-      else df
+    writeSorted(if (nFiles > 0) df.repartitionByRange(nFiles, col(keyCol)) else df,
+      dir, keyCol, pageRows)
+    writeSidecar(df.sparkSession, dir, keyCol, fpp, pageRows)
+  }
+
+  /** The data write of both layouts: each partition of `clustered`
+    * sorted by `keyCol` into one file of `pageRows`-row pages,
+    * replacing `dir`. */
+  private def writeSorted(clustered: DataFrame, dir: String, keyCol: String,
+                          pageRows: Int): Unit =
     clustered.sortWithinPartitions(col(keyCol))
       .write.mode(SaveMode.Overwrite)
       .option("parquet.page.row.count.limit", pageRows.toString)
       .parquet(dir)
-    writeSidecar(df.sparkSession, dir, keyCol, fpp, pageRows)
-  }
 
   /** BATCH write for streaming appends: sorted file(s) + sidecar at
     * the cost of TWO jobs for a small batch (the data write and ONE
@@ -146,13 +151,9 @@ object Indexed {
     val nFiles =
       if (nRows <= fileRows) 1
       else math.min(32L, (nRows + fileRows - 1) / fileRows).toInt
-    val clustered =
-      if (nFiles <= 1) df.coalesce(1)
-      else df.repartitionByRange(nFiles, col(keyCol))
-    clustered.sortWithinPartitions(col(keyCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("parquet.page.row.count.limit", pageRows.toString)
-      .parquet(dir)
+    writeSorted(
+      if (nFiles <= 1) df.coalesce(1) else df.repartitionByRange(nFiles, col(keyCol)),
+      dir, keyCol, pageRows)
     val dt = df.schema(keyCol).dataType
     if (!supported(dt)) return
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -21,6 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * sessions, so state size tracks the ACTIVE keyset, not history.
   */
 object EventStream {
+  import EventMicros.{fromMicros, toMicros}
 
   /** One event row (matches the `events` table columns used here). */
   case class Event(user_id: Long, event_id: Long, ts: Timestamp, value: Double)
@@ -131,14 +132,6 @@ object EventStream {
     val spark = trades.sparkSession
     import spark.implicits._
 
-    def toMicros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000
-    def fromMicros(us: Long): Timestamp = {
-      val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
-      t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
-      t
-    }
-
     // tag both sides into one schema: side 0 = quote, 1 = trade
     val tagged = trades.select(col("user_id"), col("ts"), lit(1).as("side"),
         col("event_id").as("id"), lit(0.0).as("px"))
@@ -225,14 +218,6 @@ object EventStream {
     implicit val se = Encoders.product[Session]
     implicit val so = Encoders.product[OpenSession]
     implicit val kl = Encoders.scalaLong
-
-    def toMicros(t: Timestamp): Long =
-      t.getTime * 1000L + (t.getNanos % 1000000) / 1000
-    def fromMicros(us: Long): Timestamp = {
-      val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
-      t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
-      t
-    }
     // session id = the session's start micros: unique per user even
     // ACROSS state expiry (a per-user counter would either restart at
     // 1 after a timeout flush — colliding ids — or require keeping a
@@ -281,17 +266,6 @@ object EventStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** D7: in-flight LLM-data gate — the streaming twin of C9 (quality
-    * scoring) and C13 (PII scrub). `Quality.scored`/`Quality.scrubbed`
-    * are pure map-side codegen projections, so the SAME code path the
-    * batch queries run applies to a streaming DataFrame unchanged: no
-    * state, no watermark, no shuffle — it composes in front of any
-    * sink here (e.g. the D6 upsert sink) and never buffers or
-    * reorders rows. Docs scoring below `minScore` are dropped and PII
-    * is scrubbed from the survivors — the filter a training-data
-    * pipeline runs BEFORE landing data, rather than as a weekly batch
-    * sweep. StreamingSpec pins row-identity with the batch operators
-    * on the same input. */
   /** Micro-batch sources often deliver a whole batch as ONE
     * partition (a MemoryStream block, a single-partition Kafka
     * topic) — every per-row kernel downstream of it would then run
@@ -383,6 +357,17 @@ object EventStream {
       .filterNot(resolver(_, "scrubbed"))
   }
 
+  /** D7: in-flight LLM-data gate — the streaming twin of C9 (quality
+    * scoring) and C13 (PII scrub). `Quality.scored`/`Quality.scrubbed`
+    * are pure map-side codegen projections, so the SAME code path the
+    * batch queries run applies to a streaming DataFrame unchanged: no
+    * state, no watermark, no shuffle — it composes in front of any
+    * sink here (e.g. the D6 upsert sink) and never buffers or
+    * reorders rows. Docs scoring below `minScore` are dropped and PII
+    * is scrubbed from the survivors — the filter a training-data
+    * pipeline runs BEFORE landing data, rather than as a weekly batch
+    * sweep. StreamingSpec pins row-identity with the batch operators
+    * on the same input. */
   def qualityGate(docs: DataFrame, text: Column, minScore: Double = 0.0): DataFrame =
     graft.operators.Quality.scrubbed(graft.operators.Quality.scored(docs, text), text)
       .filter(col("quality_score") >= minScore)
@@ -537,9 +522,11 @@ object EventStream {
     * the DETERMINISTIC batchId path, so a replay overwrites its own
     * files instead of duplicating them. Growth is append-only (no
     * O(store) rewrite per arrival — the C34 scaling contract);
-    * reading is one parquet scan of the root. The signature shape is
-    * fixed (`SigN`/`SigK`/`SigBandRows`): `nearDupStore` and D16 read
-    * the same store.
+    * reading is one parquet scan of the root. Every reader and writer
+    * of the store signs with `MinHash`'s one signature shape (a store
+    * of another shape has band keys and set hashes no gate could
+    * match): `nearDupStore`, `nearDupStoreSeed` and D16 share the
+    * store D10 writes.
     *
     * Scale: per arrival the gate joins batch-sized signatures against
     * the store's band table (equi-join on the band key; the batch
@@ -560,14 +547,6 @@ object EventStream {
       }
     }
   }
-
-  /** The signature store's shape: shingles of `SigN`, `SigK` minhashes
-    * in bands of `SigBandRows` rows. Every reader and writer of the
-    * store uses it — a store written with another shape has band keys
-    * and set hashes no gate of this shape can match. */
-  private val SigN = 3
-  private val SigK = 8
-  private val SigBandRows = 2
 
   /** The one sink prelude: Update mode, the query's checkpoint, and
     * `body` once per micro-batch. */
@@ -634,7 +613,7 @@ object EventStream {
     val dem0 = graft.operators.Incremental.demotions.sum()
     val (ids0, bBands, bSets) = st("gate construct") {
       graft.operators.Incremental.gate(
-        storeBands, storeSets, gated, col(idName), text, SigN, SigK, SigBandRows, threshold,
+        storeBands, storeSets, gated, col(idName), text, threshold,
         prunedBands = pb, prunedSets = ps)
     }
     // an oversized arrival demoting to the declarative shape is a
@@ -700,14 +679,14 @@ object EventStream {
     // batch tables are micro-batch-sized) — the distributed sidecar
     // jobs cost ~3 s/arrival of scheduling at small batches, which
     // would dominate the gate's floor. The row bounds (a doc has one
-    // set row and at most SigK/SigBandRows band rows — no job: the
-    // caller's batch count is already known) let writeSmall go
+    // set row and at most Hashes/BandRows band rows — no job: a
+    // sink's batch count is already known) let writeSmall go
     // parallel for LARGE arrivals instead of serializing the write
     // through one task; set rows carry whole shingle arrays, so their
     // per-file row budget is much smaller than the bands'.
     graft.sources.Indexed.writeSmall(bBands,
       s"$storePath/bands/batch=$batchId", "bk", pageRows = BandPageRows,
-      nRows = graft.operators.Incremental.bandRowBound(nDocs, SigK, SigBandRows),
+      nRows = graft.operators.Incremental.bandRowBound(nDocs),
       fileRows = 65536)
     graft.sources.Indexed.writeSmall(bSets,
       s"$storePath/sets/batch=$batchId", "id", pageRows = SetPageRows,
@@ -723,11 +702,23 @@ object EventStream {
     storeTables(spark, storePath, eb, es)
   }
 
+  /** Seeds the signature store at `storePath` with the signatures of
+    * ALL of `docs` (uncollapsed, like `Incremental.signatures`), so a
+    * stream gates against them as already seen. They land through
+    * the same indexed write as every arrival's, in one `batch=-1` dir:
+    * a negative id, like a compaction's, can never collide with a
+    * micro-batch's. Run it before the stream starts (the store has a
+    * single writer); a second seed overwrites the first. */
+  def nearDupStoreSeed(docs: DataFrame, idName: String, text: Column,
+                       storePath: String): Unit = {
+    val (bands, sets) = graft.operators.Incremental.signatures(docs, col(idName), text)
+    writeSignatures(bands, sets, storePath, -1L, graft.operators.Pins.count(docs))
+  }
+
   /** The store's signature tables of no docs: they carry its schemas. */
   private def emptySignatures(proto: DataFrame, idName: String, text: Column)
     : (DataFrame, DataFrame) =
-    graft.operators.Incremental.signatures(
-      proto.limit(0), col(idName), text, SigN, SigK, SigBandRows)
+    graft.operators.Incremental.signatures(proto.limit(0), col(idName), text)
 
   /** `nearDupStore` given the store's empty signature frames `eb`/`es`:
     * both roots read with those frames' schemas — a schema-less
@@ -1089,4 +1080,18 @@ object EventStream {
         graft.operators.Upsert.mergeWritePartitioned(
           batch, keys, version.map(col), path, partCol)
     }
+}
+
+/** Event time as microseconds (the state encoding of D2 and D5), and
+  * back. An object of its own: the state functions that call these
+  * ship to executors, and a method of `EventStream` would drag the
+  * (unserializable) `EventStream` object along. */
+private object EventMicros {
+  def toMicros(t: Timestamp): Long =
+    t.getTime * 1000L + (t.getNanos % 1000000) / 1000
+  def fromMicros(us: Long): Timestamp = {
+    val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
+    t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
+    t
+  }
 }

@@ -29,15 +29,15 @@ object DeclarativeRef {
     Shingles.exploded(df, id, text, n).distinct()
 
   /** `Incremental.signatures` from the aggregate forms: bands
-    * (id, bi, bk) and sets (id, s), every doc kept (short and null
-    * docs with an empty set) through a left join. */
-  def incrementalSignatures(docs: DataFrame, id: Column, text: Column,
-                            n: Int = 3, k: Int = 8,
-                            bandRows: Int = 2): (DataFrame, DataFrame) = {
+    * (id, bi, bk) and sets (id, s) at `MinHash`'s signature shape,
+    * every doc kept (short and null docs with an empty set) through a
+    * left join. */
+  def incrementalSignatures(docs: DataFrame, id: Column,
+                            text: Column): (DataFrame, DataFrame) = {
     val ex = Shingles.exploded(docs.select(id.as("id"), text.as("txt")),
-      col("id"), col("txt"), n)
-    val bands = signatureAgg(ex, "id", "sh", k).select(col("id"),
-      posexplode(MinHash.bandArray(k, bandRows)).as(Seq("bi", "bk")))
+      col("id"), col("txt"), MinHash.ShingleWords)
+    val bands = signatureAgg(ex, "id", "sh", MinHash.Hashes).select(col("id"),
+      posexplode(MinHash.bandArray(MinHash.Hashes, MinHash.BandRows)).as(Seq("bi", "bk")))
     val sets = docs.select(id.as("id")).join(Shingles.hashSets(ex), Seq("id"), "left")
       .select(col("id"), coalesce(col("s"), array().cast("array<bigint>")).as("s"))
     (bands, sets)
@@ -61,13 +61,13 @@ object DeclarativeRef {
       .filter(col("jaccard") >= threshold)
 
   /** `MinHash.nearDupPairs` without salting or barriers: aggregate
-    * signatures banded, band self-join, exact verification over the
-    * aggregate shingle sets. */
-  def minHashPairs(docs: DataFrame, id: Column, text: Column, n: Int = 3, k: Int = 8,
-                   bandRows: Int = 2, threshold: Double = 0.5): DataFrame = {
-    val ex = Shingles.exploded(docs, id, text, n)
-    val bands = signatureAgg(ex, "id", "sh", k).select(col("id"),
-      posexplode(MinHash.bandArray(k, bandRows)).as(Seq("bi", "bk")))
+    * signatures at `MinHash`'s shape banded, band self-join, exact
+    * verification over the aggregate shingle sets. */
+  def minHashPairs(docs: DataFrame, id: Column, text: Column,
+                   threshold: Double = 0.5): DataFrame = {
+    val ex = Shingles.exploded(docs, id, text, MinHash.ShingleWords)
+    val bands = signatureAgg(ex, "id", "sh", MinHash.Hashes).select(col("id"),
+      posexplode(MinHash.bandArray(MinHash.Hashes, MinHash.BandRows)).as(Seq("bi", "bk")))
     val cand = bands.as("a").join(bands.as("b"),
         col("a.bi") === col("b.bi") && col("a.bk") === col("b.bk") &&
           col("a.id") < col("b.id"))

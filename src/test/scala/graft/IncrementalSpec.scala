@@ -80,7 +80,8 @@ class IncrementalSpec extends SparkSpec {
     // template text under fresh ids (records/streambench_d10_growth_storm_r14
     // measured the uncollapsed cost growing linearly forever). The
     // collapse must be invisible in verdicts — per-arrival survivors
-    // identical with collapseExact on and off, across arrivals whose
+    // identical on the collapsing micro-batch path and the
+    // uncollapsed `microBatch = false` shape, across arrivals whose
     // STORES were built by their own mode (on-store vs off-store) —
     // while the on-mode store stays at one signature row-group per
     // distinct storm text per arrival.
@@ -101,7 +102,7 @@ class IncrementalSpec extends SparkSpec {
       var (sb, ss) = Incremental.signatures(df(Nil), col("doc_id"), col("text"))
       batches.map { b =>
         val (surv, bb, bs) = Incremental.gate(sb, ss, df(b),
-          col("doc_id"), col("text"), threshold = T, collapseExact = collapse)
+          col("doc_id"), col("text"), threshold = T, microBatch = collapse)
         sb = sb.unionByName(bb); ss = ss.unionByName(bs)
         surv.as[Long].collect().toSet
       }
@@ -122,7 +123,7 @@ class IncrementalSpec extends SparkSpec {
     // and the unique doc, plus the short doc's empty-set row = 5
     var (sb2, ss2) = Incremental.signatures(df(Nil), col("doc_id"), col("text"))
     val (_, bb2, bs2) = Incremental.gate(sb2, ss2, df(batches.head),
-      col("doc_id"), col("text"), threshold = T, collapseExact = true)
+      col("doc_id"), col("text"), threshold = T)
     val setRows = bs2.as[(Long, Seq[Long])].collect()
     assert(setRows.length == 5, s"expected 5 collapsed set rows, got ${setRows.length}")
     assert(setRows.count(_._2.isEmpty) == 1, "the short doc's empty-set row must persist")

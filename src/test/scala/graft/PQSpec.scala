@@ -113,4 +113,19 @@ class PQSpec extends SparkSpec {
       bfScore.get((q, v)).foreach(exp => assert(s == exp, s"($q,$v): $s vs $exp"))
     }
   }
+
+  test("codebooks do not depend on how the corpus is partitioned") {
+    // the same rows trained from one partition and from eight: each
+    // centroid mean is an exact decimal sum, so the codebooks are
+    // bit-identical, not merely close
+    val one = vecs.coalesce(1)
+    val eight = vecs.repartition(8)
+    assert(one.rdd.getNumPartitions == 1 && eight.rdd.getNumPartitions == 8)
+    def pq(df: org.apache.spark.sql.DataFrame) =
+      PQ.train(df, col("vec_id"), col("embedding"), m = 4, k = 8, iters = 2).centroids
+    def coarse(df: org.apache.spark.sql.DataFrame) =
+      PQ.trainCoarse(df, col("vec_id"), col("embedding"), nCells = 8, iters = 2)
+    assert(pq(one) == pq(eight))
+    assert(coarse(one) == coarse(eight))
+  }
 }

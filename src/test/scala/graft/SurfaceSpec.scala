@@ -11,10 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine packages, a fixed list of environment variables, no
   * `spark.graft.*` conf key, one landing path for the streaming
   * sinks and one definition each of the near-dup family's, the text
-  * kernels' and the media probes' shared steps, and a registry load
-  * that is a bare parquet scan — so a one-off probe main, a second
-  * builder, an experiment knob, a copied sink body or helper, or a
-  * repartition over the registry scan cannot come back unnoticed. */
+  * kernels' and the media probes' shared steps, a registry load
+  * that is a bare parquet scan, one minhash signature shape and one
+  * owner of the signature store's files — so a one-off probe main, a
+  * second builder, an experiment knob, a copied sink body or helper,
+  * a repartition over the registry scan, a settable signature shape
+  * or a second store writer cannot come back unnoticed. */
 class SurfaceSpec extends AnyFunSuite {
 
   /** Path under src/main/scala (with '/') → source text. */
@@ -87,10 +89,47 @@ class SurfaceSpec extends AnyFunSuite {
     val total = sources.values.map(occurrences(_, """\.foreachBatch\b""")).sum
     assert(total == 1, s".foreachBatch occurs $total times in src/main")
     val es = sources("graft/streaming/EventStream.scala")
-    val calls = Seq("""Incremental\.gate\(""", """(?<!def )\bgateStore\(""",
-      """(?<!def )\bwriteSignatures\(""")
+    val calls = Seq("""Incremental\.gate\(""", """(?<!def )\bgateStore\(""")
       .map(p => p -> occurrences(es, p)).toMap
     assert(calls.values.forall(_ == 1), s"call sites in EventStream: $calls")
+    // the landing step and the store seed: both append through it
+    assert(occurrences(es, """(?<!def )\bwriteSignatures\(""") == 2)
+  }
+
+  test("the signature store's files have one owner: EventStream") {
+    val writers = sources.collect {
+      case (f, t) if occurrences(t, """Indexed\.(write|writeSmall|writeSidecar)\(""") > 0 => f
+    }.toSet
+    assert(writers == Set("graft/streaming/EventStream.scala"))
+    val sb = sources("graft/StreamBench.scala")
+    val hits = Seq("""Indexed\.""", """store/(bands|sets)""", """batch=""", """pageRows""",
+      """nearDupStoreCompact""").filter(p => occurrences(sb, p) > 0)
+    assert(hits.isEmpty, s"StreamBench writes the store itself: ${hits.mkString(", ")}")
+  }
+
+  test("one minhash signature shape: no shape parameter, no second set of constants") {
+    // the parameter list of `def name(` in `file`
+    def params(file: String, name: String): String = {
+      val m = (s"(?s)def $name\\((.*?)\\)\\s*:").r.findFirstMatchIn(sources(file))
+      assert(m.isDefined, s"$file: no def $name")
+      m.get.group(1)
+    }
+    val defs = Seq(
+      "graft/operators/MinHash.scala" -> "nearDupPairs",
+      "graft/operators/Incremental.scala" -> "signatures",
+      "graft/operators/Incremental.scala" -> "gate",
+      "graft/operators/Incremental.scala" -> "bandRowBound",
+      "graft/operators/Contamination.scala" -> "fuzzyMatches")
+    val shaped = for {
+      (f, d) <- defs
+      p <- Seq("n", "k", "bandRows") if occurrences(params(f, d), s"\\b$p\\s*:") > 0
+    } yield s"$d($p)"
+    assert(shaped.isEmpty, shaped.mkString(", "))
+    val names = for {
+      (f, t) <- sources.toSeq
+      n <- Seq("SigN", "SigK", "SigBandRows", "collapseExact") if occurrences(t, s"\\b$n\\b") > 0
+    } yield s"$f: $n"
+    assert(names.isEmpty, names.mkString("\n"))
   }
 
   test("src/main names no spark.graft.* conf key") {
@@ -111,8 +150,12 @@ class SurfaceSpec extends AnyFunSuite {
       Map("graft/operators/Jaccard.scala" -> 1))
     assert(count("""getInstance\("MD5"\)""", _.startsWith("graft/plans/")) ==
       Map("graft/plans/KernelBytes.scala" -> 1))
-    for (d <- Seq("isWs", "round6"))
+    for (d <- Seq("isWs", "round6", "tokenBounds"))
       assert(count(s"""def $d\\b""") == Map("graft/plans/KernelBytes.scala" -> 1), d)
+    // the token scan that keeps each token's byte range is tokenBounds;
+    // the other walk (CompiledTokenWeights.nbScore) keeps none
+    assert(count("""while \(i < len && !isWs\(bytes\(i\)\)\) i \+= 1""") ==
+      Map("graft/plans/KernelBytes.scala" -> 1, "graft/plans/TextExpressions.scala" -> 1))
     assert(occurrences(sources("graft/sources/Multimodal.scala"), """def walk\(""") == 1)
     assert(count("""rawTextCol|plainColName|resolveColName""").isEmpty)
   }
