@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.plans.{PQExpressions, VectorExpressions}
+import graft.plans.PQExpressions
 
 /** Product-quantization ANN (SURVEY C27) — compressed-domain
   * similarity search in the IVFADC family (Jégou, Douze, Schmid,
@@ -169,7 +168,8 @@ object PQ {
     * nearest cells' codes before the exact re-rank. The cell
     * restriction multiplies PQ's 32× memory saving by an
     * nprobe/nCells scan saving; the only shuffles are the per-query
-    * rank and the rerank join (cell probing is a broadcast join). */
+    * rank and the rerank join (cell probing is a broadcast join).
+    * Zero-norm vectors and queries never rank (see `Similarity.normed`). */
   def ivfAdcTopK(corpus: DataFrame, queries: DataFrame, id: Column, vec: Column,
                  model: Model, coarse: Seq[Seq[Double]], k: Int,
                  nprobe: Int = 4, rerank: Int = 32): DataFrame = {
@@ -178,47 +178,32 @@ object PQ {
     val index = corpus.select(id.as("vec_id"),
       PQExpressions.nearestCodes(vec, model.centroids).as("codes"),
       PQExpressions.nearestCell(vec, coarse).as("cell"))
-    // per-query probe list: nprobe nearest coarse cells, map-side
-    val cellDots = transform(sequence(lit(0), lit(coarse.length - 1)), c =>
-      struct(element_at(col("cdots"), c + 1).as("d"), c.cast("int").as("c")))
-    val q = queries.select(id.as("query_id"),
-        PQExpressions.adcTable(vec, model.centroids).as("tbl"),
-        PQExpressions.centroidDots(vec, coarse).as("cdots"))
-      .select(col("query_id"), col("tbl"),
-        slice(reverse(array_sort(cellDots)), 1, nprobe).as("probes"))
-      .select(col("query_id"), col("tbl"), explode(col("probes")).as("p"))
-      .select(col("query_id"), col("tbl"), col("p.c").as("cell"))
-    val approx = index.join(broadcast(q), "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", aggregate(
-        zip_with(col("codes"), col("tbl"), (c, t) => element_at(t, c + 1)),
-        lit(0.0), (acc, x) => acc + x))
-      .withColumn("arank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("vec_id"))))
-      .filter(col("arank") <= rerank)
-      .select(col("query_id"), col("vec_id"))
-    rerankExact(approx, corpus, queries, id, vec, k)
+    val q = Similarity.probeList(queries, id, vec, coarse, nprobe,
+      "tbl" -> PQExpressions.adcTable(vec, model.centroids))
+    rerankExact(shortlist(index.join(broadcast(q), "cell"), rerank), corpus, queries, id, vec, k)
   }
 
   /** ADC top-k: approximate-cosine scan over codes, exact re-rank of
     * the top `rerank` candidates per query against the full vectors.
     * Returns (query_id, rank, vec_id, cosine) with the EXACT rounded
-    * cosine, rank by (cosine desc, vec_id). */
+    * cosine, rank by (cosine desc, vec_id). Zero-norm vectors and
+    * queries never rank (see `Similarity.normed`). */
   def adcTopK(encoded: DataFrame, corpus: DataFrame, queries: DataFrame,
               id: Column, vec: Column, model: Model, k: Int,
               rerank: Int = 32): DataFrame = {
     val q = queries.select(id.as("query_id"),
       PQExpressions.adcTable(vec, model.centroids).as("tbl"))
-    val approx = encoded.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", aggregate(
-        zip_with(col("codes"), col("tbl"), (c, t) => element_at(t, c + 1)),
-        lit(0.0), (acc, x) => acc + x))
-      .withColumn("arank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("vec_id"))))
-      .filter(col("arank") <= rerank)
+    rerankExact(shortlist(encoded.crossJoin(broadcast(q)), rerank), corpus, queries, id, vec, k)
+  }
+
+  /** (query_id, vec_id): each query's `rerank` best candidates by ADC
+    * score — a candidate's m codes look up the query's m×k table and
+    * sum, fully codegen'd. */
+  private def shortlist(candidates: DataFrame, rerank: Int): DataFrame = {
+    val adc = aggregate(zip_with(col("codes"), col("tbl"), (c, t) => element_at(t, c + 1)),
+      lit(0.0), (acc, x) => acc + x)
+    Similarity.topK(candidates.filter(col("vec_id") =!= col("query_id")), "adc", adc, rerank)
       .select(col("query_id"), col("vec_id"))
-    rerankExact(approx, corpus, queries, id, vec, k)
   }
 
   /** Exact re-rank: (query_id, vec_id) candidates join back to true
@@ -227,18 +212,9 @@ object PQ {
   private def rerankExact(candidates: DataFrame, corpus: DataFrame,
                           queries: DataFrame, id: Column, vec: Column,
                           k: Int): DataFrame = {
-    val full = corpus.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
-      .withColumn("nrm", VectorExpressions.norm(col("v")))
-    val qfull = queries.select(id.as("query_id"), vec.cast("array<double>").as("qv"))
-      .withColumn("qn", VectorExpressions.norm(col("qv")))
-    candidates
-      .join(full, "vec_id")
-      .join(broadcast(qfull), "query_id")
-      .withColumn("cosine",
-        round(VectorExpressions.dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+    val full = Similarity.normed(corpus, id, vec, "vec_id", "v", "nrm")
+    val qfull = Similarity.normed(queries, id, vec, "query_id", "qv", "qn")
+    Similarity.topK(candidates.join(full, "vec_id").join(broadcast(qfull), "query_id"),
+      "cosine", Similarity.cosine(col("qv"), col("v"), col("qn"), col("nrm")), k)
   }
 }

@@ -8,12 +8,15 @@ import graft.plans.VectorExpressions
 /** Embedding similarity operators (SURVEY C5-C7): threshold pair
   * dedup, brute-force ANN top-k, and LSH-bucketed ANN.
   *
-  * All scores are double cosine, rounded to 6 before thresholds and
-  * ranking (SURVEY §4.3), with a vec-id tie-break so rankings are
-  * total orders. The per-pair math runs through the native codegen
-  * expression `graft.plans.ArrayDotProduct` (E2) — identical results
-  * to the higher-order-function reference in `VectorFunctions`, at
-  * whole-stage-codegen speed.
+  * Every score is the one rounded cosine (`cosine`, SURVEY §4.3) over
+  * vectors that pass the one zero-norm gate (`normed`); thresholds go
+  * through `similar`, per-query ranks through `topK` (cosine desc,
+  * vec-id tie-break, so rankings are total orders) and IVF probes
+  * through `probeList` — PQ's ADC indexes share all of them. The
+  * per-pair math runs through the native codegen expression
+  * `graft.plans.ArrayDotProduct` (E2), bit-identical to the
+  * higher-order-function form kept in test scope
+  * (`DeclarativeRef.cosine`), at whole-stage-codegen speed.
   *
   * Scale:
   *  - `cosinePairs` precomputes each vector's norm ONCE (map-side), so
@@ -30,8 +33,30 @@ import graft.plans.VectorExpressions
   */
 object Similarity {
 
-  /** Rounded cosine between two vector columns. */
-  def score(a: Column, b: Column): Column = round(VectorExpressions.cosine(a, b), 6)
+  /** (idName, vecName, normName): `vec` as array<double> and its L2
+    * norm, computed once per vector — with the engine-wide ZERO-NORM
+    * CONTRACT applied. Cosine with the zero vector is undefined (0/0):
+    * under ANSI it raises DIVIDE_BY_ZERO, and without ANSI its NaN
+    * satisfies every `>= threshold` and ranks first under `desc`
+    * (Spark orders NaN greatest) — a spurious pair with every vector,
+    * k arbitrary rows for a zero-norm query. So zero-norm rows never
+    * pair, never rank and never query: every scored operator here and
+    * in `PQ` projects its inputs through this gate. The two cell
+    * paths follow the same contract without a row filter: `ivfAssign`
+    * gives a zero-norm vector a null cell (it falls out of every cell
+    * equi-join, and SemDeDup keeps it as a survivor), and
+    * `probeList` drops a query whose centroid dots are null. */
+  private[operators] def normed(df: DataFrame, id: Column, vec: Column,
+                                idName: String, vecName: String, normName: String): DataFrame =
+    df.select(id.as(idName), vec.cast("array<double>").as(vecName))
+      .withColumn(normName, VectorExpressions.norm(col(vecName)))
+      .filter(col(normName) > 0)
+
+  /** The score: cosine of `va`, `vb` from their precomputed norms,
+    * rounded to 6 (SURVEY §4.3) before any threshold or rank. Norms
+    * are > 0 by the `normed` gate. */
+  private[graft] def cosine(va: Column, vb: Column, na: Column, nb: Column): Column =
+    round(VectorExpressions.dot(va, vb) / (na * nb), 6)
 
   /** Allocation-free necessary condition for `round(dot/(na·nb), 6) >=
     * t`, used as the FIRST conjunct of every threshold-pair join
@@ -40,13 +65,58 @@ object Similarity {
     * evaluated candidate, which at n²-shaped candidate volume IS the
     * join's cost (measured 4 μs/pair against ~50 ns for the 64-dim
     * dot). `round(x, 6) >= t` implies `x >= t − 0.5e-6`, so
-    * `dot >= (t − 1e-6)·na·nb` (norms are > 0 — zero-norm rows are
-    * gated out upstream) rejects non-pairs with one fused-codegen dot
-    * + multiply + compare and NO allocation; only near-threshold
-    * survivors pay the exact decimal round, which stays the deciding
-    * conjunct so results are bit-identical. */
+    * `dot >= (t − 1e-6)·na·nb` (norms are > 0, see `normed`) rejects
+    * non-pairs with one fused-codegen dot + multiply + compare and NO
+    * allocation; only near-threshold survivors pay the exact decimal
+    * round, which stays the deciding conjunct so results are
+    * bit-identical. */
   private def rawGate(dot: Column, na: Column, nb: Column, threshold: Double): Column =
     dot >= lit(threshold - 1e-6) * na * nb
+
+  /** The threshold-pair condition between join sides `a` and `b`, each
+    * carrying vector `v` and norm `norm`: rounded cosine ≥ threshold,
+    * behind the allocation-free `rawGate`. */
+  private def similar(norm: String, threshold: Double): Column = {
+    val (va, vb, na, nb) = (col("a.v"), col("b.v"), col(s"a.$norm"), col(s"b.$norm"))
+    rawGate(VectorExpressions.dot(va, vb), na, nb, threshold) &&
+      cosine(va, vb, na, nb) >= threshold
+  }
+
+  /** The pair cosine `similar` decides on, as an output column. */
+  private def pairCosine(norm: String): Column =
+    cosine(col("a.v"), col("b.v"), col(s"a.$norm"), col(s"b.$norm")).as("cosine")
+
+  /** Per-query top-k: `score` as column `name`, ranked by (`name`
+    * desc, vec_id) within each `query_id` and kept to rank ≤ k; returns
+    * (query_id, rank, vec_id, name). The exact indexes rank on the
+    * rounded `cosine`, PQ's ADC shortlist on its approximate score. */
+  private[operators] def topK(pairs: DataFrame, name: String, score: Column, k: Int): DataFrame =
+    pairs.withColumn(name, score)
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("query_id")).orderBy(col(name).desc, col("vec_id"))))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("vec_id"), col(name))
+
+  /** One row per (query, probed cell): each query's `nprobe` nearest
+    * cells of the codebook `cents`, as (query_id, carry…, cell). The
+    * centroid dots sort as struct(−dot, cell) ascending = (dot desc,
+    * lowest cell on ties) inside one projection — no window, no
+    * shuffle. A query with null centroid dots (zero-norm or wrong
+    * dimension) is dropped, per the `normed` contract: its (null, c)
+    * structs would sort FIRST and probe cells 0..nprobe−1 with
+    * undefined scores. */
+  private[operators] def probeList(queries: DataFrame, id: Column, vec: Column,
+                                   cents: Seq[Seq[Double]], nprobe: Int,
+                                   carry: (String, Column)*): DataFrame = {
+    val cellDots = transform(sequence(lit(0), lit(cents.length - 1)), c =>
+      struct((-element_at(col("cdots"), c + 1)).as("nd"), c.cast("int").as("c")))
+    val kept = col("query_id") +: carry.map { case (n, _) => col(n) }
+    queries.select((id.as("query_id") +: carry.map { case (n, c) => c.as(n) }) :+
+        graft.plans.PQExpressions.centroidDots(vec, cents).as("cdots"): _*)
+      .filter(col("cdots").isNotNull)
+      .select(kept :+ explode(slice(array_sort(cellDots), 1, nprobe)).as("p"): _*)
+      .select(kept :+ col("p.c").as("cell"): _*)
+  }
 
   /** (vec_a, vec_b, cosine) for all pairs with rounded cosine ≥ t.
     * Norms computed once per vector, not per pair, and the threshold
@@ -55,24 +125,11 @@ object Similarity {
     * pairs. This all-pairs form is the EXACTNESS ORACLE (specs diff
     * `cosinePairsBucketed` against it) — the shipped C5 query runs
     * the bucketed plan, which never builds the O(n²) loop.
-    *
-    * Zero-norm vectors never pair: cosine with the zero vector is
-    * undefined, and without the explicit gate its 0/0 = NaN would
-    * satisfy `>= threshold` under Spark's NaN-is-greatest ordering —
-    * a spurious pair with EVERY vector. Same contract as the
-    * bucketed form and the IVF index. */
+    * Zero-norm vectors never pair (see `normed`). */
   def cosinePairs(vecs: DataFrame, id: Column, vec: Column, threshold: Double): DataFrame = {
-    val v = vecs.select(id.as("id"), vec.cast("array<double>").as("v"))
-      .withColumn("nrm", VectorExpressions.norm(col("v")))
-      .filter(col("nrm") > 0)
-    val cosine =
-      round(VectorExpressions.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")), 6)
-    v.as("a").join(v.as("b"),
-        col("a.id") < col("b.id") &&
-          rawGate(VectorExpressions.dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm"), threshold) &&
-          cosine >= threshold)
-      .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"), cosine.as("cosine"))
+    val v = normed(vecs, id, vec, "id", "v", "nrm")
+    v.as("a").join(v.as("b"), col("a.id") < col("b.id") && similar("nrm", threshold))
+      .select(col("a.id").as("vec_a"), col("b.id").as("vec_b"), pairCosine("nrm"))
   }
 
   private def clamp1(c: Column): Column = least(greatest(c, lit(-1.0)), lit(1.0))
@@ -125,12 +182,10 @@ object Similarity {
     * projection (native `centroidDots` against the plan-reference
     * codebook — O(1) expression nodes however large k gets), argmax +
     * member angle via an in-projection array sort. Zero-norm vectors
-    * never pair (same contract as `cosinePairs` and the IVF index;
-    * cosine with the zero vector is undefined): they are gated out
-    * EXPLICITLY on `nrm > 0` before assignment — relying on the null
-    * cdots alone is wrong, because the assignment's array_sort puts
-    * the (null, 0) struct FIRST, which would silently park every
-    * zero-norm vector in cell 0 with NaN pair cosines. */
+    * never pair: `normed` gates them out before assignment — the null
+    * cdots alone would not, because the assignment's array_sort puts
+    * the (null, 0) struct FIRST and would park every zero-norm vector
+    * in cell 0. */
   def cosinePairsBucketed(vecs: DataFrame, id: Column, vec: Column, threshold: Double,
                           nCells: Int = 0, iters: Int = 1,
                           targetCellSize: Int = 64): DataFrame = {
@@ -144,10 +199,7 @@ object Similarity {
     // aggregate, and BOTH sides of the pair join would otherwise each
     // re-scan the source and re-run the norm projection — five-plus
     // full passes to set up one join
-    val v = vecs.select(id.as("id"), vec.cast("array<double>").as("v"))
-      .withColumn("nrm", VectorExpressions.norm(col("v")))
-      .filter(col("nrm") > 0)
-      .localCheckpoint(true)
+    val v = normed(vecs, id, vec, "id", "v", "nrm").localCheckpoint(true)
 
     val n = v.count()
     if (n < 2) return cosinePairs(vecs, id, vec, threshold)
@@ -192,40 +244,25 @@ object Similarity {
     } yield (ca, cb)
     val cc = ccPairs.toDF("ca", "cb")
 
-    val cosine =
-      round(VectorExpressions.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")), 6)
     asg.as("a").join(broadcast(cc), col("a.cell") === col("ca"))
       .join(asg.as("b"),
         col("b.cell") === col("cb") &&
           (col("ca") =!= col("cb") || col("a.id") < col("b.id")) &&
-          rawGate(VectorExpressions.dot(col("a.v"), col("b.v")),
-            col("a.nrm"), col("b.nrm"), threshold) &&
-          cosine >= threshold)
+          similar("nrm", threshold))
       .select(least(col("a.id"), col("b.id")).as("vec_a"),
-        greatest(col("a.id"), col("b.id")).as("vec_b"), cosine.as("cosine"))
+        greatest(col("a.id"), col("b.id")).as("vec_b"), pairCosine("nrm"))
   }
 
   /** Exact top-k neighbors per query vector (query set should be
     * small — it is broadcast). Returns (query_id, rank, vec_id,
     * cosine), rank by (cosine desc, vec_id). Zero-norm rows drop out
-    * of BOTH sides (cosine undefined; NaN would rank first under
-    * desc ordering) — the engine-wide zero-norm contract. */
+    * of both sides (see `normed`). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      id: Column, vec: Column, k: Int): DataFrame = {
-    val c = corpus.select(id.as("vec_id"), vec.cast("array<double>").as("cv"))
-      .withColumn("cn", VectorExpressions.norm(col("cv")))
-      .filter(col("cn") > 0)
-    val q = queries.select(id.as("query_id"), vec.cast("array<double>").as("qv"))
-      .withColumn("qn", VectorExpressions.norm(col("qv")))
-      .filter(col("qn") > 0)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        round(VectorExpressions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+    val c = normed(corpus, id, vec, "vec_id", "cv", "cn")
+    val q = normed(queries, id, vec, "query_id", "qv", "qn")
+    topK(c.join(broadcast(q), col("vec_id") =!= col("query_id")),
+      "cosine", cosine(col("qv"), col("cv"), col("qn"), col("cn")), k)
   }
 
   /** ±1 hyperplane component for (table t, plane p, dim d): parity of
@@ -266,46 +303,25 @@ object Similarity {
     * corpus scan — zero exchanges until the per-query rank.
     *
     * Search: pick each query's `nprobe` nearest cells map-side
-    * (centroid dots against the same literal codebook, sorted in an
-    * array — no window, no shuffle), broadcast the probe list, and
-    * rank only those cells' vectors by exact rounded cosine. The
-    * per-query rank is the plan's ONLY hash exchange (PlanSpec pins
-    * that); recall tunes with nprobe like any IVF index. */
+    * (`probeList`), broadcast the probe list, and rank only those
+    * cells' vectors by exact rounded cosine. The per-query rank is
+    * the plan's ONLY hash exchange (PlanSpec pins that); recall tunes
+    * with nprobe like any IVF index. Zero-norm vectors and queries
+    * never rank (see `normed`). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, id: Column, vec: Column,
-              k: Int, nCells: Int = 16, nprobe: Int = 4, iters: Int = 2,
-              dims: Int = 64): DataFrame = {
+              k: Int, nCells: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
     val cents = PQ.trainCoarse(corpus, id, vec, nCells, iters)
     val index = ivfAssign(corpus, id, vec, cents)
-    // probe list: struct(-dot, cell) sorted ascending = (dot desc,
-    // cell asc) — deterministic, computed inside one projection
-    val cellDots = transform(sequence(lit(0), lit(cents.length - 1)), c =>
-      struct((-element_at(col("cdots"), c + 1)).as("nd"), c.cast("int").as("c")))
-    // null cdots ⇔ zero-norm (or wrong-dim) query: DROP it, matching
-    // the corpus-side null-cell contract. Without the filter the
-    // (null, c) probe structs sort FIRST and a zero-norm query would
-    // probe cells 0..nprobe-1 and return k arbitrary NaN-cosine rows.
-    val probes = queries.select(id.as("query_id"),
-        vec.cast("array<double>").as("qv"),
-        graft.plans.PQExpressions.centroidDots(vec, cents).as("cdots"))
-      .filter(col("cdots").isNotNull)
-      .select(col("query_id"), col("qv"), VectorExpressions.norm(col("qv")).as("qn"),
-        explode(slice(array_sort(cellDots), 1, nprobe)).as("p"))
-      .select(col("query_id"), col("qv"), col("qn"), col("p.c").as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    index.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        round(VectorExpressions.dot(col("qv"), col("v")) / (col("qn") * col("vn")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+    val probes = probeList(queries, id, vec, cents, nprobe, "qv" -> vec.cast("array<double>"))
+      .select(col("query_id"), col("qv"), VectorExpressions.norm(col("qv")).as("qn"), col("cell"))
+    topK(index.join(broadcast(probes), Seq("cell")).filter(col("vec_id") =!= col("query_id")),
+      "cosine", cosine(col("qv"), col("v"), col("qn"), col("vn")), k)
   }
 
   /** (vec_id, v, vn, cell) — the IVF index assignment: one map-side
     * projection (native argmax against the literal centroids), no
-    * exchange anywhere in its plan (PlanSpec asserts). Zero-norm
-    * vectors get a null cell and fall out of the probe equi-join. */
+    * exchange anywhere in its plan (PlanSpec asserts). A zero-norm
+    * vector gets a null cell (see `normed`). */
   private[graft] def ivfAssign(corpus: DataFrame, id: Column, vec: Column,
                                cents: Seq[Seq[Double]]): DataFrame =
     corpus.select(id.as("vec_id"), vec.cast("array<double>").as("v"))
@@ -338,10 +354,8 @@ object Similarity {
     * cells stay bounded — the within-cell candidate scan is the same
     * cost model the paper's per-cluster pass has.
     *
-    * Zero-norm vectors: cosine with them is undefined, so they can
-    * never match — they get a null cell from `ivfAssign`, fall out of
-    * the cell equi-join on BOTH sides, and always survive (with null
-    * cell), consistent with the engine-wide zero-norm contract.
+    * Zero-norm vectors never match and always survive, with a null
+    * cell (see `normed`).
     *
     * `nCells = 0` (the default) is ADAPTIVE, like C5's bucketed pair
     * join: k = ⌈√(n/targetCellSize)⌉ from a count-only scan, so the
@@ -365,14 +379,10 @@ object Similarity {
   def semDedupWith(vecs: DataFrame, id: Column, vec: Column, threshold: Double,
                    cents: Seq[Seq[Double]]): DataFrame = {
     val asg = ivfAssign(vecs, id, vec, cents)
-    val cosine =
-      round(VectorExpressions.dot(col("a.v"), col("b.v")) / (col("a.vn") * col("b.vn")), 6)
     val dropped = asg.as("a").join(asg.as("b"),
         col("a.cell") === col("b.cell") &&
           col("a.vec_id") < col("b.vec_id") &&
-          rawGate(VectorExpressions.dot(col("a.v"), col("b.v")),
-            col("a.vn"), col("b.vn"), threshold) &&
-          cosine >= threshold)
+          similar("vn", threshold))
       .select(col("b.vec_id").as("vec_id")).distinct()
     asg.join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"))
@@ -402,14 +412,10 @@ object Similarity {
     val sa = ivfAssign(seen, id, vec, cents).withColumn("seen", lit(true))
     val ba = ivfAssign(batch, id, vec, cents)
     val pool = sa.unionByName(ba.withColumn("seen", lit(false)))
-    val cosine =
-      round(VectorExpressions.dot(col("a.v"), col("b.v")) / (col("a.vn") * col("b.vn")), 6)
     val dropped = pool.as("a").join(ba.as("b"),
         col("a.cell") === col("b.cell") &&
           (col("a.seen") || col("a.vec_id") < col("b.vec_id")) &&
-          rawGate(VectorExpressions.dot(col("a.v"), col("b.v")),
-            col("a.vn"), col("b.vn"), threshold) &&
-          cosine >= threshold)
+          similar("vn", threshold))
       .select(col("b.vec_id").as("vec_id")).distinct()
     ba.join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell"))
@@ -419,30 +425,21 @@ object Similarity {
     * share a (table, signature) bucket with the query; exact rounded
     * cosine ranks them. Returns (query_id, rank, vec_id, cosine) with
     * rank ≤ k. The bucket join is the only shuffle. Zero-norm rows
-    * drop out of both sides (engine-wide contract — a zero vector
-    * hashes to the all-zeros signature deterministically, so without
-    * the gate it would collide into real buckets with NaN cosine). */
+    * drop out of both sides (see `normed`: a zero vector hashes to the
+    * all-zeros signature, so it would collide into real buckets). */
   def lshTopK(corpus: DataFrame, queries: DataFrame, id: Column, vec: Column,
               k: Int, tables: Int = 4, planes: Int = 6, dims: Int = 64): DataFrame = {
     def bucketed(df: DataFrame, idName: String, vecName: String, nName: String) =
-      df.select(id.as(idName), vec.cast("array<double>").as(vecName))
-        .withColumn(nName, VectorExpressions.norm(col(vecName)))
-        .filter(col(nName) > 0)
+      normed(df, id, vec, idName, vecName, nName)
         .select(col(idName), col(vecName), col(nName),
           posexplode(array((0 until tables).map(t =>
             lshSignature(col(vecName), t, planes, dims)): _*)).as(Seq("t", "sig")))
     val c = bucketed(corpus, "vec_id", "cv", "cn")
     val q = bucketed(queries, "query_id", "qv", "qn")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    c.join(broadcast(q), Seq("t", "sig"))
+    val pairs = c.join(broadcast(q), Seq("t", "sig"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("qv"), col("cv"), col("qn"), col("cn"))
       .distinct() // a pair can collide in several tables
-      .withColumn("cosine",
-        round(VectorExpressions.dot(col("qv"), col("cv")) / (col("qn") * col("cn")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id"), col("cosine"))
+    topK(pairs, "cosine", cosine(col("qv"), col("cv"), col("qn"), col("cn")), k)
   }
 }

@@ -173,10 +173,6 @@ object VectorExpressions {
   /** L2 norm via the native dot. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine similarity via the native dot (unrounded — callers round
-    * per SURVEY §4.3). */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Best rounded-cosine match against a plan-constant matrix; see
     * `BestCosineMatch`. */
   def bestCosineMatch(vec: Column, rows: Seq[Seq[Double]],

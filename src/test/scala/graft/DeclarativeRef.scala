@@ -10,7 +10,9 @@ import graft.operators.{Classifier, Dsir, LangModel, MinHash, Quality, Shingles}
   * its operator ran before round 18 moved the work into one map-side
   * pass. They live in test scope only — the engine runs the kernels —
   * and the specs pin kernel == reference row for row, so a kernel
-  * that drifts from the plain Spark formulation fails by name. */
+  * that drifts from the plain Spark formulation fails by name. The
+  * vector section is the higher-order-function twin of the native dot
+  * (`plans.ArrayDotProduct`) under the embedding operators' cosine. */
 object DeclarativeRef {
 
   // --- MinHash / Jaccard / Incremental -------------------------------
@@ -381,4 +383,20 @@ object DeclarativeRef {
       .groupBy(col("id"), col("benchmark"))
       .agg(count(lit(1)).as("shared_grams"))
   }
+
+  // --- Vectors (C5-C7) ------------------------------------------------
+
+  /** Left-to-right double dot product of two float/double arrays, as
+    * `aggregate(zip_with(…))`: floats cast to double before any
+    * multiply, the sum folded in order (SURVEY §4.3). */
+  def dot(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
+  /** L2 norm over `dot`. */
+  def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Unrounded cosine over `dot` and `norm`. */
+  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{HtmlFunctions, TextFunctions, VectorFunctions}
+import graft.functions.{HtmlFunctions, TextFunctions}
 import graft.plans.VectorExpressions
 
 class FunctionsSpec extends SparkSpec {
@@ -129,12 +129,19 @@ class FunctionsSpec extends SparkSpec {
     val vecs = Seq.tabulate(20)(i =>
       (i.toLong, Array.tabulate(16)(j => math.sin(i * 17 + j * 3).toFloat)))
     val df = vecs.toDF("id", "v")
+    val (a, b) = (col("a.v"), col("b.v"))
     val both = df.as("a").crossJoin(df.as("b")).select(
-      VectorFunctions.cosine(col("a.v"), col("b.v")).as("hof"),
-      VectorExpressions.cosine(col("a.v"), col("b.v")).as("native"))
+      DeclarativeRef.dot(a, b).as("hof_dot"),
+      VectorExpressions.dot(a, b).as("native_dot"),
+      round(DeclarativeRef.cosine(a, b), 6).as("hof"),
+      graft.operators.Similarity.cosine(a, b,
+        VectorExpressions.norm(a), VectorExpressions.norm(b)).as("native"))
     val rows = both.collect()
     assert(rows.length == 400)
-    rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1)))
+    rows.foreach { r =>
+      assert(r.getDouble(0) == r.getDouble(1))
+      assert(r.getDouble(2) == r.getDouble(3))
+    }
   }
 
   test("graft_cosine / graft_dot / graft_sorted_intersect_size usable from SQL after register") {

@@ -83,16 +83,24 @@ class PQSpec extends SparkSpec {
       PQExpressions.nearestCodes(col("embedding"), model.centroids).as("codes"),
       PQExpressions.adcTable(col("embedding"), model.centroids).as("tbl")).head()
     assert(probe.isNullAt(0) && probe.isNullAt(1) && probe.isNullAt(2))
-    // and the end-to-end path simply drops the zero row instead of
-    // crashing at element_at (the pre-fix failure mode): the old HOF
-    // form raised ANSI DIVIDE_BY_ZERO at normalization; the native
-    // form's documented contract is NULL → ranked last → absent
+    // and both ADC indexes drop a zero-norm vector and a zero-norm
+    // query (see Similarity.normed). rerank ≥ corpus size sends every
+    // candidate, the zero-norm one included, to the exact re-rank, and
+    // the zero-norm query is re-ranked too — where the cosine would
+    // divide by a zero norm
+    val coarse = PQ.trainCoarse(vecs, col("vec_id"), col("embedding"), nCells = 8, iters = 1)
     val corpus = vecs.unionByName(zeroed)
-    val queries = vecs.filter(col("vec_id") < 5)
-    val encoded = PQ.encode(corpus, col("vec_id"), col("embedding"), model)
-    val res = PQ.adcTopK(encoded, corpus, queries, col("vec_id"), col("embedding"),
-      model, k = 5, rerank = 40).collect()
-    assert(res.nonEmpty && !res.exists(_.getLong(2) == 9999L))
+    val queries = corpus.filter(col("vec_id") < 3 || col("vec_id") === 9999L)
+    val adc = PQ.adcTopK(PQ.encode(corpus, col("vec_id"), col("embedding"), model),
+        corpus, queries, col("vec_id"), col("embedding"), model, k = 5, rerank = Int.MaxValue)
+      .collect()
+    val ivf = PQ.ivfAdcTopK(corpus, queries, col("vec_id"), col("embedding"),
+        model, coarse, k = 5, nprobe = 8, rerank = Int.MaxValue).collect()
+    for ((name, res) <- Seq("adcTopK" -> adc, "ivfAdcTopK" -> ivf)) {
+      assert(res.map(_.getLong(0)).toSet == Set(0L, 1L, 2L), s"$name: queries answered")
+      assert(res.length == 15, s"$name: k rows per real query")
+      assert(!res.exists(_.getLong(2) == 9999L), s"$name: zero-norm vector ranked")
+    }
   }
 
   test("adcTopK: recall@5 vs brute force >= 0.8 with rerank, scores exact") {

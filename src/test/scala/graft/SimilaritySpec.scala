@@ -102,7 +102,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivfTopK scores match brute force on its candidates; near-dup found with full probe") {
     val got = Similarity.ivfTopK(vecs, vecs.filter(col("vec_id") === 0),
-        col("vec_id"), col("embedding"), k = 5, nCells = 3, nprobe = 3, iters = 2, dims = 8)
+        col("vec_id"), col("embedding"), k = 5, nCells = 3, nprobe = 3, iters = 2)
       .select("vec_id", "cosine").as[(Long, Double)].collect()
     assert(got.nonEmpty)
     assert(!got.map(_._1).contains(0L))
@@ -240,7 +240,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // zero-norm QUERY produces no rows (not k arbitrary NaN rows)
     val zq = Similarity.ivfTopK(zv, zv.filter(col("vec_id") === 0),
-      col("vec_id"), col("embedding"), k = 3, nCells = 3, nprobe = 3, iters = 2, dims = 8)
+      col("vec_id"), col("embedding"), k = 3, nCells = 3, nprobe = 3, iters = 2)
     assert(zq.isEmpty, "zero-norm IVF query returned rows")
     assert(Similarity.bruteForceTopK(zv, zv.filter(col("vec_id") === 0),
       col("vec_id"), col("embedding"), 3).isEmpty, "zero-norm brute-force query returned rows")
@@ -249,7 +249,7 @@ class SimilaritySpec extends SparkSpec {
       "zero-norm LSH query returned rows")
     // zero-norm CORPUS vector is absent from real queries' results
     val res = Similarity.ivfTopK(zv, zv.filter(col("vec_id") === 2),
-        col("vec_id"), col("embedding"), k = 10, nCells = 3, nprobe = 3, iters = 2, dims = 8)
+        col("vec_id"), col("embedding"), k = 10, nCells = 3, nprobe = 3, iters = 2)
       .select("vec_id", "cosine").as[(Long, Double)].collect()
     assert(res.nonEmpty && !res.map(_._1).contains(0L) && !res.exists(_._2.isNaN))
   }

@@ -12,11 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * `spark.graft.*` conf key, one landing path for the streaming
   * sinks and one definition each of the near-dup family's, the text
   * kernels' and the media probes' shared steps, a registry load
-  * that is a bare parquet scan, one minhash signature shape and one
-  * owner of the signature store's files — so a one-off probe main, a
-  * second builder, an experiment knob, a copied sink body or helper,
-  * a repartition over the registry scan, a settable signature shape
-  * or a second store writer cannot come back unnoticed. */
+  * that is a bare parquet scan, one minhash signature shape, one
+  * owner of the signature store's files and one scoring path for the
+  * embedding operators — so a one-off probe main, a second builder,
+  * an experiment knob, a copied sink body or helper, a repartition
+  * over the registry scan, a settable signature shape, a second store
+  * writer or a restated score cannot come back unnoticed. */
 class SurfaceSpec extends AnyFunSuite {
 
   /** Path under src/main/scala (with '/') → source text. */
@@ -32,6 +33,12 @@ class SurfaceSpec extends AnyFunSuite {
 
   private def occurrences(text: String, pattern: String): Int =
     pattern.r.findAllMatchIn(text).size
+
+  /** Source file → occurrences of `pattern`, for the files `files`
+    * selects in which it occurs. */
+  private def count(pattern: String, files: String => Boolean = _ => true): Map[String, Int] =
+    sources.collect { case (f, t) if files(f) && occurrences(t, pattern) > 0 =>
+      f -> occurrences(t, pattern) }
 
   test("exactly Bench, StreamBench, Verify, PlanDump and ScaleGen define a main") {
     val mains = sources.map { case (f, t) => f -> occurrences(t, """def main\(|extends App\b""") }
@@ -141,9 +148,6 @@ class SurfaceSpec extends AnyFunSuite {
   }
 
   test("shared steps have one definition each: salting, corpus scale, Jaccard score, kernel bytes, RIFF walk") {
-    def count(pattern: String, files: String => Boolean = _ => true): Map[String, Int] =
-      sources.collect { case (f, t) if files(f) && occurrences(t, pattern) > 0 =>
-        f -> occurrences(t, pattern) }
     assert(count("""if \(salts > 1\)""") == Map("graft/operators/Skew.scala" -> 1))
     assert(count("""stats\.sizeInBytes >=""") == Map("graft/operators/Skew.scala" -> 1))
     assert(count("""sortedIntersectSize\(""", _.startsWith("graft/operators/")) ==
@@ -158,6 +162,23 @@ class SurfaceSpec extends AnyFunSuite {
       Map("graft/plans/KernelBytes.scala" -> 1, "graft/plans/TextExpressions.scala" -> 1))
     assert(occurrences(sources("graft/sources/Multimodal.scala"), """def walk\(""") == 1)
     assert(count("""rawTextCol|plainColName|resolveColName""").isEmpty)
+  }
+
+  test("the embedding operators score one way: one gate, cosine, pair test, top-k, ADC score and probe list") {
+    val sim = "graft/operators/Similarity.scala"
+    val vectorOps = Set(sim, "graft/operators/PQ.scala")
+    // the zero-norm gate
+    assert(count("""\.filter\(col\([^)]*\) > 0\)""", vectorOps) == Map(sim -> 1))
+    // the rounded cosine: dot over norms, rounded, in one place
+    assert(count("""round\((VectorExpressions\.)?dot\(""") == Map(sim -> 1))
+    assert(count("""(?<!def )\brawGate\(""") == Map(sim -> 1))
+    assert(count("""row_number\(\)""", vectorOps) == Map(sim -> 1))
+    assert(count("""partitionBy\(col\("query_id"\)\)""") == Map(sim -> 1))
+    assert(count("""zip_with\(col\("codes"\)""") == Map("graft/operators/PQ.scala" -> 1))
+    assert(count("""slice\(\s*(reverse\()?array_sort\(""", _.startsWith("graft/operators/")) ==
+      Map(sim -> 1))
+    assert(count("""\bVectorFunctions\b""").isEmpty)
+    assert(!sources.contains("graft/functions/VectorFunctions.scala"))
   }
 
   test("a registry load is one plain scan: no scan fan-out and no per-call-site width") {
