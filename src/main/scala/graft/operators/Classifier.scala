@@ -30,24 +30,25 @@ import org.apache.spark.sql.functions._
   * construction — so training aggregates seed-sized data into a
   * vocabulary-sized model table; V and the token totals are driver
   * scalars OF THAT TABLE (never a corpus rescan, C39/C43's rule).
-  * Scoring is one map-side explode + a broadcast join on the model +
-  * one per-doc aggregation — identical to C46's scoring shape.
+  * Scoring is one map-side kernel (`plans.CompiledTokenWeights`
+  * through `plans.ModelScore`, C28's and C46's kernel shape): each
+  * document's bytes are walked once against the collected vocabulary
+  * map — no explode, no join, no shuffle.
   */
 object Classifier {
 
   /** (tok, w) log-odds table (seed-vocabulary-sized, broadcastable)
     * plus the log prior-odds ln(|pos docs| / |neg docs|), rounded 8.
     * `compiled` is the collected scoring-kernel form — vocab-sized
-    * driver traffic, the same budget the broadcast join paid; lazy +
-    * transient so the frozen-model streaming gate (D15) builds it
-    * once per model. It carries the prior as an exact scale-8
-    * fixed-point long (the kernel sums fixed-point). */
+    * driver traffic; lazy + transient so the frozen-model streaming
+    * gate (D15) builds it once per model. It carries the prior as
+    * model data, like the weights. */
   final case class Model(table: DataFrame, prior: Double) {
     @transient lazy val compiled: graft.plans.CompiledTokenWeights =
       new graft.plans.CompiledTokenWeights(
         table.select(col("tok"), col("w")).collect()
           .map(r => (r.getString(0), r.getDouble(1))),
-        graft.plans.CompiledLm.toFixed(prior))
+        prior)
   }
 
   /** Train on labeled seeds: per joint-vocabulary token,
@@ -65,8 +66,8 @@ object Classifier {
     require(dp > 0 && dn > 0,
       s"Classifier.train: both seed sets must be non-empty (pos=$dp, neg=$dn)")
     // ONE byte-walk pass per seed corpus via the fused TokenCountAgg
-    // kernel (the training twin of NbScore): per-partition state is a
-    // seed-vocabulary-bounded count map — the same budget
+    // kernel (the scoring kernel's training twin): per-partition
+    // state is a seed-vocabulary-bounded count map — the same budget
     // Model.compiled already spends — and the count tables come back
     // bit-identical to the explode→groupBy plan (exact longs;
     // DeclarativeRef.classifierCounts is the spec-pinned parity oracle)
@@ -86,29 +87,33 @@ object Classifier {
 
   /** (id, n_hits, logodds, keep) per document: logodds =
     * round(prior + Σ w(tok) over in-vocab occurrences, 6) decimal-
-    * summed; keep = logodds > cutoff. n_hits counts the in-vocab
+    * summed; keep = logodds > 0 (`keeps`). n_hits counts the in-vocab
     * occurrences, so a prior-only verdict (n_hits = 0) is auditable.
     *
-    * Runs as ONE map-side pass via the fused `NbScore` kernel — no
-    * per-token explode, no join, no shuffle (the same cure as C28's
-    * TrigramLmScore). Fixed-point sums make it bit-identical to the
-    * decimal pipeline of the test-scope
+    * Runs as ONE map-side pass of the fused kernel — no per-token
+    * explode, no join, no shuffle. Fixed-point sums make it
+    * bit-identical to the decimal pipeline of the test-scope
     * `DeclarativeRef.classifierScore` (parity spec-pinned); oracle
     * c52 unchanged. */
-  def score(docs: DataFrame, id: Column, text: Column, model: Model,
-            cutoff: Double = 0.0): DataFrame =
+  def score(docs: DataFrame, id: Column, text: Column, model: Model): DataFrame =
     docs.select(id.as("id"), scoreCol(text, model).as("r"))
       .select(col("id"), col("r.n_hits").as("n_hits"),
         col("r.logodds").as("logodds"))
-      .withColumn("keep", col("logodds") > cutoff)
+      .withColumn("keep", keeps(col("logodds"), 0.0))
 
   /** The per-document verdict as a COLUMN — `struct<n_hits, logodds>`
-    * of exactly what `score` emits (keep = `.getField("logodds") >
-    * cutoff`), usable as a plain filter term (the streaming gates
-    * drop their per-batch semi-joins this way). */
+    * of exactly what `score` emits, usable as a plain filter term
+    * (the streaming gates drop their per-batch semi-joins this way). */
   def scoreCol(text: Column, model: Model): Column =
-    graft.plans.TextExpressions.nbScore(
+    graft.plans.TextExpressions.modelScore(
       coalesce(lower(text).cast("string"), lit("")), model.compiled)
+
+  /** The keep verdict of the D15 gate and D16's classifier rung: a
+    * document lands iff its `logodds` exceeds `cutoff`. */
+  def keep(text: Column, model: Model, cutoff: Double): Column =
+    keeps(scoreCol(text, model).getField("logodds"), cutoff)
+
+  private def keeps(logodds: Column, cutoff: Double): Column = logodds > cutoff
 
   /** The fused count table: (tok, count) over the corpus vocab. */
   private[graft] def tokenCountTable(df: DataFrame, text: Column,

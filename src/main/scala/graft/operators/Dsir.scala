@@ -24,23 +24,23 @@ import org.apache.spark.sql.functions._
   * rounded terms (the one order-sensitive reduction), cast to double
   * and round 6 at the end — bit-identical across engines.
   *
-  * Shape at 100 TB: two feature explodes (map-side, native
-  * WordNgrams) feeding bucket-count hash aggs whose results are ≤ B
-  * rows; the totals are driver scalars of those COUNT tables (never
-  * a corpus rescan — C39/C43's rule); scoring is one map-side
-  * explode + broadcast join on the B-row model + one per-doc agg.
-  * Nothing is pairwise, and the only corpus-sized shuffle is the
-  * per-doc aggregation on id.
+  * Shape at 100 TB: training is one fused count pass per corpus
+  * into a B-long array (`plans.CountAggregates.BucketCountAgg`); the
+  * totals are driver scalars of those COUNT tables (never a corpus
+  * rescan — C39/C43's rule). Scoring is one map-side kernel
+  * (`plans.CompiledBucketWeights` through `plans.ModelScore`): each
+  * document's bytes are walked once, each feature md5-hashed in place
+  * and looked up in the dense B-long λ array. Nothing is pairwise,
+  * and scoring shuffles nothing.
   */
 object Dsir {
 
-  /** (b, lam) model table (≤ 16^prefixLen rows, broadcastable) plus
-    * the unseen-bucket fallback — λ for a bucket absent from BOTH
+  /** (b, lam) model table (≤ 16^prefixLen rows) plus the
+    * unseen-bucket fallback — λ for a bucket absent from BOTH
     * corpora (only reachable when scoring docs outside `raw`).
     * `compiled` is the collected scoring-kernel form — bucket-table-
-    * sized driver traffic, the same budget the broadcast join paid;
-    * lazy + transient so the frozen-model streaming gate (D13)
-    * builds it once per model. */
+    * sized driver traffic; lazy + transient so the frozen-model
+    * streaming gate (D13) builds it once per model. */
   final case class Model(table: DataFrame, unkLam: Double, prefixLen: Int) {
     @transient lazy val compiled: graft.plans.CompiledBucketWeights =
       new graft.plans.CompiledBucketWeights(
@@ -66,17 +66,15 @@ object Dsir {
     *              ln((c_r(b)+0.5)/(N_r+0.5·B)), 8).
     * N_t/N_r are driver scalars summed from the ≤ B-row count
     * tables; the add-half smoothing denominator uses the FIXED
-    * bucket count B, so the model is defined for any bucket. */
+    * bucket count B, so the model is defined for any bucket.
+    * `prefixLen` is in [1,5] (`CompiledBucketWeights.requirePrefixLen`,
+    * which the count kernel applies before any job runs). */
   def train(target: DataFrame, raw: DataFrame, id: Column, text: Column,
             prefixLen: Int = 3): Model = {
-    // 16^5 ≈ 1M buckets: past that a per-partition 16^p-long count
-    // buffer stops being "model-bounded" in any useful sense
-    require(prefixLen >= 1 && prefixLen <= 5,
-      s"prefixLen must be in [1,5], got $prefixLen")
     val b = math.pow(16.0, prefixLen)
     // ONE byte-walk pass per corpus via the fused BucketCountAgg
-    // kernel (the training twin of DsirScore): per-partition state is
-    // one B-long array, the shuffle carries one partial per
+    // kernel (the scoring kernel's training twin): per-partition
+    // state is one B-long array, the shuffle carries one partial per
     // partition, and the count tables come back bit-identical to the
     // explode→md5→groupBy plan (exact longs; the test-scope
     // `DeclarativeRef.dsirCounts` is the spec-pinned parity oracle).
@@ -101,10 +99,9 @@ object Dsir {
     * unlike C28's pessimistic floor, because DSIR resampling should
     * not favor or bury empty docs).
     *
-    * Runs as ONE map-side pass via the fused `DsirScore` kernel — no
-    * per-feature explode, no md5 column, no join, no shuffle (the
-    * same cure as C28/C52). Fixed-point sums make it bit-identical
-    * to the decimal pipeline of the test-scope
+    * Runs as ONE map-side pass of the fused kernel — no per-feature
+    * explode, no md5 column, no join, no shuffle. Fixed-point sums
+    * make it bit-identical to the decimal pipeline of the test-scope
     * `DeclarativeRef.dsirScore` (parity spec-pinned); oracle c46
     * unchanged. */
   def score(docs: DataFrame, id: Column, text: Column, model: Model): DataFrame =
@@ -116,8 +113,13 @@ object Dsir {
     * of exactly what `score` emits, usable as a plain filter term
     * (the streaming gates drop their per-batch semi-joins this way). */
   def scoreCol(text: Column, model: Model): Column =
-    graft.plans.TextExpressions.dsirScore(
+    graft.plans.TextExpressions.modelScore(
       coalesce(lower(text).cast("string"), lit("")), model.compiled)
+
+  /** The keep verdict of the D13 gate and D16's DSIR rung: a document
+    * lands iff its `logw` is at least `minLogw`. */
+  def keep(text: Column, model: Model, minLogw: Double): Column =
+    scoreCol(text, model).getField("logw") >= minLogw
 
   /** The fused count table: (b, count) over nonzero buckets.
     * format_string's %x is lowercase — exactly

@@ -12,15 +12,17 @@ import org.apache.spark.sql.functions._
   * encoding garbage, or the wrong language. Heuristic filters (C9)
   * catch structural junk; the LM catches junk that LOOKS structural.
   *
-  * Everything is DataFrames: training is one explode + two counts,
-  * the model is a bounded table (≤ |charset|³ trigram rows — data-
-  * independent, broadcastable at any corpus size), scoring is a
-  * map-side explode + broadcast join + one per-doc aggregation.
+  * Training is one explode + two counts; the model is a bounded
+  * table (≤ |charset|³ trigram rows — data-independent at any corpus
+  * size). Scoring is one map-side kernel (`plans.CompiledLm` through
+  * `plans.ModelScore`): each document's bytes are walked once against
+  * the collected model — no explode, no join, no shuffle.
   *
   * Engine-portable determinism (SURVEY §4): log-probs are rounded to
-  * 8 decimals in the MODEL, per-doc sums run in DECIMAL (no float
-  * summation-order sensitivity), and the final average is rounded to
-  * 6 — the same discipline as the money aggregates.
+  * 8 decimals in the MODEL, the kernel sums them as exact scale-8
+  * fixed point (the decimal sum, with no float summation-order
+  * sensitivity), and the final average is rounded to 6 — the same
+  * discipline as the money aggregates.
   */
 object LangModel {
 
@@ -36,10 +38,10 @@ object LangModel {
     * unseen-trigram floor as `unkLogp`. V = distinct trigram count.
     * The model table is bounded by the charset, never the corpus —
     * which is what makes `compiled` (the collected scoring kernel
-    * form) model-sized driver traffic, the same budget the broadcast
-    * join already paid. Lazy + transient: built once per Model (the
-    * frozen-model streaming gate D12 scores many batches against one
-    * Model), rebuilt if the instance is ever serialized. */
+    * form) model-sized driver traffic. Lazy + transient: built once
+    * per Model (the frozen-model streaming gate D12 scores many
+    * batches against one Model), rebuilt if the instance is ever
+    * serialized. */
   final case class Model(table: DataFrame, unkLogp: Double) {
     @transient lazy val compiled: graft.plans.CompiledLm =
       new graft.plans.CompiledLm(
@@ -75,9 +77,9 @@ object LangModel {
     * shorter than 3 chars carry the unseen floor (they have no
     * evidence of fluency).
     *
-    * Runs as ONE map-side pass via the fused `TrigramLmScore` kernel
-    * — no per-trigram explode, no join, no shuffle. The fixed-point
-    * sum inside the kernel is bit-identical to the decimal(20,8)
+    * Runs as ONE map-side pass of the fused kernel — no per-trigram
+    * explode, no join, no shuffle. The fixed-point sum inside the
+    * kernel is bit-identical to the decimal(20,8)
     * pipeline of the test-scope `DeclarativeRef.langModelScore`
     * (parity is spec-pinned), so the C28 oracle and the D12 gate
     * semantics are unchanged. */
@@ -92,5 +94,10 @@ object LangModel {
     * way: the verdict is map-side, so keep/drop is just a predicate). */
   def scoreCol(text: Column, model: Model): Column =
     graft.plans.TextExpressions
-      .trigramLmScore(coalesce(text.cast("string"), lit("")), model.compiled)
+      .modelScore(coalesce(text.cast("string"), lit("")), model.compiled)
+
+  /** The keep verdict of the D12 gate and D16's LM rung: a document
+    * lands iff its `lm_score` is at most `maxScore`. */
+  def keep(text: Column, model: Model, maxScore: Double): Column =
+    scoreCol(text, model).getField("lm_score") <= maxScore
 }

@@ -312,8 +312,11 @@ object Similarity {
               k: Int, nCells: Int = 16, nprobe: Int = 4, iters: Int = 2): DataFrame = {
     val cents = PQ.trainCoarse(corpus, id, vec, nCells, iters)
     val index = ivfAssign(corpus, id, vec, cents)
-    val probes = probeList(queries, id, vec, cents, nprobe, "qv" -> vec.cast("array<double>"))
-      .select(col("query_id"), col("qv"), VectorExpressions.norm(col("qv")).as("qn"), col("cell"))
+    // the query norm rides as a carried column: computed once per
+    // query, before the probe explode, not once per probed cell
+    val qv = vec.cast("array<double>")
+    val probes = probeList(queries, id, vec, cents, nprobe,
+      "qv" -> qv, "qn" -> VectorExpressions.norm(qv))
     topK(index.join(broadcast(probes), Seq("cell")).filter(col("vec_id") =!= col("query_id")),
       "cosine", cosine(col("qv"), col("v"), col("qn"), col("vn")), k)
   }

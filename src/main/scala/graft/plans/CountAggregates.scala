@@ -21,7 +21,7 @@ import org.apache.spark.sql.graft.Bridge
   * string-keyed hash-agg probes) dominates training cost at scale.
   * These aggregates fold the whole per-partition pass into one
   * byte-walk per document updating a model-bounded buffer, the same
-  * cure the scoring side got from DsirScore/NbScore — counts are
+  * cure the scoring side got from `ModelScore` — counts are
   * exact longs, so the trained models are BIT-IDENTICAL
   * (DsirSpec/ClassifierSpec pin table equality).
   *
@@ -43,8 +43,7 @@ object CountAggregates {
                             mutableAggBufferOffset: Int = 0,
                             inputAggBufferOffset: Int = 0)
       extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
-    require(prefixLen >= 1 && prefixLen <= 7, // 16^7 longs = 2 GiB cap guard
-      s"BucketCountAgg: prefixLen $prefixLen outside [1,7]")
+    CompiledBucketWeights.requirePrefixLen(prefixLen)
     override def createAggregationBuffer(): Array[Long] =
       new Array[Long](1 << (4 * prefixLen))
     override def update(buf: Array[Long], input: InternalRow): Array[Long] = {

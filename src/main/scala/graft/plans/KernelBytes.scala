@@ -5,8 +5,9 @@ import java.security.MessageDigest
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-level helpers the text and vector kernels share: one token
-  * boundary and one token scan, one 6-digit round, one md5 hex
-  * encoder and one per-thread digest factory. */
+  * boundary and one token scan, one 6-digit round of a double and one
+  * of a scale-8 fixed-point sum (with the weight → fixed-point step),
+  * one md5 hex encoder and one per-thread digest factory. */
 private[plans] object KernelBytes {
 
   /** ASCII whitespace (Java `\s`: space, \t, \n, \x0B, \f, \r) — the
@@ -45,6 +46,20 @@ private[plans] object KernelBytes {
     if (x.isNaN || x.isInfinite) x
     else scala.math.BigDecimal(x)
       .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Exact scale-8 fixed point of a weight the model already rounded
+    * to 8 decimals (HALF_UP recovers the decimal the double means). */
+  def toFixed(w: Double): Long =
+    java.math.BigDecimal.valueOf(w)
+      .setScale(8, java.math.RoundingMode.HALF_UP).unscaledValue().longValueExact()
+
+  /** A scale-8 fixed-point sum as the declarative `round(sum, 6)` of
+    * the decimal(20,8) sum, cast to double: the round happens in
+    * DECIMAL, HALF_UP, before any double (a double first could land
+    * on a ....50 tie that engines resolve differently). */
+  def round6Fixed(fixed: Long): Double =
+    java.math.BigDecimal.valueOf(fixed, 8)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
   private val HexChars = "0123456789abcdef".getBytes("US-ASCII")
 

@@ -1,14 +1,15 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import KernelBytes.{isWs, md5Hex, md5PerThread, round6, tokenBounds}
+import KernelBytes.{isWs, md5Hex, md5PerThread, round6, round6Fixed, toFixed, tokenBounds}
 
 /** Native character n-gram extraction (SURVEY E2).
   *
@@ -227,135 +228,64 @@ object TextStats {
   }
 }
 
-/** Plan-constant compiled trigram LM for `TrigramLmScore` — the
-  * model table (charset-bounded, SURVEY C28) packed into an
-  * allocation-free open-addressing hash map keyed by the trigram's
-  * UTF-8 bytes (3 codepoints ≤ 12 bytes → two longs; the low byte of
-  * `lo` carries the byte length, so 0 is the empty-slot sentinel and
-  * zero-padding can't collide). Log-probs are stored FIXED-POINT at
-  * scale 8 (the model rounds logp to 8 decimals, so the long is
-  * exact): a per-doc long sum is bit-identical to the decimal(20,8)
-  * sum the declarative form computed, with no summation-order
-  * sensitivity at all. Plain long arrays serialize compactly with
-  * the task binary; lookup is hash + linear probe, zero allocation.
-  */
-final class CompiledLm(entries: Array[(String, Double)], val unkLogp: Double)
+/** A frozen text model in the form its fused per-document kernel
+  * reads (C28 LM, C46 DSIR, C52 NB classifier): one plan constant
+  * that names the kernel's result struct — a bigint count and a
+  * double score, both non-null — and its `prettyName`, and scores
+  * one document's bytes in one linear pass. Each model replaces the
+  * declarative explode → broadcast-join(model table) → per-doc
+  * decimal sum (the test-scope `DeclarativeRef` forms, parity
+  * spec-pinned) by a long sum of scale-8 fixed-point weights: the
+  * models round every weight to 8 decimals, so the long sum IS the
+  * decimal(20,8) sum, with no summation-order sensitivity at all.
+  * Scores are generated code's `model.score(text)` (`ModelScore`);
+  * everything a model varies by is data on the model object, so all
+  * models of a kind share one generated class. */
+abstract class FrozenTextModel(val prettyName: String, countField: String, scoreField: String)
     extends Serializable {
-  val unkFixed: Long = CompiledLm.toFixed(unkLogp)
-  // the model is charset-bounded (≤ |charset|³ rows) by construction;
+  def schema: StructType = StructType(Seq(
+    StructField(countField, LongType, nullable = false),
+    StructField(scoreField, DoubleType, nullable = false)))
+
+  /** (count, score) of one document. Called from generated code. */
+  def score(s: UTF8String): InternalRow
+
+  protected def row(count: Long, score: Double): InternalRow =
+    new GenericInternalRow(Array[Any](count, score))
+}
+
+/** The (count, score) struct `model.schema` of each document `child`:
+  * the one scoring expression of the frozen text models, printed as
+  * the model's `prettyName`. The model ships with the task as one
+  * reference object, typed by its own class, so the call is
+  * monomorphic and two models of a kind generate identical source. */
+case class ModelScore(child: Expression, model: FrozenTextModel) extends UnaryExpression {
+  override def dataType: DataType = model.schema
+  override def prettyName: String = model.prettyName
+  override def nullSafeEval(input: Any): Any = model.score(input.asInstanceOf[UTF8String])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("model", model, model.getClass.getName)
+    defineCodeGen(ctx, ev, c => s"$m.score($c)")
+  }
+  override protected def withNewChildInternal(newChild: Expression): ModelScore =
+    copy(child = newChild)
+}
+
+/** Plan-constant map from a UTF-8 byte range to its scale-8
+  * fixed-point weight — the lookup of the byte-keyed models (C28
+  * trigrams, C52 tokens). Keys are arbitrary-length, so the map keeps
+  * every key's bytes in ONE concatenated blob (an offset per entry)
+  * and probes open-addressed slots with an exact byte compare: a hit
+  * is bit-exact equality on the key's UTF-8 bytes. `lookup` returns
+  * `Missing` for a key the table lacks; each model says what that
+  * means. Plain arrays serialize compactly with the task binary;
+  * a lookup is hash + linear probe, zero allocation. */
+final class ByteKeyWeights(entries: Array[(String, Double)]) extends Serializable {
+  // the models are charset- or vocabulary-bounded by construction;
   // refuse anything that could only be a corpus-sized table wired in
   // by mistake — this map is a task-serialized plan constant
   require(entries.length < (1 << 27),
-    s"CompiledLm: ${entries.length} entries — not a charset-bounded model")
-  private val cap: Int = {
-    var c = 16
-    while (c < entries.length * 2) c <<= 1
-    c
-  }
-  private val mask = cap - 1
-  private val keyHi = new Array[Long](cap)
-  private val keyLo = new Array[Long](cap) // 0 = empty (len byte != 0)
-  private val vals = new Array[Long](cap)
-  entries.foreach { case (tri, logp) =>
-    val b = UTF8String.fromString(tri).getBytes
-    require(b.length >= 1 && b.length <= 12,
-      s"CompiledLm: trigram '$tri' is ${b.length} bytes — not a 3-codepoint gram")
-    insert(CompiledLm.packHi(b, 0, b.length), CompiledLm.packLo(b, 0, b.length),
-      CompiledLm.toFixed(logp))
-  }
-
-  private def slot(hi: Long, lo: Long): Int = {
-    var h = hi * -7046029254386353131L + lo
-    h ^= h >>> 32; h *= -4417276706812531889L; h ^= h >>> 29
-    h.toInt & mask
-  }
-  private def insert(hi: Long, lo: Long, v: Long): Unit = {
-    var i = slot(hi, lo)
-    while (keyLo(i) != 0L && !(keyHi(i) == hi && keyLo(i) == lo)) i = (i + 1) & mask
-    keyHi(i) = hi; keyLo(i) = lo; vals(i) = v
-  }
-  /** Fixed-point logp of the gram at bytes[from, to), or `unkFixed`. */
-  def lookup(bytes: Array[Byte], from: Int, to: Int): Long = {
-    val hi = CompiledLm.packHi(bytes, from, to - from)
-    val lo = CompiledLm.packLo(bytes, from, to - from)
-    var i = slot(hi, lo)
-    while (keyLo(i) != 0L) {
-      if (keyHi(i) == hi && keyLo(i) == lo) return vals(i)
-      i = (i + 1) & mask
-    }
-    unkFixed
-  }
-}
-
-object CompiledLm {
-  /** Exact scale-8 fixed point of a logp that train() already rounded
-    * to 8 decimals (HALF_UP recovers the decimal the double means). */
-  def toFixed(logp: Double): Long =
-    java.math.BigDecimal.valueOf(logp)
-      .setScale(8, java.math.RoundingMode.HALF_UP).unscaledValue().longValueExact()
-
-  private[plans] def packHi(b: Array[Byte], from: Int, len: Int): Long = {
-    var h = 0L
-    var i = 0
-    val n = math.min(len, 8)
-    while (i < n) { h = (h << 8) | (b(from + i) & 0xffL); i += 1 }
-    h
-  }
-  private[plans] def packLo(b: Array[Byte], from: Int, len: Int): Long = {
-    var l = 0L
-    var i = 8
-    while (i < len) { l = (l << 8) | (b(from + i) & 0xffL); i += 1 }
-    (l << 8) | len.toLong // len 1..12 keeps the low byte non-zero
-  }
-
-  /** (n_tris, lm_score) of one document in one linear pass — the
-    * fused form of explode(trigrams) → broadcast-join(model) →
-    * per-doc decimal sum (bit-identical by the fixed-point argument
-    * on `CompiledLm`). Called from generated code. */
-  def score(s: UTF8String, m: CompiledLm): org.apache.spark.sql.catalyst.InternalRow = {
-    val bytes = s.getBytes
-    val len = bytes.length
-    val offs = new Array[Int](s.numChars() + 1)
-    var i = 0
-    var c = 0
-    while (i < len) {
-      offs(c) = i
-      i += UTF8String.numBytesForFirstByte(bytes(i))
-      c += 1
-    }
-    offs(c) = len
-    val n = math.max(0, c - 2)
-    if (n == 0)
-      return new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](0L, round6(-m.unkLogp)))
-    var sum = 0L // |logp·1e8| ≲ 4e9/tri → exact past 10^9 tris/doc
-    var g = 0
-    while (g < n) { sum += m.lookup(bytes, offs(g), offs(g + 3)); g += 1 }
-    val sDouble = java.math.BigDecimal.valueOf(sum, 8).doubleValue()
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](n.toLong, round6(-sDouble / n)))
-  }
-}
-
-/** Plan-constant token → fixed-point-weight map for the word-keyed
-  * scoring kernels (C52 classifier; the C46 DSIR twin is the named
-  * round-10 candidate). Unlike `CompiledLm`'s 12-byte packed trigram
-  * keys, vocabulary tokens are arbitrary-length — so the map stores
-  * every key's bytes in ONE concatenated blob (offset/length per
-  * entry) and probes open-addressed slots with an exact byte
-  * compare: no hashing-only shortcut, a lookup is bit-exact equality
-  * on the token's UTF-8 bytes. Weights are scale-8 fixed-point longs
-  * (the models round to 8 decimals), so per-doc long sums equal the
-  * decimal(20,8) pipeline exactly. `lookup` returns `Missing` for
-  * out-of-vocabulary tokens — they contribute nothing and are not
-  * counted as hits, the declarative left-join semantics.
-  * `priorFixed` is the model's prior in the same scale-8 form: it is
-  * model data like the weights, so the generated scoring code reads
-  * it from the model object and every model shares one class. */
-final class CompiledTokenWeights(entries: Array[(String, Double)], val priorFixed: Long)
-    extends Serializable {
-  require(entries.length < (1 << 27),
-    s"CompiledTokenWeights: ${entries.length} entries — not a vocab-bounded model")
+    s"ByteKeyWeights: ${entries.length} entries — not a model-bounded table")
   private val n = entries.length
   private val offs = new Array[Int](n + 1)
   private val blob: Array[Byte] = {
@@ -369,13 +299,14 @@ final class CompiledTokenWeights(entries: Array[(String, Double)], val priorFixe
   }
   private val vals: Array[Long] =
     entries.map { e =>
-      val f = CompiledLm.toFixed(e._2)
-      // `Missing` doubles as the OOV sentinel: a weight that fixes to
-      // it (~-9.2e10 in scale-8) would silently read as out-of-vocab.
-      // Unreachable for any realistic log-odds — make that explicit.
-      require(f != CompiledTokenWeights.Missing,
-        s"CompiledTokenWeights: weight ${e._2} for token '${e._1}' fixes to " +
-          "the OOV sentinel (Long.MinValue at scale 8) and cannot be represented")
+      val f = toFixed(e._2)
+      // `Missing` doubles as the absent-key sentinel: a weight that
+      // fixes to it (~-9.2e10 in scale-8) would silently read as
+      // absent. Unreachable for any realistic log-weight — make that
+      // explicit.
+      require(f != ByteKeyWeights.Missing,
+        s"ByteKeyWeights: weight ${e._2} for key '${e._1}' fixes to " +
+          "the absent-key sentinel (Long.MinValue at scale 8) and cannot be represented")
       f
     }
   private val cap: Int = {
@@ -388,31 +319,31 @@ final class CompiledTokenWeights(entries: Array[(String, Double)], val priorFixe
   locally {
     var i = 0
     while (i < n) {
-      var s = CompiledTokenWeights.hash(blob, offs(i), offs(i + 1)) & mask
+      var s = ByteKeyWeights.hash(blob, offs(i), offs(i + 1)) & mask
       while (slots(s) != 0 &&
-        !CompiledTokenWeights.eq(blob, offs(slots(s) - 1), offs(slots(s)),
+        !ByteKeyWeights.eq(blob, offs(slots(s) - 1), offs(slots(s)),
           blob, offs(i), offs(i + 1))) s = (s + 1) & mask
       slots(s) = i + 1 // duplicate keys: last write wins (none in practice)
       i += 1
     }
   }
-  /** Fixed weight of bytes[from,to), or `Missing` if out-of-vocab. */
+  /** Fixed weight of bytes[from, to), or `Missing`. */
   def lookup(bytes: Array[Byte], from: Int, to: Int): Long = {
-    var s = CompiledTokenWeights.hash(bytes, from, to) & mask
+    var s = ByteKeyWeights.hash(bytes, from, to) & mask
     while (slots(s) != 0) {
       val e = slots(s) - 1
-      if (CompiledTokenWeights.eq(blob, offs(e), offs(e + 1), bytes, from, to))
+      if (ByteKeyWeights.eq(blob, offs(e), offs(e + 1), bytes, from, to))
         return vals(e)
       s = (s + 1) & mask
     }
-    CompiledTokenWeights.Missing
+    ByteKeyWeights.Missing
   }
 }
 
-object CompiledTokenWeights {
+object ByteKeyWeights {
   val Missing: Long = Long.MinValue
 
-  private[plans] def hash(b: Array[Byte], from: Int, to: Int): Int = {
+  private def hash(b: Array[Byte], from: Int, to: Int): Int = {
     var h = -2128831035 // FNV-1a
     var i = from
     while (i < to) { h = (h ^ b(i)) * 16777619; i += 1 }
@@ -420,27 +351,64 @@ object CompiledTokenWeights {
     h ^= h >>> 16
     h
   }
-  private[plans] def eq(a: Array[Byte], af: Int, at: Int,
-                        b: Array[Byte], bf: Int, bt: Int): Boolean = {
+  private def eq(a: Array[Byte], af: Int, at: Int,
+                 b: Array[Byte], bf: Int, bt: Int): Boolean = {
     if (at - af != bt - bf) return false
     var i = 0
     val len = at - af
     while (i < len) { if (a(af + i) != b(bf + i)) return false; i += 1 }
     true
   }
+}
 
-  private def round6Exact(fixed: Long): Double =
-    java.math.BigDecimal.valueOf(fixed, 8)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+/** C28's trigram LM: (n_tris, lm_score) — the average negative
+  * log-prob of the document's character trigrams (codepoint windows,
+  * `CharNgrams`' semantics), the sum fixed-point and the mean rounded
+  * to 6; an absent trigram takes the model's unseen floor, and a
+  * document shorter than 3 codepoints scores the floor alone. */
+final class CompiledLm(entries: Array[(String, Double)], val unkLogp: Double)
+    extends FrozenTextModel("graft_lm_score", "n_tris", "lm_score") {
+  private val weights = new ByteKeyWeights(entries)
+  private val unkFixed = toFixed(unkLogp)
 
-  /** (n_hits, logodds) of one document in one linear pass — the fused
-    * form of explode(tokens) → broadcast-join(model) → per-doc
-    * decimal sum + prior + 6-digit decimal round (C52's exact
-    * discipline: the round happens in DECIMAL, before any double).
-    * Token boundaries replicate WordNgrams' python-style whitespace
-    * split byte-for-byte. Called from generated code. */
-  def nbScore(s: UTF8String, m: CompiledTokenWeights)
-    : org.apache.spark.sql.catalyst.InternalRow = {
+  def score(s: UTF8String): InternalRow = {
+    val bytes = s.getBytes
+    val len = bytes.length
+    val offs = new Array[Int](s.numChars() + 1)
+    var i = 0
+    var c = 0
+    while (i < len) {
+      offs(c) = i
+      i += UTF8String.numBytesForFirstByte(bytes(i))
+      c += 1
+    }
+    offs(c) = len
+    val n = math.max(0, c - 2)
+    if (n == 0) return row(0L, round6(-unkLogp))
+    var sum = 0L // |logp·1e8| ≲ 4e9/tri → exact past 10^9 tris/doc
+    var g = 0
+    while (g < n) {
+      val w = weights.lookup(bytes, offs(g), offs(g + 3))
+      sum += (if (w == ByteKeyWeights.Missing) unkFixed else w)
+      g += 1
+    }
+    val sDouble = java.math.BigDecimal.valueOf(sum, 8).doubleValue()
+    row(n.toLong, round6(-sDouble / n))
+  }
+}
+
+/** C52's Naive Bayes classifier: (n_hits, logodds) — the prior plus
+  * the weights of the in-vocabulary token occurrences, rounded to 6
+  * in decimal. Tokens are WordNgrams' python-style whitespace split,
+  * byte for byte; an out-of-vocabulary token contributes nothing and
+  * is not a hit, the declarative left-join semantics. The prior is
+  * model data like the weights. */
+final class CompiledTokenWeights(entries: Array[(String, Double)], prior: Double)
+    extends FrozenTextModel("graft_nb_score", "n_hits", "logodds") {
+  private val weights = new ByteKeyWeights(entries)
+  private val priorFixed = toFixed(prior)
+
+  def score(s: UTF8String): InternalRow = {
     val bytes = s.getBytes
     val len = bytes.length
     var hits = 0L
@@ -451,12 +419,108 @@ object CompiledTokenWeights {
       if (i < len) {
         val start = i
         while (i < len && !isWs(bytes(i))) i += 1
-        val v = m.lookup(bytes, start, i)
-        if (v != Missing) { hits += 1; sum += v }
+        val w = weights.lookup(bytes, start, i)
+        if (w != ByteKeyWeights.Missing) { hits += 1; sum += w }
       }
     }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](hits, round6Exact(sum + m.priorFixed)))
+    row(hits, round6Fixed(sum + priorFixed))
+  }
+}
+
+/** C46's DSIR model: (n_feats, logw) — the sum of λ(bucket) over the
+  * document's word unigrams and bigrams with multiplicity, rounded to
+  * 6 in decimal, one md5 per feature. A feature's bucket is the first
+  * `prefixLen` hex chars of md5(gram), i.e. the digest's first
+  * `prefixLen` nibbles as a value, so the model is a dense array of
+  * 16^prefixLen fixed-point λ — the layout `BucketCountAgg` trains
+  * into — indexed by bucket, each bucket absent from the table holding
+  * the unseen-bucket λ (the declarative left-join + coalesce). */
+final class CompiledBucketWeights(entries: Array[(String, Double)],
+    unkLam: Double, val prefixLen: Int)
+    extends FrozenTextModel("graft_dsir_score", "n_feats", "logw") {
+  CompiledBucketWeights.requirePrefixLen(prefixLen)
+  private val weights: Array[Long] = {
+    val w = new Array[Long](1 << (4 * prefixLen))
+    java.util.Arrays.fill(w, toFixed(unkLam))
+    entries.foreach { case (hex, lam) =>
+      require(hex != null && hex.length == prefixLen,
+        s"CompiledBucketWeights: bucket '$hex' is not a $prefixLen-char hex prefix")
+      w(Integer.parseInt(hex, 16)) = toFixed(lam)
+    }
+    w
+  }
+
+  def score(s: UTF8String): InternalRow = {
+    val bytes = s.getBytes
+    val b = tokenBounds(bytes)
+    val nFeats = math.max(0, 2 * b(0) - 1) // n unigrams + (n-1) bigrams
+    val digest = CompiledBucketWeights.md5.get()
+    var sum = 0L // |λ·1e8| is model-bounded per feature; exact far past any doc
+    var f = 0
+    while (f < nFeats) {
+      sum += weights(CompiledBucketWeights.featureBucket(digest, bytes, b, f, prefixLen))
+      f += 1
+    }
+    row(nFeats.toLong, round6Fixed(sum))
+  }
+}
+
+object CompiledBucketWeights {
+  private val md5 = md5PerThread()
+
+  /** A DSIR model's bucket prefix length is 1 to 5 hex chars: past
+    * 16^5 ≈ 1M buckets neither the dense model nor a per-partition
+    * 16^p-long training count buffer is model-bounded in any useful
+    * sense. */
+  def requirePrefixLen(prefixLen: Int): Unit =
+    require(prefixLen >= 1 && prefixLen <= 5, s"prefixLen must be in [1,5], got $prefixLen")
+
+  /** First `nibbles` hex digits of the digest as a value — exactly
+    * `substring(md5(g), 1, nibbles)` parsed base-16. */
+  private def bucketOf(digest: Array[Byte], nibbles: Int): Int = {
+    var v = 0
+    var j = 0
+    while (j < nibbles) {
+      val b = digest(j >> 1) & 0xff
+      v = (v << 4) | (if ((j & 1) == 0) b >>> 4 else b & 0xf)
+      j += 1
+    }
+    v
+  }
+
+  /** TRAINING twin of `score`: bump `counts(bucket)` for every
+    * hashed feature (unigrams + bigrams, multiplicity kept) of one
+    * document — the fused form of C46's per-corpus
+    * explode → md5-prefix → groupBy(bucket) count, whose per-partition
+    * state is this one fixed B-long array instead of a hash-agg over
+    * corpus×features rows. Exact long counts ⇒ the trained model is
+    * bit-identical (spec-pinned). Same features as `score`. */
+  def countInto(s: UTF8String, prefixLen: Int, counts: Array[Long]): Unit = {
+    val bytes = s.getBytes
+    val b = tokenBounds(bytes)
+    val digest = md5.get()
+    var f = 0
+    while (f < 2 * b(0) - 1) {
+      counts(featureBucket(digest, bytes, b, f, prefixLen)) += 1L
+      f += 1
+    }
+  }
+
+  /** The `prefixLen`-nibble md5 bucket of feature `f` of a document
+    * whose tokens are `b` (`tokenBounds` — WordNgrams' split
+    * byte-for-byte): unigram f/2 when f is even, the bigram of tokens
+    * (f-1)/2 and (f+1)/2 when f is odd. A bigram's digest streams
+    * token₁ + ' ' + token₂ — the same bytes WordNgrams.slice copies
+    * into its single-space-joined gram. */
+  private def featureBucket(digest: java.security.MessageDigest, bytes: Array[Byte],
+                            b: Array[Int], f: Int, prefixLen: Int): Int = {
+    val t = f >> 1
+    digest.update(bytes, b(2 * t + 1), b(2 * t + 2) - b(2 * t + 1))
+    if ((f & 1) == 1) {
+      digest.update(' '.toByte)
+      digest.update(bytes, b(2 * t + 3), b(2 * t + 4) - b(2 * t + 3))
+    }
+    bucketOf(digest.digest(), prefixLen)
   }
 }
 
@@ -633,215 +697,6 @@ object PiiScrub {
       Array[Any](UTF8String.fromBytes(java.util.Arrays.copyOf(b3.a, b3.n)),
         emails, urls, phones))
   }
-}
-
-/** Plan-constant md5-bucket → fixed-point-λ map for the C46 DSIR
-  * scoring kernel. A DSIR feature bucket is the first `prefixLen`
-  * hex chars of md5(gram) — i.e. the digest's first `prefixLen`
-  * NIBBLES, which fit a Long for prefixLen ≤ 8 — so the map keys on
-  * the bucket VALUE directly (open addressing, key stored +1 so 0 is
-  * the empty-slot sentinel; bucket ids are < 16^8 so the shift never
-  * overflows). λ values are scale-8 fixed-point longs (the model
-  * rounds to 8 decimals); buckets absent from the table take the
-  * model's unseen-bucket λ — the declarative left-join + coalesce
-  * semantics. */
-final class CompiledBucketWeights(entries: Array[(String, Double)],
-    unkLam: Double, val prefixLen: Int) extends Serializable {
-  require(prefixLen >= 1 && prefixLen <= 8,
-    s"CompiledBucketWeights: prefixLen $prefixLen outside [1,8]")
-  require(entries.length < (1 << 27),
-    s"CompiledBucketWeights: ${entries.length} entries — not a bucket-bounded model")
-  val unkFixed: Long = CompiledLm.toFixed(unkLam)
-  private val cap: Int = {
-    var c = 16
-    while (c < entries.length * 2) c <<= 1
-    c
-  }
-  private val mask = cap - 1
-  private val keys = new Array[Long](cap) // bucket + 1; 0 = empty
-  private val vals = new Array[Long](cap)
-  entries.foreach { case (hex, lam) =>
-    require(hex != null && hex.length == prefixLen,
-      s"CompiledBucketWeights: bucket '$hex' is not a $prefixLen-char hex prefix")
-    val k = java.lang.Long.parseLong(hex, 16) + 1
-    var i = slot(k)
-    while (keys(i) != 0L && keys(i) != k) i = (i + 1) & mask
-    keys(i) = k; vals(i) = CompiledLm.toFixed(lam)
-  }
-  private def slot(k: Long): Int = {
-    var h = k * -7046029254386353131L
-    h ^= h >>> 32
-    h.toInt & mask
-  }
-  /** Fixed λ of the bucket, or the unseen-bucket fixed λ. */
-  def lookup(bucket: Long): Long = {
-    val k = bucket + 1
-    var i = slot(k)
-    while (keys(i) != 0L) {
-      if (keys(i) == k) return vals(i)
-      i = (i + 1) & mask
-    }
-    unkFixed
-  }
-}
-
-object CompiledBucketWeights {
-  private val md5 = md5PerThread()
-
-  /** First `nibbles` hex digits of the digest as a value — exactly
-    * `substring(md5(g), 1, nibbles)` parsed base-16. */
-  private def bucketOf(digest: Array[Byte], nibbles: Int): Long = {
-    var v = 0L
-    var j = 0
-    while (j < nibbles) {
-      val b = digest(j >> 1) & 0xff
-      v = (v << 4) | (if ((j & 1) == 0) b >>> 4 else b & 0xf)
-      j += 1
-    }
-    v
-  }
-
-  /** (n_feats, logw) of one document in one linear pass plus one md5
-    * per feature — the fused form of explode(unigrams ++ bigrams) →
-    * md5-prefix bucket → broadcast-join(model) → per-doc decimal sum
-    * + 6-digit decimal round (C46's exact discipline). Features are
-    * `featureBucket`'s. Called from generated code. */
-  def score(s: UTF8String, m: CompiledBucketWeights)
-    : org.apache.spark.sql.catalyst.InternalRow = {
-    val bytes = s.getBytes
-    val b = tokenBounds(bytes)
-    val nFeats = math.max(0, 2 * b(0) - 1) // n unigrams + (n-1) bigrams
-    val digest = md5.get()
-    var sum = 0L // |λ·1e8| is model-bounded per feature; exact far past any doc
-    var f = 0
-    while (f < nFeats) {
-      sum += m.lookup(featureBucket(digest, bytes, b, f, m.prefixLen))
-      f += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](nFeats.toLong, java.math.BigDecimal.valueOf(sum, 8)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()))
-  }
-
-  /** TRAINING twin of `score`: bump `counts(bucket)` for every
-    * hashed feature (unigrams + bigrams, multiplicity kept) of one
-    * document — the fused form of C46's per-corpus
-    * explode → md5-prefix → groupBy(bucket) count, whose per-partition
-    * state is this one fixed B-long array instead of a hash-agg over
-    * corpus×features rows. Exact long counts ⇒ the trained model is
-    * bit-identical (spec-pinned). Same features as `score`. */
-  def countInto(s: UTF8String, prefixLen: Int, counts: Array[Long]): Unit = {
-    val bytes = s.getBytes
-    val b = tokenBounds(bytes)
-    val digest = md5.get()
-    var f = 0
-    while (f < 2 * b(0) - 1) {
-      counts(featureBucket(digest, bytes, b, f, prefixLen).toInt) += 1L
-      f += 1
-    }
-  }
-
-  /** The `prefixLen`-nibble md5 bucket of feature `f` of a document
-    * whose tokens are `b` (`tokenBounds` — WordNgrams' split
-    * byte-for-byte): unigram f/2 when f is even, the bigram of tokens
-    * (f-1)/2 and (f+1)/2 when f is odd. A bigram's digest streams
-    * token₁ + ' ' + token₂ — the same bytes WordNgrams.slice copies
-    * into its single-space-joined gram. */
-  private def featureBucket(digest: java.security.MessageDigest, bytes: Array[Byte],
-                            b: Array[Int], f: Int, prefixLen: Int): Long = {
-    val t = f >> 1
-    digest.update(bytes, b(2 * t + 1), b(2 * t + 2) - b(2 * t + 1))
-    if ((f & 1) == 1) {
-      digest.update(' '.toByte)
-      digest.update(bytes, b(2 * t + 3), b(2 * t + 4) - b(2 * t + 3))
-    }
-    bucketOf(digest.digest(), prefixLen)
-  }
-}
-
-/** `struct<n_feats:bigint, logw:double>`: C46's scoring kernel — the
-  * declarative form ships one row per FEATURE (unigrams + bigrams,
-  * each md5-hashed by the engine) through a broadcast join and a
-  * per-doc decimal aggregation; this walks each document's bytes
-  * once against the plan-constant bucket map, hashing each feature
-  * in place. Bit-identical by the fixed-point argument on
-  * `CompiledBucketWeights`; parity is spec-pinned. */
-case class DsirScore(child: Expression, model: CompiledBucketWeights)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_feats",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("logw",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-  override def prettyName: String = "graft_dsir_score"
-  override def nullSafeEval(input: Any): Any =
-    CompiledBucketWeights.score(input.asInstanceOf[UTF8String], model)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("dsirModel", model,
-      classOf[CompiledBucketWeights].getName)
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.CompiledBucketWeights.score($c, $m)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): DsirScore =
-    copy(child = newChild)
-}
-
-/** `struct<n_hits:bigint, logodds:double>`: C52's scoring kernel —
-  * same cure as TrigramLmScore: the declarative form ships one row
-  * per TOKEN through a broadcast join and a per-doc decimal
-  * aggregation for an output of one row per document; this walks
-  * each document's bytes once against the plan-constant vocab map.
-  * Bit-identical by the fixed-point argument on
-  * `CompiledTokenWeights`; parity is spec-pinned. */
-case class NbScore(child: Expression, model: CompiledTokenWeights)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_hits",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("logodds",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-  override def prettyName: String = "graft_nb_score"
-  override def nullSafeEval(input: Any): Any =
-    CompiledTokenWeights.nbScore(input.asInstanceOf[UTF8String], model)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("nbModel", model,
-      classOf[CompiledTokenWeights].getName)
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.CompiledTokenWeights.nbScore($c, $m)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NbScore =
-    copy(child = newChild)
-}
-
-/** `struct<n_tris:bigint, lm_score:double>`: C28's scoring kernel.
-  * The declarative form ships one row PER TRIGRAM through a
-  * broadcast join and a per-doc aggregation — at sf10 that is ~10⁹
-  * joined+aggregated rows for an output of one row per document
-  * (measured 20.7 s, the most expensive query on the surface). This
-  * expression walks each document's bytes once against the
-  * plan-constant compiled model: no explode, no join, no shuffle —
-  * the same cure as BestCosineMatch/PQ. Results are bit-identical to
-  * the decimal pipeline (fixed-point sum; see `CompiledLm`), so the
-  * DuckDB oracle is unchanged. */
-case class TrigramLmScore(child: Expression, model: CompiledLm)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_tris",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("lm_score",
-        org.apache.spark.sql.types.DoubleType, nullable = false)))
-  override def prettyName: String = "graft_lm_score"
-  override def nullSafeEval(input: Any): Any =
-    CompiledLm.score(input.asInstanceOf[UTF8String], model)
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("lmModel", model, classOf[CompiledLm].getName)
-    defineCodeGen(ctx, ev, c => s"graft.plans.CompiledLm.score($c, $m)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): TrigramLmScore =
-    copy(child = newChild)
 }
 
 /** `struct<top_token_frac:double, top_bigram_frac:double>`: one
@@ -1343,17 +1198,9 @@ object TextExpressions {
   def simhashSig(text: Column, n: Int): Column =
     Bridge.column(SimHashSig(Bridge.expression(text), n))
 
-  /** Codegen'd fused trigram-LM document score; see `TrigramLmScore`. */
-  def trigramLmScore(text: Column, model: CompiledLm): Column =
-    Bridge.column(TrigramLmScore(Bridge.expression(text), model))
-
-  /** Codegen'd fused NB-classifier document score; see `NbScore`. */
-  def nbScore(text: Column, model: CompiledTokenWeights): Column =
-    Bridge.column(NbScore(Bridge.expression(text), model))
-
-  /** Codegen'd fused DSIR document log-weight; see `DsirScore`. */
-  def dsirScore(text: Column, model: CompiledBucketWeights): Column =
-    Bridge.column(DsirScore(Bridge.expression(text), model))
+  /** Codegen'd fused frozen-model document score; see `ModelScore`. */
+  def modelScore(text: Column, model: FrozenTextModel): Column =
+    Bridge.column(ModelScore(Bridge.expression(text), model))
 
   /** Codegen'd single-pass PII redaction + counts; see `PiiScrub`. */
   def piiScrub(text: Column): Column =

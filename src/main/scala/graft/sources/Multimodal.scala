@@ -374,6 +374,18 @@ object Multimodal {
     }(enc)
   }
 
+  // ---- container header readers, at byte offset i of payload b -------
+  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
+  private def be32(b: Array[Byte], i: Int): Int =
+    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
+  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
+  private def le32(b: Array[Byte], i: Int): Int =
+    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
+  /** `le32` read unsigned: RIFF chunk sizes run to 4 GiB. */
+  private def leU32(b: Array[Byte], i: Int): Long = le32(b, i) & 0xffffffffL
+  private def fourcc(b: Array[Byte], i: Int): String = new String(b, i, 4, "US-ASCII")
+
   /** REAL (codec-free) image container probe: format + pixel
     * dimensions parsed from the leading bytes of PNG / JPEG / GIF /
     * BMP payloads — the metadata a lake ingest derives WITHOUT
@@ -384,37 +396,32 @@ object Multimodal {
     * GIF/BMP little-endian headers). Returns (format, width,
     * height); None for null/unrecognized/truncated payloads. */
   def probeImage(b: Array[Byte]): Option[(String, Int, Int)] = {
-    def u8(i: Int) = b(i) & 0xff
-    def be16(i: Int) = (u8(i) << 8) | u8(i + 1)
-    def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) | (u8(i + 3) << 24)
     if (b == null) None
-    else if (b.length >= 24 && u8(0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
-      Some(("png", be32(16), be32(20)))
+    else if (b.length >= 24 && u8(b, 0) == 0x89 && b(1) == 'P' && b(2) == 'N' && b(3) == 'G')
+      Some(("png", be32(b, 16), be32(b, 20)))
     else if (b.length >= 10 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F')
-      Some(("gif", le16(6), le16(8)))
+      Some(("gif", le16(b, 6), le16(b, 8)))
     else if (b.length >= 22 && b(0) == 'B' && b(1) == 'M') {
       // the DIB header size at offset 14 decides the field layout:
       // 12-byte BITMAPCOREHEADER stores 16-bit dims; the common
       // 40+-byte headers store 32-bit dims (height may be negative =
       // top-down; report its magnitude)
-      if (le32(14) == 12) Some(("bmp", le16(18), le16(20)))
-      else if (b.length >= 26) Some(("bmp", le32(18), math.abs(le32(22))))
+      if (le32(b, 14) == 12) Some(("bmp", le16(b, 18), le16(b, 20)))
+      else if (b.length >= 26) Some(("bmp", le32(b, 18), math.abs(le32(b, 22))))
       else None
-    } else if (b.length >= 4 && u8(0) == 0xff && u8(1) == 0xd8) {
+    } else if (b.length >= 4 && u8(b, 0) == 0xff && u8(b, 1) == 0xd8) {
       var i = 2
       while (i + 9 < b.length) {
-        if (u8(i) != 0xff) return None
+        if (u8(b, i) != 0xff) return None
         // any number of 0xFF fill bytes may pad before a marker
-        while (i + 9 < b.length && u8(i + 1) == 0xff) i += 1
-        val m = u8(i + 1)
+        while (i + 9 < b.length && u8(b, i + 1) == 0xff) i += 1
+        val m = u8(b, i + 1)
         if (m == 0x01 || (m >= 0xd0 && m <= 0xd9)) i += 2 // standalone markers
         else {
-          val len = be16(i + 2)
+          val len = be16(b, i + 2)
           if (len < 2) return None
           if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc)
-            return Some(("jpeg", be16(i + 7), be16(i + 5))) // SOFn: height then width
+            return Some(("jpeg", be16(b, i + 7), be16(b, i + 5))) // SOFn: height then width
           i += 2 + len
         }
       }
@@ -455,22 +462,17 @@ object Multimodal {
     * Returns (format, channels, sample_rate, duration_ms); None for
     * null/unrecognized/truncated payloads. */
   def probeAudio(b: Array[Byte]): Option[(String, Int, Int, Long)] = {
-    def u8(i: Int) = b(i) & 0xff
-    def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def le32(i: Int) = (u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) |
-      (u8(i + 3).toLong << 24)).toLong
-    def tag(i: Int, s: String) = s.indices.forall(j => b(i + j) == s(j).toByte)
     if (b == null) None
-    else if (b.length >= 44 && tag(0, "RIFF") && tag(8, "WAVE")) {
+    else if (b.length >= 44 && fourcc(b, 0) == "RIFF" && fourcc(b, 8) == "WAVE") {
       // chunk walk: chunks are (4-byte id, 4-byte LE size, payload),
       // word-aligned; fmt may precede or follow non-audio chunks
       var i = 12
       var rate = -1; var channels = -1; var byteRate = -1L; var dataLen = -1L
       while (i + 8 <= b.length && (rate < 0 || dataLen < 0)) {
-        val size = le32(i + 4)
-        if (tag(i, "fmt ") && i + 16 + 8 <= b.length) {
-          channels = le16(i + 10); rate = le32(i + 12).toInt; byteRate = le32(i + 16)
-        } else if (tag(i, "data")) dataLen = size
+        val size = leU32(b, i + 4)
+        if (fourcc(b, i) == "fmt " && i + 16 + 8 <= b.length) {
+          channels = le16(b, i + 10); rate = le32(b, i + 12); byteRate = leU32(b, i + 16)
+        } else if (fourcc(b, i) == "data") dataLen = size
         // bounded step in Long: a crafted size > Int.MaxValue would
         // overflow an Int step NEGATIVE and walk backwards forever —
         // any chunk reaching past the payload ends the walk instead
@@ -482,16 +484,16 @@ object Multimodal {
       if (rate > 0 && byteRate > 0 && dataLen >= 0)
         Some(("wav", channels, rate, dataLen * 1000L / byteRate))
       else None
-    } else if (b.length >= 4 + 4 + 34 && tag(0, "fLaC")) {
+    } else if (b.length >= 4 + 4 + 34 && fourcc(b, 0) == "fLaC") {
       // STREAMINFO is required first: header byte 4 has type in the
       // low 7 bits (0 = STREAMINFO); block starts at byte 8
-      if ((u8(4) & 0x7f) != 0) None
+      if ((u8(b, 4) & 0x7f) != 0) None
       else {
         val s = 8
-        val rate = (u8(s + 10) << 12) | (u8(s + 11) << 4) | (u8(s + 12) >> 4)
-        val channels = ((u8(s + 12) >> 1) & 0x7) + 1
-        val totalSamples = ((u8(s + 13) & 0xfL) << 32) | (u8(s + 14).toLong << 24) |
-          (u8(s + 15).toLong << 16) | (u8(s + 16).toLong << 8) | u8(s + 17).toLong
+        val rate = (u8(b, s + 10) << 12) | (u8(b, s + 11) << 4) | (u8(b, s + 12) >> 4)
+        val channels = ((u8(b, s + 12) >> 1) & 0x7) + 1
+        val totalSamples = ((u8(b, s + 13) & 0xfL) << 32) | (u8(b, s + 14).toLong << 24) |
+          (u8(b, s + 15).toLong << 16) | (u8(b, s + 16).toLong << 8) | u8(b, s + 17).toLong
         if (rate == 0) None
         else Some(("flac", channels, rate, totalSamples * 1000L / rate))
       }
@@ -527,13 +529,6 @@ object Multimodal {
   // fully real with zero extra jars; `decodeStub` remains only for
   // containers whose codecs the JDK lacks (MP4/H.264 etc).
 
-  private def leInt(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) |
-      ((b(i + 3) & 0xff) << 24)
-
-  private def fourcc(b: Array[Byte], i: Int): String =
-    new String(b, i, 4, "US-ASCII")
-
   /** Walks an AVI's RIFF tree in file order, calling
     * `visit(id, payloadAt, size, inMovi)` for every chunk that is not
     * a LIST (`inMovi`: inside the `movi` list). False, visiting
@@ -549,7 +544,7 @@ object Multimodal {
       var i = from
       while (i + 8 <= to) {
         val id = fourcc(b, i)
-        val size = leInt(b, i + 4)
+        val size = le32(b, i + 4)
         if (size < 0 || i + 8 + size > to) return
         if (id == "LIST" && size >= 4)
           walk(i + 12, i + 8 + size, inMovi || fourcc(b, i + 8) == "movi", depth + 1)
@@ -557,7 +552,7 @@ object Multimodal {
         i += 8 + size + (size & 1)
       }
     }
-    walk(12, math.min(b.length, 12 + leInt(b, 4) - 4), inMovi = false, depth = 0)
+    walk(12, math.min(b.length, 12 + le32(b, 4) - 4), inMovi = false, depth = 0)
     true
   }
 
@@ -576,8 +571,8 @@ object Multimodal {
           handler = fourcc(b, at + 4).trim.toLowerCase(java.util.Locale.ROOT)
       }
       if (!avi || avih < 0 || avih + 40 > b.length) None
-      else Some((s"avi/$handler", leInt(b, avih + 32), leInt(b, avih + 36),
-        leInt(b, avih + 16)))
+      else Some((s"avi/$handler", le32(b, avih + 32), le32(b, avih + 36),
+        le32(b, avih + 16)))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** REAL frame extraction: the payload bytes of every video frame

@@ -453,57 +453,58 @@ object EventStream {
 
   /** D12: in-flight LM-perplexity gate — the streaming twin of C28's
     * CCNet-style quality filter. Each micro-batch is scored with the
-    * SAME `LangModel` verdict the batch query runs, against a FROZEN
-    * model (train it offline on a presumed-clean corpus; the trigram
-    * table is charset-bounded, so the task-shipped kernel map costs
-    * the same at any corpus size), and docs whose average negative
-    * log-prob exceeds `maxScore` never land. This is the gate that
-    * catches junk C9's structural heuristics cannot: encoding
-    * garbage and wrong-language text LOOK structurally fine. The
-    * verdict is a map-side kernel column, so the gate itself is a
-    * stateless filter — no per-batch score/semi-join shuffle — and
-    * the per-batch step remains only for the exactly-once corpus
-    * landing (`landFiltered`, which holds the replay argument). */
+    * SAME kernel the batch query runs, against a FROZEN model (train
+    * it offline on a presumed-clean corpus; the trigram table is
+    * charset-bounded, so the task-shipped kernel map costs the same
+    * at any corpus size), and docs whose average negative log-prob
+    * exceeds `maxScore` never land (`LangModel.keep`). This is the
+    * gate that catches junk C9's structural heuristics cannot:
+    * encoding garbage and wrong-language text LOOK structurally
+    * fine. The verdict is a map-side kernel column, so the gate
+    * itself is a stateless filter — no per-batch score/semi-join
+    * shuffle — and the per-batch step remains only for the
+    * exactly-once corpus landing (`landFiltered`, which holds the
+    * replay argument). */
   def perplexityGateSink(docs: DataFrame, idName: String, text: Column,
                          model: graft.operators.LangModel.Model, maxScore: Double,
                          path: String, partCol: String, checkpoint: String)
     : StreamingQuery =
     landFiltered(docs, checkpoint, path, partCol)(_.filter(
-      graft.operators.LangModel.scoreCol(text, model).getField("lm_score") <= maxScore))
+      graft.operators.LangModel.keep(text, model, maxScore)))
 
   /** D13: in-flight DSIR relevance gate — the streaming twin of
     * C46's importance weighting. Each micro-batch is scored with the
-    * SAME `Dsir.score` the batch query runs, against a FROZEN
-    * log-ratio model (train offline: target = the domain you want,
-    * raw = a reference crawl; the λ table is ≤ 16^prefixLen rows, so
-    * the task-shipped kernel map costs the same at any corpus size),
-    * and docs whose log(p_target/p_raw) falls below `minLogw` never
-    * land — the ingest-time form of "only keep crawl that looks like
-    * the target domain". Where D12 rejects junk ANY corpus would
-    * refuse, D13 STEERS the mixture toward a chosen target
-    * distribution. Same map-side filter as D12, landed through
+    * SAME kernel as `Dsir.score`, against a FROZEN log-ratio model
+    * (train offline: target = the domain you want, raw = a reference
+    * crawl; the λ array is 16^prefixLen longs, so the task-shipped
+    * model costs the same at any corpus size), and docs whose
+    * log(p_target/p_raw) falls below `minLogw` never land
+    * (`Dsir.keep`) — the ingest-time form of "only keep crawl that
+    * looks like the target domain". Where D12 rejects junk ANY
+    * corpus would refuse, D13 STEERS the mixture toward a chosen
+    * target distribution. Same map-side filter as D12, landed through
     * `landFiltered`. */
   def dsirGateSink(docs: DataFrame, idName: String, text: Column,
                    model: graft.operators.Dsir.Model, minLogw: Double,
                    path: String, partCol: String, checkpoint: String)
     : StreamingQuery =
     landFiltered(docs, checkpoint, path, partCol)(_.filter(
-      graft.operators.Dsir.scoreCol(text, model).getField("logw") >= minLogw))
+      graft.operators.Dsir.keep(text, model, minLogw)))
 
   /** D15: in-flight TRAINED-classifier gate (twin of C52) — the last
     * rung of the streaming quality ladder: D7 applies rule gates,
     * D12 an LM-perplexity cutoff, D13 a DSIR domain steer, and this
     * one the supervised keep/drop verdict of a frozen
     * `Classifier.Model` (train offline on labeled seeds; the
-    * vocab-sized log-odds table broadcasts identically at any corpus
-    * size). Docs with `logodds <= cutoff` never land. Same map-side
-    * filter as D12/D13, landed through `landFiltered`. */
+    * vocab-sized log-odds map ships identically at any corpus size).
+    * Docs with `logodds <= cutoff` never land (`Classifier.keep`).
+    * Same map-side filter as D12/D13, landed through `landFiltered`. */
   def classifierGateSink(docs: DataFrame, idName: String, text: Column,
                          model: graft.operators.Classifier.Model, cutoff: Double,
                          path: String, partCol: String, checkpoint: String)
     : StreamingQuery =
     landFiltered(docs, checkpoint, path, partCol)(_.filter(
-      graft.operators.Classifier.scoreCol(text, model).getField("logodds") > cutoff))
+      graft.operators.Classifier.keep(text, model, cutoff)))
 
   /** D10: continuous near-dup ingest gate — the streaming form of
     * C34. Each micro-batch is gated through the SAME
@@ -783,8 +784,9 @@ object EventStream {
     * parallelism spread (so every later stage and the landed corpus
     * see the scrubbed text and carry the quality columns — the RAW
     * text column is dropped right there, so unscrubbed PII reaches
-    * neither a model nor the corpus), then the
-    * LM, classifier, and DSIR verdicts (map-side kernel columns —
+    * neither a model nor the corpus), then the LM, classifier, and
+    * DSIR verdicts — D12's, D15's and D13's own `keep` columns, so
+    * the composition holds by construction (map-side kernel columns:
     * the three gates fold into ONE filter pass), the D9 anti-join
     * against the eval grams, and the D10 near-dup gate against the
     * persistent signature store — D10's own step, `nearDupLanding`,
@@ -844,17 +846,14 @@ object EventStream {
           // && short-circuits left-to-right, preserving the cheap-to-
           // expensive ladder order per row
           cfg.lm.foreach { case (m, maxScore) =>
-            surv = surv.filter(graft.operators.LangModel
-              .scoreCol(cfg.lmText(scrubbedText), m)
-              .getField("lm_score") <= maxScore) }
+            surv = surv.filter(
+              graft.operators.LangModel.keep(cfg.lmText(scrubbedText), m, maxScore)) }
           cfg.clf.foreach { case (m, cutoff) =>
-            surv = surv.filter(graft.operators.Classifier
-              .scoreCol(cfg.clfText(scrubbedText), m)
-              .getField("logodds") > cutoff) }
+            surv = surv.filter(
+              graft.operators.Classifier.keep(cfg.clfText(scrubbedText), m, cutoff)) }
           cfg.dsir.foreach { case (m, minLogw) =>
-            surv = surv.filter(graft.operators.Dsir
-              .scoreCol(cfg.dsirText(scrubbedText), m)
-              .getField("logw") >= minLogw) }
+            surv = surv.filter(
+              graft.operators.Dsir.keep(cfg.dsirText(scrubbedText), m, minLogw)) }
           cfg.decon.foreach { case (evalGrams, n, maxShared) =>
             // both sides of the anti-join read `surv` — fine: its
             // upstream past the quality pin is only the three cheap

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Classifier
+import graft.operators.{Classifier, Dsir, LangModel}
 
 /** C52: the trained NB quality classifier on a hand-labeled corpus —
   * direction of the learned signal, the prior-only contract for
@@ -57,13 +57,25 @@ class ClassifierSpec extends SparkSpec {
     assert(even.prior != skewed.prior)
     // the prior is model data, read from the model object: a literal in
     // the source would make every model compile its own class
-    def source(m: Classifier.Model): String = {
+    def source(m: graft.plans.FrozenTextModel): String = {
       val ctx = new CodegenContext
       GenerateUnsafeProjection.createCode(ctx,
-        Seq(graft.plans.NbScore(BoundReference(0, StringType, nullable = true), m.compiled)))
+        Seq(graft.plans.ModelScore(BoundReference(0, StringType, nullable = true), m)))
         .code.toString + ctx.declareAddedFunctions()
     }
-    assert(source(even) == source(skewed))
+    assert(source(even.compiled) == source(skewed.compiled))
+    // the same holds for the other frozen text models: two LMs with
+    // different unseen floors, two DSIR models with different unseen λ
+    val lmA = LangModel.train((pos ++ neg).toDF("id", "t"), col("t"))
+    val lmB = LangModel.train(pos.toDF("id", "t"), col("t"))
+    assert(lmA.unkLogp != lmB.unkLogp)
+    assert(source(lmA.compiled) == source(lmB.compiled))
+    val raw = (pos ++ neg).toDF("id", "t")
+    val dsirA = Dsir.train(pos.toDF("id", "t"), raw, col("id"), col("t"))
+    val dsirB = Dsir.train((pos :+ ((3L, "more clean text"))).toDF("id", "t"), raw,
+      col("id"), col("t"))
+    assert(dsirA.unkLam != dsirB.unkLam)
+    assert(source(dsirA.compiled) == source(dsirB.compiled))
   }
 
   test("score kernel ≡ declarative decimal pipeline, bit-identical") {

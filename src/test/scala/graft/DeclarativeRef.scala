@@ -235,8 +235,8 @@ object DeclarativeRef {
   // --- Frozen-model scorers (C28 / C46 / C52) -------------------------
 
   /** `LangModel.score` as explode → broadcast join → per-doc decimal
-    * aggregation, one row per TRIGRAM — the twin of
-    * `plans.TrigramLmScore`. Short docs carry the unseen floor. */
+    * aggregation, one row per TRIGRAM — the twin of the
+    * `plans.CompiledLm` kernel. Short docs carry the unseen floor. */
   def langModelScore(docs: DataFrame, id: Column, text: Column,
                      model: LangModel.Model): DataFrame = {
     val perTri = docs
@@ -262,8 +262,8 @@ object DeclarativeRef {
       .groupBy(col("b")).agg(count(lit(1)).as(cname))
 
   /** `Dsir.score` as feature explode → broadcast join → per-doc
-    * decimal sum, one row per FEATURE — the twin of
-    * `plans.DsirScore`. */
+    * decimal sum, one row per FEATURE — the twin of the
+    * `plans.CompiledBucketWeights` kernel. */
   def dsirScore(docs: DataFrame, id: Column, text: Column,
                 model: Dsir.Model): DataFrame = {
     val perFeat = Dsir.feats(docs, id, text, model.prefixLen)
@@ -287,8 +287,8 @@ object DeclarativeRef {
   }
 
   /** `Classifier.score` as token explode → broadcast join → per-doc
-    * decimal sum plus the prior, one row per TOKEN — the twin of
-    * `plans.NbScore`. */
+    * decimal sum plus the prior, one row per TOKEN — the twin of the
+    * `plans.CompiledTokenWeights` kernel. */
   def classifierScore(docs: DataFrame, id: Column, text: Column,
                       model: Classifier.Model, cutoff: Double = 0.0): DataFrame =
     docs.select(id.as("id"),

@@ -278,7 +278,7 @@ class PlanSpec extends SparkSpec {
     // c45's hot-line removal must stay the ANTI equi-join — a per-doc
     // membership array scan would be O(lines x hot) per doc
     assert(finalPlan("c45_line_dedup").contains("LeftAnti"))
-    // c46's scoring runs the fused DsirScore kernel: the corpus side
+    // c46's scoring runs the fused DSIR kernel: the corpus side
     // sees no model join, no per-feature explode, no per-doc
     // aggregation — one map-side pass (training's tiny bucket-table
     // jobs run eagerly before this plan, so they don't appear in it)

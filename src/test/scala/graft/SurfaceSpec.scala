@@ -13,11 +13,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * sinks and one definition each of the near-dup family's, the text
   * kernels' and the media probes' shared steps, a registry load
   * that is a bare parquet scan, one minhash signature shape, one
-  * owner of the signature store's files and one scoring path for the
-  * embedding operators — so a one-off probe main, a second builder,
-  * an experiment knob, a copied sink body or helper, a repartition
-  * over the registry scan, a settable signature shape, a second store
-  * writer or a restated score cannot come back unnoticed. */
+  * owner of the signature store's files, one scoring path for the
+  * embedding operators and one map, score expression, round and
+  * verdict each for the frozen text models — so a one-off probe
+  * main, a second builder, an experiment knob, a copied sink body or
+  * helper, a repartition over the registry scan, a settable signature
+  * shape, a second store writer or a restated score cannot come back
+  * unnoticed. */
 class SurfaceSpec extends AnyFunSuite {
 
   /** Path under src/main/scala (with '/') → source text. */
@@ -157,7 +159,7 @@ class SurfaceSpec extends AnyFunSuite {
     for (d <- Seq("isWs", "round6", "tokenBounds"))
       assert(count(s"""def $d\\b""") == Map("graft/plans/KernelBytes.scala" -> 1), d)
     // the token scan that keeps each token's byte range is tokenBounds;
-    // the other walk (CompiledTokenWeights.nbScore) keeps none
+    // the other walk (CompiledTokenWeights.score) keeps none
     assert(count("""while \(i < len && !isWs\(bytes\(i\)\)\) i \+= 1""") ==
       Map("graft/plans/KernelBytes.scala" -> 1, "graft/plans/TextExpressions.scala" -> 1))
     assert(occurrences(sources("graft/sources/Multimodal.scala"), """def walk\(""") == 1)
@@ -179,6 +181,28 @@ class SurfaceSpec extends AnyFunSuite {
       Map(sim -> 1))
     assert(count("""\bVectorFunctions\b""").isEmpty)
     assert(!sources.contains("graft/functions/VectorFunctions.scala"))
+  }
+
+  test("the frozen text models share one map, one score expression, one round and one verdict each") {
+    val text = "graft/plans/TextExpressions.scala"
+    // one open-addressing map in the plans package, with one size guard
+    assert(count("""private val mask = """, _.startsWith("graft/plans/")) == Map(text -> 1))
+    assert(count("""1 << 27""") == Map(text -> 1))
+    // one model-carrying score expression; the per-model classes are gone
+    assert(count("""case class \w+\(child: Expression, model: """) == Map(text -> 1))
+    assert(count("""\b(TrigramLmScore|NbScore|DsirScore)\b""").isEmpty)
+    // one scale-8 fixed-point → 6-digit decimal round
+    assert(count("""setScale\(6, java\.math\.RoundingMode\.HALF_UP\)""") ==
+      Map("graft/plans/KernelBytes.scala" -> 1))
+    // each keep verdict once, in its operator: the gates and D16 call it
+    assert(count(""""lm_score"\)\s*<=""") == Map("graft/operators/LangModel.scala" -> 1))
+    assert(count("""logodds"?\)?\s*>\s*cutoff""") == Map("graft/operators/Classifier.scala" -> 1))
+    assert(count(""""logw"\)\s*>=""") == Map("graft/operators/Dsir.scala" -> 1))
+    // the media probes read container headers through one set of readers
+    val mm = sources("graft/sources/Multimodal.scala")
+    for (r <- Seq("u8", "be16", "be32", "le16", "le32", "leU32", "fourcc"))
+      assert(occurrences(mm, s"""def $r\\b""") == 1, r)
+    assert(occurrences(mm, """def (leInt|tag)\b""") == 0)
   }
 
   test("a registry load is one plain scan: no scan fan-out and no per-call-site width") {
