@@ -303,12 +303,15 @@ object StreamBench {
       // dwarfs the arrivals, not one the run itself built. Seed ids
       // start at 10⁹ and the seed vocabulary is prefixed apart from
       // the growth batches', so nothing collides with the stream.
-      import spark.implicits._
-      val seed = (0 until GrowthPreseed).map { i =>
-        val (lang, text) = pool(i % pool.length)
+      // The docs are generated executor-side from `spark.range` and a
+      // broadcast of the pool: built on the driver, their rows would
+      // travel inside every task of the seed's stages (MiBs each).
+      val bPool = spark.sparkContext.broadcast(pool)
+      val seed = spark.range(GrowthPreseed).map { i =>
+        val (lang, text) = bPool.value((i % bPool.value.length).toInt)
         StreamDoc(1000000000L + i, lang,
           text.split("\\s+").filter(_.nonEmpty).map("seed0·" + _).mkString(" "))
-      }.toDF()
+      }(Encoders.product[StreamDoc]).toDF()
       streaming.EventStream.nearDupStoreSeed(seed, "doc_id", col("text"), s"$dir/store")
       System.err.println(s"[streambench] $growthGate growth preseeded store with $GrowthPreseed docs")
       val input = MemoryStream[StreamDoc](spark)(Encoders.product[StreamDoc])
@@ -351,15 +354,16 @@ object StreamBench {
       val per = rs.sortBy(_._2).map { case (_, size, secs, med, feedSecs, stages, landed) =>
         // per-stage aggregation (GRAFT_SINK_PROFILE=1 only): one
         // sample per measured batch per stage → median + the raw
-        // samples (seconds and Spark jobs), so a cited per-stage
-        // table traces to this record
+        // samples (seconds, Spark jobs and codegen compiles), so a
+        // cited per-stage table traces to this record
         val stageJson =
           if (stages.isEmpty) ""
           else stages.groupBy(_.stage).toSeq.sortBy(_._1).map { case (st, ss) =>
             val vals = ss.map(_.sec)
             s""""$st":{"median_sec":${j(median(vals))},""" +
               s""""secs":[${vals.map(j(_)).mkString(",")}],""" +
-              s""""jobs":[${ss.map(_.jobs).mkString(",")}]}"""
+              s""""jobs":[${ss.map(_.jobs).mkString(",")}],""" +
+              s""""compiles":[${ss.map(_.compiles).mkString(",")}]}"""
           }.mkString(""","stages":{""", ",", "}")
         s""""batch_$size":{"secs":[${secs.map(j(_)).mkString(",")}],""" +
           s""""feed_secs":[${feedSecs.map(j(_)).mkString(",")}],""" +

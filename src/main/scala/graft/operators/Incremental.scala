@@ -79,9 +79,10 @@ object Incremental {
     * are useful only while `Indexed.prunedRead` can plausibly accept
     * the probe, and a multi-million-key collect would hurt the
     * driver long before the demotion bound trips. Above this many
-    * band rows the gate keeps the micro-batch broadcast pins but
-    * skips the pruners — the broadcast semi-join store path is the
-    * fallback, identical results. 512k keys ≈ ~30 MB collected. */
+    * band rows (by `bandRowBound`) the gate keeps the micro-batch
+    * broadcast pins but skips the pruners — whole store scans against
+    * the same broadcasts are the fallback, identical results. 512k
+    * keys ≈ ~30 MB collected. */
   val MaxPrunerBandRows: Long = 1L << 19
 
   /** Upper bound on the band rows `signatures` emits for `nDocs`
@@ -125,23 +126,36 @@ object Incremental {
     * object scaladoc).
     *
     * STORE-SCAN-ONLY plan shape (pinned, not left to size
-    * estimates): every join the store participates in builds/
-    * broadcasts a BATCH-bounded side — the band join broadcasts the
-    * batch's band table, and the verify join first SEMI-REDUCES the
-    * store's set table by the broadcast candidate-id list before any
-    * payload join. Without the pins, Catalyst's size estimation
-    * flips the verify join to SortMergeJoin once the batch outgrows
-    * the broadcast threshold, and every arrival then re-sorts and
-    * re-shuffles the ENTIRE store's sets — measured 250 MB shuffled
-    * per 50k-doc arrival against a 500k-doc store (SURVEY §6 round 9;
-    * the GateProfile probe's source is at commit 814e342),
-    * growing linearly with the store forever. With the pins the
-    * store is only ever scanned: per-arrival network is O(batch),
-    * matching the store's O(batch) append writes. The broadcasts are
-    * micro-batch-bounded by the sink's contract (batch bands/sets
-    * and candidate ids — never the store side), and the signature
-    * tables are localCheckpointed (batch-sized) so the shingle→
-    * minhash pipeline runs once, not once per downstream join.
+    * estimates): every join the store participates in broadcasts a
+    * BATCH-bounded side — the band join the batch's band table, the
+    * verify join the candidate pairs with the batch docs' sets, which
+    * the store's set table (pruned or whole) probes. Without the pins,
+    * Catalyst's size estimation flips the verify join to
+    * SortMergeJoin once the batch outgrows the broadcast threshold,
+    * and every arrival then re-sorts and re-shuffles the ENTIRE
+    * store's sets — measured 250 MB shuffled per 50k-doc arrival
+    * against a 500k-doc store (SURVEY §6 round 9; the GateProfile
+    * probe's source is at commit 814e342), growing linearly with the
+    * store forever. With the pins the store is only ever scanned:
+    * per-arrival network is O(batch), matching the store's O(batch)
+    * append writes. The broadcasts are micro-batch-bounded by the
+    * sink's contract (batch signatures and candidate sets — never
+    * the store side).
+    *
+    * Jobs (the micro path): the gate pins TWO batch-sized tables,
+    * each lazily (`Pins.pin`), so each is materialized by the first
+    * job that reads it and read from its blocks by every later one —
+    * no pin runs a job of its own:
+    *  - `sig`, one row per kept signature (id, s, b): the collapse's
+    *    groupBy runs once (one shuffle), and the returned band and
+    *    set tables are map-side projections of it. The pruner's
+    *    band-key collect materializes it;
+    *  - `cand`, the (cid, oid, tag) candidate pairs of the store AND
+    *    the batch from ONE band join. The pruner's candidate-id
+    *    collect materializes it.
+    * The survivor ids then cost three broadcasts: the batch docs'
+    * sets, the candidate pairs carrying them, and the dropped ids.
+    *
     * `microBatch = false` opts OUT of all the pins for a
     * corpus-sized arrival, where broadcasting/checkpointing the
     * "batch" would itself be the scale defect — and a caller who
@@ -156,7 +170,6 @@ object Incremental {
            maxBandRows: Long = MaxMicroBatchBandRows,
            maxPrunerBandRows: Long = MaxPrunerBandRows)
     : (DataFrame, DataFrame, DataFrame) = {
-    val (bBands0, bSets0) = signatures(batch, id, text)
     // the contract is ENFORCED, not documentary — and the guard runs
     // BEFORE anything materializes: every doc emits at most
     // Hashes/BandRows band rows (short docs emit none), so the incoming
@@ -179,26 +192,19 @@ object Incremental {
       }
       nBandBound <= maxBandRows
     }
-    // micro-batch contract (the streaming sinks): the batch tables
-    // are small → materialize them once (the shingle→minhash
-    // pipeline would otherwise re-run under every downstream join)
-    // and broadcast them into every join the store participates in.
-    // A corpus-sized arrival (microBatch = false — e.g. the c34
-    // fixture gating most of the corpus in one call) must NOT
-    // broadcast or checkpoint corpus-scale tables: it keeps the
-    // declarative shape and lets Catalyst/AQE choose.
-    val (bBands, bSets) =
-      if (micro) (Pins.checkpoint(bBands0), Pins.checkpoint(bSets0))
-      else (bBands0, bSets0)
-    // the pruner cap below compares the ACTUAL band-row count —
-    // the checkpoint above already counted it (no job)
-    val nBand = if (micro) Pins.count(bBands) else nBandBound
     // the pruner point-read path pays driver-side key collects — cap
-    // them at a depth where prunedRead can still plausibly win (its
-    // own alive-key cap is far smaller); past it the broadcast
-    // semi-join store path below is the same answer without the
-    // collect
-    val usePruners = micro && nBand <= maxPrunerBandRows
+    // them (on the same bound, so the cap too errs toward the
+    // collect-free shape) at a depth where prunedRead can still
+    // plausibly win (its own alive-key cap is far smaller); past it
+    // the store tables are scanned whole — the same answer without
+    // the collect
+    val usePruners = micro && nBandBound <= maxPrunerBandRows
+    // micro-batch contract (the streaming sinks): the batch tables
+    // are small → pin them once and broadcast them into every join
+    // the store participates in. A corpus-sized arrival (microBatch
+    // = false — e.g. the c34 fixture gating most of the corpus in one
+    // call) must NOT broadcast or checkpoint corpus-scale tables: it
+    // keeps the declarative shape and lets Catalyst/AQE choose.
     def hint(df: DataFrame): DataFrame = if (micro) broadcast(df) else df
 
     // EXACT-SIGNATURE COLLAPSE (round 14, the error-page-storm fix):
@@ -228,95 +234,75 @@ object Incremental {
     // empty-set short docs are never collapsed: they match nothing,
     // always survive, and their (id, []) rows still land in the store.
     //
-    // STREAMING-CALLER PATH (round 15 restricted it to micro; round
-    // 16 re-extends it to DEMOTED micro-batch calls): the storm
-    // regime lives in the streaming sinks, which call with
-    // `microBatch = true`. On the micro path the collapse's
-    // array-keyed groupBy and two anti-joins ride batch-sized
-    // broadcasts; an arrival that DEMOTES (band-row bound exceeded)
-    // must still collapse — its signature tables are APPENDED to the
-    // persistent store, and an uncollapsed oversized arrival would
-    // permanently seed the store with duplicate signatures,
-    // re-opening the quadratic storm regime the r14 fix closed — so
-    // the demoted shape keeps the collapse as plain shuffle joins
-    // (no broadcast, no eager checkpoint: Catalyst/AQE plan them,
-    // and the demoted tables are `Pins.persist`ed below — a LAZY
-    // MEMORY_AND_DISK cache registered with the sink's end-of-batch
-    // reap, populated by whichever consuming action runs first.
-    // Without it every separate action a sink takes on the returned
-    // tables re-ran the shingle→minhash pipeline — measured 1.74×
-    // the per-arrival wall, records/demotedprobe_r17.json: each
-    // post-survivor count/write paid ~0.6-1.1 s vs cache-scan cost
-    // once cached. Outside a sink collector `Pins.persist` is a
-    // no-op and the shape stays fully lazy: nothing leaks, and
-    // IncrementalSpec's no-LogicalRDD demoted-plan pin holds on
-    // both paths — a persist never truncates lineage). Only an
-    // EXPLICIT
+    // The collapsed docs are exactly the batch docs missing from
+    // `sig`, so the survivors below are `sig`'s ids minus the verified
+    // drops — the collapse needs no join of its own.
+    //
+    // Every `microBatch = true` call collapses, a DEMOTED one
+    // included: its signature tables are APPENDED to the persistent
+    // store, and an uncollapsed oversized arrival would permanently
+    // seed the store with duplicate signatures, re-opening the
+    // quadratic storm regime the r14 fix closed. Only an EXPLICIT
     // `microBatch = false` caller (c34's corpus-sized declarative
-    // arrival, whose tables are not destined for a store) skips the
-    // collapse: there those steps would be three extra full shuffles
-    // over the corpus for a dedup that C1 (exact hash-groupBy)
-    // already does upstream. Verdicts are identical on every path:
-    // identical-signature docs still share every band and verify at
-    // Jaccard 1.0, so keep-first drops them through the ordinary
-    // within-batch path; only the RETURNED tables differ
-    // (uncollapsed in declarative mode).
+    // arrival, whose tables are not destined for a store) skips it:
+    // there the groupBy would be an extra full shuffle over the corpus
+    // for a dedup that C1 (exact hash-groupBy) already does upstream.
+    // Verdicts are identical on every path: identical-signature docs
+    // still share every band and verify at Jaccard 1.0, so keep-first
+    // drops them through the ordinary within-batch path; only the
+    // RETURNED tables differ (uncollapsed in declarative mode).
     val collapse = microBatch && threshold <= 1.0
-    val (pBands, pSets, exactDropped) = if (collapse) {
-      val reps = bSets.filter(size(col("s")) > 0)
-        .groupBy(col("s")).agg(min(col("id")).as("id")).select(col("id"))
-      // non-representative duplicate ids: batch-bounded (smaller than
-      // the batch), so the micro-batch contract broadcasts them into
-      // the two anti-joins below; the demoted shape joins them
-      // declaratively instead
-      val dup0 = bSets.filter(size(col("s")) > 0)
-        .join(hint(reps), Seq("id"), "left_anti").select(col("id"))
-      val dup = if (micro) Pins.checkpoint(dup0) else dup0
-      (bBands.join(hint(dup), Seq("id"), "left_anti"),
-        bSets.join(hint(dup), Seq("id"), "left_anti"),
-        dup.select(col("id").as("cid")))
-    } else (bBands, bSets, bSets.limit(0).select(col("id").as("cid")))
+    // every `microBatch = true` call signs the batch into ONE table,
+    // `sig` (id, s, b), which the collapse groups and the micro path
+    // pins, and derives the returned tables from it; an explicit
+    // declarative call returns the plain `signatures` tables
+    val (pBands, pSets) = if (!microBatch) signatures(batch, id, text) else {
+      val t = graft.plans.TextExpressions
+      // docs with shingles, signed in one map-side pass: the verify
+      // set `s` and the band-key array `b` (`signaturesMapSide` keyed
+      // by the (id, s) pair, so the set kernel runs on the same
+      // filtered rows, where it is never null — asserted, or a
+      // null-intolerant consumer would infer a not-null filter that
+      // re-runs the kernel)
+      val signed = MinHash.signaturesMapSide(batch,
+          struct(id.as("id"),
+            t.knownNotNull(t.hashedShingleSet(lower(text), MinHash.ShingleWords)).as("s")),
+          text, MinHash.ShingleWords, MinHash.Hashes)
+        .select(col("id.id").as("id"), col("id.s").as("s"),
+          MinHash.bandArray(MinHash.Hashes, MinHash.BandRows).as("b"))
+      val kept =
+        if (collapse) signed.groupBy(col("s")).agg(min(struct(col("id"), col("b"))).as("r"))
+          .select(col("r.id").as("id"), col("s"), col("r.b").as("b"))
+        else signed
+      // short (or null) docs: an empty set and no bands
+      val short = batch
+        .filter(!coalesce(size(t.wordNgrams(lower(text), MinHash.ShingleWords)) > 0, lit(false)))
+        .select(id.as("id"), array().cast("array<bigint>").as("s"),
+          lit(null).cast("array<string>").as("b"))
+      val sig = if (micro) Pins.pin(kept.unionByName(short)) else kept.unionByName(short)
+      // explode an expression, not the bare `b`: for a bare column
+      // Spark infers `size(b) > 0` and pushes it below the projection
+      // that computes `b`, re-running the minhash kernel in the filter
+      // (on an unpinned batch, 6× the band table's own cost)
+      (sig.select(col("id"), posexplode(coalesce(col("b"), array())).as(Seq("bi", "bk"))),
+        sig.select(col("id"), col("s")))
+    }
     // demoted arrival inside a sink: register the returned tables
-    // (which the survivors plan below also embeds) for a lazy
-    // collector-reaped cache — see the streaming-caller note above.
-    // `Pins.persist` returns its argument; outside a collector it is
-    // a no-op and the declarative shape is untouched.
+    // (which the survivors plan below also reads) for a LAZY
+    // MEMORY_AND_DISK cache reaped with the batch — no eager
+    // checkpoint (the guard exists to avoid a corpus-sized
+    // materialization up front), yet no shingle→minhash re-run per
+    // consuming action either (measured 1.74× the per-arrival wall
+    // without it, records/demotedprobe_r17.json). Outside a collector
+    // `Pins.persist` is a no-op and the shape stays fully lazy; a
+    // persist never truncates lineage, so IncrementalSpec's
+    // no-LogicalRDD demoted-plan pin holds on both paths
     if (microBatch && !micro) { Pins.persist(pBands); Pins.persist(pSets) }
 
-    val jac = Jaccard.exactScore(col("sa"), col("sb"), size(col("sa")), size(col("sb")))
-
-    // candidates against the store: batch id on the left, ANY store id.
-    // `prunedRight`: given the candidate ids, an optional
-    // sidecar-pruned point-read of the right sets (Indexed.prunedRead
-    // — already filtered to id ∈ candidates, bit-identical to the
-    // semi-join it replaces); None → the broadcast semi-join path.
-    def verified(cand: DataFrame, leftSets: DataFrame, rightSets: DataFrame,
-                 prunedRight: Option[Seq[Any] => Option[DataFrame]]) = {
-      // candidate ids are batch-bounded → broadcast them to prune the
-      // (possibly store-sized) right side down to candidate rows with
-      // a scan, never a shuffle of the store. The pruner's key list is
-      // deduped on the driver: the collected array is bounded by the
-      // pruner cap, and a distinct() would add a shuffle stage
-      val pruned =
-        if (usePruners) prunedRight.flatMap(f =>
-          f(cand.select(col("oid")).collect().map(_.get(0)).distinct.toSeq))
-        else None
-      val reduced = pruned.map(_.select(col("id"), col("s"))).getOrElse {
-        if (micro) rightSets.join(
-          broadcast(cand.select(col("oid").as("id")).distinct()), Seq("id"), "left_semi")
-        else rightSets
-      }
-      cand
-        .join(hint(leftSets.select(col("id").as("cid"), col("s").as("sa"))), "cid")
-        .join(reduced.select(col("id").as("oid"), col("s").as("sb")), "oid")
-        .filter(jac >= threshold)
-        .select(col("cid"))
-    }
-
     // store band probe: with an indexed store layout the batch's band
-    // keys (batch-bounded — collected off the checkpointed batch
-    // table, deduped on the driver like the candidate ids above)
-    // select a point-read of the store instead of a scan
+    // keys (batch-bounded, deduped on the driver — a distinct() would
+    // add a shuffle stage) select a point-read of the store instead
+    // of a scan
     val effStoreBands =
       if (usePruners)
         prunedBands.flatMap(f =>
@@ -325,33 +311,59 @@ object Incremental {
           .getOrElse(storeBands)
       else storeBands
 
-    val vsStoreCand = effStoreBands.select(col("id").as("oid"), col("bi"), col("bk"))
-      .join(hint(pBands.select(col("id").as("cid"), col("bi"), col("bk"))),
-        Seq("bi", "bk"))
-      .select(col("cid"), col("oid")).distinct()
-    val vsStore = verified(
-      if (micro) Pins.checkpoint(vsStoreCand) else vsStoreCand,
-      pSets, storeSets, prunedSets)
-
-    // within-batch: keep-first by id (the C2 pair orientation) — all
-    // sides batch-bounded. Both sides ride the collapsed tables: a
+    // ONE band join finds both candidate kinds against the (one,
+    // reused) broadcast of the batch bands: store docs (tag 0, any id —
+    // a replayed doc self-matches) and batch docs (tag 1, keep-first:
+    // oid < cid). The batch side rides the collapsed table: a
     // non-representative oid's match is always witnessed by its
-    // (smaller-id) representative, so dropping duplicates from the
-    // oid side never loses a verdict — rep(set) < oid < cid and
-    // Jaccard is set-determined
-    val vsBatch = verified(
-      pBands.select(col("id").as("cid"), col("bi"), col("bk"))
-        .join(hint(pBands.select(col("id").as("oid"), col("bi"), col("bk"))),
-          Seq("bi", "bk"))
-        .filter(col("oid") < col("cid"))
-        .select(col("cid"), col("oid")).distinct(),
-      pSets, pSets, None)
+    // (smaller-id) representative, so dropping duplicates from the oid
+    // side never loses a verdict — rep(set) < oid < cid and Jaccard is
+    // set-determined. The build side drops null ids (no verdict joins
+    // them) on both kinds, so the keep-first predicate's inferred
+    // not-null filter leaves the two broadcasts identical and the
+    // second one reuses the first.
+    //
+    // A pair sharing several bands repeats, once per shared band. On
+    // the micro path that is at most Hashes/BandRows repeats of a
+    // near-dup pair (the collapse leaves no identical-doc clusters),
+    // and verifying them again is cheaper than the shuffle job a
+    // distinct() adds. A declarative arrival is uncollapsed — its
+    // identical docs form clusters whose pairs grow quadratically,
+    // each repeated per band — so there every pair is verified once
+    def candidates(other: DataFrame, tag: Int): DataFrame =
+      other.select(col("id").as("oid"), col("bi"), col("bk"))
+        .join(hint(pBands.filter(col("id").isNotNull)
+          .select(col("id").as("cid"), col("bi"), col("bk"))), Seq("bi", "bk"))
+        .select(col("cid"), col("oid"), lit(tag).as("tag"))
+    val cand0 = candidates(effStoreBands, 0)
+      .unionByName(candidates(pBands, 1).filter(col("oid") < col("cid")))
+    val cand = if (micro) Pins.pin(cand0) else cand0.distinct()
 
-    val dropped0 = vsStore.unionByName(vsBatch)
-    val dropped =
-      (if (collapse) dropped0.unionByName(exactDropped) else dropped0).distinct()
-    val survivors = batch.select(id.as("id"))
-      .join(dropped.withColumnRenamed("cid", "id"), Seq("id"), "left_anti")
+    // verification: the store's set table is only ever SCANNED —
+    // through the pruner's point-read when it accepts the candidate
+    // ids (Indexed.prunedRead, already filtered to id ∈ candidates,
+    // bit-identical to the scan; the key list is deduped on the
+    // driver) or whole — and probes the broadcast candidate pairs,
+    // which carry the batch doc's set. The batch's own sets (tag 1)
+    // probe the same broadcast
+    val pruned =
+      if (usePruners) prunedSets.flatMap(f =>
+        f(cand.filter(col("tag") === 0).select(col("oid")).collect()
+          .map(_.get(0)).distinct.toSeq))
+      else None
+    val storeCandSets = pruned.map(_.select(col("id"), col("s"))).getOrElse(storeSets)
+    val pairs = cand.join(hint(pSets.select(col("id").as("cid"), col("s").as("sa"))), "cid")
+    val jac = Jaccard.exactScore(col("sa"), col("sb"), size(col("sa")), size(col("sb")))
+    val dropped = storeCandSets.select(col("id").as("oid"), lit(0).as("tag"), col("s").as("sb"))
+      .unionByName(pSets.select(col("id").as("oid"), lit(1).as("tag"), col("s").as("sb")))
+      .join(hint(pairs), Seq("oid", "tag"))
+      .filter(jac >= threshold)
+      .select(col("cid").as("id"))
+    // uncollapsed, the set table has a row per batch doc: read the ids
+    // off the batch (on an unpinned `sig` the anti-join would be pushed
+    // into both branches of its union and plan `dropped` twice)
+    val survivors = (if (collapse) pSets.select(col("id")) else batch.select(id.as("id")))
+      .join(hint(dropped), Seq("id"), "left_anti")
     // microBatch = true (micro or demoted): the returned signature
     // tables are the COLLAPSED ones — one row per distinct signature
     // (plus every empty-set doc), which preserves every future

@@ -22,16 +22,16 @@ import org.apache.spark.storage.StorageLevel
   * read 1 with two queries running.
   *
   * Fix: stop inferring ownership from a global diff; RECORD it.
-  * Every eager localCheckpoint on a sink-reachable path goes through
-  * `checkpoint`, which registers the pinned RDD with the current
-  * THREAD's collector — a foreachBatch body is single-threaded
-  * driver code, so thread identity is batch identity. The sink's
-  * end-of-batch reap unpersists exactly its own pins: correct under
-  * any number of concurrent queries, pre-existing pins (frozen model
-  * tables) untouched by construction, and no degraded skip mode at
-  * all. A sink-path checkpoint NOT routed through here falls back to
-  * the gc60 regime (its dead handle is reaped on the next periodic
-  * driver GC) — bounded growth, never a reaped sibling.
+  * Every localCheckpoint on a sink-reachable path goes through
+  * `pin` (lazy) or `checkpoint` (eager), which register the pinned
+  * RDD with the current THREAD's collector — a foreachBatch body is
+  * single-threaded driver code, so thread identity is batch identity.
+  * The sink's end-of-batch reap unpersists exactly its own pins:
+  * correct under any number of concurrent queries, pre-existing pins
+  * (frozen model tables) untouched by construction, and no degraded
+  * skip mode at all. A sink-path checkpoint NOT routed through here
+  * falls back to the gc60 regime (its dead handle is reaped on the
+  * next periodic driver GC) — bounded growth, never a reaped sibling.
   *
   * `persist` is the second pin kind (r17, the demoted-arrival fix):
   * a LAZY MEMORY_AND_DISK cache registered for the same end-of-batch
@@ -69,25 +69,33 @@ object Pins {
       case _ => None
     }
 
-  /** Eager localCheckpoint that keeps its row count: the frame is
-    * marked with a lazy `localCheckpoint(false)` and then materialized
-    * by ONE `count()` of the pinned RDD — the same single job an
-    * eager checkpoint runs (which counts the RDD and discards the
-    * answer), so `count` below can answer for the frame without
-    * another job. The pinned RDD is registered with this thread's
-    * active collector (no-op without one, e.g. when the operator runs
-    * as a plain batch query). */
-  def checkpoint(df: DataFrame): DataFrame = {
+  /** Lazy localCheckpoint: the frame is marked with
+    * `localCheckpoint(false)` and the first job that reads it
+    * materializes it, so the pin runs no job of its own. Use it where
+    * that first reader is a job the caller runs anyway (a key collect,
+    * a broadcast); later reads scan the pinned blocks. The pinned RDD
+    * is registered with this thread's active collector (no-op without
+    * one, e.g. when the operator runs as a plain batch query). */
+  def pin(df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(false)
+    pinnedRdd(out).foreach { rdd =>
+      val c = collector.get()
+      if (c != null) c.add(Ckpt(rdd))
+    }
+    out
+  }
+
+  /** Eager `pin` that keeps its row count: ONE `count()` of the
+    * pinned RDD materializes it — the same single job an eager
+    * checkpoint runs (which counts the RDD and discards the answer),
+    * so `count` below can answer for the frame without another job. */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val out = pin(df)
     pinnedRdd(out) match {
-      case Some(rdd) =>
-        counts.put(rdd, rdd.count())
-        val c = collector.get()
-        if (c != null) c.add(Ckpt(rdd))
-      case None =>
-        // unexpected plan shape: materialize the plain way and leave
-        // the pin to gc60
-        out.count()
+      case Some(rdd) => counts.put(rdd, rdd.count())
+      // unexpected plan shape: materialize the plain way and leave
+      // the pin to gc60
+      case None => out.count()
     }
     out
   }

@@ -603,7 +603,14 @@ object EventStream {
     * The stored signatures are collapsed to one representative per
     * distinct signature, plus the empty-set rows; the gate holds that
     * on both the micro path and a demoted oversized arrival, so the
-    * store never accumulates duplicate signatures. */
+    * store never accumulates duplicate signatures.
+    *
+    * Pins: `gated` arrives pinned (its count is the gate's size guard
+    * and bounds the signature writes, no job). The gate pins two
+    * tables lazily — `sig`, the collapsed signatures the store writes
+    * read, and `cand`, the candidate pairs — and this step pins the
+    * survivor ids, whose count is the emptiness test. No table is
+    * materialized twice: every later query reads the pinned blocks. */
   private def nearDupLanding(gated: DataFrame, idName: String, text: Column,
                              threshold: Double, storePath: String, outPath: String,
                              partCol: String, batchId: Long, label: String): Unit = {
@@ -626,12 +633,15 @@ object EventStream {
     // without this pin the gate's verify joins re-ran for BOTH the
     // emptiness probe and the corpus write — measured ~2 s of
     // duplicated work per 50k-doc arrival. The pin's stored count is
-    // the emptiness test (no job)
+    // the emptiness test (no job). The corpus write broadcasts it: a
+    // survivor list is batch-bounded, and left to its size estimate
+    // the semi-join planned as a sort-merge join that shuffled the
+    // whole batch before AQE switched it to a broadcast (4 jobs, not 2)
     val ids = st("surv ids") { graft.operators.Pins.checkpoint(ids0) }
     if (graft.operators.Pins.count(ids) > 0)
       st("corpus write") {
         appendBatchWrite(
-          gated.join(ids.withColumnRenamed("id", idName), Seq(idName), "left_semi"),
+          gated.join(broadcast(ids.withColumnRenamed("id", idName)), Seq(idName), "left_semi"),
           batchId, outPath, partCol)
       }
     st("sig writes") {
@@ -796,9 +806,11 @@ object EventStream {
     * `appendBatchWrite`.
     *
     * Scale: every stage is O(batch) — the models broadcast, the eval
-    * side is benchmark-sized, the store join is banded — and the one
-    * localCheckpoint pins the batch-sized survivor set so the later
-    * stages' actions don't recompute the earlier joins.
+    * side is benchmark-sized, the store join is banded — and five
+    * batch-sized localCheckpoints, all reaped at the end of the batch
+    * (`unpersistBatchPins`), keep later actions from recomputing
+    * earlier work: the quality+scrub output, the score-ladder
+    * survivors, and the near-dup step's three (see `nearDupLanding`).
     *
     * The raw-text drop: every input column `text` reads (see
     * `textSourceColumns`) is dropped once `scrubbed` exists, so a

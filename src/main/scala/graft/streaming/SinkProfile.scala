@@ -11,6 +11,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * profiling is on and `graft.StreamBench` folds the aggregates into
   * its output JSON.
   *
+  * Each sample also carries the section's codegen compiles: the
+  * growth of Spark's process-wide `CodegenMetrics` compilation count
+  * over the section, taken beside the job count. Spark's codegen
+  * cache holds 100 classes, so a batch whose stages outgrow it
+  * recompiles classes every batch; this is where they are. Unlike
+  * the job count it is not tagged per section, so concurrent sinks
+  * (or any other query running meanwhile) add to each other's
+  * figure.
+  *
   * Process-wide and append-only between resets; recording is gated on
   * the same env flag as the stderr lines, so a production stream
   * (profiling off) never touches it and the buffer cannot grow
@@ -24,8 +33,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * starts), so concurrent sinks never count each other's jobs.
   */
 object SinkProfile {
-  /** One section run: its wall seconds and the Spark jobs it started. */
-  final case class Sample(stage: String, sec: Double, jobs: Long)
+  /** One section run: its wall seconds, the Spark jobs it started and
+    * the generated classes compiled meanwhile. */
+  final case class Sample(stage: String, sec: Double, jobs: Long, compiles: Long)
 
   private val lock = new Object
   private var samples = Vector.empty[Sample]
@@ -33,8 +43,8 @@ object SinkProfile {
   /** True when the sinks' profiling env flag is set. */
   def enabled: Boolean = sys.env.get("GRAFT_SINK_PROFILE").contains("1")
 
-  def record(stage: String, sec: Double, jobs: Long = 0L): Unit =
-    lock.synchronized { samples :+= Sample(stage, sec, jobs) }
+  def record(stage: String, sec: Double, jobs: Long = 0L, compiles: Long = 0L): Unit =
+    lock.synchronized { samples :+= Sample(stage, sec, jobs, compiles) }
 
   def reset(): Unit = lock.synchronized { samples = Vector.empty }
 
@@ -63,10 +73,13 @@ object SinkProfile {
     counter._2
   }
 
+  private def compiled: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Runs one named sink section. With profiling on it records the
-    * section's seconds and Spark jobs and prints them to stderr as
-    * `[label] name  sec  jobs`; with profiling off it only runs
-    * `body`. */
+    * section's seconds, Spark jobs and codegen compiles and prints
+    * them to stderr as `[label] name  sec  jobs  compiles`; with
+    * profiling off it only runs `body`. */
   def section[T](sc: SparkContext, label: String, name: String)(body: => T): T =
     if (!enabled) body
     else {
@@ -74,6 +87,7 @@ object SinkProfile {
       val id = sectionIds.incrementAndGet().toString
       val outer = sc.getLocalProperty(SectionKey)
       sc.setLocalProperty(SectionKey, id)
+      val c0 = compiled
       val t0 = System.nanoTime()
       val r = try body finally sc.setLocalProperty(SectionKey, outer)
       val sec = (System.nanoTime() - t0) / 1e9
@@ -81,8 +95,9 @@ object SinkProfile {
       // section started has been counted
       org.apache.spark.graft.Listeners.settle(sc)
       val jobs = Option(c.jobs.remove(id)).fold(0L)(_.longValue)
-      record(name, sec, jobs)
-      System.err.println(f"[$label] $name%-16s $sec%6.2f s $jobs%3d jobs")
+      val compiles = compiled - c0
+      record(name, sec, jobs, compiles)
+      System.err.println(f"[$label] $name%-16s $sec%6.2f s $jobs%3d jobs $compiles%3d compiles")
       r
     }
 }

@@ -478,4 +478,62 @@ class IncrementalSpec extends SparkSpec {
     assert(nFiles > 1, s"fixture must exercise the multi-file layout (got $nFiles)")
     assert(kept == want, s"writeSmall-layout gate diverged: got $kept want $want")
   }
+
+  test("micro-path gate against a warm indexed store: jobs per section stay at their ceiling") {
+    // the gate alone, as a sink runs it: a pinned batch (its count is
+    // known) against a store of writeSmall dirs, with the pruners.
+    // Construction pins `sig` and `cand` lazily (the collapse's
+    // shuffle, the band-key collect, the band join's broadcast and
+    // the candidate-id collect); the survivor ids are three
+    // broadcasts and the pin's count. A new action, an eager pin or a
+    // re-broadcast of a collapsed table fails here by name
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.sources.Indexed
+    val all = corpus.sortBy(_._1)
+    val want = globalKept(all)
+    val store = java.nio.file.Files.createTempDirectory("graft-gate-jobs").toString
+    val pb: Option[Seq[Any] => Option[DataFrame]] =
+      Some(keys => Indexed.prunedRead(spark, s"$store/bands", "bk", keys))
+    val ps: Option[Seq[Any] => Option[DataFrame]] =
+      Some(keys => Indexed.prunedRead(spark, s"$store/sets", "id", keys))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def jobsOf[T](body: => T): (T, Int) = {
+      org.apache.spark.graft.Listeners.settle(sc)
+      jobs.set(0)
+      val r = body
+      org.apache.spark.graft.Listeners.settle(sc)
+      (r, jobs.get)
+    }
+    val (eb, es) = Incremental.signatures(df(Nil), col("doc_id"), col("text"))
+    var kept = Set.empty[Long]
+    var counts = Seq.empty[(Int, Int)]
+    sc.addSparkListener(counter)
+    try {
+      // two arrivals warm the store; the third re-sends stored docs
+      val arrivals = all.grouped(6).toSeq
+      for ((b, i) <- arrivals.zipWithIndex) graft.streaming.EventStream.unpersistBatchPins {
+        val resent = if (i == 2) arrivals.head.take(2) else Nil
+        val batch = Pins.checkpoint(df(b ++ resent))
+        val (sb, ss) =
+          if (i == 0) (eb, es)
+          else (spark.read.parquet(s"$store/bands"), spark.read.parquet(s"$store/sets"))
+        val ((ids0, bb, bs), built) = jobsOf(Incremental.gate(sb, ss, batch,
+          col("doc_id"), col("text"), threshold = T, prunedBands = pb, prunedSets = ps))
+        val (ids, surv) = jobsOf(Pins.checkpoint(ids0))
+        counts :+= ((built, surv))
+        kept ++= ids.as[Long].collect()
+        Indexed.writeSmall(bb, s"$store/bands/batch=$i", "bk")
+        Indexed.writeSmall(bs, s"$store/sets/batch=$i", "id")
+      }
+    } finally sc.removeSparkListener(counter)
+    assert(kept == want, s"warm-store gate diverged: got $kept want $want")
+    val (built, surv) = counts.last
+    info(s"warm gate: construction $built jobs, survivor ids $surv jobs")
+    assert(built <= 4, s"gate construction ran $built Spark jobs, ceiling 4")
+    assert(surv <= 4, s"gate survivor ids ran $surv Spark jobs, ceiling 4")
+  }
 }
