@@ -1396,8 +1396,7 @@ object SparkEntry {
     val (sb, ss) = operators.Incremental.signatures(
       docs.filter(col("doc_id") < 400), col("doc_id"), col("text"))
     val (surv, _, _) = operators.Incremental.gate(sb, ss,
-      docs.filter(col("doc_id") >= 400), col("doc_id"), col("text"), threshold = 0.5,
-      microBatch = false) // the "arrival" here is most of the corpus
+      docs.filter(col("doc_id") >= 400), col("doc_id"), col("text"), threshold = 0.5)
     surv.select(col("id").as("doc_id")).orderBy(col("doc_id"))
   }
 

@@ -28,23 +28,29 @@ import org.apache.spark.sql.functions._
   * IncrementalSpec pins the equality). One refinement that loses
   * nothing: docs with IDENTICAL signatures are interchangeable for
   * matching (a match is a function of the shingle set, never the id),
-  * so on every `microBatch = true` call — including an oversized
-  * arrival demoted to the declarative plan shape — the returned
-  * tables carry ONE representative row per distinct signature per
-  * batch, plus every empty-set short doc — see the exact-signature
-  * collapse in `gate` (only explicit `microBatch = false` calls
-  * return the uncollapsed tables). C22
-  * remains the GLOBAL cluster form — this is its online counterpart.
+  * so every `gate` call returns tables that carry ONE representative
+  * row per distinct signature per batch, plus every empty-set short
+  * doc — see the exact-signature collapse in `gate`. C22 remains the
+  * GLOBAL cluster form — this is its online counterpart.
   *
-  * Scale: signatures are one hash-agg shuffle per batch (reusing C2's
-  * md5-minhash pipeline); the store join is a band-key equi-join whose
-  * left side is batch-sized. Persist the store with
-  * `Sink.writeBucketed` on `bk` (E9) and the per-arrival cost is a
-  * map-side co-bucketed probe of one bucket subset — the store is
-  * never reshuffled, never rescanned whole. One row per (id, band)
-  * keeps the payload a pair of md5 hexes; the shingle sets needed for
-  * exact verification live one-row-per-doc beside it. Every table
-  * here has `MinHash`'s one signature shape.
+  * Scale: the batch is signed map-side (`MinHash.signaturesMapSide`,
+  * no explode before the collapse), and the collapse is the one
+  * shuffle over the batch. On the micro shape every store join reads
+  * the store once as a scan: the band join probes a broadcast of the
+  * batch's band rows and the verify join probes a broadcast of the
+  * candidate pairs, so the store is never reshuffled. With an
+  * `Indexed` store layout the pruners turn those scans into point
+  * reads. One row per (id, band) keeps the band payload a pair of md5
+  * hexes; the shingle sets needed for exact verification live
+  * one-row-per-doc beside it. Every table here has `MinHash`'s one
+  * signature shape.
+  *
+  * Plan shape: `gate` picks one of two shapes from one fact, the
+  * batch's band-row bound against `MaxMicroBatchBandRows`. Under it
+  * the batch tables are pinned and broadcast (the micro shape); over
+  * it the arrival is demoted to the declarative shape, which keeps
+  * the tables lazy and lets Catalyst/AQE plan the joins. Verdicts
+  * and returned tables are identical on both.
   *
   * Store schema note: sets are array<bigint> (xxhash64 — see
   * `signatures`). A store persisted by a pre-long-hash build
@@ -57,21 +63,21 @@ object Incremental {
   /** Enforceable bound on the micro-batch contract: past this many
     * batch BAND rows (≈ docs × Hashes/BandRows — ~1M docs) the
     * gate's driver-side collects and broadcasts (batch band keys,
-    * candidate ids) stop being "micro" and `gate` FALLS BACK to the
-    * declarative `microBatch = false` shape for the rest of the
-    * call: no pruner collects, no broadcast pins, no eager batch
-    * checkpoint — Catalyst/AQE plan the joins and the batch tables
-    * stay lazy end to end (the guard compares a COUNT BOUND,
-    * `bandRowBound`, taken before anything materializes). Results
-    * are identical either way; only the plan shape changes. */
+    * candidate ids) stop being "micro" and `gate` DEMOTES the
+    * arrival to the declarative shape: no pruner collects, no
+    * broadcast pins, no eager batch checkpoint — Catalyst/AQE plan
+    * the joins and the batch tables stay lazy end to end (the guard
+    * compares a COUNT BOUND, `bandRowBound`, taken before anything
+    * materializes). Results are identical either way; only the plan
+    * shape changes. */
   val MaxMicroBatchBandRows: Long = 4L << 20
 
   /** Process-wide count of micro→declarative gate demotions (the
-    * band-row bound tripping on a `microBatch = true` call). A
-    * demotion is a SILENT plan-shape change inside a streaming sink —
-    * stderr alone proved too quiet (ADVICE r15) — so the harnesses
-    * surface this counter in their JSON records (StreamBench) and
-    * the sinks echo it under GRAFT_SINK_PROFILE. */
+    * band-row bound tripping). A demotion is a SILENT plan-shape
+    * change inside a streaming sink — stderr alone proved too quiet
+    * (ADVICE r15) — so the harnesses surface this counter in their
+    * JSON records (StreamBench) and the sinks echo it under
+    * GRAFT_SINK_PROFILE. */
   val demotions = new java.util.concurrent.atomic.LongAdder
 
   /** Separate (tighter) bound for the PRUNER path: its driver-side
@@ -119,13 +125,25 @@ object Incremental {
     * frames (or `signatures` of an empty doc set) for a cold store.
     * Returns (survivorIds, batchBands, batchSets) — append the batch
     * tables to the store for the next arrival. They cover ALL seen
-    * docs, never just survivors; on every `microBatch = true` call
-    * (micro AND demoted — a store must never accumulate duplicate
-    * signatures) they are COLLAPSED to one representative per
-    * distinct signature (plus the empty-set short docs — see the
-    * object scaladoc).
+    * docs, never just survivors, and are COLLAPSED to one
+    * representative per distinct signature (plus the empty-set short
+    * docs — see the object scaladoc) on both shapes: a store must
+    * never accumulate duplicate signatures. `threshold` must be at
+    * most 1 (NaN is refused too): above it even identical docs would
+    * not match, and the collapse would drop docs that survive.
     *
-    * STORE-SCAN-ONLY plan shape (pinned, not left to size
+    * Two plan shapes, picked by one fact: the batch's band-row bound
+    * (`bandRowBound` of its row count, taken before anything
+    * materializes) against `maxBandRows`. Under it the arrival takes
+    * the micro shape below; over it the arrival is DEMOTED to the
+    * declarative shape — no pruner collects, no pins, no broadcast
+    * hints; Catalyst/AQE plan the joins and the batch tables stay
+    * lazy (inside a sink they are `Pins.persist`ed for the batch), so
+    * a corpus-sized arrival never broadcasts or checkpoints a
+    * corpus-sized table. Past `maxPrunerBandRows` the micro shape
+    * keeps its pins but skips the pruners' driver-side collects.
+    *
+    * The micro shape is STORE-SCAN-ONLY (pinned, not left to size
     * estimates): every join the store participates in broadcasts a
     * BATCH-bounded side — the band join the batch's band table, the
     * verify join the candidate pairs with the batch docs' sets, which
@@ -138,11 +156,10 @@ object Incremental {
     * probe's source is at commit 814e342), growing linearly with the
     * store forever. With the pins the store is only ever scanned:
     * per-arrival network is O(batch), matching the store's O(batch)
-    * append writes. The broadcasts are micro-batch-bounded by the
-    * sink's contract (batch signatures and candidate sets — never
-    * the store side).
+    * append writes. The broadcasts are bounded by `maxBandRows`
+    * (batch signatures and candidate sets — never the store side).
     *
-    * Jobs (the micro path): the gate pins TWO batch-sized tables,
+    * Jobs (the micro shape): the gate pins TWO batch-sized tables,
     * each lazily (`Pins.pin`), so each is materialized by the first
     * job that reads it and read from its blocks by every later one —
     * no pin runs a job of its own:
@@ -154,43 +171,37 @@ object Incremental {
     *    the batch from ONE band join. The pruner's candidate-id
     *    collect materializes it.
     * The survivor ids then cost three broadcasts: the batch docs'
-    * sets, the candidate pairs carrying them, and the dropped ids.
-    *
-    * `microBatch = false` opts OUT of all the pins for a
-    * corpus-sized arrival, where broadcasting/checkpointing the
-    * "batch" would itself be the scale defect — and a caller who
-    * passes a corpus-sized frame WITH `microBatch = true` is demoted
-    * to the same shape automatically once the batch band table
-    * exceeds `maxBandRows` (the contract is enforced, not assumed). */
+    * sets, the candidate pairs carrying them, and the dropped ids. */
   def gate(storeBands: DataFrame, storeSets: DataFrame, batch: DataFrame,
            id: Column, text: Column,
-           threshold: Double = 0.5, microBatch: Boolean = true,
+           threshold: Double = 0.5,
            prunedBands: Option[Seq[Any] => Option[DataFrame]] = None,
            prunedSets: Option[Seq[Any] => Option[DataFrame]] = None,
            maxBandRows: Long = MaxMicroBatchBandRows,
            maxPrunerBandRows: Long = MaxPrunerBandRows)
     : (DataFrame, DataFrame, DataFrame) = {
-    // the contract is ENFORCED, not documentary — and the guard runs
-    // BEFORE anything materializes: every doc emits at most
-    // Hashes/BandRows band rows (short docs emit none), so the incoming
-    // batch's row count upper-bounds the band table without running
-    // the shingle→minhash pipeline — free when the caller passes a
-    // `Pins.checkpoint`ed batch (its count is already known), one
-    // cheap count otherwise — and an oversized
-    // "micro-batch" demotes to the declarative shape WITHOUT first
-    // paying an eager corpus-sized checkpoint it would immediately
-    // abandon (the bound can only demote EARLY — on batches padded
-    // with short docs — which errs toward the scale-safe shape)
-    val nBandBound = if (microBatch) bandRowBound(Pins.count(batch)) else 0L
-    val micro = microBatch && {
-      if (nBandBound > maxBandRows) {
-        demotions.increment() // surfaced in StreamBench's JSON, not just stderr
-        System.err.println(
-          s"Incremental.gate: ≤$nBandBound batch band rows (bound) > $maxBandRows — " +
-            "not a micro-batch; falling back to the declarative plan shape " +
-            "(signature tables stay collapsed — the store contract holds)")
-      }
-      nBandBound <= maxBandRows
+    // the collapse below drops every identical-set doc but the
+    // smallest id, which is a verdict only Jaccard 1.0 ≥ threshold
+    // makes (`<=` is false for NaN, so NaN is refused too)
+    require(threshold <= 1.0, s"Incremental.gate: threshold must be ≤ 1, got $threshold")
+    // the guard runs BEFORE anything materializes: every doc emits at
+    // most Hashes/BandRows band rows (short docs emit none), so the
+    // incoming batch's row count upper-bounds the band table without
+    // running the shingle→minhash pipeline — free when the caller
+    // passes a `Pins.checkpoint`ed batch (its count is already known),
+    // one cheap count otherwise — and an oversized arrival demotes to
+    // the declarative shape WITHOUT first paying an eager corpus-sized
+    // checkpoint it would immediately abandon (the bound can only
+    // demote EARLY — on batches padded with short docs — which errs
+    // toward the scale-safe shape)
+    val nBandBound = bandRowBound(Pins.count(batch))
+    val micro = nBandBound <= maxBandRows
+    if (!micro) {
+      demotions.increment() // surfaced in StreamBench's JSON, not just stderr
+      System.err.println(
+        s"Incremental.gate: ≤$nBandBound batch band rows (bound) > $maxBandRows — " +
+          "not a micro-batch; falling back to the declarative plan shape " +
+          "(signature tables stay collapsed — the store contract holds)")
     }
     // the pruner point-read path pays driver-side key collects — cap
     // them (on the same bound, so the cap too errs toward the
@@ -199,12 +210,11 @@ object Incremental {
     // the store tables are scanned whole — the same answer without
     // the collect
     val usePruners = micro && nBandBound <= maxPrunerBandRows
-    // micro-batch contract (the streaming sinks): the batch tables
-    // are small → pin them once and broadcast them into every join
-    // the store participates in. A corpus-sized arrival (microBatch
-    // = false — e.g. the c34 fixture gating most of the corpus in one
-    // call) must NOT broadcast or checkpoint corpus-scale tables: it
-    // keeps the declarative shape and lets Catalyst/AQE choose.
+    // micro shape: the batch tables are small → pin them once and
+    // broadcast them into every join the store participates in. A
+    // demoted arrival must NOT broadcast or checkpoint corpus-scale
+    // tables: it keeps the declarative shape and lets Catalyst/AQE
+    // choose.
     def hint(df: DataFrame): DataFrame = if (micro) broadcast(df) else df
 
     // EXACT-SIGNATURE COLLAPSE (round 14, the error-page-storm fix):
@@ -229,64 +239,49 @@ object Incremental {
     // task ≤ 1.3 s — distributed volume, not a hot key, which is why
     // salting is the wrong tool here). With the collapse the store
     // gains ONE row per distinct storm text per arrival and the curve
-    // flattens to the no-storm baseline. Disabled when threshold > 1
-    // (then even Jaccard 1.0 wouldn't drop the duplicates) — and the
-    // empty-set short docs are never collapsed: they match nothing,
-    // always survive, and their (id, []) rows still land in the store.
+    // flattens to the no-storm baseline. The empty-set short docs are
+    // never collapsed: they match nothing, always survive, and their
+    // (id, []) rows still land in the store.
     //
     // The collapsed docs are exactly the batch docs missing from
     // `sig`, so the survivors below are `sig`'s ids minus the verified
     // drops — the collapse needs no join of its own.
     //
-    // Every `microBatch = true` call collapses, a DEMOTED one
-    // included: its signature tables are APPENDED to the persistent
-    // store, and an uncollapsed oversized arrival would permanently
-    // seed the store with duplicate signatures, re-opening the
-    // quadratic storm regime the r14 fix closed. Only an EXPLICIT
-    // `microBatch = false` caller (c34's corpus-sized declarative
-    // arrival, whose tables are not destined for a store) skips it:
-    // there the groupBy would be an extra full shuffle over the corpus
-    // for a dedup that C1 (exact hash-groupBy) already does upstream.
-    // Verdicts are identical on every path: identical-signature docs
-    // still share every band and verify at Jaccard 1.0, so keep-first
-    // drops them through the ordinary within-batch path; only the
-    // RETURNED tables differ (uncollapsed in declarative mode).
-    val collapse = microBatch && threshold <= 1.0
-    // every `microBatch = true` call signs the batch into ONE table,
-    // `sig` (id, s, b), which the collapse groups and the micro path
-    // pins, and derives the returned tables from it; an explicit
-    // declarative call returns the plain `signatures` tables
-    val (pBands, pSets) = if (!microBatch) signatures(batch, id, text) else {
-      val t = graft.plans.TextExpressions
-      // docs with shingles, signed in one map-side pass: the verify
-      // set `s` and the band-key array `b` (`signaturesMapSide` keyed
-      // by the (id, s) pair, so the set kernel runs on the same
-      // filtered rows, where it is never null — asserted, or a
-      // null-intolerant consumer would infer a not-null filter that
-      // re-runs the kernel)
-      val signed = MinHash.signaturesMapSide(batch,
-          struct(id.as("id"),
-            t.knownNotNull(t.hashedShingleSet(lower(text), MinHash.ShingleWords)).as("s")),
-          text, MinHash.ShingleWords, MinHash.Hashes)
-        .select(col("id.id").as("id"), col("id.s").as("s"),
-          MinHash.bandArray(MinHash.Hashes, MinHash.BandRows).as("b"))
-      val kept =
-        if (collapse) signed.groupBy(col("s")).agg(min(struct(col("id"), col("b"))).as("r"))
-          .select(col("r.id").as("id"), col("s"), col("r.b").as("b"))
-        else signed
-      // short (or null) docs: an empty set and no bands
-      val short = batch
-        .filter(!coalesce(size(t.wordNgrams(lower(text), MinHash.ShingleWords)) > 0, lit(false)))
-        .select(id.as("id"), array().cast("array<bigint>").as("s"),
-          lit(null).cast("array<string>").as("b"))
-      val sig = if (micro) Pins.pin(kept.unionByName(short)) else kept.unionByName(short)
-      // explode an expression, not the bare `b`: for a bare column
-      // Spark infers `size(b) > 0` and pushes it below the projection
-      // that computes `b`, re-running the minhash kernel in the filter
-      // (on an unpinned batch, 6× the band table's own cost)
-      (sig.select(col("id"), posexplode(coalesce(col("b"), array())).as(Seq("bi", "bk"))),
-        sig.select(col("id"), col("s")))
-    }
+    // A DEMOTED arrival collapses too: its signature tables are
+    // APPENDED to the persistent store, and an uncollapsed oversized
+    // arrival would permanently seed the store with duplicate
+    // signatures, re-opening the quadratic storm regime the r14 fix
+    // closed.
+    //
+    // The batch is signed into ONE table, `sig` (id, s, b), which the
+    // collapse groups and the micro shape pins; the returned tables
+    // are map-side projections of it.
+    val t = graft.plans.TextExpressions
+    // docs with shingles, signed in one map-side pass: the verify set
+    // `s` and the band-key array `b` (`signaturesMapSide` keyed by the
+    // (id, s) pair, so the set kernel runs on the same filtered rows,
+    // where it is never null — asserted, or a null-intolerant consumer
+    // would infer a not-null filter that re-runs the kernel)
+    val signed = MinHash.signaturesMapSide(batch,
+        struct(id.as("id"),
+          t.knownNotNull(t.hashedShingleSet(lower(text), MinHash.ShingleWords)).as("s")),
+        text, MinHash.ShingleWords, MinHash.Hashes)
+      .select(col("id.id").as("id"), col("id.s").as("s"),
+        MinHash.bandArray(MinHash.Hashes, MinHash.BandRows).as("b"))
+    val kept = signed.groupBy(col("s")).agg(min(struct(col("id"), col("b"))).as("r"))
+      .select(col("r.id").as("id"), col("s"), col("r.b").as("b"))
+    // short (or null) docs: an empty set and no bands
+    val short = batch
+      .filter(!coalesce(size(t.wordNgrams(lower(text), MinHash.ShingleWords)) > 0, lit(false)))
+      .select(id.as("id"), array().cast("array<bigint>").as("s"),
+        lit(null).cast("array<string>").as("b"))
+    val sig = if (micro) Pins.pin(kept.unionByName(short)) else kept.unionByName(short)
+    // explode an expression, not the bare `b`: for a bare column Spark
+    // infers `size(b) > 0` and pushes it below the projection that
+    // computes `b`, re-running the minhash kernel in the filter (on an
+    // unpinned batch, 6× the band table's own cost)
+    val pBands = sig.select(col("id"), posexplode(coalesce(col("b"), array())).as(Seq("bi", "bk")))
+    val pSets = sig.select(col("id"), col("s"))
     // demoted arrival inside a sink: register the returned tables
     // (which the survivors plan below also reads) for a LAZY
     // MEMORY_AND_DISK cache reaped with the batch — no eager
@@ -297,7 +292,7 @@ object Incremental {
     // `Pins.persist` is a no-op and the shape stays fully lazy; a
     // persist never truncates lineage, so IncrementalSpec's
     // no-LogicalRDD demoted-plan pin holds on both paths
-    if (microBatch && !micro) { Pins.persist(pBands); Pins.persist(pSets) }
+    if (!micro) { Pins.persist(pBands); Pins.persist(pSets) }
 
     // store band probe: with an indexed store layout the batch's band
     // keys (batch-bounded, deduped on the driver — a distinct() would
@@ -323,13 +318,12 @@ object Incremental {
     // not-null filter leaves the two broadcasts identical and the
     // second one reuses the first.
     //
-    // A pair sharing several bands repeats, once per shared band. On
-    // the micro path that is at most Hashes/BandRows repeats of a
-    // near-dup pair (the collapse leaves no identical-doc clusters),
-    // and verifying them again is cheaper than the shuffle job a
-    // distinct() adds. A declarative arrival is uncollapsed — its
-    // identical docs form clusters whose pairs grow quadratically,
-    // each repeated per band — so there every pair is verified once
+    // A pair sharing several bands repeats, once per shared band: at
+    // most Hashes/BandRows repeats of a near-dup pair (the collapse
+    // leaves no identical-doc clusters). On the micro shape verifying
+    // them again is cheaper than the shuffle job a distinct() adds; a
+    // demoted arrival, whose joins shuffle anyway, verifies each pair
+    // once
     def candidates(other: DataFrame, tag: Int): DataFrame =
       other.select(col("id").as("oid"), col("bi"), col("bk"))
         .join(hint(pBands.filter(col("id").isNotNull)
@@ -359,16 +353,7 @@ object Incremental {
       .join(hint(pairs), Seq("oid", "tag"))
       .filter(jac >= threshold)
       .select(col("cid").as("id"))
-    // uncollapsed, the set table has a row per batch doc: read the ids
-    // off the batch (on an unpinned `sig` the anti-join would be pushed
-    // into both branches of its union and plan `dropped` twice)
-    val survivors = (if (collapse) pSets.select(col("id")) else batch.select(id.as("id")))
-      .join(hint(dropped), Seq("id"), "left_anti")
-    // microBatch = true (micro or demoted): the returned signature
-    // tables are the COLLAPSED ones — one row per distinct signature
-    // (plus every empty-set doc), which preserves every future
-    // verdict; explicit declarative mode returns them uncollapsed —
-    // see the collapse note above
+    val survivors = pSets.select(col("id")).join(hint(dropped), Seq("id"), "left_anti")
     (survivors, pBands, pSets)
   }
 }

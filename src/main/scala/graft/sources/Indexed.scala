@@ -477,11 +477,15 @@ object Indexed {
     // that might hold it, so when the estimate reaches half the store
     // a plain scan is at least as cheap (and pays no per-row
     // OR-of-InSet evaluation) — decline and let the caller's scan
-    // plan run. Estimated per INDEXED dir as min(alive × pageRows,
-    // dirRows); unindexed flat dirs are read whole under either plan,
-    // so they cancel out of the comparison.
+    // plan run. Estimated per INDEXED dir as min(admitted × pageRows,
+    // dirRows), where `admitted` counts the alive keys that dir's own
+    // bloom admits (the global alive count would charge every dir for
+    // every other dir's keys); unindexed flat dirs are read whole
+    // under either plan, so they cancel out of the comparison.
     val est = dirs.collect {
-      case d if d.indexed => math.min(alive.size.toLong * d.pageRows, d.rows)
+      case d if d.indexed =>
+        val admitted = alive.count(k => !bloomable(k) || d.bloom.forall(mightContain(_, k)))
+        math.min(admitted.toLong * d.pageRows, d.rows)
     }.sum
     val total = dirs.filter(_.indexed).map(_.rows).sum
     if (alive.size > keyCap || est * 2 >= total) return None

@@ -284,8 +284,10 @@ object EventStream {
 
   /** Runs one foreachBatch body, then unpersists exactly the RDDs
     * the body itself pinned. The ingest sinks pin batch-scoped
-    * frames with eager localCheckpoints (the score ladder, the
-    * gate's signature tables, the survivor ids); those
+    * frames with localCheckpoints — eager ones (`Pins.checkpoint`:
+    * the batch, the score ladder, the survivor ids) and lazy ones
+    * (`Pins.pin`: the gate's signature and candidate tables, which
+    * the first job that reads them materializes); those
     * MEMORY_AND_DISK blocks are otherwise freed only when a DRIVER
     * GC lets the ContextCleaner reap the dead RDD handles — on a
     * long run the dead blocks accumulate on disk faster than any
@@ -296,8 +298,8 @@ object EventStream {
     * tuning.
     *
     * OWNERSHIP IS RECORDED, NOT INFERRED (round 17): every
-    * sink-path eager checkpoint goes through
-    * `operators.Pins.checkpoint`, which registers the pinned RDD
+    * sink-path localCheckpoint goes through `operators.Pins.pin` or
+    * `operators.Pins.checkpoint`, which register the pinned RDD
     * with this body's thread-local collector, and the reap below
     * unpersists exactly that list. The r14-r16 global
     * `getPersistentRDDs` before/after diff was unsound under
@@ -537,6 +539,9 @@ object EventStream {
   def nearDupGateSink(docs: DataFrame, idName: String, text: Column,
                       storePath: String, outPath: String, partCol: String,
                       checkpoint: String, threshold: Double = 0.5): StreamingQuery = {
+    // `gate` refuses the same values, but only once the first batch
+    // arrives: refuse them here, before the stream starts
+    require(threshold <= 1.0, s"nearDupGateSink: threshold must be ≤ 1, got $threshold")
     // session-level setup for the store probes (documented conf
     // raise, made once and visibly at sink construction — see
     // Indexed.configureSession)
@@ -910,9 +915,10 @@ object EventStream {
     * keep-latest corpus remains D6 `upsertSink`'s contract.
     *
     * Readers scan the root (`batch` and `partCol` are partition
-    * columns; `partCol` pruning still applies); `ingestCorpusCompact`
-    * bounds the directory count, exactly like the D10 store's
-    * compaction. */
+    * columns; `partCol` pruning still applies). The directory count
+    * grows by one per landed batch: `ingestCorpusCompact` can bound
+    * it, like the D10 store's compaction, but no sink calls it — a
+    * caller has to run it between arrivals. */
   def appendBatchWrite(batch: DataFrame, batchId: Long,
                        path: String, partCol: String): Unit =
     batch.write.mode(SaveMode.Overwrite).partitionBy(partCol)

@@ -171,5 +171,17 @@ class DegenerateInputSpec extends SparkSpec {
     assert(s1.as[Long].collect().toSet == Set(1L, 2L))
     assert(bands.count() == 0)
     assert(sets.as[(Long, Seq[String])].collect().forall(_._2.isEmpty))
+    // above 1 even identical docs would not match, which the collapse
+    // assumes; NaN matches nothing. Both are refused, by the gate and
+    // by the D10 sink before its stream starts
+    for (t <- Seq(1.5, Double.NaN)) {
+      intercept[IllegalArgumentException] {
+        Incremental.gate(eb, es, shorts, col("doc_id"), col("text"), threshold = t)
+      }
+      intercept[IllegalArgumentException] {
+        graft.streaming.EventStream.nearDupGateSink(noDocs, "doc_id", col("text"),
+          "unused-store", "unused-out", "lang", "unused-checkpoint", threshold = t)
+      }
+    }
   }
 }

@@ -75,16 +75,16 @@ class IncrementalSpec extends SparkSpec {
     assert(want.contains(101L))
   }
 
-  test("exact-signature collapse: storm batches gate identically with and without it") {
+  test("exact-signature collapse: storm batches gate as the global keep-first rule") {
     // the error-page-storm regime: every arrival carries the SAME
     // template text under fresh ids (records/streambench_d10_growth_storm_r14
     // measured the uncollapsed cost growing linearly forever). The
-    // collapse must be invisible in verdicts — per-arrival survivors
-    // identical on the collapsing micro-batch path and the
-    // uncollapsed `microBatch = false` shape, across arrivals whose
-    // STORES were built by their own mode (on-store vs off-store) —
-    // while the on-mode store stays at one signature row-group per
-    // distinct storm text per arrival.
+    // collapse must be invisible in verdicts — each arrival's
+    // survivors, gated against the collapsed store the earlier
+    // arrivals built, equal the global keep-first rule over the
+    // cumulative arrivals restricted to that arrival — while the
+    // store stays at one signature row-group per distinct storm text
+    // per arrival.
     val storm = (1 to 12).map(t => s"storm$t").mkString(" ")
     val stormB = (1 to 12).map(t => s"hailB$t").mkString(" ")
     def arrival(k: Int): Seq[(Long, String)] = {
@@ -98,18 +98,18 @@ class IncrementalSpec extends SparkSpec {
           (base + 40, "ti ny"))
     }
     val batches = (0 until 4).map(arrival)
-    def gateSeqMode(collapse: Boolean): Seq[Set[Long]] = {
-      var (sb, ss) = Incremental.signatures(df(Nil), col("doc_id"), col("text"))
-      batches.map { b =>
-        val (surv, bb, bs) = Incremental.gate(sb, ss, df(b),
-          col("doc_id"), col("text"), threshold = T, microBatch = collapse)
-        sb = sb.unionByName(bb); ss = ss.unionByName(bs)
-        surv.as[Long].collect().toSet
-      }
+    var (sb, ss) = Incremental.signatures(df(Nil), col("doc_id"), col("text"))
+    val on = batches.map { b =>
+      val (surv, bb, bs) = Incremental.gate(sb, ss, df(b),
+        col("doc_id"), col("text"), threshold = T)
+      sb = sb.unionByName(bb); ss = ss.unionByName(bs)
+      surv.as[Long].collect().toSet
     }
-    val on = gateSeqMode(collapse = true)
-    val off = gateSeqMode(collapse = false)
-    assert(on == off, s"collapse changed verdicts: on=$on off=$off")
+    // ids ascend across arrivals, so sequential gating must equal
+    // keep-first over everything that has arrived so far
+    val want = batches.indices.map(k =>
+      globalKept(batches.take(k + 1).flatten).intersect(batches(k).map(_._1).toSet))
+    assert(on == want, s"collapse changed verdicts: gate=$on keep-first=$want")
     // arrival 0 keeps one doc per storm text; later arrivals keep no
     // storm docs at all (the store remembers), and the short doc
     // always survives
@@ -232,9 +232,9 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("micro-batch contract enforced: oversized batches demote to the declarative shape") {
-    // a caller who passes a corpus-sized frame with microBatch = true
-    // must not trigger the driver-side collects/broadcasts: the gate
-    // demotes itself once the batch band table exceeds maxBandRows.
+    // a caller who passes a corpus-sized frame must not trigger the
+    // driver-side collects/broadcasts: the gate demotes itself once
+    // the batch band table exceeds maxBandRows.
     // Results are identical; the pruners (driver point-read path)
     // must never be invoked.
     val all = corpus.sortBy(_._1)
@@ -274,7 +274,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("demoted arrivals still collapse exact-signature duplicates (the store contract)") {
-    // an oversized microBatch=true arrival (forced demotion) carrying
+    // an oversized arrival (forced demotion) carrying
     // storm duplicates must NOT append duplicate signatures to the
     // store: the collapse survives demotion as plain shuffle joins
     // (round 16 — the r15 micro-only restriction silently re-opened
@@ -298,12 +298,6 @@ class IncrementalSpec extends SparkSpec {
     // and the demoted shape stays lazy end to end (no checkpoint pin)
     assert(!bb.queryExecution.optimizedPlan.toString.contains("LogicalRDD"),
       "demoted collapse must not eagerly checkpoint")
-    // explicit declarative callers (c34's shape) remain collapse-free:
-    // same verdicts, uncollapsed tables
-    val (survD, _, bsD) = Incremental.gate(eb, es, df(rows), col("doc_id"), col("text"),
-      threshold = T, microBatch = false)
-    assert(survD.as[Long].collect().toSet == Set(0L, 10L, 20L))
-    assert(bsD.count() == rows.size.toLong, "declarative mode returns uncollapsed tables")
   }
 
   test("demoted arrival under a sink collector caches the returned tables; the reap frees them") {

@@ -88,6 +88,28 @@ class IndexedSpec extends SparkSpec {
       s"chunked OR-of-In must still page-prune (got $rows of 3000000 rows)")
   }
 
+  test("cost gate charges each dir only for the keys its own bloom admits") {
+    // four 20 000-row dirs of 2 000-row pages, three probe keys in
+    // each: a dir is charged 3 × 2 000 rows, 24 000 of the store's
+    // 80 000 in all, so the probe runs. Charging every dir for all 12
+    // alive keys (24 000 each, capped at its 20 000 rows) would put
+    // the estimate at the whole store and decline the probe
+    val root = java.nio.file.Files.createTempDirectory("graft-idx-perdir").toString
+    val keys: Seq[Any] = (0 until 4).flatMap { i =>
+      val from = i * 20000
+      Indexed.write(mkDF(from, 20000).coalesce(1), s"$root/batch=$i", "bk", 0)
+      mkDF(from, 20000).filter(col("payload").isin(from + 1, from + 7001, from + 14001))
+        .select("bk").as[String].collect().toSeq
+    }
+    assert(keys.size == 12, "fixture: three present keys per dir")
+    val got = Indexed.prunedRead(spark, root, "bk", keys)
+    assert(got.isDefined, "per-dir charges stay under half the store: the probe must run")
+    val want = spark.read.parquet(root).filter(col("bk").isInCollection(keys))
+      .select("bk", "payload").as[(String, Long)].collect().toSet
+    assert(want.size == keys.size)
+    assert(got.get.select("bk", "payload").as[(String, Long)].collect().toSet == want)
+  }
+
   test("bloom rules out absent keys entirely — empty probe, no fallback") {
     val root = java.nio.file.Files.createTempDirectory("graft-idx-miss").toString
     Indexed.write(mkDF(0, 5000).coalesce(1), s"$root/batch=0", "bk", 0)

@@ -173,9 +173,28 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q:\n$p")
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
     }
-    // c34's minhash signature aggregate is computed once and reused
-    // across the store/within-batch candidate joins and the verify
-    assert(finalPlan("c34_incremental_gate").contains("ReusedExchange"))
+    // c34's arrival is gated on the micro shape: the batch's band
+    // table is broadcast once and reused by the store and the
+    // within-batch candidate joins. Both live in the pinned candidate
+    // table, whose plan is the one a `localCheckpoint` action reports
+    val pinned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") pinned.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      finalPlan("c34_incremental_gate")
+      org.apache.spark.graft.Listeners.settle(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val cand = pinned.toArray(Array.empty[String]).filter(_.contains("oid"))
+    assert(cand.length == 1, s"one pinned candidate table, got ${cand.length}")
+    assert(cand.head.contains("ReusedExchange"), cand.head)
   }
 
   test("c33 stratified sample: broadcast quota join, one stratum window exchange") {

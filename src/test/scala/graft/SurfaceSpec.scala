@@ -141,6 +141,28 @@ class SurfaceSpec extends AnyFunSuite {
     assert(names.isEmpty, names.mkString("\n"))
   }
 
+  test("the near-dup gate has one signer and no plan-shape flag") {
+    // the shape follows the batch's band-row bound alone: no caller
+    // flag, in the engine or in its tests (the name is split here so
+    // this file does not match itself)
+    val flag = "micro" + "Batch"
+    val testRoot = Paths.get("src/test/scala")
+    val walk = Files.walk(testRoot)
+    val testSources =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> Files.readString(p)).toList
+      finally walk.close()
+    val hits = (sources.toSeq ++ testSources).collect {
+      case (f, t) if occurrences(t, s"\\b$flag\\b") > 0 => f
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+    // `gate` signs its batch map-side, once; `signatures` is for the
+    // store's other writers
+    val inc = sources("graft/operators/Incremental.scala")
+    assert(occurrences(inc, """signaturesMapSide\(""") == 1)
+    assert(occurrences(inc, """(?<!def )\bsignatures\(""") == 0)
+  }
+
   test("src/main names no spark.graft.* conf key") {
     val keys = for {
       (f, t) <- sources.toSeq
